@@ -656,7 +656,7 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict]:
     # anchor is a 64-thread THsHaServer (common/thrift.clj:111-118);
     # report keys/sec plus per-key latency percentiles so rounds compare
     # as serving throughput, and the probe's driver-side peak-RSS delta
-    # (bounded by LOCAL_PROBE_BATCH_ROWS streaming — VERDICT r5 item 4)
+    # (bounded by the row-group cap — VERDICT r5 item 4)
     call_lat.sort()
     _n = len(call_lat)
     serving_stats = {

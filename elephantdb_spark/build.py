@@ -67,6 +67,12 @@ def _resolve_indexer_arg(indexer: Indexer | str | None) -> Indexer | None:
 #: ``persistence_opts={"parquet.block.size": ...}``.
 SERVING_ROW_GROUP_BYTES = 16 << 20
 
+#: Ceiling on a ``parquet.block.size`` override. The serving probe decodes
+#: each candidate row group whole (engine.py ``local_multi_get``), so this
+#: bounds its transient memory per probing thread. Writes reject larger
+#: overrides rather than build groups the probe cannot decode cheaply.
+MAX_ROW_GROUP_BYTES = 32 << 20
+
 
 def dedup_last_writer_wins(df: DataFrame, seq_col: str | None = None) -> DataFrame:
     """Keep one row per key — the last writer (A9, JavaBerkDB.java:84-94).
@@ -127,19 +133,27 @@ def _write_version(
         .partitionBy("shard")
         .format(fmt)
     )
-    # persistence_opts pass through as writer options; parquet row groups
-    # default to the serving-oriented SERVING_ROW_GROUP_BYTES cap unless
-    # the caller picks their own. bloom_fpp is OUR option (sidecar
-    # build, not a writer knob) — stripped here, consumed by
-    # _maybe_build_blooms after the write.
-    opts = dict(store.spec.persistence_opts or {})
-    opts.pop("bloom_fpp", None)  # sidecar knob, _maybe_build_blooms
-    opts.pop("compact_after_files", None)  # self-heal knob, not a writer opt
-    if fmt == "parquet":
-        opts.setdefault("parquet.block.size", SERVING_ROW_GROUP_BYTES)
-    for opt_k, opt_v in opts.items():
-        writer = writer.option(opt_k, str(opt_v))
-    writer.save(version_path)
+    writer.options(**_writer_opts(store.spec)).save(version_path)
+
+
+def _writer_opts(spec: DomainSpec, drop: tuple = ()) -> dict[str, str]:
+    """The spec's ``persistence_opts`` as writer options. Our own
+    non-writer knobs (``bloom_fpp``, ``compact_after_files``) and any
+    ``drop`` keys are stripped. Parquet row groups default to
+    SERVING_ROW_GROUP_BYTES; an override above MAX_ROW_GROUP_BYTES raises
+    ValueError."""
+    opts = dict(spec.persistence_opts or {})
+    for k in ("bloom_fpp", "compact_after_files", *drop):
+        opts.pop(k, None)
+    if resolve_format(spec.persistence_format) == "parquet":
+        block = int(opts.setdefault("parquet.block.size", SERVING_ROW_GROUP_BYTES))
+        if block > MAX_ROW_GROUP_BYTES:
+            raise ValueError(
+                f"parquet.block.size={block} exceeds MAX_ROW_GROUP_BYTES="
+                f"{MAX_ROW_GROUP_BYTES}: the serving probe decodes row "
+                "groups whole"
+            )
+    return {k: str(v) for k, v in opts.items()}
 
 
 def _maybe_build_blooms(spark: SparkSession, store: DomainStore, vpath: str) -> None:
@@ -180,6 +194,8 @@ def build_domain(
     if dedup not in ("lww", "none"):
         raise ValueError(f"dedup must be 'lww' or 'none', got {dedup!r}")
     indexer = _resolve_indexer_arg(indexer)
+    if spec is not None:
+        _writer_opts(spec)  # reject a bad layout before the spec persists
     store = DomainStore.create_or_open(domain_root, spec)
     if version is None:
         version = int(time.time() * 1000)
@@ -266,16 +282,11 @@ def _compact_shards_to(
         .format(fmt)
     )
     # layout properties (codec, dictionary, row-group cap, ...) must
-    # SURVIVE compaction — only the file-split knobs compaction exists to
-    # undo, and our own non-writer knobs, are dropped
-    opts = dict(store.spec.persistence_opts or {})
-    for non_layout in ("maxRecordsPerFile", "bloom_fpp", "compact_after_files"):
-        opts.pop(non_layout, None)
-    if fmt == "parquet":
-        opts.setdefault("parquet.block.size", SERVING_ROW_GROUP_BYTES)
-    for opt_k, opt_v in opts.items():
-        writer = writer.option(opt_k, str(opt_v))
-    writer.save(dst_path)
+    # SURVIVE compaction — only the file-split knob compaction exists to
+    # undo is dropped
+    writer.options(
+        **_writer_opts(store.spec, drop=("maxRecordsPerFile",))
+    ).save(dst_path)
 
 
 def _self_heal_fragmentation(

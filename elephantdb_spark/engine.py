@@ -42,12 +42,6 @@ from elephantdb_spark.registry import resolve_format, resolve_scheme
 from elephantdb_spark.spec import DomainSpec
 from elephantdb_spark.store import DomainStore, shard_dirname
 
-#: Arrow batch size for the local serving probe — bounds per-probe
-#: transient memory to ~this many KV rows per open row group regardless
-#: of on-disk row-group size (a 1 GB row group streams, never
-#: materializes whole).
-LOCAL_PROBE_BATCH_ROWS = 8192
-
 #: Byte budget for the decoded-row-group serving cache (per Domain
 #: handle; override per domain with
 #: ``persistence_opts={"serving_cache_bytes": N}``, 0 disables). The
@@ -55,9 +49,10 @@ LOCAL_PROBE_BATCH_ROWS = 8192
 #: cache on repeat probes (je.maxMemory; JavaBerkDB.java:70-82 probes a
 #: cached tree) — without an analogue every probe of a hot key re-decodes
 #: its ≤16 MiB parquet row group from disk. Groups whose uncompressed
-#: size exceeds a quarter of the budget are never cached (they keep the
-#: streaming early-exit path), so one monster group from a pre-cap build
-#: cannot thrash the cache or blow the decode bound.
+#: size exceeds a quarter of the budget are decoded whole for the one
+#: probe and then dropped, never cached, so one oversized group cannot
+#: thrash the cache. Builds bound every group at
+#: ``build.MAX_ROW_GROUP_BYTES``, which bounds that transient decode.
 SERVING_GROUP_CACHE_BYTES = 64 << 20
 
 #: Serving-cache capacity (open parquet handles / shard-dir listings).
@@ -65,19 +60,7 @@ SERVING_GROUP_CACHE_BYTES = 64 << 20
 #: opens (VERDICT r6 item 3: wholesale clears thrashed >512-file domains).
 SERVING_CACHE_CAP = 512
 
-#: Largest row group the serving probe decodes WHOLE when it cannot be
-#: retained in the decoded-group cache (budget 0, budget-excluded, or
-#: over budget/4). Whole-group decode is one GIL-releasing C call probed
-#: vectorized — far cheaper and far more parallel than the Arrow-batch
-#: streaming loop — and at the 16 MiB layout cap every group qualifies;
-#: the streaming early-exit path remains for genuinely oversized pre-cap
-#: groups (the r5 design point of ~1 GB monoliths), bounding transient
-#: memory at ~this value per probing thread.
-SERVING_BULK_DECODE_MAX = 32 << 20
-
-#: Cross-shard fanout width for the local serving probe (per Domain
-#: handle; override per domain with
-#: ``persistence_opts={"serving_fanout": N}``, 1 disables). The
+#: Cross-shard fanout width for the local serving probe. The
 #: reference's multiGet groups keys by host and probes every host group
 #: CONCURRENTLY (``do-pmap`` over the host map, keyval/core.clj:118-134)
 #: — a serial shard loop would make a 1000-key batch pay the sum of the
@@ -87,7 +70,7 @@ SERVING_BULK_DECODE_MAX = 32 << 20
 #: shared pool parallelizes for real.
 SERVING_FANOUT_THREADS = 8
 
-#: Process-shared fanout pool for default-width domains (see
+#: Process-shared fanout pool for every domain (see
 #: Domain._fanout_pool). Never shut down — it is process infrastructure,
 #: like the reference's one server pool across all loaded domains.
 _FANOUT_POOL = None
@@ -324,26 +307,6 @@ class Domain:
             )
         except (TypeError, ValueError):
             self._rg_cache_budget = SERVING_GROUP_CACHE_BYTES
-        # cross-shard fanout pool for local_multi_get (lazy; shared by
-        # every call on this handle so external caller threads — the
-        # serving daemon's request pool — compose with it instead of
-        # multiplying thread counts)
-        _opts = self.store.spec.persistence_opts or {}
-        try:
-            self._fanout_threads = max(1, int(
-                _opts.get("serving_fanout", SERVING_FANOUT_THREADS)
-            ))
-            # a VALID explicit knob is a per-domain contract (private
-            # pool); an unparseable value falls back to the default AND
-            # the shared pool — presence alone must not allocate
-            # hundreds of private pools off a typo
-            self._fanout_explicit = "serving_fanout" in _opts
-        except (TypeError, ValueError):
-            self._fanout_threads = SERVING_FANOUT_THREADS
-            self._fanout_explicit = False
-        self._serving_pool = None
-        self._pool_is_shared = False
-        self._serving_pool_lock = threading.Lock()
         # concurrent local_multi_get caller count (fanout admission gate
         # — see local_multi_get's dispatch comment)
         self._probe_callers = 0
@@ -423,13 +386,9 @@ class Domain:
 
     def shutdown(self) -> None:
         """to-shutdown (status.clj:16): mark the handle; status reports
-        'shutdown' and callers should stop routing reads here."""
+        'shutdown' and callers should stop routing reads here. Later
+        probes on the handle run serially (see :meth:`_fanout_pool`)."""
         self._is_shutdown = True
-        with self._serving_pool_lock:
-            pool, self._serving_pool = self._serving_pool, None
-            shared, self._pool_is_shared = self._pool_is_shared, False
-        if pool is not None and not shared:
-            pool.shutdown(wait=False)
 
     def shard_set(self, version: int | None = None) -> list[int]:
         """Shard ids materialized in a version (shard-set,
@@ -1115,32 +1074,30 @@ class Domain:
         out: dict[bytes, bytes | None] = {bytes(k): None for k in keys}
 
         def _probe_shard(shard: int, shard_keys: list[bytes]) -> dict[bytes, bytes]:
+            # Per shard file: (1) one Bloom decision, (2) bisect to the
+            # candidate row groups, (3) the decoded-group cache, (4) a
+            # whole-group decode — the analogue of the reference's one
+            # B-tree descent per read (JavaBerkDB.java:70-82).
             hits: dict[bytes, bytes] = {}
             sdir = os.path.join(vpath, shard_dirname(shard))
-            files = self._shard_file_list(sdir)
             targets = sorted(set(shard_keys))
             target_digs: bytes | None = None  # blake2b blob, built once
-            dig_at: dict[bytes, int] = {}  # target key → blob slot
-            for fname in files:
+            for fname in self._shard_file_list(sdir):
                 fpath = os.path.join(sdir, fname)
                 pf, pf_lock, _key_idx, bounds, bloom, rg_sizes = (
                     self._open_shard_file(fpath)
                 )
-                # File-level Bloom pre-filter (the sidecar covers the
-                # whole FILE): in the non-cache-absorbing regime — the
-                # per-group path below would consult the same filter for
-                # every candidate group anyway — one vectorized test over
-                # all targets drops bloom-definitive misses from the
-                # bisect walk entirely, and skips the file when nothing
-                # survives. A miss-heavy batch on a fragmented multi-file
-                # shard previously paid O(files × targets) bisect +
-                # digest-subset assembly before the first per-group
-                # consult. When the cache could still absorb the file's
-                # smallest group, keep the r8 cache-first order: decoding
-                # a group once makes every later miss on it a single
-                # C-side hash probe, which the pre-filter would starve.
+                # (1) File-level Bloom test (the sidecar covers the whole
+                # FILE), run only when the cache cannot absorb the file's
+                # smallest group. When it can, decoding a group once makes
+                # every later miss on it a single C-side hash probe, which
+                # a prefilter would starve. Otherwise one vectorized test
+                # over all targets drops bloom-definitive misses and skips
+                # the file when nothing survives. A "yes" (hit or fpp)
+                # falls through, so the filter only removes work, never
+                # answers. The budget reads are racy heuristics: a stale
+                # read mis-routes one decode, never correctness.
                 file_targets = targets
-                prefiltered = False
                 if bloom is not None:
                     absorbing = (
                         self._rg_cache_budget > 0
@@ -1152,9 +1109,6 @@ class Domain:
                     if not absorbing:
                         if target_digs is None:
                             target_digs = bloom.hash_keys(targets)
-                            dig_at = {
-                                key: i for i, key in enumerate(targets)
-                            }
                         file_targets = [
                             k for k, ok in zip(
                                 targets,
@@ -1163,17 +1117,13 @@ class Domain:
                         ]
                         if not file_targets:
                             continue
-                        prefiltered = True
-                # Candidate row groups per key by BISECT over the cached
-                # bound index — the old per-probe per-row-group
+                # (2) Candidate row groups per key by BISECT over the
+                # cached bound index (VERDICT r6 item 2: a per-probe
                 # `.statistics` walk deserialized Thrift metadata
-                # O(num_row_groups) times per file per probe (VERDICT r6
-                # item 2; the reference probe is a logarithmic B-tree
-                # descent, JavaBerkDB.java:70-82). Bounds are in key
-                # order (key-sorted files); truncated stats may overlap
-                # at boundaries, so after bisecting to the last row group
-                # whose min ≤ key, walk back while max ≥ key — the same
-                # conservative containment the linear walk applied.
+                # O(num_row_groups) times). Bounds are in key order
+                # (key-sorted files); truncated stats may overlap at
+                # boundaries, so after bisecting to the last row group
+                # whose min ≤ key, walk back while max ≥ key.
                 mins, maxs, stat_rgs, statless = bounds
                 by_rg: dict[int, list[bytes]] = {}
                 for k in file_targets:
@@ -1184,157 +1134,33 @@ class Domain:
                 for rg in statless:
                     by_rg[rg] = file_targets  # no stats → scan the group
                 for rg in sorted(by_rg):
-                    wanted = sorted(set(by_rg[rg]))
-                    # Decoded-group cache fast path: hot groups answer
-                    # from in-memory Arrow arrays (one C-side hash probe,
-                    # no I/O, no decode) — the BDB-JE-node-cache analogue
-                    # (JavaBerkDB.java:70-82). Cold CACHEABLE groups
-                    # (uncompressed ≤ budget/4, bounded decode) are read
-                    # whole once and inserted; oversized groups keep the
-                    # streaming early-exit path below unconditionally.
+                    wanted = by_rg[rg]
+                    # (3) Hot groups answer from in-memory Arrow arrays
+                    # (one C-side hash probe, no I/O, no decode).
                     cached = self._rg_cache_get(fpath, rg)
-                    cacheable = (
-                        self._rg_cache_budget > 0
-                        and rg < len(rg_sizes)
-                        and rg_sizes[rg] <= self._rg_cache_budget // 4
-                    )
-                    if (
-                        cached is None
-                        and bloom is not None
-                        and not prefiltered  # file-level test already ran:
-                        # the sidecar is per-FILE, a per-group re-test of
-                        # surviving keys returns all-yes by construction
-                        and not (
-                            cacheable
-                            and self._rg_cache_nbytes + rg_sizes[rg]
-                            <= self._rg_cache_budget
-                        )
-                    ):
-                        # Bloom short-circuit (bloom.py), consulted ONLY
-                        # when the alternative decode is UNPRODUCTIVE —
-                        # a hot cached group answers a miss with one
-                        # C-side hash probe (cheaper than any filter),
-                        # and a cacheable group that still FITS the
-                        # budget is worth decoding once even for a miss
-                        # (every later miss on it is then free), so
-                        # bloom guards oversized groups and the
-                        # at-budget regime — which is the ONLY regime a
-                        # 100 TB domain ever serves in (the budget reads
-                        # are racy heuristics; a stale read mis-routes
-                        # one decode, never correctness). A sidecar
-                        # "no" is definitive for the whole FILE (the key
-                        # may reappear in this file's other candidate
-                        # groups and is re-filtered there — same
-                        # answer); a "yes" (hit or fpp) falls through,
-                        # so the filter only removes work, never
-                        # answers. Keys are blake2b-hashed ONCE per
-                        # shard probe; each cold group tests its
-                        # wanted-subset digests vectorized.
-                        if target_digs is None:
-                            target_digs = bloom.hash_keys(targets)
-                            dig_at = {
-                                key: i for i, key in enumerate(targets)
-                            }
-                        sub = b"".join(
-                            target_digs[dig_at[k] * 16:dig_at[k] * 16 + 16]
-                            for k in wanted
-                        )
-                        wanted = [
-                            k for k, ok in zip(
-                                wanted, bloom.contains_digests(sub)
-                            ) if ok
-                        ]
-                        if not wanted:
-                            continue
-                    if cached is None and (
-                        cacheable
-                        or (
-                            rg < len(rg_sizes)
-                            and rg_sizes[rg] <= SERVING_BULK_DECODE_MAX
-                        )
-                    ):
+                    if cached is None:
+                        # (4) Decode the group whole: one GIL-releasing C
+                        # call. Cacheable groups (≤ budget/4) are kept;
+                        # larger ones are used once and dropped.
                         with pf_lock:
                             tbl = pf.read_row_groups(
                                 [rg], columns=["key", "value"]
                             )
                         tbl = tbl.combine_chunks()
-                        if cacheable:
-                            cached = self._rg_cache_put(
-                                fpath,
-                                rg,
-                                tbl.column("key"),
-                                tbl.column("value"),
-                                tbl.nbytes,
-                            )
-                        else:
-                            # bounded whole-group decode WITHOUT
-                            # retention: one C call + vectorized probe
-                            # beats the Arrow-batch streaming loop, and
-                            # at the 16 MiB layout cap the transient is
-                            # small; only pre-cap monoliths (> the bulk
-                            # bound) fall through to streaming
-                            cached = (
-                                tbl.column("key"),
-                                tbl.column("value"),
-                                tbl.nbytes,
-                            )
-                    if cached is not None:
-                        karr, varr, _nb = cached
-                        idx = pc.index_in(
-                            pa.array(wanted, type=pa.binary()), value_set=karr
-                        )
-                        vals = pc.take(varr, idx).to_pylist()
-                        for kk, ii, vv in zip(
-                            wanted, idx.to_pylist(), vals
+                        cached = (tbl.column("key"), tbl.column("value"))
+                        if (
+                            self._rg_cache_budget > 0
+                            and rg_sizes[rg] <= self._rg_cache_budget // 4
                         ):
-                            if ii is not None:
-                                hits[kk] = vv
-                        continue
-                    # Stream the row group in bounded Arrow batches
-                    # instead of materializing it whole (VERDICT r5
-                    # item 4: at the design point of ~1 GB row groups a
-                    # 1000-key probe would otherwise transiently hold
-                    # many full row groups; BDB probes are page-granular,
-                    # JavaBerkDB.java:70-82). The file is key-sorted, so
-                    # once a batch's last key reaches max(wanted) the
-                    # rest of the row group cannot match — early exit.
-                    # C++-side membership filter per batch: only the
-                    # (≤ len(wanted)) hits ever reach Python.
-                    wmax = max(wanted)
-                    want_arr = pa.array(wanted, type=pa.binary())
-                    batches = pf.iter_batches(
-                        batch_size=LOCAL_PROBE_BATCH_ROWS,
-                        row_groups=[rg],
-                        columns=["key", "value"],
+                            self._rg_cache_put(fpath, rg, *cached, tbl.nbytes)
+                    karr, varr = cached[:2]
+                    idx = pc.index_in(
+                        pa.array(wanted, type=pa.binary()), value_set=karr
                     )
-                    while True:
-                        # lock covers ONLY the handle I/O (pyarrow file
-                        # handles are not MT-safe); the C++ filter and
-                        # hit extraction run outside it so concurrent
-                        # serving threads on a hot file don't serialize
-                        # on each other's CPU work
-                        with pf_lock:
-                            rb = next(batches, None)
-                        if rb is None:
-                            break
-                        if len(rb) == 0:
-                            continue
-                        kcol = rb.column(rb.schema.get_field_index("key"))
-                        mask = pc.is_in(kcol, value_set=want_arr)
-                        if pc.any(mask).as_py():
-                            matched = rb.filter(mask)
-                            hk = matched.column(
-                                matched.schema.get_field_index("key")
-                            )
-                            hv = matched.column(
-                                matched.schema.get_field_index("value")
-                            )
-                            for kk, vv in zip(
-                                hk.to_pylist(), hv.to_pylist()
-                            ):
-                                hits[kk] = vv
-                        if kcol[len(kcol) - 1].as_py() >= wmax:
-                            break
+                    vals = pc.take(varr, idx).to_pylist()
+                    for kk, ii, vv in zip(wanted, idx.to_pylist(), vals):
+                        if ii is not None:
+                            hits[kk] = vv
             return hits
 
         # Cross-shard fanout (keyval/core.clj:118-134: the reference
@@ -1364,7 +1190,7 @@ class Domain:
             for shard, shard_keys in items:
                 out.update(_probe_shard(shard, shard_keys))
 
-        if len(by_shard) <= 1 or self._fanout_threads <= 1:
+        if len(by_shard) <= 1:
             _serial(by_shard.items())
             return out
         with self._fanout_count_lock:
@@ -1382,8 +1208,8 @@ class Domain:
                         pool.submit(_probe_shard, shard, shard_keys)
                     )
                 except RuntimeError:
-                    # pool shut down mid-dispatch (shutdown() race on a
-                    # private pool): finish on the caller thread
+                    # the pool refuses new work (it was shut down, e.g.
+                    # at interpreter exit): finish on the caller thread
                     serial_rest.append((shard, shard_keys))
             try:
                 for fut in futures:
@@ -1410,38 +1236,13 @@ class Domain:
         return out
 
     def _fanout_pool(self):
-        """Lazy cross-shard probe pool (``serving_fanout`` wide).
-
-        Domains at the DEFAULT width share one process-level pool — the
-        reference daemon serves every domain from one server pool
-        (THsHaServer, common/thrift.clj:111-118), and a serving process
-        over hundreds of domains must not hold fanout-threads × domains
-        idle stacks. An EXPLICIT ``serving_fanout`` in the spec — any
-        value, including 8 — gets a private pool of that width (the
-        knob is a per-domain contract: its batches must not queue
-        behind other domains'). Either way external request threads
-        queue onto ONE bounded pool instead of multiplying thread
-        counts, and :meth:`shutdown` releases only private pools.
-        Returns None on a shut-down handle (callers probe serially)
-        so a post-shutdown probe can never recreate a leaked pool.
-        """
-        if self._serving_pool is None:
-            with self._serving_pool_lock:
-                if self._is_shutdown:
-                    return None
-                if self._serving_pool is None:
-                    if not self._fanout_explicit:
-                        self._serving_pool = _shared_fanout_pool()
-                        self._pool_is_shared = True
-                    else:
-                        from concurrent.futures import ThreadPoolExecutor
-
-                        self._serving_pool = ThreadPoolExecutor(
-                            max_workers=self._fanout_threads,
-                            thread_name_prefix="edb-serve",
-                        )
-                        self._pool_is_shared = False
-        return self._serving_pool
+        """The cross-shard probe pool: one process-level pool for every
+        domain, as the reference daemon serves every domain from one
+        server pool (THsHaServer, common/thrift.clj:111-118). External
+        request threads queue onto it instead of multiplying thread
+        counts. Returns None on a shut-down handle (callers probe
+        serially)."""
+        return None if self._is_shutdown else _shared_fanout_pool()
 
     def local_get(self, key: bytes, version: int | None = None) -> bytes | None:
         """Point probe via :meth:`local_multi_get` (A1 serving analogue)."""
@@ -1456,24 +1257,21 @@ class Domain:
                 self._rg_cache.move_to_end((path, rg))
             return e
 
-    def _rg_cache_put(self, path: str, rg: int, karr, varr, nbytes: int):
+    def _rg_cache_put(self, path: str, rg: int, karr, varr, nbytes: int) -> None:
         """Insert one decoded row group, evicting LRU entries past the
         byte budget. Two threads racing the same cold group both decode;
-        the first insert wins and both use it (entries are immutable —
-        same file, same group). Returns the cached entry."""
+        the first insert wins (entries are immutable — same file, same
+        group)."""
         with self._rg_cache_lock:
             key = (path, rg)
-            e = self._rg_cache.get(key)
-            if e is None:
-                e = (karr, varr, int(nbytes))
-                self._rg_cache[key] = e
-                self._rg_cache_nbytes += e[2]
-                while self._rg_cache_nbytes > self._rg_cache_budget and self._rg_cache:
-                    _, (_, _, nb) = self._rg_cache.popitem(last=False)
-                    self._rg_cache_nbytes -= nb
-            else:
+            if key in self._rg_cache:
                 self._rg_cache.move_to_end(key)
-            return e
+                return
+            self._rg_cache[key] = (karr, varr, int(nbytes))
+            self._rg_cache_nbytes += int(nbytes)
+            while self._rg_cache_nbytes > self._rg_cache_budget and self._rg_cache:
+                _, (_, _, nb) = self._rg_cache.popitem(last=False)
+                self._rg_cache_nbytes -= nb
 
     def _shard_file_list(self, sdir: str) -> "list[str]":
         """Cached data-file listing for one shard dir of a PUBLISHED

@@ -193,8 +193,8 @@ def run_entries(spark, paths: dict[str, str], n: int, tag: str) -> dict[str, flo
         ).collect()
 
     # concurrent serving (r6, VERDICT r5 item 5): fixed 8x10x100-key load
-    # against the Nx domain — the probe is row-group-pruned + batch-
-    # streamed, so time should stay ~flat as the domain grows 10x
+    # against the Nx domain — the probe is row-group-pruned and decodes
+    # capped row groups, so time should stay ~flat as the domain grows 10x
     import threading as _threading
 
     li_keys = [
@@ -707,10 +707,9 @@ def run_scale_fanout(spark) -> dict:
         for r in base.select("l_orderkey", "l_linenumber")
         .limit(1000).collect()
     ]
-    # cache disabled so EVERY pass pays the cold probe; with the default
-    # 16 MiB layout the uncached path is still the whole-group C decode
-    # (SERVING_BULK_DECODE_MAX), i.e. exactly the work a 100 TB domain's
-    # scattered batch pays per shard — and the work fanout parallelizes
+    # cache disabled so EVERY pass pays the cold probe: the whole-group
+    # C decode, i.e. exactly the work a 100 TB domain's scattered batch
+    # pays per shard — and the work fanout parallelizes
     for shards, copies in ((8, 1), (64, 8)):
         paths = materialize(spark, copies, BASE_SF)
         li_kv = spark.read.parquet(paths["lineitem"]).select(
@@ -727,9 +726,10 @@ def run_scale_fanout(spark) -> dict:
             version=1,
         )
         point = {}
-        for mode, width in (("serial", 1), ("fanout8", 8)):
+        for mode in ("serial", "fanout8"):
             dom = Domain(spark, eng.domain_root(name))
-            dom._fanout_threads = width
+            if mode == "serial":
+                dom._fanout_pool = lambda: None  # the serial dispatch
             dom.local_multi_get(keys)  # untimed warm: handles + bounds
             best = 1e9
             for _ in range(5):

@@ -188,15 +188,9 @@ def test_miss_short_circuits_without_io(spark, bloom_root, monkeypatch):
     dom = eng.domain("bl")
     dom.local_multi_get([b"warm"])  # open handles + load sidecars first
     calls = []
-    # count BOTH probe read paths: iter_batches (streaming) and
-    # read_row_groups (the decoded-group cache's cold fill) — a bloom
-    # "no" must trigger neither
-    orig_ib = pq.ParquetFile.iter_batches
+    # count the probe's one read path (read_row_groups, the whole-group
+    # decode) — a bloom "no" must not trigger it
     orig_rg = pq.ParquetFile.read_row_groups
-    monkeypatch.setattr(
-        pq.ParquetFile, "iter_batches",
-        lambda self, *a, **kw: calls.append(1) or orig_ib(self, *a, **kw),
-    )
     monkeypatch.setattr(
         pq.ParquetFile, "read_row_groups",
         lambda self, *a, **kw: calls.append(1) or orig_rg(self, *a, **kw),
@@ -367,12 +361,7 @@ def test_bloom_gates_decodes_when_cache_cannot_absorb(spark, tmp_path, monkeypat
     dom = Domain(spark, root)
     dom.local_multi_get([b"warm"])
     calls = []
-    orig_ib = pq.ParquetFile.iter_batches
     orig_rg = pq.ParquetFile.read_row_groups
-    monkeypatch.setattr(
-        pq.ParquetFile, "iter_batches",
-        lambda self, *a, **kw: calls.append(1) or orig_ib(self, *a, **kw),
-    )
     monkeypatch.setattr(
         pq.ParquetFile, "read_row_groups",
         lambda self, *a, **kw: calls.append(1) or orig_rg(self, *a, **kw),

@@ -113,6 +113,35 @@ def test_row_group_cap_default_and_override(spark, tmp_path):
     )
 
 
+def test_block_size_override_bounded(spark, tmp_path):
+    """The serving probe decodes each candidate row group whole, so a
+    parquet.block.size override above MAX_ROW_GROUP_BYTES is rejected
+    before anything is written (no spec, no version), while the 16 MiB
+    default is accepted when given explicitly."""
+    from elephantdb_spark.build import MAX_ROW_GROUP_BYTES
+
+    assert MAX_ROW_GROUP_BYTES == 32 << 20
+    kv = kv_df(spark, [(b"a", b"1"), (b"b", b"2")])
+    big = str(tmp_path / "big")
+    with pytest.raises(ValueError, match="parquet.block.size"):
+        build_domain(
+            spark, kv, big,
+            DomainSpec(num_shards=2,
+                       persistence_opts={"parquet.block.size": 64 << 20}),
+            version=1,
+        )
+    assert not DomainSpec.exists(big)
+
+    ok = str(tmp_path / "ok")
+    build_domain(
+        spark, kv, ok,
+        DomainSpec(num_shards=2,
+                   persistence_opts={"parquet.block.size": 16 << 20}),
+        version=1,
+    )
+    assert Engine(spark, str(tmp_path)).domain("ok").local_get(b"b") == b"2"
+
+
 def test_rows_placed_on_correct_shards(spark, domain_root):
     from elephantdb_spark import Domain
 

@@ -12,6 +12,21 @@ from elephantdb_spark import DomainSpec, Engine, build_domain
 PAIRS = [(f"key{i:04d}".encode(), f"val{i}".encode()) for i in range(500)]
 
 
+def _spy_pool(dom) -> list:
+    """Record every pool a probe on ``dom`` is handed (the fanout
+    dispatch asks ``_fanout_pool`` only when it fans a batch out)."""
+    handed: list = []
+    real = dom._fanout_pool
+
+    def spy():
+        pool = real()
+        handed.append(pool)
+        return pool
+
+    dom._fanout_pool = spy
+    return handed
+
+
 @pytest.fixture(scope="module")
 def dom(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("serve") / "d")
@@ -254,7 +269,7 @@ def test_rg_cache_equivalence_and_budget(spark, tmp_path):
     JavaBerkDB.java:70-82): cached and uncached probes must agree
     byte-for-byte on hits, misses and NULL values; the cache must obey
     its byte budget with LRU eviction; serving_cache_bytes=0 must
-    disable it entirely (streaming path, empty cache)."""
+    disable it entirely (groups decoded per probe, empty cache)."""
     from elephantdb_spark.engine import Domain
 
     root = str(tmp_path / "rgc")
@@ -296,7 +311,7 @@ def test_rg_cache_equivalence_and_budget(spark, tmp_path):
     assert small._rg_cache_nbytes <= small._rg_cache_budget
     assert sum(e[2] for e in small._rg_cache.values()) == small._rg_cache_nbytes
 
-    # oversized groups (uncompressed > budget/4) keep the streaming path
+    # oversized groups (uncompressed > budget/4) are decoded, used, dropped
     tiny = Domain(spark, root)
     tiny._rg_cache_budget = 4  # budget//4 = 1 byte: nothing cacheable
     assert tiny.local_multi_get(keys) == {k: truth.get(k) for k in keys}
@@ -352,7 +367,7 @@ def test_fanout_equivalence_and_point_get_stays_serial(spark, tmp_path):
     host group concurrently via do-pmap). The parallel dispatch must be
     byte-identical to the serial loop — hits, misses, empty key, duplicate
     keys — and a single-shard probe (the point-get shape) must never pay
-    the pool hop (no pool is even created)."""
+    the pool hop (the pool is never even asked for)."""
     from elephantdb_spark.engine import Domain
 
     root = str(tmp_path / "fan")
@@ -371,13 +386,13 @@ def test_fanout_equivalence_and_point_get_stays_serial(spark, tmp_path):
     )
 
     par = Domain(spark, root)
+    par_pools = _spy_pool(par)
     got_par = par.local_multi_get(keys)
-    assert par._serving_pool is not None  # multi-shard probe engaged the pool
+    assert par_pools and par_pools[0] is not None  # the batch fanned out
 
     ser = Domain(spark, root)
-    ser._fanout_threads = 1  # force the serial dispatch on the same data
+    ser._fanout_pool = lambda: None  # force the serial dispatch
     got_ser = ser.local_multi_get(keys)
-    assert ser._serving_pool is None  # fanout=1 disables the pool entirely
 
     assert got_par == got_ser
     truth = dict(pairs)
@@ -386,31 +401,19 @@ def test_fanout_equivalence_and_point_get_stays_serial(spark, tmp_path):
 
     # point-get shape: one shard -> caller thread, no pool
     fresh = Domain(spark, root)
+    fresh_pools = _spy_pool(fresh)
     assert fresh.local_get(pairs[3][0]) == pairs[3][1]
-    assert fresh._serving_pool is None
-
-    # the spec knob flows to the handle like serving_cache_bytes does
-    root1 = str(tmp_path / "fan1")
-    build_domain(
-        spark,
-        spark.createDataFrame(pairs[:10], "key binary, value binary"),
-        root1,
-        DomainSpec(num_shards=2, persistence_opts={"serving_fanout": 1}),
-        version=1,
-    )
-    knob = Domain(spark, root1)
-    assert knob._fanout_threads == 1
-    assert knob.local_multi_get([pairs[0][0], pairs[1][0]])[pairs[0][0]] == pairs[0][1]
-    assert knob._serving_pool is None
+    assert not fresh_pools
 
 
 def test_fanout_pool_shared_across_caller_threads(spark, tmp_path):
     """External request threads must compose with ONE bounded pool (the
     serving daemon's request pool x fanout must not multiply threads), and
-    shutdown() must release it."""
+    a shut-down handle must stop using it."""
     import threading
 
-    from elephantdb_spark.engine import Domain
+    import elephantdb_spark.engine as eng_mod
+    from elephantdb_spark.engine import SERVING_FANOUT_THREADS, Domain
 
     root = str(tmp_path / "fanpool")
     pairs = [(f"pk{i:04d}".encode(), f"pv{i}".encode()) for i in range(400)]
@@ -444,14 +447,18 @@ def test_fanout_pool_shared_across_caller_threads(spark, tmp_path):
     assert not errors, errors[:3]
     assert dom._probe_callers == 0  # gate counter balanced after the storm
 
-    # a lone multi-shard probe fans out (creates the pool if the storm
-    # never found a solitary window)
-    dom.local_multi_get(list(truth)[:50])
-    pool = dom._serving_pool
-    assert pool is not None
-    assert len(pool._threads) <= dom._fanout_threads  # bounded, shared
+    # a lone multi-shard probe fans out onto the process pool (creating
+    # it if the storm never found a solitary window)
+    pools = _spy_pool(dom)
+    lone = list(truth)[:50]
+    dom.local_multi_get(lone)
+    assert pools == [eng_mod._FANOUT_POOL]
+    assert len(eng_mod._FANOUT_POOL._threads) <= SERVING_FANOUT_THREADS
     dom.shutdown()
-    assert dom._serving_pool is None
+    pools.clear()
+    assert dom.local_multi_get(lone) == {k: truth[k] for k in lone}
+    assert pools == [None]  # shut down -> serial
+    assert not eng_mod._FANOUT_POOL._shutdown
 
 
 def test_fanout_admission_gate_concurrent_callers_stay_serial(spark, tmp_path):
@@ -474,6 +481,7 @@ def test_fanout_admission_gate_concurrent_callers_stay_serial(spark, tmp_path):
         version=1,
     )
     dom = Domain(spark, root)
+    pools = _spy_pool(dom)
     keys = [k for k, _ in pairs[:80]]
 
     # simulate an in-flight probe: bump the caller count like a paused
@@ -482,7 +490,7 @@ def test_fanout_admission_gate_concurrent_callers_stay_serial(spark, tmp_path):
         dom._probe_callers += 1
     try:
         got = dom.local_multi_get(keys)
-        assert dom._serving_pool is None  # gated -> serial, pool untouched
+        assert not pools  # gated -> serial, pool never asked for
     finally:
         with dom._fanout_count_lock:
             dom._probe_callers -= 1
@@ -491,44 +499,7 @@ def test_fanout_admission_gate_concurrent_callers_stay_serial(spark, tmp_path):
 
     # gate released -> the same batch fans out
     dom.local_multi_get(keys)
-    assert dom._serving_pool is not None
-
-
-def test_bulk_decode_vs_streaming_boundary(spark, tmp_path, monkeypatch):
-    """Non-retained probes bulk-decode groups up to SERVING_BULK_DECODE_MAX
-    (one C call + vectorized probe) and stream only genuinely oversized
-    pre-cap groups. Both branches must agree byte-for-byte with the truth
-    on hits/misses/NULLs — forced by shrinking the bulk bound to 1."""
-    import elephantdb_spark.engine as eng_mod
-    from elephantdb_spark.engine import Domain
-
-    root = str(tmp_path / "bulkbound")
-    pairs = [
-        (f"b{i:05d}".encode(), None if i % 53 == 0 else f"w{i}".encode())
-        for i in range(8000)
-    ]
-    build_domain(
-        spark,
-        spark.createDataFrame(pairs, "key binary, value binary"),
-        root,
-        DomainSpec(num_shards=2, persistence_opts={"parquet.block.size": 65536}),
-        version=1,
-    )
-    truth = dict(pairs)
-    keys = [f"b{i:05d}".encode() for i in range(0, 8000, 111)] + [b"zzz", b""]
-
-    bulk = Domain(spark, root)
-    bulk._rg_cache_budget = 0  # non-retained, groups <= bound -> bulk path
-    got_bulk = bulk.local_multi_get(keys)
-    assert not bulk._rg_cache
-
-    monkeypatch.setattr(eng_mod, "SERVING_BULK_DECODE_MAX", 1)
-    stream = Domain(spark, root)
-    stream._rg_cache_budget = 0  # nothing cacheable, nothing bulk -> stream
-    got_stream = stream.local_multi_get(keys)
-    assert not stream._rg_cache
-
-    assert got_bulk == got_stream == {k: truth.get(k) for k in keys}
+    assert pools and pools[0] is not None
 
 
 def test_serving_stack_stress_under_hotswap(spark, tmp_path):
@@ -541,8 +512,9 @@ def test_serving_stack_stress_under_hotswap(spark, tmp_path):
     the pool is bounded, and a final read serves the newest version."""
     import threading
 
+    import elephantdb_spark.engine as eng_mod
     from elephantdb_spark import update_domain
-    from elephantdb_spark.engine import Domain
+    from elephantdb_spark.engine import SERVING_FANOUT_THREADS, Domain
 
     root = str(tmp_path / "stress")
     pairs = [(f"s{i:04d}".encode(), f"w{i}".encode()) for i in range(300)]
@@ -593,59 +565,53 @@ def test_serving_stack_stress_under_hotswap(spark, tmp_path):
             th.join()
     assert not errors, errors[:3]
     assert dom._probe_callers == 0
-    if dom._serving_pool is not None:
-        assert len(dom._serving_pool._threads) <= dom._fanout_threads
+    if eng_mod._FANOUT_POOL is not None:
+        assert len(eng_mod._FANOUT_POOL._threads) <= SERVING_FANOUT_THREADS
     assert dom.local_multi_get([hot])[hot] == b"u3"
     assert dom.local_multi_get([hot], version=1)[hot] == truth[hot]
 
 
 def test_fanout_pool_process_shared_across_domains(spark, tmp_path):
-    """Default-width domains share ONE process pool (the reference serves
-    every domain from one server pool, common/thrift.clj:111-118) and
-    shutdown() must not kill it for other domains; a custom width gets a
-    private pool that shutdown() does release."""
+    """Domains share ONE process pool (the reference serves every domain
+    from one server pool, common/thrift.clj:111-118) and shutdown() must
+    not kill it for other domains."""
     import elephantdb_spark.engine as eng_mod
     from elephantdb_spark.engine import Domain
 
     pairs = [(f"d{i:03d}".encode(), f"e{i}".encode()) for i in range(120)]
     roots = []
-    for i, opts in enumerate(({}, {}, {"serving_fanout": 4})):
+    for i in range(2):
         root = str(tmp_path / f"share{i}")
         build_domain(
             spark,
             spark.createDataFrame(pairs, "key binary, value binary"),
             root,
-            DomainSpec(num_shards=4, persistence_opts=opts),
+            DomainSpec(num_shards=4),
             version=1,
         )
         roots.append(root)
     keys = [k for k, _ in pairs[:60]]
 
-    d0, d1, d2 = (Domain(spark, r) for r in roots)
-    for d in (d0, d1, d2):
+    d0, d1 = (Domain(spark, r) for r in roots)
+    pools0, pools1 = _spy_pool(d0), _spy_pool(d1)
+    for d in (d0, d1):
         assert d.local_multi_get(keys) == dict(pairs[:60])
-    assert d0._serving_pool is d1._serving_pool is eng_mod._FANOUT_POOL
-    assert d0._pool_is_shared and d1._pool_is_shared
-    assert d2._serving_pool is not eng_mod._FANOUT_POOL  # custom width
-    assert not d2._pool_is_shared
-    assert d2._serving_pool._max_workers == 4
+    assert pools0 == pools1 == [eng_mod._FANOUT_POOL]
 
     d0.shutdown()
-    assert d0._serving_pool is None
+    assert d0._fanout_pool() is None
     # the shared pool survives for the other domain
     assert not eng_mod._FANOUT_POOL._shutdown
     assert d1.local_multi_get(keys[:10]) == dict(pairs[:10])
-    d2.shutdown()
-    assert d2._serving_pool is None
 
 
 def test_fanout_review_fixes(spark, tmp_path):
     """Round-8 review regressions: (1) single-shard probes never enter the
     admission count (a point-get trickle must not starve scatter batches
-    of fanout); (2) an explicit serving_fanout — even 8 — gets a PRIVATE
-    pool (per-domain contract, never queued behind other domains);
-    (3) a probe racing a pool shutdown falls back to the caller thread
-    and still answers exactly."""
+    of fanout); (2) a probe handed a pool that refuses work falls back to
+    the caller thread and still answers exactly."""
+    from concurrent.futures import ThreadPoolExecutor
+
     from elephantdb_spark.engine import Domain
 
     pairs = [(f"r{i:03d}".encode(), f"x{i}".encode()) for i in range(200)]
@@ -657,52 +623,25 @@ def test_fanout_review_fixes(spark, tmp_path):
         root1, DomainSpec(num_shards=1), version=1,
     )
     d1 = Domain(spark, root1)
+    pools1 = _spy_pool(d1)
     assert d1.local_multi_get([k for k, _ in pairs[:50]]) == dict(pairs[:50])
-    assert d1._probe_callers == 0 and d1._serving_pool is None
+    assert d1._probe_callers == 0 and not pools1
 
-    # (2) explicit width 8 != default: private pool
+    # (2) a shut-down pool under the handle: the probe must complete
+    # serially with exact results (RuntimeError fallback)
     root8 = str(tmp_path / "eight")
     build_domain(
         spark, spark.createDataFrame(pairs, "key binary, value binary"),
-        root8, DomainSpec(num_shards=8, persistence_opts={"serving_fanout": 8}),
-        version=1,
+        root8, DomainSpec(num_shards=8), version=1,
     )
-    import elephantdb_spark.engine as eng_mod
-
     d8 = Domain(spark, root8)
     keys = [k for k, _ in pairs[:80]]
+    dead = ThreadPoolExecutor(max_workers=1)
+    dead.shutdown(wait=False)
+    d8._fanout_pool = lambda: dead
     assert d8.local_multi_get(keys) == dict(pairs[:80])
-    assert d8._serving_pool is not None
-    assert not d8._pool_is_shared
-    assert d8._serving_pool is not eng_mod._FANOUT_POOL
-
-    # (3) kill the private pool out from under the handle: the next probe
-    # must complete serially with exact results (RuntimeError fallback)
-    d8._serving_pool.shutdown(wait=False)
-    assert d8.local_multi_get(keys) == dict(pairs[:80])
-    # and a fully shut-down handle never recreates a pool
+    assert d8._probe_callers == 0
+    # and a fully shut-down handle is never handed a pool
+    del d8._fanout_pool
     d8.shutdown()
     assert d8._fanout_pool() is None
-
-
-def test_invalid_serving_fanout_value_uses_shared_pool(spark, tmp_path):
-    """An UNPARSEABLE serving_fanout (a typo) must fall back to the
-    default width AND the shared process pool — key presence alone must
-    not allocate a private pool per mis-configured domain."""
-    import elephantdb_spark.engine as eng_mod
-    from elephantdb_spark.engine import SERVING_FANOUT_THREADS, Domain
-
-    pairs = [(f"t{i:03d}".encode(), f"u{i}".encode()) for i in range(100)]
-    root = str(tmp_path / "typo")
-    build_domain(
-        spark, spark.createDataFrame(pairs, "key binary, value binary"),
-        root,
-        DomainSpec(num_shards=4, persistence_opts={"serving_fanout": "fast"}),
-        version=1,
-    )
-    d = Domain(spark, root)
-    assert d._fanout_threads == SERVING_FANOUT_THREADS
-    assert not d._fanout_explicit
-    assert d.local_multi_get([k for k, _ in pairs[:40]]) == dict(pairs[:40])
-    assert d._serving_pool is eng_mod._FANOUT_POOL
-    assert d._pool_is_shared
