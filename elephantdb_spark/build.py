@@ -69,9 +69,29 @@ SERVING_ROW_GROUP_BYTES = 16 << 20
 
 #: Ceiling on a ``parquet.block.size`` override. The serving probe decodes
 #: each candidate row group whole (engine.py ``local_multi_get``), so this
-#: bounds its transient memory per probing thread. Writes reject larger
-#: overrides rather than build groups the probe cannot decode cheaply.
+#: bounds its transient memory per probing thread. Checked once, when a new
+#: domain's spec is persisted (:func:`check_row_group_cap`); a domain whose
+#: spec predates the ceiling keeps its layout through updates and
+#: compaction.
 MAX_ROW_GROUP_BYTES = 32 << 20
+
+
+def check_row_group_cap(spec: DomainSpec) -> None:
+    """Raise ValueError when a new parquet spec's ``parquet.block.size``
+    exceeds MAX_ROW_GROUP_BYTES."""
+    if spec.persistence_format != "parquet":
+        return
+    block = int(
+        (spec.persistence_opts or {}).get(
+            "parquet.block.size", SERVING_ROW_GROUP_BYTES
+        )
+    )
+    if block > MAX_ROW_GROUP_BYTES:
+        raise ValueError(
+            f"parquet.block.size={block} exceeds MAX_ROW_GROUP_BYTES="
+            f"{MAX_ROW_GROUP_BYTES}: the serving probe decodes row groups "
+            "whole"
+        )
 
 
 def dedup_last_writer_wins(df: DataFrame, seq_col: str | None = None) -> DataFrame:
@@ -140,19 +160,12 @@ def _writer_opts(spec: DomainSpec, drop: tuple = ()) -> dict[str, str]:
     """The spec's ``persistence_opts`` as writer options. Our own
     non-writer knobs (``bloom_fpp``, ``compact_after_files``) and any
     ``drop`` keys are stripped. Parquet row groups default to
-    SERVING_ROW_GROUP_BYTES; an override above MAX_ROW_GROUP_BYTES raises
-    ValueError."""
+    SERVING_ROW_GROUP_BYTES."""
     opts = dict(spec.persistence_opts or {})
     for k in ("bloom_fpp", "compact_after_files", *drop):
         opts.pop(k, None)
     if resolve_format(spec.persistence_format) == "parquet":
-        block = int(opts.setdefault("parquet.block.size", SERVING_ROW_GROUP_BYTES))
-        if block > MAX_ROW_GROUP_BYTES:
-            raise ValueError(
-                f"parquet.block.size={block} exceeds MAX_ROW_GROUP_BYTES="
-                f"{MAX_ROW_GROUP_BYTES}: the serving probe decodes row "
-                "groups whole"
-            )
+        opts.setdefault("parquet.block.size", SERVING_ROW_GROUP_BYTES)
     return {k: str(v) for k, v in opts.items()}
 
 
@@ -194,8 +207,6 @@ def build_domain(
     if dedup not in ("lww", "none"):
         raise ValueError(f"dedup must be 'lww' or 'none', got {dedup!r}")
     indexer = _resolve_indexer_arg(indexer)
-    if spec is not None:
-        _writer_opts(spec)  # reject a bad layout before the spec persists
     store = DomainStore.create_or_open(domain_root, spec)
     if version is None:
         version = int(time.time() * 1000)

@@ -51,7 +51,7 @@ from elephantdb_spark.store import DomainStore, shard_dirname
 #: its ≤16 MiB parquet row group from disk. Groups whose uncompressed
 #: size exceeds a quarter of the budget are decoded whole for the one
 #: probe and then dropped, never cached, so one oversized group cannot
-#: thrash the cache. Builds bound every group at
+#: thrash the cache. New domains bound every group at
 #: ``build.MAX_ROW_GROUP_BYTES``, which bounds that transient decode.
 SERVING_GROUP_CACHE_BYTES = 64 << 20
 
@@ -1074,10 +1074,11 @@ class Domain:
         out: dict[bytes, bytes | None] = {bytes(k): None for k in keys}
 
         def _probe_shard(shard: int, shard_keys: list[bytes]) -> dict[bytes, bytes]:
-            # Per shard file: (1) one Bloom decision, (2) bisect to the
-            # candidate row groups, (3) the decoded-group cache, (4) a
-            # whole-group decode — the analogue of the reference's one
-            # B-tree descent per read (JavaBerkDB.java:70-82).
+            # Per shard file: (1) bisect to the candidate row groups,
+            # (2) the decoded-group cache, (3) one Bloom decision before a
+            # decode the cache would not keep, (4) a whole-group decode —
+            # the analogue of the reference's one B-tree descent per read
+            # (JavaBerkDB.java:70-82).
             hits: dict[bytes, bytes] = {}
             sdir = os.path.join(vpath, shard_dirname(shard))
             targets = sorted(set(shard_keys))
@@ -1087,37 +1088,7 @@ class Domain:
                 pf, pf_lock, _key_idx, bounds, bloom, rg_sizes = (
                     self._open_shard_file(fpath)
                 )
-                # (1) File-level Bloom test (the sidecar covers the whole
-                # FILE), run only when the cache cannot absorb the file's
-                # smallest group. When it can, decoding a group once makes
-                # every later miss on it a single C-side hash probe, which
-                # a prefilter would starve. Otherwise one vectorized test
-                # over all targets drops bloom-definitive misses and skips
-                # the file when nothing survives. A "yes" (hit or fpp)
-                # falls through, so the filter only removes work, never
-                # answers. The budget reads are racy heuristics: a stale
-                # read mis-routes one decode, never correctness.
-                file_targets = targets
-                if bloom is not None:
-                    absorbing = (
-                        self._rg_cache_budget > 0
-                        and bool(rg_sizes)
-                        and min(rg_sizes) <= self._rg_cache_budget // 4
-                        and self._rg_cache_nbytes + min(rg_sizes)
-                        <= self._rg_cache_budget
-                    )
-                    if not absorbing:
-                        if target_digs is None:
-                            target_digs = bloom.hash_keys(targets)
-                        file_targets = [
-                            k for k, ok in zip(
-                                targets,
-                                bloom.contains_digests(target_digs),
-                            ) if ok
-                        ]
-                        if not file_targets:
-                            continue
-                # (2) Candidate row groups per key by BISECT over the
+                # (1) Candidate row groups per key by BISECT over the
                 # cached bound index (VERDICT r6 item 2: a per-probe
                 # `.statistics` walk deserialized Thrift metadata
                 # O(num_row_groups) times). Bounds are in key order
@@ -1126,32 +1097,62 @@ class Domain:
                 # whose min ≤ key, walk back while max ≥ key.
                 mins, maxs, stat_rgs, statless = bounds
                 by_rg: dict[int, list[bytes]] = {}
-                for k in file_targets:
+                for k in targets:
                     j = bisect.bisect_right(mins, k) - 1
                     while j >= 0 and maxs[j] >= k:
                         by_rg.setdefault(stat_rgs[j], []).append(k)
                         j -= 1
                 for rg in statless:
-                    by_rg[rg] = file_targets  # no stats → scan the group
+                    by_rg[rg] = targets  # no stats → scan the group
+                passed: set[bytes] | None = None  # file's Bloom verdict
                 for rg in sorted(by_rg):
                     wanted = by_rg[rg]
-                    # (3) Hot groups answer from in-memory Arrow arrays
+                    # (2) Hot groups answer from in-memory Arrow arrays
                     # (one C-side hash probe, no I/O, no decode).
                     cached = self._rg_cache_get(fpath, rg)
                     if cached is None:
+                        keep = (
+                            self._rg_cache_budget > 0
+                            and rg_sizes[rg] <= self._rg_cache_budget // 4
+                        )
+                        # (3) Bloom, only when the decode is unproductive:
+                        # the group is too big to keep (> budget/4), or
+                        # the cache is at budget. A kept group makes every
+                        # later miss on it one C-side hash probe, which a
+                        # prefilter would starve. The sidecar covers the
+                        # whole FILE, so one vectorized test over all
+                        # targets serves the file's remaining groups. A
+                        # "yes" (hit or fpp) falls through: the filter
+                        # only removes work, never answers. The budget
+                        # reads are racy heuristics: a stale read
+                        # mis-routes one decode, never correctness.
+                        if bloom is not None and not (
+                            keep
+                            and self._rg_cache_nbytes + rg_sizes[rg]
+                            <= self._rg_cache_budget
+                        ):
+                            if passed is None:
+                                if target_digs is None:
+                                    target_digs = bloom.hash_keys(targets)
+                                passed = {
+                                    k for k, ok in zip(
+                                        targets,
+                                        bloom.contains_digests(target_digs),
+                                    ) if ok
+                                }
+                            wanted = [k for k in wanted if k in passed]
+                            if not wanted:
+                                continue
                         # (4) Decode the group whole: one GIL-releasing C
-                        # call. Cacheable groups (≤ budget/4) are kept;
-                        # larger ones are used once and dropped.
+                        # call. Cacheable groups are kept; larger ones are
+                        # used once and dropped.
                         with pf_lock:
                             tbl = pf.read_row_groups(
                                 [rg], columns=["key", "value"]
                             )
                         tbl = tbl.combine_chunks()
                         cached = (tbl.column("key"), tbl.column("value"))
-                        if (
-                            self._rg_cache_budget > 0
-                            and rg_sizes[rg] <= self._rg_cache_budget // 4
-                        ):
+                        if keep:
                             self._rg_cache_put(fpath, rg, *cached, tbl.nbytes)
                     karr, varr = cached[:2]
                     idx = pc.index_in(

@@ -267,7 +267,9 @@ class DomainStore:
     @classmethod
     def create_or_open(cls, root: str, spec: DomainSpec | None = None) -> "DomainStore":
         """Open with spec equality check; create+persist spec on first use
-        (DomainStore.java:40-53)."""
+        (DomainStore.java:40-53). Every domain-creating entry point passes
+        here, so a new spec's row-group ceiling is checked here, before
+        anything is written."""
         if DomainSpec.exists(root):
             stored = DomainSpec.read(root)
             if spec is not None:
@@ -275,6 +277,10 @@ class DomainStore:
             return cls(root, stored)
         if spec is None:
             raise SpecMismatchError(f"no spec found at {root} and none supplied")
+        # function-level: build imports this module
+        from elephantdb_spark.build import check_row_group_cap
+
+        check_row_group_cap(spec)
         spec.write(root)
         return cls(root, spec)
 

@@ -394,6 +394,56 @@ def test_bloom_gates_decodes_when_cache_cannot_absorb(spark, tmp_path, monkeypat
     assert len(calls) == 0  # steady state: all from the decoded cache
 
 
+def test_bloom_gates_oversized_groups_beside_small_tail(spark, tmp_path, monkeypatch):
+    """The Bloom decision is made per candidate group, not per file: a
+    file whose small tail group fits the cache still has groups too big
+    to keep (> budget/4). In-range misses on those groups must answer
+    from the sidecar with (almost) no reads, since a decode there would
+    be used once and dropped."""
+    import pyarrow.parquet as pq
+
+    from elephantdb_spark.engine import Domain
+
+    root = str(tmp_path / "tail")
+    kv = spark.range(3000).select(
+        F.concat(F.lit("k"), F.col("id")).cast("binary").alias("key"),
+        F.concat(F.lit("v" * 64), F.col("id")).cast("binary").alias("value"),
+    )
+    build_domain(
+        spark, kv, root,
+        DomainSpec(num_shards=1, persistence_opts={
+            "bloom_fpp": 0.01, "parquet.block.size": 1 << 16,
+        }),
+        version=1,
+    )
+    (path,) = _datafiles(root, 1)
+    dom = Domain(spark, root)
+    sizes = dom._open_shard_file(path)[5]
+    dom._rg_cache_budget = 4 * min(sizes)  # only the smallest group fits
+    big = [rg for rg, sz in enumerate(sizes) if sz > min(sizes)]
+    assert len(big) >= 2
+    # k + b"\x00" sorts right after k, so it lands in k's group
+    pf = pq.ParquetFile(path)
+    misses = [
+        k + b"\x00"
+        for rg in big
+        for k in pf.read_row_group(rg, columns=["key"])
+        .column("key").to_pylist()[:-1:25]
+    ]
+    calls = []
+    orig_rg = pq.ParquetFile.read_row_groups
+    monkeypatch.setattr(
+        pq.ParquetFile, "read_row_groups",
+        lambda self, *a, **kw: calls.append(1) or orig_rg(self, *a, **kw),
+    )
+    out = dom.local_multi_get(misses)
+    assert all(v is None for v in out.values())
+    assert len(calls) <= 2  # fpp allowance
+    calls.clear()
+    assert dom.local_multi_get([b"k7"])[b"k7"] == b"v" * 64 + b"7"
+    assert len(calls) == 1  # hits still read
+
+
 def test_hash_keys_one_shot_iterator_with_fallback():
     """hash_keys must materialize one-shot iterators BEFORE hashing: a
     non-bytes item mid-stream triggers the bytes() fallback, and resuming
@@ -424,8 +474,8 @@ def test_contains_digests_rejects_malformed_blob():
 
 def test_file_level_prefilter_multi_file_shard(spark, tmp_path, monkeypatch):
     """r9 (ADVICE r8): in the non-absorbing regime a multi-file shard runs
-    ONE file-level contains_digests per file — definitive misses never
-    enter the bisect walk — while hits that live in DIFFERENT files of the
+    at most ONE file-level contains_digests per file — definitive misses
+    never reach a decode — while hits that live in DIFFERENT files of the
     same shard all still surface (the narrowing must be per-file, not
     shard-sticky)."""
     from elephantdb_spark.bloom import BloomFilter as BF

@@ -114,23 +114,29 @@ def test_row_group_cap_default_and_override(spark, tmp_path):
 
 
 def test_block_size_override_bounded(spark, tmp_path):
-    """The serving probe decodes each candidate row group whole, so a
-    parquet.block.size override above MAX_ROW_GROUP_BYTES is rejected
-    before anything is written (no spec, no version), while the 16 MiB
-    default is accepted when given explicitly."""
-    from elephantdb_spark.build import MAX_ROW_GROUP_BYTES
+    """The serving probe decodes each candidate row group whole, so a NEW
+    domain's parquet.block.size override above MAX_ROW_GROUP_BYTES is
+    rejected before anything is written (no spec, no version), on every
+    entry point that creates a domain, while the 16 MiB default is
+    accepted when given explicitly. A domain whose spec predates the
+    ceiling keeps its layout: it still updates, compacts and reads."""
+    from elephantdb_spark.build import (
+        MAX_ROW_GROUP_BYTES,
+        StagedBuild,
+        compact_domain,
+        update_domain,
+    )
 
     assert MAX_ROW_GROUP_BYTES == 32 << 20
     kv = kv_df(spark, [(b"a", b"1"), (b"b", b"2")])
+    over = DomainSpec(num_shards=2,
+                      persistence_opts={"parquet.block.size": 64 << 20})
     big = str(tmp_path / "big")
     with pytest.raises(ValueError, match="parquet.block.size"):
-        build_domain(
-            spark, kv, big,
-            DomainSpec(num_shards=2,
-                       persistence_opts={"parquet.block.size": 64 << 20}),
-            version=1,
-        )
-    assert not DomainSpec.exists(big)
+        build_domain(spark, kv, big, over, version=1)
+    with pytest.raises(ValueError, match="parquet.block.size"):
+        StagedBuild(spark, big, over, version=1)
+    assert not os.path.exists(big)
 
     ok = str(tmp_path / "ok")
     build_domain(
@@ -139,7 +145,23 @@ def test_block_size_override_bounded(spark, tmp_path):
                    persistence_opts={"parquet.block.size": 16 << 20}),
         version=1,
     )
-    assert Engine(spark, str(tmp_path)).domain("ok").local_get(b"b") == b"2"
+    eng = Engine(spark, str(tmp_path))
+    assert eng.domain("ok").local_get(b"b") == b"2"
+
+    legacy = str(tmp_path / "legacy")
+    # a spec persisted before the ceiling existed; one row per file, so
+    # compaction has fragmented shards to rewrite
+    DomainSpec(num_shards=2, persistence_opts={
+        "parquet.block.size": 64 << 20, "maxRecordsPerFile": 1,
+    }).write(legacy)
+    build_domain(spark, kv, legacy, version=1)
+    update_domain(
+        spark, kv_df(spark, [(b"b", b"3"), (b"c", b"4")]), legacy, version=2
+    )
+    assert compact_domain(spark, legacy, version=3) == 3
+    assert eng.domain("legacy").local_multi_get([b"a", b"b", b"c"]) == {
+        b"a": b"1", b"b": b"3", b"c": b"4",
+    }
 
 
 def test_rows_placed_on_correct_shards(spark, domain_root):
