@@ -130,30 +130,48 @@ def _guarded_shard_expr(scheme, num_shards: int):
     ).otherwise(scheme.shard_col(F.col("key"), num_shards))
 
 
+def _write_shards(
+    spark: SparkSession,
+    df: DataFrame,
+    spec: DomainSpec,
+    sort_col: str,
+    path: str,
+    opts: dict[str, str],
+) -> None:
+    """The one sharded writer: ``df`` (with an int ``shard`` column) goes
+    to ``path`` as ``shard=<i>`` dirs, one ``sort_col``-sorted file per
+    shard. Exact 1:1 shard→partition placement (see
+    sharding.exact_partition_slots), then a sort by (shard, sort_col) so
+    the partitioned writer streams rows in order without re-sorting."""
+    n = spec.num_shards
+    (
+        with_slot_column(spark, df, n)
+        .repartition(n, F.col("__slot"))
+        .sortWithinPartitions("shard", sort_col)
+        .drop("__slot")
+        .write.mode("errorifexists")
+        .partitionBy("shard")
+        .format(resolve_format(spec.persistence_format))
+        .options(**opts)
+        .save(path)
+    )
+
+
 def _write_version(
     spark: SparkSession,
     df: DataFrame,
     store: DomainStore,
     version_path: str,
 ) -> None:
-    """Shard, sort, and write one version directory (no publish)."""
-    n = store.spec.num_shards
+    """Shard, sort, and write one KV version directory (no publish)."""
     scheme = resolve_scheme(store.spec.shard_scheme)
-    fmt = resolve_format(store.spec.persistence_format)
-    sharded = df.withColumn("shard", _guarded_shard_expr(scheme, n))
-    # Exact 1:1 shard→partition placement (see sharding.exact_partition_slots),
-    # then sort by (shard, key) so the partitioned writer streams rows in key
-    # order without re-sorting — each shard becomes one key-sorted file.
-    writer = (
-        with_slot_column(spark, sharded, n)
-        .repartition(n, F.col("__slot"))
-        .sortWithinPartitions("shard", "key")
-        .drop("__slot")
-        .write.mode("errorifexists")
-        .partitionBy("shard")
-        .format(fmt)
+    sharded = df.withColumn(
+        "shard", _guarded_shard_expr(scheme, store.spec.num_shards)
     )
-    writer.options(**_writer_opts(store.spec)).save(version_path)
+    _write_shards(
+        spark, sharded, store.spec, "key", version_path,
+        _writer_opts(store.spec),
+    )
 
 
 def _writer_opts(spec: DomainSpec, drop: tuple = ()) -> dict[str, str]:
@@ -208,20 +226,12 @@ def build_domain(
         raise ValueError(f"dedup must be 'lww' or 'none', got {dedup!r}")
     indexer = _resolve_indexer_arg(indexer)
     store = DomainStore.create_or_open(domain_root, spec)
-    if version is None:
-        version = int(time.time() * 1000)
-    vpath = store.create_version(version)
-    try:
+    with store.publishing(version) as (version, vpath):
         data = df.select("key", "value") if dedup == "none" else dedup_last_writer_wins(df, seq_col)
         if indexer is not None:
             data = indexer(data).select("key", "value")
         _write_version(spark, data, store, vpath)
         _maybe_build_blooms(spark, store, vpath)
-        store.succeed_version(version)
-    except Exception as exc:
-        store.fail_version(version)  # rollback (ElephantDBTap.java:182-188)
-        store.record_failure(version, repr(exc))  # status → failed
-        raise
     return version
 
 
@@ -231,22 +241,17 @@ def build_domain(
 BROADCAST_MERGE_MAX_ROWS = 1_000_000
 
 
-def _data_files(shard_dir: str) -> list[str]:
-    return [
-        f for f in os.listdir(shard_dir)
-        if not f.startswith(("_", "."))
-    ]
-
-
 def _fragmented_shards(version_path: str, cap: int) -> list[int]:
     """Shard ids under ``version_path`` holding more than ``cap`` data
-    files."""
+    files (hidden ``_``/``.`` entries such as Bloom sidecars excluded).
+    A directory listing only: no footer is read."""
     out = []
     for name in os.listdir(version_path):
         full = os.path.join(version_path, name)
-        if name.startswith("shard=") and os.path.isdir(full) \
-                and len(_data_files(full)) > cap:
-            out.append(int(name.split("=", 1)[1]))
+        if name.startswith("shard=") and os.path.isdir(full):
+            files = [f for f in os.listdir(full) if not f.startswith(("_", "."))]
+            if len(files) > cap:
+                out.append(int(name.split("=", 1)[1]))
     return sorted(out)
 
 
@@ -265,7 +270,6 @@ def _compact_shards_to(
     is a layout property of the domain and survives, while split knobs
     like ``maxRecordsPerFile`` are exactly what compaction undoes and are
     deliberately NOT re-applied."""
-    n = store.spec.num_shards
     fmt = resolve_format(store.spec.persistence_format)
     base = (
         spark.read.option("basePath", src_path)
@@ -283,21 +287,13 @@ def _compact_shards_to(
         else store.spec.persistence_opts.get("id_col", data_cols[0])
     )
     sub = base.select(*data_cols, F.col("shard").cast("int").alias("shard"))
-    writer = (
-        with_slot_column(spark, sub, n)
-        .repartition(n, F.col("__slot"))
-        .sortWithinPartitions("shard", sort_col)
-        .drop("__slot")
-        .write.mode("errorifexists")
-        .partitionBy("shard")
-        .format(fmt)
-    )
     # layout properties (codec, dictionary, row-group cap, ...) must
     # SURVIVE compaction — only the file-split knob compaction exists to
     # undo is dropped
-    writer.options(
-        **_writer_opts(store.spec, drop=("maxRecordsPerFile",))
-    ).save(dst_path)
+    _write_shards(
+        spark, sub, store.spec, sort_col, dst_path,
+        _writer_opts(store.spec, drop=("maxRecordsPerFile",)),
+    )
 
 
 def _self_heal_fragmentation(
@@ -370,10 +366,7 @@ def update_domain(
     prev = store.most_recent_version()
     if prev is None:
         return build_domain(spark, batch, domain_root, store.spec, version, seq_col, indexer)
-    if version is None:
-        version = int(time.time() * 1000)
-    vpath = store.create_version(version)
-    try:
+    with store.publishing(version) as (version, vpath):
         new_data = dedup_last_writer_wins(batch, seq_col)
         if indexer is not None:
             new_data = indexer(new_data).select("key", "value")
@@ -417,11 +410,6 @@ def update_domain(
         # get fresh blooms in the same pass (r7 verdict item 5)
         _self_heal_fragmentation(spark, store, vpath)
         _maybe_build_blooms(spark, store, vpath)  # rewritten shards only
-        store.succeed_version(version)
-    except Exception as exc:
-        store.fail_version(version)
-        store.record_failure(version, repr(exc))  # status → failed
-        raise
     return version
 
 
@@ -494,11 +482,11 @@ class StagedBuild:
         self.store = DomainStore.open(domain_root)
         self.version = int(version)
         self._published = False
-        if self.store.versioned_store.has_version(self.version):
+        if self.store.has_version(self.version):
             raise RuntimeError(f"version {version} is already published")
         vpath = self.store.version_path(self.version)
         self._staging = os.path.join(vpath, STAGING_DIRNAME)
-        aside = self.store.versioned_store.staging_aside_path(self.version)
+        aside = self.store.staging_aside_path(self.version)
         if not os.path.isdir(self._staging) and os.path.isdir(aside):
             os.makedirs(vpath, exist_ok=True)
             os.rename(aside, self._staging)
@@ -550,7 +538,7 @@ class StagedBuild:
         # errorifexists writer refuses a non-empty target, and the lazy
         # batch reads must keep pointing at live files until the job runs.
         vpath = self.store.version_path(self.version)
-        aside = self.store.versioned_store.staging_aside_path(self.version)
+        aside = self.store.staging_aside_path(self.version)
         if os.path.exists(aside):
             shutil.rmtree(aside)
         os.rename(self._staging, aside)
@@ -623,22 +611,17 @@ def compact_domain(
         raise RuntimeError(f"domain at {domain_root} has no published version")
     cur_path = store.version_path(current)
 
-    fragmented = []
-    extras = []
-    for name in os.listdir(cur_path):
-        if name.startswith("shard="):
-            if len(_data_files(os.path.join(cur_path, name))) > max_files_per_shard:
-                fragmented.append(int(name.split("=", 1)[1]))
-        elif name not in ("_SUCCESS",) and name != STAGING_DIRNAME:
-            extras.append(name)
+    fragmented = _fragmented_shards(cur_path, max_files_per_shard)
     if not fragmented:
         return current
+    extras = [
+        name for name in os.listdir(cur_path)
+        if not name.startswith("shard=")
+        and name not in ("_SUCCESS", STAGING_DIRNAME)
+    ]
 
-    if version is None:
-        version = int(time.time() * 1000)
-    vpath = store.create_version(version)
-    try:
-        _compact_shards_to(spark, store, cur_path, sorted(fragmented), vpath)
+    with store.publishing(version) as (version, vpath):
+        _compact_shards_to(spark, store, cur_path, fragmented, vpath)
         for name in extras:
             src = os.path.join(cur_path, name)
             dst = os.path.join(vpath, name)
@@ -648,11 +631,6 @@ def compact_domain(
                 shutil.copy2(src, dst)
         store.synchronize_versions(current, version)
         _maybe_build_blooms(spark, store, vpath)  # compacted shards only
-        store.succeed_version(version)
-    except Exception as exc:
-        store.fail_version(version)
-        store.record_failure(version, repr(exc))
-        raise
     return version
 
 

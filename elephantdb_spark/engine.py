@@ -1514,22 +1514,19 @@ class Engine:
         cap = compact_after_files if compact_after_files is not None else int(
             (dom.spec.persistence_opts or {}).get("compact_after_files", 1)
         )
-        # listdir-only pre-check: layout_report would read every data
-        # file's footer — hundreds of driver-side reads on exactly the
-        # fragmented domains this API targets, and the no-op path is
-        # documented as cheap
-        from elephantdb_spark.build import _fragmented_shards, compact_domain
+        from elephantdb_spark.build import compact_domain
 
         current = dom.store.most_recent_version()
-        if current is None or not _fragmented_shards(
-            dom.store.version_path(current), cap
-        ):
+        if current is None:
             return None
-
-        return compact_domain(
+        # compact_domain's own no-op check is a directory listing: it
+        # returns the current version, with no job, when nothing is over
+        # the cap
+        v = compact_domain(
             self.spark, self.domain_root(name),
             version=version, max_files_per_shard=cap,
         )
+        return None if v == current else v
 
     def _neardup_history_root(self, name: str) -> str | None:
         """The neardup-history root ``name`` belongs to, or None.
@@ -1552,9 +1549,9 @@ class Engine:
     ) -> int | None:
         """Lockstep sweep of a paired history (sigs first — the module's
         crash ordering). Same contract as :meth:`maintain`: new version
-        id when a compaction ran, None on an already-clean layout (the
-        pre-check stays listdir-only; ``compact_neardup_history``'s own
-        footer-reading no-op path is never reached on a clean pair).
+        id when a compaction ran, None on an already-clean layout
+        (``compact_neardup_history``'s no-op check is a directory
+        listing).
 
         The cap default chain matches maintain()'s documented chain for
         regular domains — arg → spec ``persistence_opts
@@ -1565,12 +1562,11 @@ class Engine:
         whenever either sub-domain's own effective threshold would
         (ADVICE r10 item 2 — previously a lone declared cap governed
         the pair, silently loosening the undeclared side's bound)."""
-        from elephantdb_spark.build import _fragmented_shards
         from elephantdb_spark.operators.neardup_history import (
             compact_neardup_history,
         )
 
-        subs = {}
+        stores = {}
         for sub in ("sigs", "bands"):
             sub_root = os.path.join(hroot, sub)
             if not DomainSpec.exists(sub_root):
@@ -1578,31 +1574,20 @@ class Engine:
                     f"neardup history at {hroot!r} is missing its "
                     f"{sub!r} sub-domain (partial/crashed build?)"
                 )
-            subs[sub] = Domain(self.spark, sub_root)
+            stores[sub] = DomainStore.open(sub_root)
         if compact_after_files is not None:
             cap = int(compact_after_files)
         else:
-            def _effective_cap(dom: Domain) -> int:
-                declared = (dom.spec.persistence_opts or {}).get(
-                    "compact_after_files"
-                )
-                return int(declared) if declared is not None else 1
-
-            cap = min(_effective_cap(dom) for dom in subs.values())
-        dirty = False
-        for dom in subs.values():
-            store = dom.store
-            cur = store.most_recent_version()
-            if cur is not None and _fragmented_shards(
-                store.version_path(cur), cap
-            ):
-                dirty = True
-                break
-        if not dirty:
-            return None
-        return compact_neardup_history(
+            declared = [
+                (st.spec.persistence_opts or {}).get("compact_after_files")
+                for st in stores.values()
+            ]
+            cap = min(1 if d is None else int(d) for d in declared)
+        current = stores["bands"].most_recent_version()
+        v = compact_neardup_history(
             self.spark, hroot, version=version, max_files_per_shard=cap
         )
+        return None if v == current else v
 
     def is_fully_loaded(self) -> bool:
         """fully-loaded? (common/database.clj:56-60): every domain ready?

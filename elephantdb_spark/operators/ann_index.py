@@ -37,12 +37,12 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from elephantdb_spark.build import _write_shards
 from elephantdb_spark.operators.ann import (
     _probe_cells_udf,
     add_ivf_cell,
@@ -55,9 +55,8 @@ from elephantdb_spark.operators.ann import (
 #: At/above this cell count build_ivf_index trains with the two-level
 #: (hierarchical) k-means instead of flat Lloyd's.
 HIERARCHICAL_CELLS_MIN = 2048
-from elephantdb_spark.sharding import with_slot_column
 from elephantdb_spark.spec import DomainSpec
-from elephantdb_spark.store import DomainStore
+from elephantdb_spark.store import DomainStore, shard_dirname
 
 #: Scheme tag marking an index domain's placement as IVF-cell (not
 #: md5-mod): spec round-trip validation (A30) rejects opening an index
@@ -103,10 +102,7 @@ def build_ivf_index(
         },
     )
     store = DomainStore.create_or_open(root, spec)
-    if version is None:
-        version = int(time.time() * 1000)
-    vpath = store.create_version(version)
-    try:
+    with store.publishing(version) as (version, vpath):
         if centroids is None:
             # flat Lloyd's is O(sample·n_cells·dim)/iter — fine to a few
             # thousand cells; production counts (100 TB → ~200k cells)
@@ -123,22 +119,11 @@ def build_ivf_index(
         assigned = add_ivf_cell(df, centroids, vec_col, out_col="shard").select(
             id_col, vec_col, "shard"
         )
-        (
-            with_slot_column(spark, assigned, n_cells)
-            .repartition(n_cells, F.col("__slot"))
-            .sortWithinPartitions("shard", id_col)
-            .drop("__slot")
-            .write.mode("errorifexists")
-            .partitionBy("shard")
-            .parquet(vpath)
-        )
+        # no writer options: the spec's opts are index params, and index
+        # domains keep Spark's default row groups
+        _write_shards(spark, assigned, store.spec, id_col, vpath, {})
         with open(os.path.join(vpath, CENTROIDS_FILENAME), "w") as fh:
             json.dump([[float(x) for x in c] for c in centroids], fh)
-        store.succeed_version(version)
-    except Exception as exc:
-        store.fail_version(version)
-        store.record_failure(version, repr(exc))
-        raise
     return version
 
 
@@ -201,11 +186,7 @@ def update_ivf_index(
             f"the batch to one row per {id_col} before update_ivf_index "
             "(a batch carries no write order, so LWW cannot break the tie)"
         )
-    n_cells = spec.num_shards
-    if version is None:
-        version = int(time.time() * 1000)
-    vpath = store.create_version(version)
-    try:
+    with store.publishing(version) as (version, vpath):
         assigned = add_ivf_cell(
             new_df.select(id_col, vec_col), centroids, vec_col, out_col="shard"
         ).cache()
@@ -236,21 +217,11 @@ def update_ivf_index(
             merged = survivors.unionByName(
                 assigned.select(id_col, vec_col, "shard")
             )
-            (
-                with_slot_column(spark, merged, n_cells)
-                .repartition(n_cells, F.col("__slot"))
-                .sortWithinPartitions("shard", id_col)
-                .drop("__slot")
-                .write.mode("errorifexists")
-                .partitionBy("shard")
-                .parquet(vpath)
-            )
+            _write_shards(spark, merged, spec, id_col, vpath, {})
             # a touched cell that ended up EMPTY (its only vectors moved
             # elsewhere) gets no shard dir from the write — materialize
             # an empty one so synchronize_versions does not copy the old
             # cell (with its evicted vectors) back in
-            from elephantdb_spark.store import shard_dirname
-
             for cell in touched:
                 os.makedirs(
                     os.path.join(vpath, shard_dirname(cell)), exist_ok=True
@@ -260,11 +231,6 @@ def update_ivf_index(
         with open(os.path.join(vpath, CENTROIDS_FILENAME), "w") as fh:
             json.dump([[float(x) for x in c] for c in centroids], fh)
         store.synchronize_versions(prev, version)
-        store.succeed_version(version)
-    except Exception as exc:
-        store.fail_version(version)
-        store.record_failure(version, repr(exc))
-        raise
     return version
 
 
@@ -280,7 +246,7 @@ def load_ivf_index(
         version = store.most_recent_version()
         if version is None:
             raise RuntimeError(f"index domain at {root} has no published version")
-    elif not store.versioned_store.has_version(version):
+    elif not store.has_version(version):
         raise RuntimeError(f"index version {version} not published at {root}")
     vpath = store.version_path(version)
     with open(os.path.join(vpath, CENTROIDS_FILENAME)) as fh:

@@ -75,18 +75,25 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from elephantdb_spark.build import build_domain, update_domain
-from elephantdb_spark.engine import Domain
+from elephantdb_spark.build import (
+    _fragmented_shards,
+    build_domain,
+    compact_domain,
+    update_domain,
+)
+from elephantdb_spark.engine import Domain, DomainNotLoadedError
 from elephantdb_spark.operators.dedup import (
     _persist_tracked,
     _shingle_index,
     _signature_hash,
 )
 from elephantdb_spark.spec import DomainSpec
+from elephantdb_spark.store import DomainStore
 
 PARAMS_FILE = "neardup_params.json"
 
@@ -352,39 +359,36 @@ def compact_neardup_history(
 
     Both lockstep sub-domains publish the SAME new version id — a
     non-fragmented sub-domain rides a pure file-level copy-forward
-    publish (no Spark job) so the lockstep invariant (bands@v ⇒ sigs@v)
-    survives; ``sigs`` publishes first (the module's crash ordering).
+    publish (no Spark job; inside ``publishing``, so a failed copy rolls
+    back and records the failure) so the lockstep invariant (bands@v ⇒
+    sigs@v) survives; ``sigs`` publishes first (the module's crash
+    ordering).
     Returns the new version id, or the CURRENT version unchanged when
     neither sub-domain is fragmented (no-op — no job, no new version).
     Probe results are byte-identical across a compaction; pinning a
     pre-compaction version keeps reading the old layout (A12)."""
-    import time
-
-    from elephantdb_spark.build import compact_domain
-
     read_params(root)  # validates this is a neardup-history root
-    sigs_root = os.path.join(root, "sigs")
-    bands_root = os.path.join(root, "bands")
-    frag = {}
-    for r in (sigs_root, bands_root):
-        rep = Domain(spark, r).layout_report()
-        frag[r] = rep["max_files_per_shard"] > max_files_per_shard
-    if not any(frag.values()):
-        return Domain(spark, bands_root).store.most_recent_version()
+    subs = []  # (store, current version, fragmented shard ids) — sigs FIRST
+    for sub in ("sigs", "bands"):
+        store = DomainStore.open(os.path.join(root, sub))
+        cur = store.most_recent_version()
+        if cur is None:
+            raise DomainNotLoadedError(f"{store.root} has no published version")
+        frag = _fragmented_shards(store.version_path(cur), max_files_per_shard)
+        subs.append((store, cur, frag))
+    if not any(frag for _, _, frag in subs):
+        return subs[-1][1]  # bands' version: the one probes resolve
     if version is None:
         version = int(time.time() * 1000)
-    for r in (sigs_root, bands_root):  # sigs FIRST (crash ordering)
-        if frag[r]:
+    for store, cur, frag in subs:
+        if frag:
             compact_domain(
-                spark, r, version=version,
+                spark, store.root, version=version,
                 max_files_per_shard=max_files_per_shard,
             )
         else:
-            store = Domain(spark, r).store
-            prev = store.most_recent_version()
-            store.create_version(version)
-            store.synchronize_versions(prev, version)
-            store.succeed_version(version)
+            with store.publishing(version):
+                store.synchronize_versions(cur, version)
     return version
 
 

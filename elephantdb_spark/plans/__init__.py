@@ -75,3 +75,27 @@ def whole_stage_codegen_spans(df: DataFrame) -> int:
     exist only after the plan has executed, so run an action on ``df``
     first (returns 0 on a never-executed adaptive plan)."""
     return len(set(re.findall(r"codegen id : (\d+)", plan_str(df, "formatted"))))
+
+
+def plan_summary(text: str) -> dict[str, int]:
+    """Plan-shape counts of one ``explain("formatted")`` text — the
+    columns of ``plans/<round>/<stage>_summary.tsv``
+    (plans/capture_plans.py). Exchanges are counted in the tree block
+    only (the text before the first blank line), so a node's details
+    section does not count it twice; every other count is over the
+    whole text."""
+    return {
+        "exchanges": len(re.findall(r"\bExchange\b", text.split("\n\n")[0])),
+        "bhj": text.count("BroadcastHashJoin"),
+        "smj": text.count("SortMergeJoin"),
+        "shj": text.count("ShuffledHashJoin"),
+        "bnl": text.count("BroadcastNestedLoopJoin"),
+        "cartesian": text.count("CartesianProduct"),
+        "batch_py": text.count("BatchEvalPython"),
+        "arrow_py": text.count("ArrowEvalPython"),
+        "map_pandas": text.count("MapInPandas") + text.count("MapInArrow"),
+        "pushed": len(re.findall(r"PushedFilters: \[[^\]]", text)),
+        "scans": text.count("Scan parquet"),
+        "sorts": len(re.findall(r"^\(\d+\) Sort\b", text, re.M)),
+        "window": len(re.findall(r"^\(\d+\) Window", text, re.M)),
+    }

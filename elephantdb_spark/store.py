@@ -9,6 +9,9 @@ elephantdb-core/src/jvm/elephantdb/store/DomainStore.java:16-180):
 * a version is *visible* only once an empty ``<version>.version`` token
   file exists beside it — readers list tokens, never directories, so a
   half-written version can never be served (atomic publish);
+* every writer fills a new version inside ``publishing()``: reserve the
+  dir, write, publish the token — or, on an exception, delete the partial
+  dir and record the failure (ElephantDBTap.java:166-188);
 * ``fail``/``delete`` remove dir + token; ``cleanup(n)`` keeps the n newest
   published versions and deletes everything else, including unpublished
   junk;
@@ -24,11 +27,11 @@ serves the reference's "a get touches exactly one shard" property
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
-
-import json
+from contextlib import contextmanager
 
 from elephantdb_spark.spec import DomainSpec, SpecMismatchError
 
@@ -129,11 +132,9 @@ class VersionedStore:
             os.remove(path)
 
     # -- lifecycle -----------------------------------------------------------
-    def create_version(self, version: int | None = None) -> str:
+    def create_version(self, version: int) -> str:
         """Reserve a version dir; errors if already published; clears any
         incomplete leftover dir (VersionedStore.java:78-91)."""
-        if version is None:
-            version = int(time.time() * 1000)
         version = int(version)
         if self.has_version(version):
             raise RuntimeError(f"Version {version} already exists")
@@ -154,6 +155,26 @@ class VersionedStore:
 
     def fail_version(self, version: int) -> None:
         self.delete_version(version)
+
+    @contextmanager
+    def publishing(self, version: int | None = None):
+        """The one write protocol for a new version: reserve it (default
+        id: epoch ms), yield ``(version, path)`` for the caller to fill,
+        then publish its token on a clean exit. On an exception the
+        partial version is rolled back and the failure recorded
+        (ElephantDBTap.java:166-188; status → failed) before it
+        propagates."""
+        if version is None:
+            version = int(time.time() * 1000)
+        version = int(version)
+        path = self.create_version(version)
+        try:
+            yield version, path
+            self.succeed_version(version)
+        except Exception as exc:
+            self.fail_version(version)
+            self.record_failure(version, repr(exc))
+            raise
 
     def staging_aside_path(self, version: int) -> str:
         """Where StagedBuild.publish parks staged batches while it clears
@@ -255,14 +276,13 @@ class VersionedStore:
                     os.remove(full)
 
 
-class DomainStore:
+class DomainStore(VersionedStore):
     """VersionedStore + spec management for one domain
     (DomainStore.java:16-54)."""
 
     def __init__(self, root: str, spec: DomainSpec):
-        self.root = root
+        super().__init__(root)
         self.spec = spec
-        self.versioned_store = VersionedStore(root)
 
     @classmethod
     def create_or_open(cls, root: str, spec: DomainSpec | None = None) -> "DomainStore":
@@ -287,47 +307,6 @@ class DomainStore:
     @classmethod
     def open(cls, root: str) -> "DomainStore":
         return cls(root, DomainSpec.read(root))
-
-    # delegate the version lifecycle
-    def all_versions(self) -> list[int]:
-        return self.versioned_store.all_versions()
-
-    def most_recent_version(self, max_version: int | None = None) -> int | None:
-        return self.versioned_store.most_recent_version(max_version)
-
-    def version_path(self, version: int) -> str:
-        return self.versioned_store.version_path(version)
-
-    def create_version(self, version: int | None = None) -> str:
-        return self.versioned_store.create_version(version)
-
-    def succeed_version(self, version: int) -> None:
-        self.versioned_store.succeed_version(version)
-
-    def fail_version(self, version: int) -> None:
-        self.versioned_store.fail_version(version)
-
-    def delete_version(self, version: int) -> None:
-        self.versioned_store.delete_version(version)
-
-    def cleanup(
-        self, versions_to_keep: int = -1, max_aside_age_s: float | None = None
-    ) -> None:
-        self.versioned_store.cleanup(
-            versions_to_keep, max_aside_age_s=max_aside_age_s
-        )
-
-    def unpublished_versions(self) -> list[int]:
-        return self.versioned_store.unpublished_versions()
-
-    def record_failure(self, version: int, error: str) -> None:
-        self.versioned_store.record_failure(version, error)
-
-    def last_failure(self) -> dict | None:
-        return self.versioned_store.last_failure()
-
-    def clear_failure(self) -> None:
-        self.versioned_store.clear_failure()
 
     def synchronize_versions(self, old_version: int | None, new_version: int) -> list[int]:
         """Copy-forward: for each shard present in ``old_version`` but absent

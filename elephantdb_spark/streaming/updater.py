@@ -81,7 +81,7 @@ def stream_build(
         if (
             version_fn is not None
             and DomainSpec.exists(domain_root)
-            and DomainStore.open(domain_root).versioned_store.has_version(version)
+            and DomainStore.open(domain_root).has_version(version)
         ):
             return
         if DomainSpec.exists(domain_root) and DomainStore.open(domain_root).most_recent_version() is not None:

@@ -360,6 +360,71 @@ def test_compaction_crash_window_recovery(spark, tmp_path):
     assert _probe(spark, root) == before
 
 
+def test_copy_forward_publish_rolls_back_on_failure(spark, tmp_path, monkeypatch):
+    """A sub-domain that is not fragmented publishes the compaction id by
+    copy-forward alone. If a shard copy fails, that publish must roll
+    back like every other writer: no unpublished version dir, a failure
+    marker naming the new id, the other sub-domain untouched, and probes
+    unchanged."""
+    import os
+    import shutil
+    import threading
+
+    from elephantdb_spark.build import compact_domain
+    from elephantdb_spark.store import DomainStore
+
+    root = str(tmp_path / "cfwd")
+    corpus = spark.createDataFrame(CORPUS[:10], "doc_id int, text string")
+    build_neardup_history(
+        spark, corpus, root, "doc_id", "text",
+        num_perm=NUM_PERM, bands=BANDS, shingle_len=SHINGLE_LEN,
+        spec=DomainSpec(
+            num_shards=4, persistence_opts={"maxRecordsPerFile": 5}
+        ),
+        version=1,
+    )
+    append_neardup_history(
+        spark,
+        spark.createDataFrame(
+            [(2000 + i, t) for i, t in CORPUS[10:14]],
+            "doc_id int, text string",
+        ),
+        root, "doc_id", "text", version=2,
+    )
+    before = _probe(spark, root)
+    # only bands stays fragmented: sigs will take the copy-forward path
+    compact_domain(spark, os.path.join(root, "sigs"), version=100)
+
+    real_copytree = shutil.copytree
+    lock = threading.Lock()
+    copies = []
+
+    def copy_once_then_fail(src, dst, *a, **kw):
+        with lock:
+            copies.append(src)
+            first = len(copies) == 1
+        if not first:
+            raise OSError("injected shard copy failure")
+        return real_copytree(src, dst, *a, **kw)
+
+    sigs = DomainStore.open(os.path.join(root, "sigs"))
+    bands = DomainStore.open(os.path.join(root, "bands"))
+    sigs_versions, bands_versions = sigs.all_versions(), bands.all_versions()
+    monkeypatch.setattr(shutil, "copytree", copy_once_then_fail)
+    with pytest.raises(OSError, match="injected"):
+        compact_neardup_history(spark, root, version=200)
+    monkeypatch.undo()
+    assert len(copies) > 1  # sigs took the copy-forward path
+
+    assert sigs.unpublished_versions() == []
+    assert not os.path.exists(sigs.version_path(200))
+    assert sigs.all_versions() == sigs_versions
+    assert sigs.last_failure()["version"] == 200
+    assert bands.all_versions() == bands_versions
+    assert bands.most_recent_version() == 2
+    assert _probe(spark, root) == before
+
+
 def test_bands_must_divide_num_perm(spark, tmp_path):
     corpus = spark.createDataFrame(CORPUS[:3], "doc_id int, text string")
     with pytest.raises(ValueError, match="must divide"):

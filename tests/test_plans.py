@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from elephantdb_spark.plans import (
     broadcast_join_count,
     count_exchanges,
+    plan_summary,
     pushed_filters,
     scan_locations,
     sortmerge_join_count,
@@ -48,3 +49,49 @@ def test_pushed_filters_and_locations(spark):
     assert any("EqualTo(c_custkey,42)" in p for p in pushed), pushed
     locs = scan_locations(q)
     assert locs and "customer.parquet" in locs[0]
+
+
+#: A formatted explain: the node tree, a blank line, then numbered node
+#: details. No Spark session needed.
+FORMATTED_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (10)
++- Sort (9)
+   +- Exchange (8)
+      +- Window (7)
+         +- BroadcastHashJoin Inner BuildRight (6)
+            :- Scan parquet  (1)
+            +- BroadcastExchange (5)
+               +- ArrowEvalPython (4)
+                  +- Exchange (3)
+                     +- Scan parquet  (2)
+
+
+(1) Scan parquet 
+PushedFilters: [IsNotNull(k)]
+
+(2) Scan parquet 
+PushedFilters: []
+
+(3) Exchange
+Arguments: hashpartitioning(k#1, 8)
+
+(7) Window
+Arguments: [row_number()]
+
+(9) Sort
+Arguments: [k#1 ASC NULLS FIRST], false, 0
+"""
+
+
+def test_plan_summary_counting_rule():
+    """The counts behind the committed plans/<round>/*_summary.tsv files:
+    Exchanges from the tree block only (BroadcastExchange and the
+    details section excluded), pushed filters only when non-empty, Sort
+    and Window by their numbered details headers, everything else by
+    occurrence in the whole text."""
+    assert plan_summary(FORMATTED_PLAN) == {
+        "exchanges": 2, "bhj": 1, "smj": 0, "shj": 0, "bnl": 0,
+        "cartesian": 0, "batch_py": 0, "arrow_py": 1, "map_pandas": 0,
+        "pushed": 1, "scans": 4, "sorts": 1, "window": 1,
+    }
+

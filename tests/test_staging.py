@@ -163,7 +163,7 @@ def test_resume_recovers_mid_publish_crash_window(spark, tmp_path):
 
     # simulate the crash window: staging moved aside, version dir cleared
     store = DomainStore.open(root)
-    aside = store.versioned_store.staging_aside_path(1)
+    aside = store.staging_aside_path(1)
     vpath = store.version_path(1)
     os.rename(os.path.join(vpath, "_staging"), aside)
     shutil.rmtree(vpath)
@@ -182,11 +182,11 @@ def test_cleanup_gcs_orphaned_staging_aside(spark, tmp_path):
                  DomainSpec(num_shards=4), version=1)
     store = DomainStore.open(root)
     # orphan aside for a published version (crash after token, before rm)
-    aside = store.versioned_store.staging_aside_path(1)
+    aside = store.staging_aside_path(1)
     os.makedirs(aside)
     # aside for a version that never published: the only copy of a
     # still-resumable staged build — cleanup must NOT destroy it (ADVICE r3)
-    aside9 = store.versioned_store.staging_aside_path(9)
+    aside9 = store.staging_aside_path(9)
     os.makedirs(aside9)
     store.cleanup(versions_to_keep=1)
     assert not os.path.exists(aside)

@@ -5,6 +5,7 @@ test/elephantdb/common/spec_test.clj:9-24)."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -269,3 +270,39 @@ def test_missing_spec_still_raises_file_not_found(tmp_path):
 
     with pytest.raises(FileNotFoundError):
         DomainSpec.read(str(tmp_path / "nowhere"))
+
+
+def test_publishing_clean_exit_publishes_and_clears_failure(tmp_path):
+    vs = VersionedStore(str(tmp_path))
+    vs.record_failure(3, "earlier")
+    with vs.publishing(4) as (v, path):
+        assert (v, path) == (4, vs.version_path(4))
+        os.makedirs(path)
+        assert vs.all_versions() == []  # invisible until the token
+    assert vs.all_versions() == [4]
+    assert vs.last_failure() is None
+
+
+def test_publishing_exception_rolls_back_and_records(tmp_path):
+    vs = VersionedStore(str(tmp_path))
+    err = ValueError("boom")
+    with pytest.raises(ValueError) as info:
+        with vs.publishing(5) as (_, path):
+            os.makedirs(path)
+            open(os.path.join(path, "part-0"), "w").close()
+            raise err
+    assert info.value is err
+    assert not os.path.exists(vs.version_path(5))
+    assert not os.path.exists(vs.token_path(5))
+    assert vs.all_versions() == [] and vs.unpublished_versions() == []
+    assert vs.last_failure() == {"version": 5, "error": repr(err)}
+
+
+def test_publishing_default_version_is_epoch_ms(tmp_path):
+    vs = VersionedStore(str(tmp_path))
+    lo = int(time.time() * 1000)
+    with vs.publishing() as (v, path):
+        os.makedirs(path)
+    assert lo <= v <= int(time.time() * 1000)
+    assert vs.all_versions() == [v]
+
