@@ -36,6 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elephantdb_spark.engine import serving_cache_budget
 from elephantdb_spark.registry import resolve_format, resolve_indexer, resolve_scheme
 from elephantdb_spark.sharding import with_slot_column
 from elephantdb_spark.spec import DomainSpec
@@ -70,15 +71,17 @@ SERVING_ROW_GROUP_BYTES = 16 << 20
 #: Ceiling on a ``parquet.block.size`` override. The serving probe decodes
 #: each candidate row group whole (engine.py ``local_multi_get``), so this
 #: bounds its transient memory per probing thread. Checked once, when a new
-#: domain's spec is persisted (:func:`check_row_group_cap`); a domain whose
+#: domain's spec is persisted (:func:`check_new_spec`); a domain whose
 #: spec predates the ceiling keeps its layout through updates and
 #: compaction.
 MAX_ROW_GROUP_BYTES = 32 << 20
 
 
-def check_row_group_cap(spec: DomainSpec) -> None:
-    """Raise ValueError when a new parquet spec's ``parquet.block.size``
-    exceeds MAX_ROW_GROUP_BYTES."""
+def check_new_spec(spec: DomainSpec) -> None:
+    """Raise ValueError when a new spec's serving options are out of
+    range: a parquet ``parquet.block.size`` above MAX_ROW_GROUP_BYTES, or
+    a ``serving_cache_bytes`` that is not an integer ≥ 0."""
+    serving_cache_budget(spec)
     if spec.persistence_format != "parquet":
         return
     block = int(

@@ -31,7 +31,9 @@ from __future__ import annotations
 
 import bisect
 import os
+import sys
 import threading
+import warnings
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,12 +50,47 @@ from elephantdb_spark.store import DomainStore, shard_dirname
 #: reference's serving reads hit BerkeleyDB JE's in-memory B-tree/leaf
 #: cache on repeat probes (je.maxMemory; JavaBerkDB.java:70-82 probes a
 #: cached tree) — without an analogue every probe of a hot key re-decodes
-#: its ≤16 MiB parquet row group from disk. Groups whose uncompressed
-#: size exceeds a quarter of the budget are decoded whole for the one
-#: probe and then dropped, never cached, so one oversized group cannot
-#: thrash the cache. New domains bound every group at
-#: ``build.MAX_ROW_GROUP_BYTES``, which bounds that transient decode.
+#: its ≤16 MiB parquet row group from disk. A decoded group is kept whole
+#: while the cache has room for it and it is at most a quarter of the
+#: budget; otherwise only the rows the probe found are kept, as a row
+#: entry under the same key (the analogue of JE caching a leaf node, not
+#: the whole tree), so one oversized or cold group cannot thrash the
+#: cache. New domains bound every group at ``build.MAX_ROW_GROUP_BYTES``,
+#: which bounds the transient decode.
 SERVING_GROUP_CACHE_BYTES = 64 << 20
+
+#: Bytes charged per row of a row entry on top of its key and value
+#: objects: the dict slot (hash, key and value pointers at the dict's
+#: load factor) plus its index entry.
+ROW_SLOT_BYTES = 64
+
+#: ``Domain.serving_stats()`` counter names.
+SERVING_STATS = (
+    "group_hits", "row_hits", "decodes", "rows_admitted",
+    "bloom_tests", "bloom_rejects",
+)
+
+#: A row entry's "not held" marker (a held key may map to None: NULL).
+_ABSENT = object()
+
+
+def serving_cache_budget(spec: DomainSpec) -> int:
+    """The spec's ``serving_cache_bytes`` (default
+    SERVING_GROUP_CACHE_BYTES); ValueError unless it is an integer ≥ 0."""
+    raw = (spec.persistence_opts or {}).get(
+        "serving_cache_bytes", SERVING_GROUP_CACHE_BYTES
+    )
+    try:
+        if isinstance(raw, bool) or not isinstance(raw, (int, str)):
+            raise TypeError(type(raw).__name__)
+        budget = int(raw)
+    except (TypeError, ValueError):
+        raise ValueError(
+            f"serving_cache_bytes={raw!r} is not an integer byte count"
+        ) from None
+    if budget < 0:
+        raise ValueError(f"serving_cache_bytes={budget} is negative (0 disables)")
+    return budget
 
 #: Serving-cache capacity (open parquet handles / shard-dir listings).
 #: Eviction is LRU per entry — a hot handle must survive a sweep of cold
@@ -296,17 +333,30 @@ class Domain:
         # (JavaBerkDB.java:70-82). Byte-bounded LRU; entries are immutable
         # (keyed by published-version file path + group index) and the
         # whole cache drops on version change with the other caches.
+        # An entry is (karr, varr, nbytes) for a whole group, or
+        # (rows, None, nbytes) for a row entry: a dict of the rows probes
+        # found in a group the cache had no room for.
         self._rg_cache: "OrderedDict[tuple[str, int], tuple]" = OrderedDict()
         self._rg_cache_nbytes = 0
         self._rg_cache_lock = threading.Lock()
         try:
-            self._rg_cache_budget = int(
-                (self.store.spec.persistence_opts or {}).get(
-                    "serving_cache_bytes", SERVING_GROUP_CACHE_BYTES
-                )
+            self._rg_cache_budget = serving_cache_budget(self.store.spec)
+        except ValueError as exc:
+            # new specs reject this (build.check_new_spec); one persisted
+            # before the check still opens, as it always did: a negative
+            # budget disables the cache, a non-integer takes the default
+            raw = self.store.spec.persistence_opts["serving_cache_bytes"]
+            try:
+                self._rg_cache_budget = max(int(raw), 0)
+            except (TypeError, ValueError):
+                self._rg_cache_budget = SERVING_GROUP_CACHE_BYTES
+            warnings.warn(
+                f"domain {self.name}: {exc}; serving with a "
+                f"{self._rg_cache_budget}-byte cache",
+                stacklevel=2,
             )
-        except (TypeError, ValueError):
-            self._rg_cache_budget = SERVING_GROUP_CACHE_BYTES
+        self._serving_stats = dict.fromkeys(SERVING_STATS, 0)
+        self._serving_stats_lock = threading.Lock()
         # concurrent local_multi_get caller count (fanout admission gate
         # — see local_multi_get's dispatch comment)
         self._probe_callers = 0
@@ -1076,10 +1126,12 @@ class Domain:
         def _probe_shard(shard: int, shard_keys: list[bytes]) -> dict[bytes, bytes]:
             # Per shard file: (1) bisect to the candidate row groups,
             # (2) the decoded-group cache, (3) one Bloom decision before a
-            # decode the cache would not keep, (4) a whole-group decode —
-            # the analogue of the reference's one B-tree descent per read
-            # (JavaBerkDB.java:70-82).
+            # decode the cache would not keep whole, (4) a whole-group
+            # decode — the analogue of the reference's one B-tree descent
+            # per read (JavaBerkDB.java:70-82). Counters are summed here
+            # and added to the handle's once, under its lock.
             hits: dict[bytes, bytes] = {}
+            st = dict.fromkeys(SERVING_STATS, 0)
             sdir = os.path.join(vpath, shard_dirname(shard))
             targets = sorted(set(shard_keys))
             target_digs: bytes | None = None  # blake2b blob, built once
@@ -1107,29 +1159,38 @@ class Domain:
                 passed: set[bytes] | None = None  # file's Bloom verdict
                 for rg in sorted(by_rg):
                     wanted = by_rg[rg]
-                    # (2) Hot groups answer from in-memory Arrow arrays
-                    # (one C-side hash probe, no I/O, no decode).
+                    # (2) A whole group answers from in-memory Arrow
+                    # arrays (one C-side hash probe, no I/O, no decode).
+                    # A row entry answers the keys it holds, NULL values
+                    # included, and never a miss: the rest go on to (3).
                     cached = self._rg_cache_get(fpath, rg)
-                    if cached is None:
-                        keep = (
-                            self._rg_cache_budget > 0
-                            and rg_sizes[rg] <= self._rg_cache_budget // 4
-                        )
-                        # (3) Bloom, only when the decode is unproductive:
-                        # the group is too big to keep (> budget/4), or
-                        # the cache is at budget. A kept group makes every
-                        # later miss on it one C-side hash probe, which a
-                        # prefilter would starve. The sidecar covers the
-                        # whole FILE, so one vectorized test over all
-                        # targets serves the file's remaining groups. A
-                        # "yes" (hit or fpp) falls through: the filter
-                        # only removes work, never answers. The budget
-                        # reads are racy heuristics: a stale read
-                        # mis-routes one decode, never correctness.
-                        if bloom is not None and not (
-                            keep
-                            and self._rg_cache_nbytes + rg_sizes[rg]
-                            <= self._rg_cache_budget
+                    held = 0  # bytes of this group's row entry
+                    if cached is not None and cached[1] is None:
+                        rows, rest, held = cached[0], [], cached[2]
+                        for k in wanted:
+                            v = rows.get(k, _ABSENT)
+                            if v is _ABSENT:
+                                rest.append(k)
+                            else:
+                                hits[k] = v
+                        st["row_hits"] += len(wanted) - len(rest)
+                        if not rest:
+                            continue
+                        wanted, cached = rest, None
+                    admit_rows = False
+                    if cached is not None:
+                        st["group_hits"] += 1
+                    else:
+                        # (3) Bloom, only when the group will not be kept
+                        # whole: a kept group makes every later miss on
+                        # it one C-side hash probe, which a prefilter
+                        # would starve. The sidecar covers the whole
+                        # FILE, so one vectorized test over all targets
+                        # serves the file's remaining groups. A "yes"
+                        # (hit or fpp) falls through: the filter only
+                        # removes work, never answers.
+                        if bloom is not None and not self._rg_cache_room(
+                            rg_sizes[rg], held
                         ):
                             if passed is None:
                                 if target_digs is None:
@@ -1140,28 +1201,47 @@ class Domain:
                                         bloom.contains_digests(target_digs),
                                     ) if ok
                                 }
+                                st["bloom_tests"] += len(targets)
+                                st["bloom_rejects"] += len(targets) - len(passed)
                             wanted = [k for k in wanted if k in passed]
                             if not wanted:
                                 continue
                         # (4) Decode the group whole: one GIL-releasing C
-                        # call. Cacheable groups are kept; larger ones are
-                        # used once and dropped.
+                        # call. Kept whole when its decoded size has room;
+                        # otherwise only the rows found below are kept.
                         with pf_lock:
                             tbl = pf.read_row_groups(
                                 [rg], columns=["key", "value"]
                             )
+                        st["decodes"] += 1
                         tbl = tbl.combine_chunks()
+                        # the footer's size can under-count the decoded
+                        # arrays (dictionary pages): later Bloom
+                        # decisions on this group use the decoded size
+                        rg_sizes[rg] = tbl.nbytes
                         cached = (tbl.column("key"), tbl.column("value"))
-                        if keep:
+                        if self._rg_cache_room(tbl.nbytes, held):
                             self._rg_cache_put(fpath, rg, *cached, tbl.nbytes)
+                        else:
+                            admit_rows = self._rg_cache_budget > 0
                     karr, varr = cached[:2]
                     idx = pc.index_in(
                         pa.array(wanted, type=pa.binary()), value_set=karr
                     )
                     vals = pc.take(varr, idx).to_pylist()
-                    for kk, ii, vv in zip(wanted, idx.to_pylist(), vals):
-                        if ii is not None:
-                            hits[kk] = vv
+                    found = {
+                        kk: vv
+                        for kk, ii, vv in zip(wanted, idx.to_pylist(), vals)
+                        if ii is not None
+                    }
+                    hits.update(found)
+                    if admit_rows and found:
+                        st["rows_admitted"] += self._rg_cache_put_rows(
+                            fpath, rg, found
+                        )
+            with self._serving_stats_lock:
+                for name, n in st.items():
+                    self._serving_stats[name] += n
             return hits
 
         # Cross-shard fanout (keyval/core.clj:118-134: the reference
@@ -1258,21 +1338,78 @@ class Domain:
                 self._rg_cache.move_to_end((path, rg))
             return e
 
+    def _rg_cache_room(self, nbytes: int, held: int = 0) -> bool:
+        """Whether a group of ``nbytes`` would be kept whole: at most a
+        quarter of the budget, and it fits without evicting anything
+        once its own row entry (``held`` bytes), which the whole group
+        replaces, is freed. The unlocked read is a heuristic: a stale
+        read mis-routes one group, never correctness."""
+        budget = self._rg_cache_budget
+        return (
+            budget > 0
+            and nbytes <= budget // 4
+            and self._rg_cache_nbytes - held + nbytes <= budget
+        )
+
     def _rg_cache_put(self, path: str, rg: int, karr, varr, nbytes: int) -> None:
-        """Insert one decoded row group, evicting LRU entries past the
-        byte budget. Two threads racing the same cold group both decode;
-        the first insert wins (entries are immutable — same file, same
-        group)."""
+        """Insert one decoded row group whole, replacing its row entry if
+        it has one, and evict LRU entries past the byte budget. Two
+        threads racing the same cold group both decode; the first whole
+        insert wins (entries are immutable — same file, same group)."""
         with self._rg_cache_lock:
             key = (path, rg)
-            if key in self._rg_cache:
+            e = self._rg_cache.get(key)
+            if e is not None and e[1] is not None:
                 self._rg_cache.move_to_end(key)
                 return
+            if e is not None:  # promote: the group answers every key now
+                del self._rg_cache[key]
+                self._rg_cache_nbytes -= e[2]
             self._rg_cache[key] = (karr, varr, int(nbytes))
             self._rg_cache_nbytes += int(nbytes)
-            while self._rg_cache_nbytes > self._rg_cache_budget and self._rg_cache:
-                _, (_, _, nb) = self._rg_cache.popitem(last=False)
-                self._rg_cache_nbytes -= nb
+            self._rg_cache_evict()
+
+    def _rg_cache_put_rows(self, path: str, rg: int, rows: dict) -> int:
+        """Merge rows a probe found in a group the cache had no room for
+        into the group's row entry, then evict LRU entries past the byte
+        budget. Copy on write: a reader holding the old dict never sees
+        it change. Each new row is charged its key and value objects
+        plus ROW_SLOT_BYTES. Returns the number of rows added (0 when
+        the group is cached whole meanwhile)."""
+        with self._rg_cache_lock:
+            key = (path, rg)
+            e = self._rg_cache.get(key)
+            if e is not None and e[1] is not None:
+                self._rg_cache.move_to_end(key)
+                return 0
+            old, charged = (e[0], e[2]) if e is not None else ({}, 0)
+            new = {k: v for k, v in rows.items() if k not in old}
+            add = sum(
+                sys.getsizeof(k) + sys.getsizeof(v) + ROW_SLOT_BYTES
+                for k, v in new.items()
+            )
+            self._rg_cache[key] = ({**old, **new}, None, charged + add)
+            self._rg_cache.move_to_end(key)
+            self._rg_cache_nbytes += add
+            self._rg_cache_evict()
+            return len(new)
+
+    def _rg_cache_evict(self) -> None:
+        """Drop LRU entries until the cache is within its byte budget.
+        Call with _rg_cache_lock held."""
+        while self._rg_cache_nbytes > self._rg_cache_budget and self._rg_cache:
+            _, (_, _, nb) = self._rg_cache.popitem(last=False)
+            self._rg_cache_nbytes -= nb
+
+    def serving_stats(self) -> dict[str, int]:
+        """Cumulative serving-probe counts for this handle:
+        ``group_hits`` (candidate groups answered by a whole cached
+        group), ``row_hits`` (keys answered by a row entry), ``decodes``
+        (row groups decoded), ``rows_admitted`` (rows added to row
+        entries), ``bloom_tests`` (keys tested against a sidecar) and
+        ``bloom_rejects`` (of those, definitive misses)."""
+        with self._serving_stats_lock:
+            return dict(self._serving_stats)
 
     def _shard_file_list(self, sdir: str) -> "list[str]":
         """Cached data-file listing for one shard dir of a PUBLISHED
@@ -1338,7 +1475,9 @@ class Domain:
                 rg_bound_index(meta, key_idx),
                 load_sidecar(path),
                 # per-group uncompressed sizes: the serving cache's
-                # pre-decode cacheability gate (same one-time footer walk)
+                # pre-decode cacheability gate (same one-time footer
+                # walk); the probe replaces each with the decoded size
+                # once it has decoded the group
                 [
                     meta.row_group(i).total_byte_size
                     for i in range(meta.num_row_groups)

@@ -69,6 +69,7 @@ IDF modes:
 
 from __future__ import annotations
 
+from pyspark.errors import SparkNoSuchElementException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -92,15 +93,16 @@ _WGL_THRESHOLD_CONF = "spark.sql.optimizer.windowGroupLimitThreshold"
 def _window_group_limit_active(spark, k: int) -> bool:
     """True when the session's optimizer will rewrite a row_number-limit
     filter of ``k`` into a pre-shuffle Partial WindowGroupLimit (which
-    makes the manual salted top-k pre-stage redundant). Conservative:
-    any lookup/parse failure means "assume unavailable". The no-default
-    ``conf.get`` is deliberate: ``get(key, fallback)`` returns the
-    fallback whenever the conf is merely unset, hiding the registered
+    makes the manual salted top-k pre-stage redundant). Conservative: a
+    conf the engine does not know, or a value that is not an integer,
+    means "assume unavailable"; any other error propagates. The
+    no-default ``conf.get`` is deliberate: ``get(key, fallback)`` returns
+    the fallback whenever the conf is merely unset, hiding the registered
     engine default (1000); the no-default form resolves the effective
     value and throws only on engines that predate the rewrite."""
     try:
         thr = int(spark.conf.get(_WGL_THRESHOLD_CONF))
-    except Exception:
+    except (SparkNoSuchElementException, TypeError, ValueError):
         return False
     return 0 < k <= thr
 

@@ -288,7 +288,7 @@ class DomainStore(VersionedStore):
     def create_or_open(cls, root: str, spec: DomainSpec | None = None) -> "DomainStore":
         """Open with spec equality check; create+persist spec on first use
         (DomainStore.java:40-53). Every domain-creating entry point passes
-        here, so a new spec's row-group ceiling is checked here, before
+        here, so a new spec's serving options are checked here, before
         anything is written."""
         if DomainSpec.exists(root):
             stored = DomainSpec.read(root)
@@ -298,9 +298,9 @@ class DomainStore(VersionedStore):
         if spec is None:
             raise SpecMismatchError(f"no spec found at {root} and none supplied")
         # function-level: build imports this module
-        from elephantdb_spark.build import check_row_group_cap
+        from elephantdb_spark.build import check_new_spec
 
-        check_row_group_cap(spec)
+        check_new_spec(spec)
         spec.write(root)
         return cls(root, spec)
 

@@ -4,6 +4,8 @@ local persistence probe, JavaBerkDB.java:70-82, never a cluster job)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -287,7 +289,7 @@ def test_rg_cache_equivalence_and_budget(spark, tmp_path):
     truth = dict(pairs)
     keys = [f"k{i:05d}".encode() for i in range(0, 20000, 313)] + [
         b"k99999", b"", b"k00000"
-    ]
+    ] + [f"k{i:05d}".encode() for i in range(97, 20000, 97 * 16)]  # NULLs
 
     cached_dom = Domain(spark, root)
     assert cached_dom._rg_cache_budget > 0
@@ -303,15 +305,32 @@ def test_rg_cache_equivalence_and_budget(spark, tmp_path):
     assert cached_dom._rg_cache, "cache never populated"
     assert not off_dom._rg_cache, "budget 0 must disable caching"
 
-    # budget respected under eviction: shrink to fit ~one group and sweep
+    # budget respected under eviction: shrink to fit a few groups and
+    # sweep twice; the groups without room are kept as row entries, which
+    # answer the second sweep, NULL values included
     small = Domain(spark, root)
     small._rg_cache_budget = 256 * 1024
-    got = small.local_multi_get(keys)
-    assert got == {k: truth.get(k) for k in keys}
-    assert small._rg_cache_nbytes <= small._rg_cache_budget
-    assert sum(e[2] for e in small._rg_cache.values()) == small._rg_cache_nbytes
+    for _ in range(2):
+        got = small.local_multi_get(keys)
+        assert got == {k: truth.get(k) for k in keys}
+        assert small._rg_cache_nbytes <= small._rg_cache_budget
+        assert (
+            sum(e[2] for e in small._rg_cache.values()) == small._rg_cache_nbytes
+        )
+    assert small.serving_stats()["row_hits"] > 0
+    nulls = [
+        k for e in small._rg_cache.values() if e[1] is None
+        for k, v in e[0].items() if v is None
+    ]
+    assert nulls  # NULL-valued rows are held, not taken for misses
+    before = small.serving_stats()
+    assert small.local_multi_get(nulls) == dict.fromkeys(nulls)
+    after = small.serving_stats()
+    assert after["row_hits"] - before["row_hits"] == len(nulls)
+    assert after["decodes"] == before["decodes"]
 
-    # oversized groups (uncompressed > budget/4) are decoded, used, dropped
+    # oversized groups (decoded > budget/4) are decoded and used; their
+    # rows do not fit a 4-byte budget either, so nothing stays cached
     tiny = Domain(spark, root)
     tiny._rg_cache_budget = 4  # budget//4 = 1 byte: nothing cacheable
     assert tiny.local_multi_get(keys) == {k: truth.get(k) for k in keys}
@@ -360,6 +379,230 @@ def test_rg_cache_spec_knob_and_version_invalidation(spark, tmp_path):
     assert d.local_get(b"a") == b"new"  # stale cache would serve b"old"
     assert d.local_get(b"b") == b"keep"
     assert d.local_get(b"a", version=1) == b"old"  # pinned read still exact
+
+    # the same for a row entry: a budget whose quarter is just under the
+    # decoded group keeps only the probed row
+    import pyarrow.parquet as pq
+
+    root3 = str(tmp_path / "rgv3")
+    pad = [(f"p{i:03d}".encode(), b"x" * 100) for i in range(200)]
+    build_domain(
+        spark,
+        spark.createDataFrame([(b"a", b"old")] + pad, "key binary, value binary"),
+        root3,
+        DomainSpec(num_shards=1),
+        version=1,
+    )
+    r = Domain(spark, root3)
+    sdir = os.path.join(root3, "1", "shard=0")
+    (fname,) = r._shard_file_list(sdir)
+    decoded = pq.ParquetFile(os.path.join(sdir, fname)).read().nbytes
+    r._rg_cache_budget = 4 * decoded - 4
+    assert r.local_get(b"a") == b"old"
+    (entry,) = r._rg_cache.values()
+    assert entry[1] is None and entry[0] == {b"a": b"old"}
+    update_domain(
+        spark,
+        spark.createDataFrame([(b"a", b"new")], "key binary, value binary"),
+        root3,
+        version=2,
+    )
+    assert r.local_get(b"a") == b"new"  # a stale row would serve b"old"
+    assert r.local_get(b"a", version=1) == b"old"
+
+
+def test_serving_cache_bytes_validated(spark, tmp_path):
+    """A new spec whose serving_cache_bytes is not an integer byte count,
+    or is negative, is rejected before anything is written. A spec
+    persisted before the check still opens, with a warning, and serves
+    as it always did: the default budget for a non-integer, no cache for
+    a negative value."""
+    import warnings
+
+    from elephantdb_spark.engine import SERVING_GROUP_CACHE_BYTES, Domain
+
+    kv = spark.createDataFrame([(b"a", b"1")], "key binary, value binary")
+    for bad in ("8MiB", -1, 1.5):
+        root = str(tmp_path / f"bad{bad}")
+        spec = DomainSpec(num_shards=1,
+                          persistence_opts={"serving_cache_bytes": bad})
+        with pytest.raises(ValueError, match="serving_cache_bytes"):
+            build_domain(spark, kv, root, spec, version=1)
+        assert not os.path.exists(root)
+
+    for bad, budget in (("8MiB", SERVING_GROUP_CACHE_BYTES), (-1, 0)):
+        root = str(tmp_path / f"legacy{bad}")
+        DomainSpec(num_shards=1,
+                   persistence_opts={"serving_cache_bytes": bad}).write(root)
+        build_domain(spark, kv, root, version=1)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            dom = Domain(spark, root)
+        assert any("serving_cache_bytes" in str(w.message) for w in caught)
+        assert dom._rg_cache_budget == budget
+        assert dom.local_get(b"a") == b"1"
+
+
+@pytest.fixture(scope="module")
+def grouped(spark, tmp_path_factory):
+    """One shard of 12 row groups (64 KiB blocks, ~800 rows each): the
+    root, its one data file and each group's keys in file order."""
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path_factory.mktemp("grouped") / "g")
+    kv = spark.range(9000).select(
+        F.format_string("k%05d", F.col("id")).cast("binary").alias("key"),
+        F.concat(F.lit("v" * 64), F.col("id")).cast("binary").alias("value"),
+    )
+    build_domain(
+        spark, kv, root,
+        DomainSpec(num_shards=1,
+                   persistence_opts={"parquet.block.size": 1 << 16}),
+        version=1,
+    )
+    sdir = os.path.join(root, "1", "shard=0")
+    (fname,) = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
+    path = os.path.join(sdir, fname)
+    pf = pq.ParquetFile(path)
+    keys = [
+        pf.read_row_group(g, columns=["key"]).column("key").to_pylist()
+        for g in range(pf.num_row_groups)
+    ]
+    assert len(keys) >= 9
+    return root, path, keys
+
+
+def _value(key: bytes) -> bytes:
+    return b"v" * 64 + str(int(key[1:])).encode()
+
+
+def test_row_entries_end_cyclic_thrash_and_promote(spark, grouped):
+    """A cyclic sweep over more groups than the cache holds thrashes a
+    plain LRU: every probe decodes. Groups that do not fit are kept as
+    row entries instead, so the third round decodes nothing. When the
+    working set then shifts to other groups, their row entries grow,
+    evict the old whole groups, and the new groups are promoted to whole
+    entries: decodes fall to 0 within a few passes."""
+    from elephantdb_spark.engine import Domain
+
+    root, path, keys = grouped
+    dom = Domain(spark, root)
+    sizes = dom._open_shard_file(path)[5]
+    dom._rg_cache_budget = 4 * max(sizes)
+
+    def decodes(probe) -> int:
+        before = dom.serving_stats()["decodes"]
+        probe()
+        return dom.serving_stats()["decodes"] - before
+
+    sweep = [keys[g][len(keys[g]) // 2] for g in range(6)]
+
+    def one_round():
+        for k in sweep:
+            assert dom.local_get(k) == _value(k)
+
+    assert [decodes(one_round) for _ in range(3)] == [6, 0, 0]
+    stats = dom.serving_stats()
+    assert stats["rows_admitted"] == 2 and stats["row_hits"] == 4
+
+    shift = [6, 7, 8]
+    per_pass = 200  # distinct keys per group per pass, cycling the group
+
+    def one_pass(p):
+        ks = [
+            keys[g][(p * per_pass + j) % len(keys[g])]
+            for g in shift for j in range(per_pass)
+        ]
+        got = dom.local_multi_get(ks)
+        assert got == {k: _value(k) for k in ks}
+
+    per = [decodes(lambda: one_pass(p)) for p in range(12)]
+    assert per[0] == 3 and per[-3:] == [0, 0, 0], per
+    whole = {key[1] for key, e in dom._rg_cache.items() if e[1] is not None}
+    assert set(shift) <= whole
+    assert sum(e[2] for e in dom._rg_cache.values()) == dom._rg_cache_nbytes
+    assert dom._rg_cache_nbytes <= dom._rg_cache_budget
+
+    # A cache at budget holding only small row entries (what scattered
+    # probes over big groups leave) has no slack for eviction to open.
+    # A hot group is promoted once its own row entry, which the whole
+    # group replaces, is as large as the group; until then an in-range
+    # miss on it decodes every pass.
+    with dom._rg_cache_lock:
+        dom._rg_cache.clear()
+        dom._rg_cache_nbytes = 0
+    budget = dom._rg_cache_budget
+    fill = ((g, k) for row in zip(*keys[:6]) for g, k in enumerate(row))
+    while dom._rg_cache_nbytes <= budget - 256:
+        g, k = next(fill)
+        dom._rg_cache_put_rows(path, g, {k: _value(k)})
+    assert all(e[1] is None for e in dom._rg_cache.values())
+    hot, per_pass = keys[6], 60
+    miss = hot[1] + b"x"  # sorts between two keys of the hot group
+
+    def hot_pass(p):
+        ks = hot[p * per_pass:(p + 1) * per_pass]
+        got = dom.local_multi_get(ks + [miss])
+        assert got == {**{k: _value(k) for k in ks}, miss: None}
+
+    per = [decodes(lambda: hot_pass(p)) for p in range(10)]
+    assert 10 * per_pass < len(hot)  # rows alone never answer the miss
+    assert per[0] == 1 and per[-3:] == [0, 0, 0], per
+    assert dom._rg_cache[(path, 6)][1] is not None
+    assert sum(e[2] for e in dom._rg_cache.values()) == dom._rg_cache_nbytes
+    assert dom._rg_cache_nbytes <= budget
+
+
+def test_row_entries_and_counters_exact_under_concurrency(spark, grouped):
+    """Eight threads (more than the cores) with a short switch interval
+    probe hit keys in groups too big to keep whole, so every probe is a
+    row-entry hit or a decode that merges its row under the cache lock.
+    A lost merge or a lost counter update breaks the exact totals."""
+    import random
+    import sys
+    import threading
+
+    from elephantdb_spark.engine import Domain
+
+    root, path, keys = grouped
+    dom = Domain(spark, root)
+    sizes = dom._open_shard_file(path)[5]
+    dom._rg_cache_budget = 3 * min(sizes)  # no group fits whole
+    pool = [k for g in keys for k in g[::50]]  # every row fits as a row
+    calls, n_threads = 60, 8
+    errors: list[BaseException] = []
+
+    def reader(t):
+        rng = random.Random(t)
+        try:
+            for _ in range(calls):
+                k = rng.choice(pool)
+                assert dom.local_get(k) == _value(k)
+        except BaseException as e:  # noqa: BLE001 - collected for the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=reader, args=(t,)) for t in range(n_threads)
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:3]
+    stats = dom.serving_stats()
+    assert stats["row_hits"] + stats["decodes"] == n_threads * calls
+    held = [e for e in dom._rg_cache.values() if e[1] is None]
+    assert len(held) == len(dom._rg_cache)  # no whole group was kept
+    # nothing was evicted, so every admitted row is still held, once
+    assert stats["rows_admitted"] == sum(len(e[0]) for e in held)
+    assert sum(e[2] for e in dom._rg_cache.values()) == dom._rg_cache_nbytes
+    assert dom._rg_cache_nbytes <= dom._rg_cache_budget
 
 
 def test_fanout_equivalence_and_point_get_stays_serial(spark, tmp_path):

@@ -244,6 +244,35 @@ def test_auto_topk_shape_follows_window_group_limit(frames):
         spark.conf.set(_WGL_THRESHOLD_CONF, prev)
 
 
+def test_window_group_limit_probe_propagates_unrelated_errors():
+    """Only an unknown conf or a non-integer value means "rewrite
+    unavailable"; any other failure of ``spark.conf.get`` propagates
+    instead of silently choosing the salted top-k shape."""
+    from types import SimpleNamespace
+
+    from pyspark.errors import SparkNoSuchElementException
+
+    from elephantdb_spark.operators.retrieval import _window_group_limit_active
+
+    def session(get):
+        return SimpleNamespace(conf=SimpleNamespace(get=get))
+
+    def missing(key):
+        raise SparkNoSuchElementException(
+            errorClass="SQL_CONF_NOT_FOUND", messageParameters={"sqlConf": key}
+        )
+
+    def broken(key):
+        raise RuntimeError("gateway closed")
+
+    assert not _window_group_limit_active(session(missing), 10)
+    assert not _window_group_limit_active(session(lambda key: "many"), 10)
+    assert not _window_group_limit_active(session(lambda key: None), 10)
+    assert _window_group_limit_active(session(lambda key: "1000"), 10)
+    with pytest.raises(RuntimeError, match="gateway closed"):
+        _window_group_limit_active(session(broken), 10)
+
+
 def test_dfreq_broadcast_no_token_window(frames):
     """r19: the per-token document frequency must ride a broadcast join
     of a groupBy(token) aggregate, never a count window partitioned by
