@@ -18,20 +18,22 @@ The suite covers the reference's two real workloads — bulk domain build
 (shard+sort+write) and point/multi-point serving reads — plus the extension
 operators (dedup, similarity, text analysis) at the same scale.
 
-De-noising protocol (VERDICT r6 item 8): the host carries EXTERNAL
-tenant load, so single-pass figures vary ±50% run to run and every round
-re-litigated phantom regressions. The recorded ``queries`` are now the
-per-entry MINIMUM over $SPARK_GRAFT_BENCH_PASSES warm passes (default 3)
-in ONE JVM — min is the right estimator for structural cost under
-one-sided noise — with every raw pass and a load-average provenance
-block kept alongside so the merge is auditable.
+The recorded ``queries`` are the per-entry MINIMUM over
+$SPARK_GRAFT_BENCH_PASSES warm passes (default 3) in ONE JVM — min is
+the right estimator for structural cost under one-sided host noise.
+Wall time on a host with CPU steal is only a first triage signal, so
+every entry also runs under its own Spark job group (``p{pass}:{entry}``)
+and the side file carries that group's work: stages, tasks, executor
+CPU, shuffle and spill (edbbench's stage reader), plus the driver's and
+the JVM tree's CPU seconds — per pass in ``work_passes``, per-field
+minimum in ``work``.  ``diff_raw_passes.py`` diffs both.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
-import resource
 import shutil
 import sys
 import tempfile
@@ -42,6 +44,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from edbbench.sparkstats import (
+    empty_stage_row,
+    job_group_stages,
+    jvm_pid,
+    peak_rss_mib,
+    reset_peak_rss,
+    self_cpu_s,
+    tree_cpu_s,
+)
 from elephantdb_spark import DomainSpec, Engine, build_domain, update_domain
 from elephantdb_spark.session import get_spark
 
@@ -58,67 +69,36 @@ def _sf_tag(path: str) -> float:
         return -1.0
 
 
-# Serving windows drawn per pass, UNCONDITIONALLY (r11 VERDICT item 1,
-# superseding the r10 contended-only retry): the engine's measured
-# intermittent-JVM-self-noise envelope spreads uncontended ~1.4 s
-# windows across 5-10k keys/s (SCALE.md §r11s2), so one sample per pass
-# under-reads the engine whenever it lands in a trough — the official
-# driver figure fell three straight rounds (7,921 -> 6,354 -> 5,901) on
-# ext-0.0 windows while the 9-sample solo fold read 10,045.  The
-# min-fold is the right estimator for intermittent self-noise, but only
-# with enough samples; k=3 windows x 3 passes gives the driver run the
-# same >=9-sample fold the solo runs already draw, for +~8 s on a ~65 s
-# bench.
+# Serving windows drawn per pass; the entry records the fastest.  The
+# engine's own intermittent noise spreads one window across 5-10k keys/s
+# (SCALE.md §r11s2), so a single window per pass under-reads it whenever
+# it lands in a trough; k=3 windows x 3 passes gives a 9-sample min.
 SERVING_WINDOWS_PER_PASS = 3
 
 
-def fold_serving_windows(run_window, k: int = None) -> tuple[list, dict, bool]:
-    """Draw ``k`` serving windows unconditionally, plus ONE extra only
-    when every unconditional window was externally contended (the r10
-    gate, kept on top of the r11 unconditional sampling — self-noise
-    never fires it, ext busy cores do).  Returns (all windows drawn in
-    order, the kept min-wall window, retried) where ``retried`` is true
-    iff the contention gate drew the extra window — computed against the
-    EFFECTIVE k this call used, not the module default, so callers can
-    never misreport it under a non-default or clamped k (ADVICE r13
-    item 1).  Pure policy: ``run_window`` does the measuring, so tests
+def fold_serving_windows(run_window, k: int = None) -> tuple[list, dict]:
+    """Draw ``k`` serving windows and return (every window in order, the
+    min-wall window).  Total over its signature: k<=0 still draws one
+    window.  Pure policy: ``run_window`` does the measuring, so tests
     can pin the fold without a SparkSession."""
-    # total over the advertised signature (ADVICE r12): k<=0 would make
-    # the kept-min below raise on an empty list — the policy always
-    # draws at least one window
     k = SERVING_WINDOWS_PER_PASS if k is None else max(1, k)
     windows = [run_window() for _ in range(k)]
-    if windows and all(w["contended"] for w in windows):
-        windows.append(run_window())
-    kept = min(windows, key=lambda w: w["wall"])
-    return windows, kept, len(windows) > k
+    return windows, min(windows, key=lambda w: w["wall"])
 
 
 def build_final_serving(servings: list, best_idx: int) -> dict:
     """Fold the per-pass serving blocks into the final line's block.
 
-    The scalar figures (keys/sec, latency percentiles, contended, ...)
-    come from the best pass: each pass's block is already the min-fold
-    of its k windows, so the best pass's figure IS the min over every
-    window drawn this run, and its ``contended``/``ext_busy_cores``
-    describe exactly the kept window that produced that figure.  Two
-    fields are run-scoped instead (ADVICE r12: a line reader must never
-    see >9 windows with ``serving_retried: false``):
-
-    - ``windows``: the concatenation of every sample drawn across all
-      passes (>=9 on a default 3-pass run) — the audit trail the fold
-      must never hide;
-    - ``serving_retried``: true when ANY pass's contention gate fired,
-      since that pass's extra draw rides the concatenated list even
-      when a different pass supplied the kept block.
+    The scalar figures (keys/sec, latency percentiles, ...) come from
+    the best pass: each pass's block is already the min-fold of its k
+    windows, so the best pass's figure IS the min over every window
+    drawn this run.  ``windows`` is run-scoped instead: the
+    concatenation of every window wall drawn across all passes, the
+    audit trail the fold must never hide.
 
     Pure (no Spark, no I/O) so the sparkless contract tests can pin the
-    exact construction main() ships.
-
-    Total over its advertised inputs (ADVICE r13 item 2, matching the
-    totality treatment fold_serving_windows got): an empty ``servings``
-    or out-of-range ``best_idx`` raises a clear ValueError instead of a
-    bare IndexError deep in the fold.
+    exact construction main() ships.  An empty ``servings`` or an
+    out-of-range ``best_idx`` raises a clear ValueError.
     """
     if not servings:
         raise ValueError("build_final_serving: servings must be non-empty")
@@ -129,14 +109,8 @@ def build_final_serving(servings: list, best_idx: int) -> dict:
         )
     final = dict(servings[best_idx])
     final["windows"] = [w for s in servings for w in s.get("windows", [])]
-    final["serving_retried"] = any(
-        s.get("serving_retried") for s in servings
-    )
     return final
 
-
-# ---- serving-window instrument (module-level so envelope_probe.py ----
-# ---- measures with the IDENTICAL code — VERDICT r13 item 2) ----------
 
 # one serving window = SERVING_THREADS threads x SERVING_BATCHES batches
 # of SERVING_BATCH_KEYS keys through ONE Domain handle (8,000 lookups)
@@ -145,93 +119,13 @@ SERVING_BATCHES = 10
 SERVING_BATCH_KEYS = 100
 SERVING_KEYS_PER_WINDOW = SERVING_THREADS * SERVING_BATCHES * SERVING_BATCH_KEYS
 
-# contention verdict threshold: >cpus/4 EXTERNAL busy cores in-window
-CONTENDED_BUSY_CORES = CPUS / 4.0
 
-
-def _reset_peak_rss() -> bool:
-    """Reset the kernel's VmHWM watermark so the recorded peak is
-    IN-WINDOW (ru_maxrss is a lifetime high-watermark: any earlier
-    phase that peaked higher would freeze the delta at 0 and hide a
-    probe-memory regression)."""
-    try:
-        with open("/proc/self/clear_refs", "w") as f:
-            f.write("5")
-        return True
-    except OSError:
-        return False
-
-
-def _peak_rss_kb() -> int:
-    try:
-        with open("/proc/self/status") as f:
-            for line in f:
-                if line.startswith("VmHWM:"):
-                    return int(line.split()[1])
-    except OSError:
-        pass
-    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
-
-
-def spark_jvm_pid(spark) -> int | None:
-    """PID of the live Spark JVM (our biggest CPU consumer), found once
-    so the external-cores instrument can subtract its tree."""
-    try:
-        return int(
-            spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
-        )
-    except Exception:
-        return None
-
-
-def _cpu_totals(jvm_pid: int | None) -> tuple[float, float] | None:
-    """(host_busy_cpu_sec, own_tree_cpu_sec) at this instant.
-
-    The delta of these two over a window gives EXTERNAL busy cores:
-    (host_busy_delta - own_delta) / wall.  Unlike the 1-min loadavg
-    — which lags by a minute and counts the bench's OWN 32-core
-    Spark stages from the preceding entries — this measures other
-    tenants' CPU during the window itself.  Own tree = this process
-    (rusage SELF) + reaped children (rusage CHILDREN) + the live
-    Spark JVM's utime/stime/cutime/cstime from /proc; idle pyspark
-    workers (live, unreaped JVM grandchildren) are not counted but
-    run no Spark jobs during the pure-pyarrow serving window.
-    Returns None when /proc is unavailable (non-Linux)."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        if parts[0] != "cpu":
-            return None
-        jiffies = [float(x) for x in parts[1:]]
-        hz = float(os.sysconf("SC_CLK_TCK"))
-        idle = jiffies[3] + (jiffies[4] if len(jiffies) > 4 else 0.0)
-        busy = (sum(jiffies) - idle) / hz
-    except (OSError, ValueError, IndexError):
-        return None
-    own = 0.0
-    for who in (resource.RUSAGE_SELF, resource.RUSAGE_CHILDREN):
-        ru = resource.getrusage(who)
-        own += ru.ru_utime + ru.ru_stime
-    if jvm_pid is not None:
-        try:
-            with open(f"/proc/{jvm_pid}/stat") as f:
-                # comm may contain spaces/parens: split after the
-                # LAST ')' — fields utime stime cutime cstime are
-                # then tokens 11-14 (state is token 0)
-                rest = f.read().rsplit(")", 1)[1].split()
-            own += sum(float(rest[i]) for i in (11, 12, 13, 14)) / hz
-        except (OSError, ValueError, IndexError):
-            pass
-    return busy, own
-
-
-def serving_window(domain, keys, jvm_pid: int | None = None) -> dict:
+def serving_window(domain, keys, pid: int) -> dict:
     """One serving window: SERVING_THREADS threads x SERVING_BATCHES
     batches of SERVING_BATCH_KEYS keys through ONE Domain handle.
-    Measures wall, per-call latencies, in-window peak-RSS delta, and
-    the window's contention verdict (in-window EXTERNAL busy cores >
-    CONTENDED_BUSY_CORES; 1-min loadavg only as provenance / non-Linux
-    fallback)."""
+    Measures wall, per-call latencies, the in-window peak-RSS delta,
+    and the CPU seconds of this driver and of the JVM tree ``pid``
+    (read outside the timed span)."""
     lats: list[float] = []
     hits: dict[int, int] = {}
     errs: list[BaseException] = []
@@ -249,10 +143,12 @@ def serving_window(domain, keys, jvm_pid: int | None = None) -> dict:
         except BaseException as e:  # surfaced after join, not a KeyError
             errs.append(e)
 
-    windowed = _reset_peak_rss()
-    rss_before_kb = _peak_rss_kb()
-    la0 = os.getloadavg()[0]
-    cpu0 = _cpu_totals(jvm_pid)
+    # the peak-RSS watermark restarts so the delta is IN-WINDOW (a
+    # lifetime watermark set by an earlier phase would hide a probe-
+    # memory regression)
+    windowed = reset_peak_rss()
+    rss_before = peak_rss_mib()
+    driver0, jvm0 = self_cpu_s(), tree_cpu_s(pid)
     t0 = time.perf_counter()
     ts = [
         threading.Thread(target=_serve_worker, args=(t,))
@@ -263,7 +159,7 @@ def serving_window(domain, keys, jvm_pid: int | None = None) -> dict:
     for t in ts:
         t.join()
     wall = time.perf_counter() - t0
-    cpu1 = _cpu_totals(jvm_pid)
+    driver_cpu, jvm_cpu = self_cpu_s() - driver0, tree_cpu_s(pid) - jvm0
     if errs:
         raise errs[0]
     assert all(
@@ -272,220 +168,104 @@ def serving_window(domain, keys, jvm_pid: int | None = None) -> dict:
         ))
         for t in range(SERVING_THREADS)
     ), hits
-    if cpu0 is not None and cpu1 is not None and wall > 0:
-        ext_busy = max(0.0, (cpu1[0] - cpu0[0]) - (cpu1[1] - cpu0[1])) / wall
-    else:
-        ext_busy = None
-    loadavg = max(la0, os.getloadavg()[0])
-    # contention verdict: >cpus/4 EXTERNAL busy cores during the
-    # window itself.  The 1-min loadavg is kept as provenance but is
-    # NOT the verdict — it lags by a minute and brands the bench's
-    # own preceding Spark stages as contention (observed: a solo r11
-    # window at loadavg 12.4 with ~0 external load set the all-time
-    # serving record).  Loadavg is only the fallback verdict where
-    # /proc is unavailable.
-    contended = (
-        ext_busy > CONTENDED_BUSY_CORES if ext_busy is not None
-        else loadavg > CONTENDED_BUSY_CORES
-    )
     return {
         "wall": wall,
         "lats": lats,
-        "loadavg_1m": loadavg,
-        "ext_busy_cores": ext_busy,
-        "rss_delta_mib": (_peak_rss_kb() - rss_before_kb) / 1024.0,
+        "rss_delta_mib": peak_rss_mib() - rss_before,
         "rss_windowed": windowed,
-        "contended": contended,
+        "driver_cpu_s": driver_cpu,
+        "jvm_cpu_s": jvm_cpu,
     }
 
 
-# ---- session-envelope serving gate (VERDICT r13 item 1) ---------------
-#
-# r13 proved the host serving envelope is a time-varying REGIME, not a
-# constant: identical engine bytes drew window floors from 1.044 s to
-# 2.992 s (2.9x) within one session, with in-window external cores ~0
-# throughout (SCALE.md §r13).  An absolute keys/s bar therefore cannot
-# distinguish regime from regression here.  The gate is now
-# envelope-RELATIVE: the official serving figure is judged against the
-# best window of a same-session standalone probe run BRACKETING the
-# bench (ENVELOPE_WINDOWS_PER_SIDE windows before pass 0 and after the
-# last pass, same domain shape, same serving_window instrument).
-# Criterion (PLANS.md §r14): official keys/s within ENVELOPE_TOLERANCE
-# of the probe's best-window keys/s ⇒ regime-consistent; worse ⇒
-# investigate as a regression.
+class PassRecorder:
+    """What one pass records per entry: wall seconds in ``timings`` (the
+    figure the line reports) and the entry's work in ``work`` — its job
+    group's stage row (edbbench's STAGE_FIELDS, ``wall_s`` = the
+    recorded wall) plus ``driver_cpu_s`` and ``jvm_cpu_s``, the CPU
+    seconds of this driver and of the JVM tree (executors and Python
+    workers)."""
 
-ENVELOPE_TOLERANCE = 1.25
+    def __init__(self, spark, pass_idx: int):
+        self.spark = spark
+        self.sc = spark.sparkContext
+        self.pass_idx = pass_idx
+        self.pid = jvm_pid(self.sc)
+        self.timings: dict[str, float] = {}
+        self.work: dict[str, dict] = {}
 
-
-def parse_envelope_windows(raw, default: int = 4) -> int:
-    """Parse $SPARK_GRAFT_ENVELOPE_WINDOWS into a window count.
-
-    Best-effort like the envelope gate itself (ADVICE r14): a malformed
-    value must degrade to the default with a stderr warning, never raise
-    at import time — ``bench`` is imported sparkless by the probe and
-    the test suite, and a shell typo in the env var must not break
-    those imports.  Negative values clamp to 0 (bracket disabled)."""
-    try:
-        return max(0, int(raw))
-    except (TypeError, ValueError):
-        print(
-            f"WARN: SPARK_GRAFT_ENVELOPE_WINDOWS={raw!r} is not an "
-            f"integer; using default {default}",
-            file=sys.stderr,
+    def record(self, name, wall, stage_row, driver_cpu_s, jvm_cpu_s) -> None:
+        self.timings[name] = round(wall, 3)
+        self.work[name] = dict(
+            stage_row,
+            wall_s=self.timings[name],
+            driver_cpu_s=round(driver_cpu_s, 3),
+            jvm_cpu_s=round(jvm_cpu_s, 3),
         )
-        return default
+
+    def record_window(self, name: str, window: dict) -> None:
+        """A serving-window entry: no Spark job runs, so its stage row
+        is zero and only the window's CPU seconds are recorded."""
+        self.record(name, window["wall"], empty_stage_row(),
+                    window["driver_cpu_s"], window["jvm_cpu_s"])
+
+    @contextlib.contextmanager
+    def timed(self, name: str):
+        """Time the body as entry ``name``, run under job group
+        ``p{pass}:{name}``.  The CPU and stage reads sit outside the
+        timed span; the group's stage row is read right after the entry
+        (the session retains every stage: see main)."""
+        group = f"p{self.pass_idx}:{name}"
+        self.sc.setJobGroup(group, name)
+        driver0, jvm0 = self_cpu_s(), tree_cpu_s(self.pid)
+        t0 = time.perf_counter()
+        try:
+            yield
+        finally:
+            wall = time.perf_counter() - t0
+            driver_cpu = self_cpu_s() - driver0
+            jvm_cpu = tree_cpu_s(self.pid) - jvm0
+            self.sc._jsc.clearJobGroup()
+            # stage rows reach the status store through the asynchronous
+            # listener bus; drain it so the last stage's metrics are in
+            self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+            self.record(name, wall, job_group_stages(self.sc, group),
+                        driver_cpu, jvm_cpu)
+            # cache hygiene between entries (round-2 verdict: a leaked
+            # shingle-index persist taxed every subsequent entry with
+            # storage-memory eviction/GC pressure). Both calls are no-ops
+            # when nothing is cached.
+            from elephantdb_spark.operators.dedup import release_shingle_caches
+
+            release_shingle_caches()
+            self.spark.catalog.clearCache()
 
 
-ENVELOPE_WINDOWS_PER_SIDE = parse_envelope_windows(
-    os.environ.get("SPARK_GRAFT_ENVELOPE_WINDOWS", "4")
-)
-
-
-def draw_bracket_leg(draw_one, count: int, out: list) -> None:
-    """Append ``count`` serving windows drawn by ``draw_one()`` to
-    ``out``, one at a time, so a mid-leg failure keeps every
-    already-drawn window in ``out`` (ADVICE r15: the old list
-    comprehension discarded k-1 good windows when window k raised —
-    envelope_probe.py salvages partial artifacts; the bench bracket
-    now matches that posture).  The exception still propagates to the
-    caller's best-effort WARN path."""
-    for _ in range(count):
-        out.append(draw_one())
-
-
-def build_envelope_fixture(spark, sf_dir: str = None):
-    """The official serving fixture, rebuilt standalone: lineitem_kv at
-    ``sf_dir`` in a throwaway work dir plus the 1000-key probe draw the
-    bench's serving entry uses.  Returns (domain, keys, work_dir); the
-    caller owns the work dir.  One untimed warm probe runs first so the
-    bracket windows measure the same cache-warm regime as the official
-    kept window (which follows earlier warm entries)."""
-    sf_dir = SF_DIR if sf_dir is None else sf_dir
-    work = tempfile.mkdtemp(prefix="edb_envelope_")
-    # a failed build must not leak the work dir (ADVICE r14): the
-    # caller only learns the path from a SUCCESSFUL return, so on any
-    # raise the dir is ours to remove before re-raising
-    try:
-        eng = Engine(spark, work)
-        lineitem = spark.read.parquet(
-            os.path.join(sf_dir, "lineitem.parquet")
-        )
-        li_kv = lineitem.select(
-            F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"))
-            .cast("binary").alias("key"),
-            F.col("l_extendedprice").cast("string").cast("binary")
-            .alias("value"),
-        )
-        build_domain(spark, li_kv, eng.domain_root("lineitem_kv"),
-                     DomainSpec(num_shards=NUM_SHARDS), version=1)
-        dom = eng.domain("lineitem_kv")
-        keys = [
-            f"{r.l_orderkey}-{r.l_linenumber}".encode()
-            for r in lineitem.select("l_orderkey", "l_linenumber")
-            .limit(1000).collect()
-        ]
-        dom.local_multi_get(keys)  # untimed warm: handles + decoded groups
-        return dom, keys, work
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-
-
-def compact_window(w: dict) -> list:
-    """[wall_sec, ext_busy_cores] audit form (the serving windows list's
-    shape) — drops the per-call latency vector."""
-    return [
-        round(w["wall"], 3),
-        round(w["ext_busy_cores"], 1)
-        if w.get("ext_busy_cores") is not None else None,
-    ]
-
-
-def build_envelope_block(
-    pre_windows: list, post_windows: list, official_keys_per_sec: float,
-    tolerance: float = ENVELOPE_TOLERANCE,
-    keys_per_window: int = SERVING_KEYS_PER_WINDOW,
-    discard_window: dict | None = None,
-) -> dict | None:
-    """Fold the bracketing probe windows into the line's envelope
-    verdict (pure — sparkless tests pin it).
-
-    ``regime_consistent`` is true iff the official figure is within
-    ``tolerance`` of the session probe's best-window keys/s, i.e.
-    official * tolerance >= probe_best.  A consistent-but-low round
-    means the HOST regime was degraded (the probe saw the same
-    envelope); an INconsistent round means the official draw was slower
-    than the same session's demonstrated envelope and must be
-    investigated as a regression.  Returns None when no usable probe
-    windows exist (the line then carries envelope: null — an honest
-    absent gate, never a fabricated verdict).
-
-    ``discard_window`` (VERDICT r14 item 4) is the untimed warmup
-    window drawn before the pre-bracket leg on a fresh JVM: three of
-    seven r14 solo runs — exactly the fresh-JVM-after-idle launches —
-    drew pre-floors >=3.5 s against post-floors <=1.0 s, confounding
-    launch warmup with host regime.  The discard's wall is RECORDED
-    (``discard_wall_sec``) so the warmup cost stays auditable, but it
-    is EXCLUDED from the floors and the verdict: the pre-floor now
-    measures the host envelope at launch, not JIT/page-cache warmup."""
-    pre = [w for w in (pre_windows or []) if w.get("wall", 0) > 0]
-    post = [w for w in (post_windows or []) if w.get("wall", 0) > 0]
-    walls = [w["wall"] for w in pre + post]
-    if not walls or not official_keys_per_sec:
-        return None
-    probe_best = keys_per_window / min(walls)
+def min_merge_work(work_passes: list[dict]) -> dict:
+    """Per-entry, per-field minimum of the passes' work rows (the same
+    merge the ``queries`` map gets)."""
     return {
-        "probe_best_keys_per_sec": round(probe_best, 1),
-        "official_over_probe_best": round(
-            official_keys_per_sec / probe_best, 3
-        ),
-        "regime_consistent": bool(
-            official_keys_per_sec * tolerance >= probe_best
-        ),
-        "tolerance": tolerance,
-        "pre_floor_sec": round(min(w["wall"] for w in pre), 3) if pre else None,
-        "post_floor_sec": round(min(w["wall"] for w in post), 3) if post else None,
-        "n_windows": len(walls),
-        "discard_wall_sec": (
-            round(discard_window["wall"], 3)
-            if discard_window and discard_window.get("wall", 0) > 0
-            else None
-        ),
+        name: {
+            f: min(w[name][f] for w in work_passes if name in w)
+            for f in row
+        }
+        for name, row in work_passes[0].items()
     }
 
 
-def run_pass(spark, pass_idx: int) -> tuple[dict, dict]:
+def run_pass(spark, pass_idx: int) -> tuple[dict, dict, dict]:
     """One full pass over every timed entry in a fresh work dir (domains
     rebuilt — the build entries are part of the suite); returns
-    (timings, serving_stats). The session is shared across passes, so
-    pass 2+ measure steady-state JVM cost."""
+    (timings, work, serving_stats) — see :class:`PassRecorder`. The
+    session is shared across passes, so pass 2+ measure steady-state
+    JVM cost."""
     work = tempfile.mkdtemp(prefix=f"edb_bench_p{pass_idx}_")
     eng = Engine(spark, work)
-    timings: dict[str, float] = {}
+    rec = PassRecorder(spark, pass_idx)
+    timed = rec.timed
 
     def read(name):
         return spark.read.parquet(os.path.join(SF_DIR, f"{name}.parquet"))
-
-    def timed(name):
-        class _T:
-            def __enter__(self):
-                self.t0 = time.perf_counter()
-                return self
-
-            def __exit__(self, *a):
-                timings[name] = round(time.perf_counter() - self.t0, 3)
-                # cache hygiene between entries (round-2 verdict: a leaked
-                # shingle-index persist taxed every subsequent entry with
-                # storage-memory eviction/GC pressure). Outside the timed
-                # window; both calls are no-ops when nothing is cached.
-                from elephantdb_spark.operators.dedup import (
-                    release_shingle_caches,
-                )
-
-                release_shingle_caches()
-                spark.catalog.clearCache()
-
-        return _T()
 
     lineitem = read("lineitem")
     customer = read("customer")
@@ -640,18 +420,13 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict]:
     # handle — exercises the _pq_cache under concurrency. The recorded
     # value is wall seconds for 8x10 batches of 100 keys (8000 key
     # lookups); bench JSON stays one-number-per-entry, qps = 8000/value.
-    # The window runner itself is module-level (serving_window) so the
-    # standalone envelope probe measures with the IDENTICAL instrument
-    # (VERDICT r13 item 2).
-    _jvm_pid = spark_jvm_pid(spark)
-
-    # k unconditional windows, min-fold (r11 VERDICT item 1) — policy
-    # and rationale live on fold_serving_windows / the module constant
-    windows, kept, retried = fold_serving_windows(
-        lambda: serving_window(dom, li_keys, jvm_pid=_jvm_pid)
+    # k windows, min-fold — policy and rationale live on
+    # fold_serving_windows / the module constant
+    windows, kept = fold_serving_windows(
+        lambda: serving_window(dom, li_keys, rec.pid)
     )
+    rec.record_window("local_multiget_concurrent_8t", kept)
     wall, call_lat = kept["wall"], kept["lats"]
-    timings["local_multiget_concurrent_8t"] = round(wall, 3)
     # serving-throughput figures (VERDICT r5 item 8): the reference's
     # anchor is a 64-thread THsHaServer (common/thrift.clj:111-118);
     # report keys/sec plus per-key latency percentiles so rounds compare
@@ -678,37 +453,10 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict]:
         # memory tier — serving figures above are cache-warm by design,
         # the repeat-batch workload is what the cache exists for)
         "rg_cache_mib": round(dom._rg_cache_nbytes / 2**20, 2),
-        # 1-min loadavg of the KEPT window — provenance/continuity only
-        # (r8 VERDICT item 4); the contention VERDICT below uses the
-        # in-window external-cores measure, which the loadavg is not
-        "loadavg_1m": round(kept["loadavg_1m"], 2),
-        # average EXTERNAL busy cores during the kept window (host
-        # /proc/stat busy delta minus our own process tree); null where
-        # /proc is unavailable
-        "ext_busy_cores": (
-            round(kept["ext_busy_cores"], 1)
-            if kept["ext_busy_cores"] is not None else None
-        ),
-        # machine-visible contention verdict for the kept window
-        # (r10 VERDICT item 2): external busy cores > cpus/4
-        "contended": kept["contended"],
-        # true when the external-contention gate fired and an EXTRA
-        # window ran beyond the unconditional k (r11: the k windows
-        # themselves are not "retries" — they are the estimator).
-        # Reported by the fold itself against the effective k it used
-        # (ADVICE r13 item 1: deriving it here from the module constant
-        # would misreport under any non-default k)
-        "serving_retried": retried,
-        # audit trail for the kept-min (every window incl. discarded:
-        # [wall_sec, ext_busy_cores]) — the fold must never hide how
-        # much it changed the figure; main() concatenates the per-pass
-        # lists so the FINAL line carries all >=9 samples
-        "windows": [
-            [round(w["wall"], 3),
-             round(w["ext_busy_cores"], 1)
-             if w["ext_busy_cores"] is not None else None]
-            for w in windows
-        ],
+        # audit trail for the kept-min: every window's wall, discarded
+        # ones included; main() concatenates the per-pass lists so the
+        # FINAL line carries all >=9 samples
+        "windows": [round(w["wall"], 3) for w in windows],
     }
 
     # the same workload with the decoded-group cache DISABLED (r8): the
@@ -720,10 +468,11 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict]:
     cold_dom = _Domain(spark, eng.domain_root("lineitem_kv"))
     cold_dom._rg_cache_budget = 0
     cold_dom.local_multi_get([b"warm"])  # open handles untimed
-    # same harness as the warm entry (one window, no gate — this entry
-    # exists as the warm entry's structural contrast, not a headline)
-    timings["local_multiget_concurrent_8t_nocache"] = round(
-        serving_window(cold_dom, li_keys, jvm_pid=_jvm_pid)["wall"], 3
+    # same harness as the warm entry, one window (this entry exists as
+    # the warm entry's structural contrast, not a headline)
+    rec.record_window(
+        "local_multiget_concurrent_8t_nocache",
+        serving_window(cold_dom, li_keys, rec.pid),
     )
 
     # bulk enrichment (r5): the WHOLE lineitem fact probed against its
@@ -1376,67 +1125,36 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict]:
         ).collect()
 
     shutil.rmtree(work, ignore_errors=True)
-    return timings, serving_stats
+    return rec.timings, rec.work, serving_stats
 
 
 def main() -> None:
     passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
-    spark = get_spark(app_name="edb-bench", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS)
+    # the status store must keep every stage of the run (a 3-pass sf0.1
+    # run submits ~1,800): past spark.ui.retainedStages its cleanup drops
+    # skipped stages first (their completion time is -1), those of the
+    # entry that just ran included, and job_group_stages reads every
+    # stage id of a group
+    spark = get_spark(
+        app_name="edb-bench", master=f"local[{CPUS}]",
+        shuffle_partitions=CPUS,
+        extra_conf={"spark.ui.retainedJobs": "100000",
+                    "spark.ui.retainedStages": "100000"},
+    )
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sparkContext.setLogLevel("ERROR")
 
     load_before = os.getloadavg()
     t_wall0 = time.perf_counter()
 
-    # session-envelope bracket, leg 1 (VERDICT r13 item 1): probe the
-    # host's serving envelope with the official instrument BEFORE the
-    # passes; leg 2 runs after them, so the regime during the official
-    # draw is bounded from both sides.  Best-effort: a probe failure
-    # degrades the line's envelope to null, never kills the bench.
-    env_pre: list[dict] = []
-    env_post: list[dict] = []
-    env_discard: dict | None = None
-    env_dom = env_keys = None
-    env_work = None
-    if ENVELOPE_WINDOWS_PER_SIDE > 0:
-        try:
-            env_dom, env_keys, env_work = build_envelope_fixture(spark)
-            _env_jvm = spark_jvm_pid(spark)
-            # warmup-discard window (VERDICT r14 item 4): the first
-            # full-shape window after a fresh JVM pays JIT + thread-pool
-            # + page-cache warmup the fixture's single warm multi_get
-            # does not cover (r14: fresh-JVM pre-floors >=3.5 s vs
-            # post-floors <=1.0 s on identical bytes).  Draw one window,
-            # record it, exclude it from the bracket floors/verdict.
-            env_discard = serving_window(
-                env_dom, env_keys, jvm_pid=_env_jvm
-            )
-            draw_bracket_leg(
-                lambda: serving_window(env_dom, env_keys, jvm_pid=_env_jvm),
-                ENVELOPE_WINDOWS_PER_SIDE, env_pre,
-            )
-        except Exception as e:
-            print(f"WARN: envelope pre-bracket failed: {e}", file=sys.stderr)
-
     raw: list[dict] = []
+    work_passes: list[dict] = []
     servings: list[dict] = []
     for p in range(passes):
-        timings, serving_stats = run_pass(spark, p)
+        timings, work, serving_stats = run_pass(spark, p)
         raw.append(timings)
+        work_passes.append(work)
         servings.append(serving_stats)
-
-    if env_dom is not None:
-        try:
-            _post_jvm = spark_jvm_pid(spark)
-            draw_bracket_leg(
-                lambda: serving_window(env_dom, env_keys, jvm_pid=_post_jvm),
-                ENVELOPE_WINDOWS_PER_SIDE, env_post,
-            )
-        except Exception as e:
-            print(f"WARN: envelope post-bracket failed: {e}", file=sys.stderr)
-    if env_work is not None:
-        shutil.rmtree(env_work, ignore_errors=True)
     spark.stop()
 
     # per-entry min-merge; total = sum of merged entries (the structural
@@ -1446,24 +1164,17 @@ def main() -> None:
     }
     # serving stats travel as a block: take the pass with the fastest
     # concurrent-probe wall time (its qps/latency figures are coherent).
-    # Each pass's block is already the min-fold of its k unconditional
-    # windows, so the chosen block's figure IS the min over all passes'
-    # windows (r11 VERDICT item 1).  The final line's windows audit is
-    # the CONCATENATION across passes — every sample drawn this run,
-    # >=9 on a default 3-pass run — so a low figure is distinguishable
-    # from an under-sampled one without opening the raw-passes file.
+    # Each pass's block is already the min-fold of its k windows, so the
+    # chosen block's figure IS the min over all passes' windows.  The
+    # final line's windows audit is the CONCATENATION across passes —
+    # every sample drawn this run, >=9 on a default 3-pass run — so a
+    # low figure is distinguishable from an under-sampled one without
+    # opening the raw-passes file.
     best_serving = min(
         range(len(raw)),
         key=lambda i: raw[i].get("local_multiget_concurrent_8t", float("inf")),
     )
     final_serving = build_final_serving(servings, best_serving)
-    # envelope-relative serving verdict (VERDICT r13 item 1): scalars
-    # ride the line; the full bracket window audit goes to the
-    # raw-passes side file (the line budget stays bounded)
-    final_serving["envelope"] = build_envelope_block(
-        env_pre, env_post, final_serving.get("keys_per_sec"),
-        discard_window=env_discard,
-    )
     total = round(sum(merged.values()), 3)
     here = os.path.dirname(os.path.abspath(__file__))
     provenance = {
@@ -1483,18 +1194,15 @@ def main() -> None:
     provenance["raw_passes_file"] = write_raw_passes(here, {
         "queries": merged,
         "raw_passes": raw,
+        # each entry's Spark work (PassRecorder), merged like queries
+        "work": min_merge_work(work_passes),
+        "work_passes": work_passes,
         "serving_passes": servings,
-        # the FULL folded serving block incl. windows audit + envelope:
-        # the stdout line may slim serving to scalars to fit the queries
-        # map inside the driver's capture window (r19), so the complete
-        # block must survive here
+        # the FULL folded serving block incl. the windows audit: the
+        # stdout line may slim serving to scalars to fit the queries map
+        # inside the 2,000-char capture window (r19), so the complete block
+        # must survive here
         "serving_final": final_serving,
-        # full bracket audit: every envelope window as [wall, ext]
-        "envelope_windows": {
-            "discard": compact_window(env_discard) if env_discard else None,
-            "pre": [compact_window(w) for w in env_pre],
-            "post": [compact_window(w) for w in env_post],
-        },
         "provenance": provenance,
     })
     print(build_final_line(total, merged, final_serving,
@@ -1514,13 +1222,13 @@ def main() -> None:
 # "serving_final", "provenance" keys; the line's queries_file names it).
 # tests/test_bench_contract.py pins the budget so added entries can't
 # regress this.  The hard bound is 1,999 (the capture window minus the
-# line's own trailing newline); 1,990 leaves a 9-char guard.
-FINAL_LINE_MAX_CHARS = 1990
+# line's own trailing newline); 1,899 leaves a 100-char guard.
+FINAL_LINE_MAX_CHARS = 1899
 
 
-def stamped_artifact_name(here: str, prefix: str) -> str:
-    """Round-stamped ``{prefix}_r{N}[_k].json`` filename that does not
-    exist yet.
+def stamped_raw_passes_name(here: str) -> str:
+    """Round-stamped ``BENCH_raw_passes_r{N}[_k].json`` filename that
+    does not exist yet.
 
     The round number is inferred as 1 + the highest driver-recorded
     ``BENCH_r{N}.json`` (the driver writes that file AFTER the round's
@@ -1529,8 +1237,7 @@ def stamped_artifact_name(here: str, prefix: str) -> str:
     suffixes rather than ever reusing a name: per-run artifact history
     must survive across rounds (r9 VERDICT items 2/5 — the unstamped
     BENCH_raw_passes.json was overwritten in place each run, destroying
-    round-over-round per-query diffs).  Shared by the raw-passes audit
-    file and the envelope probe's PROBE_r{N}.json (VERDICT r13 item 2).
+    round-over-round per-query diffs).
     """
     import re
 
@@ -1544,18 +1251,12 @@ def stamped_artifact_name(here: str, prefix: str) -> str:
         if m:
             rounds.append(int(m.group(1)))
     rnd = max(rounds) + 1
-    name = f"{prefix}_r{rnd:02d}.json"
+    name = f"BENCH_raw_passes_r{rnd:02d}.json"
     k = 2
     while os.path.exists(os.path.join(here, name)):
-        name = f"{prefix}_r{rnd:02d}_{k}.json"
+        name = f"BENCH_raw_passes_r{rnd:02d}_{k}.json"
         k += 1
     return name
-
-
-def stamped_raw_passes_name(here: str) -> str:
-    """The raw-passes audit file's round-stamped name (see
-    :func:`stamped_artifact_name`)."""
-    return stamped_artifact_name(here, "BENCH_raw_passes")
 
 
 def write_raw_passes(here: str, payload: dict) -> str | None:
@@ -1610,25 +1311,17 @@ def write_raw_passes(here: str, payload: dict) -> str | None:
 def slim_serving(serving, level: int) -> dict | None:
     """Scalar subsets of the serving block for the tiered line builder.
 
-    Level 1 keeps the headline figures plus the contention/regime
-    verdicts (drops the windows audit list and the envelope details —
-    both stay in the raw-passes side file's ``serving_final``).  Level 2
-    keeps only keys/sec + the two verdicts.  The envelope's
-    ``regime_consistent`` bit is hoisted to the top of the slim block so
-    the regime verdict survives every tier that carries serving at all.
+    Level 1 keeps the headline figures (drops the windows audit list,
+    which stays in the raw-passes side file's ``serving_final``).
+    Level 2 keeps only keys/sec.
     """
     if not serving:
         return serving
     keys = (
-        ("keys_per_sec", "per_key_p50_ms", "per_key_p99_ms",
-         "contended", "serving_retried")
-        if level <= 1 else ("keys_per_sec", "contended")
+        ("keys_per_sec", "per_key_p50_ms", "per_key_p99_ms")
+        if level <= 1 else ("keys_per_sec",)
     )
-    out = {k: serving[k] for k in keys if k in serving}
-    env = serving.get("envelope")
-    if env is not None:
-        out["regime_consistent"] = env.get("regime_consistent")
-    return out
+    return {k: serving[k] for k in keys if k in serving}
 
 
 def build_final_line(total, merged, serving, sf, passes, provenance) -> str:
@@ -1643,9 +1336,11 @@ def build_final_line(total, merged, serving, sf, passes, provenance) -> str:
        reduced to the pass count (the full blocks live in the side file);
     2. queries at 2 decimals, serving at its minimal scalar form;
     3. queries at 2 decimals, no serving;
-    4. legacy no-queries line (honest degrade — the capture window is a
+    4. queries at 2 decimals without the ``queries_file`` pointer (the
+       unstamped ``BENCH_raw_passes.json`` alias holds the same payload);
+    5. legacy no-queries line (honest degrade — the capture window is a
        hard driver bound and a corrupt line loses the total too);
-    5. bare scalars.
+    6. bare scalars.
     """
     queries_file = (provenance or {}).get(
         "raw_passes_file", "BENCH_raw_passes.json"
@@ -1666,6 +1361,7 @@ def build_final_line(total, merged, serving, sf, passes, provenance) -> str:
              passes=passes, queries_file=queries_file),
         dict(head, queries=q(2), sf=sf, passes=passes,
              queries_file=queries_file),
+        dict(head, queries=q(2), sf=sf, passes=passes),
         dict(head, n_queries=len(merged), sf=sf, passes=passes,
              queries_file=queries_file),
         {"metric": "total_bench_sec", "value": round(float(total), 3),

@@ -2,33 +2,24 @@
 
 The round-stamped ``BENCH_raw_passes_r{N}*.json`` chain (bench.py,
 r10) exists so driver-run per-query history survives across rounds;
-this tool is the consumer: a per-entry driver-to-driver (or
-solo-to-solo) comparison that separates structural regressions from
-host noise (r10 VERDICT item "Next round" 3).
+this tool is the consumer.
 
 Usage::
 
-    python diff_raw_passes.py OLD.json NEW.json [--band 1.5]
-        [--dist-old RAW1.json RAW2.json ... --dist-new RAW1.json ...]
-
-``--dist-old``/``--dist-new`` mechanize the refute-before-code
-distribution check (SCALE.md §r15): each out-of-band entry is triaged
-against every per-pass sample drawn on each side — overlapping sample
-ranges mean the fold ratio is min-statistics under different sample
-counts or host regimes, not structure; a disjoint-slower range is the
-signature worth investigating as a regression.  An overlapping range
-whose medians still moved past the band reads ``overlapping-shifted``
-(needs eyes — a lone old-side outlier can force range overlap).  The
-tool also warns when the two sides fold unequal run counts (the
-fold-symmetry rule, VERDICT r15 item 3: min-folds under unequal
-sample counts manufacture phantom out-of-band entries).
+    python diff_raw_passes.py OLD.json NEW.json [--band 1.5] [--json]
 
 Prints one line per common entry — old sec, new sec, new/old ratio —
 sorted worst-first, then a summary: total ratio, entries outside the
 noise band in each direction, and both runs' recorded loadavg
-provenance (the established verdict heuristic: the host has external
-tenant load and single-entry ratios inside ~1.5x are noise unless they
-repeat across rounds on an uncontended window — SCALE.md r8-r10).
+provenance.  On a host with CPU steal, wall time moves 2-5x run to
+run, so the wall diff is a first triage signal only.  When both files
+carry bench.py's per-entry ``work`` rows, the tool also prints each
+entry's work deltas (stages, tasks, executor CPU seconds, shuffle
+write and spill bytes): counts and bytes do not depend on the host,
+and CPU seconds leave out stolen time.  Files written before the rows
+existed still diff wall times, and the report says work is absent.
+Claims of a gain are judged with ``edbbench_ab.py``.
+
 Exit code 0 on a completed comparison regardless of what it shows
 (evidence tooling, not a gate); nonzero only for unusable inputs (a
 missing/unreadable file, no ``queries`` map, bad flags).
@@ -37,17 +28,22 @@ from __future__ import annotations
 
 import argparse
 import json
-import statistics
 import sys
 
 
-def load_queries(path: str) -> tuple[dict[str, float], dict]:
+def load_queries(path: str) -> tuple[dict[str, float], dict | None, dict]:
+    """(queries, work or None, provenance) of one raw-passes file."""
     with open(path) as fh:
         data = json.load(fh)
     queries = data.get("queries")
     if not isinstance(queries, dict):
         raise SystemExit(f"{path}: no 'queries' map (not a raw-passes file?)")
-    return {k: float(v) for k, v in queries.items()}, data.get("provenance", {})
+    work = data.get("work")
+    return (
+        {k: float(v) for k, v in queries.items()},
+        work if isinstance(work, dict) else None,
+        data.get("provenance", {}),
+    )
 
 
 def diff(old: dict[str, float], new: dict[str, float], band: float) -> dict:
@@ -63,9 +59,7 @@ def diff(old: dict[str, float], new: dict[str, float], band: float) -> dict:
             raw_ratio[name] = n / o
         # the band compare below uses the UNROUNDED ratio (ADVICE r17:
         # a true 1.5004 rounds to 1.500 and silently escaped
-        # slower_than_band, so it never reached the triage at all —
-        # the same rounding-escape distribution_triage was fixed for
-        # in r17); round(…,3) stays display/serialization-only
+        # slower_than_band); round(…,3) stays display/serialization-only
         ratio = round(raw_ratio[name], 3) if o > 0 else None
         rows.append({"entry": name, "old": o, "new": n, "ratio": ratio})
     # worst-first (by the unrounded ratio); incomparable (None-ratio)
@@ -98,159 +92,31 @@ def diff(old: dict[str, float], new: dict[str, float], band: float) -> dict:
     }
 
 
-def collect_samples(paths: list[str], entry: str) -> dict[str, list[float]]:
-    """Every timing drawn for ``entry`` across the given raw-passes
-    artifacts, split by provenance (ADVICE r15): ``raw`` holds genuine
-    per-pass draws (``raw_passes``); ``folded`` holds min-merged
-    figures from artifacts carrying no per-pass draw for the entry —
-    solo folds, or a stamped file whose passes all missed it (the old
-    elif never fell back to such a file's queries map).  Folded
-    figures are each already the best of their runs' draws, so mixing
-    them into a distribution biases the side's min downward; the
-    triage uses them only when a side has no raw draws at all.
-    Missing entries are skipped, unreadable files raise — a triage
-    over the wrong files must fail loudly, never silently thin the
-    sample."""
-    raw: list[float] = []
-    folded: list[float] = []
-    for p in paths:
-        with open(p) as fh:
-            data = json.load(fh)
-        passes = data.get("raw_passes")
-        hits = [
-            float(t[entry]) for t in passes
-            if isinstance(t, dict) and entry in t
-        ] if isinstance(passes, list) else []
-        if hits:
-            raw += hits
-        elif isinstance(data.get("queries"), dict) and entry in data["queries"]:
-            folded.append(float(data["queries"][entry]))
-    return {"raw": raw, "folded": folded}
+#: work fields diffed per entry, in report order (bench.py's work rows)
+WORK_FIELDS = (
+    "stages", "tasks", "executor_cpu_s", "shuffle_write_bytes", "spill_bytes",
+)
 
 
-def distribution_triage(
-    old_samples, new_samples, shift_band: float = 1.5
-) -> dict:
-    """The refute-before-code distribution check (SCALE.md §r15),
-    mechanized: an out-of-band fold ratio on a min-merged entry is
-    only evidence of regression if the new side's samples sit OUTSIDE
-    the old side's observed range.  Overlapping ranges mean the ratio
-    is min-statistics under different sample counts / host regimes
-    (r15 worked example: a 1.764× fold ratio whose old min was the
-    best of 21 draws spanning 1.48–7.32 s, against 12 new draws
-    spanning 2.62–8.67 s — overlapping, refuted).
-
-    Sides may be the tagged ``collect_samples`` dicts or legacy flat
-    lists (treated as all-raw).  Folded min-merged figures stand in
-    only when a side has no raw per-pass draw (ADVICE r15: each is
-    already a best-of-runs, so mixing them biases the side's min).
-
-    Secondary signal (ADVICE r15): pure range overlap can be forced by
-    a single slow outlier on the old side even when the bulk of the
-    new distribution shifted clearly slower.  When the ranges overlap
-    but the median ratio crosses ``shift_band`` in either direction,
-    the verdict is ``overlapping-shifted`` — flagged for eyes, never
-    auto-refuted and never auto-promoted to structural.
-
-    Verdicts: ``overlapping`` (sampling, not structural),
-    ``overlapping-shifted`` (ranges touch but the medians moved past
-    the band — needs eyes), ``disjoint-slower`` (every new draw slower
-    than every old draw — investigate as structural),
-    ``disjoint-faster`` (the mirror), or ``insufficient`` (a side has
-    no samples — no verdict fabricated)."""
-    def _split(s):
-        if isinstance(s, dict):
-            return list(s.get("raw", [])), list(s.get("folded", []))
-        return list(s), []
-    old_raw, old_folded = _split(old_samples)
-    new_raw, new_folded = _split(new_samples)
-    old_eff = old_raw if old_raw else old_folded
-    new_eff = new_raw if new_raw else new_folded
-    if not old_eff or not new_eff:
-        verdict = "insufficient"
-    elif min(new_eff) > max(old_eff):
-        verdict = "disjoint-slower"
-    elif max(new_eff) < min(old_eff):
-        verdict = "disjoint-faster"
-    else:
-        verdict = "overlapping"
-    # band comparison uses the UNROUNDED ratio (ADVICE r16: a true
-    # ratio just past the band, e.g. 1.5004, rounds to 1.500 and would
-    # silently escape the escalation); rounding is display-only below
-    median_ratio = None
-    if old_eff and new_eff:
-        old_med = statistics.median(old_eff)
-        if old_med > 0:
-            median_ratio = statistics.median(new_eff) / old_med
-    if verdict == "overlapping" and median_ratio is not None and (
-        median_ratio > shift_band or median_ratio < 1.0 / shift_band
-    ):
-        verdict = "overlapping-shifted"
-    def _side(eff, raw, folded):
-        return {
-            "n": len(eff),
-            "n_raw": len(raw),
-            "n_folded": len(folded),
-            "min": round(min(eff), 3) if eff else None,
-            "max": round(max(eff), 3) if eff else None,
-            "median": round(statistics.median(eff), 3) if eff else None,
-        }
-    return {"old": _side(old_eff, old_raw, old_folded),
-            "new": _side(new_eff, new_raw, new_folded),
-            "median_ratio": (
-                round(median_ratio, 3) if median_ratio is not None else None
-            ),
-            "verdict": verdict}
+def work_diff(old: dict, new: dict) -> list[dict]:
+    """Per-entry deltas (new - old) of WORK_FIELDS over the entries both
+    ``work`` maps carry.  Largest executor-CPU increase first, entry
+    name breaking ties, so the order is stable."""
+    rows = []
+    for name in sorted(set(old) & set(new)):
+        o, n = old[name], new[name]
+        rows.append({
+            "entry": name,
+            "old": {f: o[f] for f in WORK_FIELDS},
+            "new": {f: n[f] for f in WORK_FIELDS},
+            "delta": {f: round(n[f] - o[f], 3) for f in WORK_FIELDS},
+        })
+    rows.sort(key=lambda r: (-r["delta"]["executor_cpu_s"], r["entry"]))
+    return rows
 
 
-def fold_run_count(prov: dict) -> int:
-    """How many independent bench runs an artifact's figures are a
-    min-fold over: a solo-fold artifact records its constituent runs'
-    provenance blocks in ``runs``; a single stamped raw-passes file is
-    one run.  The fold-symmetry rule (VERDICT r15 item 3, proven in
-    r15: a 4-run-vs-7-run fold manufactured a phantom 1.764× entry
-    that vanished at 7-vs-7) says per-entry min-folds compare equal
-    run counts; main() warns when the sides differ."""
-    runs = prov.get("runs")
-    # an empty runs list is degenerate provenance, not a 0-run fold —
-    # fall back to "one artifact = one run" so it cannot manufacture a
-    # 0-vs-N asymmetry warning (ADVICE r17, same guard as
-    # fold_draw_count's unknown)
-    return len(runs) if isinstance(runs, list) and runs else 1
-
-
-def fold_draw_count(prov: dict) -> int | None:
-    """Total per-entry timing draws an artifact's figures are a min
-    over (ADVICE r16): run count alone misses the stamped-vs-stamped
-    asymmetry — a 3-pass clean artifact and an 8-pass official are
-    both "1 run", yet their min-folds draw unequal samples, the exact
-    phantom-ratio mechanism the r15 rule targets.  A solo fold sums
-    its constituent runs' ``pass_count``; a stamped file reports its
-    own ``pass_count``.  Returns None when the provenance doesn't
-    record enough to know (pre-r10 artifacts, foreign files) — an
-    unknown side never triggers the asymmetry warning."""
-    runs = prov.get("runs")
-    if isinstance(runs, list):
-        if not runs:
-            # an EMPTY runs list is corrupt/degenerate provenance, not
-            # "0 draws" — the vacuous all() below would otherwise report
-            # a confident 0 and let degenerate provenance assert draw
-            # (a)symmetry (ADVICE r17); unknown never triggers the
-            # warning, which is the documented posture
-            return None
-        counts = [
-            r.get("pass_count") for r in runs if isinstance(r, dict)
-        ]
-        if len(counts) == len(runs) and all(
-            isinstance(c, (int, float)) and not isinstance(c, bool)
-            for c in counts
-        ):
-            return int(sum(counts))
-        return None
-    pc = prov.get("pass_count")
-    if isinstance(pc, (int, float)) and not isinstance(pc, bool):
-        return int(pc)
-    return None
+def _signed(v) -> str:
+    return f"{v:+d}" if isinstance(v, int) else f"{v:+.3f}"
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -272,60 +138,16 @@ def main(argv: list[str] | None = None) -> None:
         "--json", action="store_true",
         help="emit the full diff object as one JSON document",
     )
-    ap.add_argument(
-        "--dist-old", nargs="+", metavar="FILE",
-        help="raw-passes artifacts supplying the OLD side's per-pass "
-        "sample distribution (e.g. BENCH_raw_passes_r14*.json); with "
-        "--dist-new, every out-of-band entry gets a distribution-"
-        "overlap triage verdict (the SCALE.md refute-before-code check)",
-    )
-    ap.add_argument(
-        "--dist-new", nargs="+", metavar="FILE",
-        help="raw-passes artifacts supplying the NEW side's samples",
-    )
     args = ap.parse_args(argv)
-    if bool(args.dist_old) != bool(args.dist_new):
-        ap.error("--dist-old and --dist-new must be given together")
-    old_q, old_prov = load_queries(args.old)
-    new_q, new_prov = load_queries(args.new)
+    old_q, old_work, old_prov = load_queries(args.old)
+    new_q, new_work, new_prov = load_queries(args.new)
     d = diff(old_q, new_q, args.band)
-    oc, nc = fold_run_count(old_prov), fold_run_count(new_prov)
-    od, nd = fold_draw_count(old_prov), fold_draw_count(new_prov)
-    # symmetric = equal run counts AND (when both sides record it)
-    # equal total draws — ADVICE r16: a 3-pass clean vs an 8-pass
-    # official are both "1 run" but min over unequal draw counts
-    draws_known = od is not None and nd is not None
-    d["fold_symmetry"] = {
-        "old_runs": oc, "new_runs": nc,
-        "old_draws": od, "new_draws": nd,
-        "equal": oc == nc and (not draws_known or od == nd),
-    }
-    if oc != nc:
-        print(
-            f"WARNING: fold-symmetry: old side folds {oc} run(s), new side "
-            f"folds {nc} — per-entry min under unequal sample counts "
-            f"manufactures phantom out-of-band ratios (SCALE.md §r15); "
-            f"compare equal-run folds, or triage every flagged entry with "
-            f"--dist-old/--dist-new",
-            file=sys.stderr,
-        )
-    elif draws_known and od != nd:
-        print(
-            f"WARNING: fold-symmetry: old side mins over {od} draw(s), new "
-            f"side over {nd} — equal run counts but unequal per-entry "
-            f"sample counts (e.g. a 3-pass clean vs an 8-pass official) "
-            f"still bias the fold (min over fewer draws is high — ADVICE "
-            f"r16); compare equal-pass artifacts, or triage every flagged "
-            f"entry with --dist-old/--dist-new",
-            file=sys.stderr,
-        )
-    if args.dist_old:
-        for r in d["slower_than_band"] + d["faster_than_band"]:
-            r["dist"] = distribution_triage(
-                collect_samples(args.dist_old, r["entry"]),
-                collect_samples(args.dist_new, r["entry"]),
-                shift_band=args.band,
-            )
+    d["work_absent"] = [
+        side for side, w in (("old", old_work), ("new", new_work)) if w is None
+    ]
+    d["work"] = (
+        None if d["work_absent"] else work_diff(old_work, new_work)
+    )
     if args.json:
         d["provenance"] = {"old": old_prov, "new": new_prov}
         json.dump(d, sys.stdout, indent=1)
@@ -354,27 +176,16 @@ def main(argv: list[str] | None = None) -> None:
             flag = "  << faster than band"
         print(f"{r['entry']:42s} {r['old']:9.3f} {r['new']:9.3f} "
               f"x{r['ratio']:<7.3f}{flag}")
-        dist = r.get("dist")
-        if dist:
-            o, n = dist["old"], dist["new"]
-            def _prov(side):
-                # mixed-provenance note (ADVICE r15): show when a
-                # side's figures are folded minima, not raw draws.
-                # With raw draws present the folded figures were
-                # EXCLUDED from the stats — say so explicitly (ADVICE
-                # r16: "(3 raw, 1 folded)" next to n=3 read as a 3+1
-                # composition that participated in the min/median)
-                if side["n_folded"] == 0:
-                    return ""
-                if side["n_raw"] > 0:
-                    return f" ({side['n_folded']} folded excluded)"
-                return f" ({side['n_raw']} raw, {side['n_folded']} folded)"
-            print(f"{'':42s} dist: old n={o['n']}{_prov(o)} "
-                  f"[{o['min']}, {o['max']}] med {o['median']}"
-                  f"  new n={n['n']}{_prov(n)} "
-                  f"[{n['min']}, {n['max']}] med {n['median']}"
-                  f"  med-ratio {dist['median_ratio']}"
-                  f"  -> {dist['verdict']}")
+    if d["work"] is None:
+        print(f"work: absent in {' and '.join(d['work_absent'])} "
+              f"(no per-entry work rows; wall diff only)")
+        return
+    print(f"work deltas (new - old) over {len(d['work'])} common entries:")
+    print(f"{'entry':42s} " + " ".join(f"{f:>20s}" for f in WORK_FIELDS))
+    for r in d["work"]:
+        print(f"{r['entry']:42s} " + " ".join(
+            f"{_signed(r['delta'][f]):>20s}" for f in WORK_FIELDS
+        ))
 
 
 if __name__ == "__main__":

@@ -45,29 +45,9 @@ def _realistic_inputs():
         "peak_rss_delta_mib": 9.5,
         "peak_rss_windowed": True,
         "rg_cache_mib": 10.07,
-        "loadavg_1m": 7.22,
-        "ext_busy_cores": 1.3,
-        "contended": False,
-        # worst realistic shape for the budget test (r11 VERDICT item 1:
-        # k=3 unconditional windows per pass, min-fold, the FINAL line
-        # carries the cross-pass concatenation): 3 passes x (3
-        # unconditional + 1 contended-extra) = 12 samples
-        "serving_retried": True,
-        "windows": [
-            [round(1.2591 + 0.0137 * i, 4), round(9.4 - 0.7 * i, 1)]
-            for i in range(12)
-        ],
-        # r14: the envelope-relative verdict's scalars ride the line
-        # (full bracket windows go to the raw-passes side file)
-        "envelope": {
-            "probe_best_keys_per_sec": 10444.6,
-            "official_over_probe_best": 0.439,
-            "regime_consistent": False,
-            "tolerance": 1.25,
-            "pre_floor_sec": 1.0441,
-            "post_floor_sec": 2.9917,
-            "n_windows": 8,
-        },
+        # the FINAL line carries the cross-pass concatenation of every
+        # window wall: 3 passes x 3 windows = 9 samples
+        "windows": [round(1.2591 + 0.0137 * i, 4) for i in range(9)],
     }
     provenance = {
         "merge": "per-entry min over warm passes in one JVM",
@@ -93,7 +73,7 @@ def test_final_line_fits_driver_capture(bench_mod):
     # hard driver bound with headroom: the capture window is 2,000 chars
     # (every BENCH_r*.json tail is exactly 2,000 chars) and the trailing
     # newline shares it
-    assert bench_mod.FINAL_LINE_MAX_CHARS <= 1990
+    assert bench_mod.FINAL_LINE_MAX_CHARS <= 1899
 
 
 def test_final_line_is_one_json_object(bench_mod):
@@ -114,14 +94,10 @@ def test_final_line_is_one_json_object(bench_mod):
     assert set(parsed["queries"]) == set(merged)
     for name, sec in merged.items():
         assert abs(parsed["queries"][name] - sec) <= 0.005 + 1e-9
-    # serving survives at least in scalar form: headline keys/sec + the
-    # contention verdict (r10 VERDICT item 2) always ride the line; the
-    # full windows/envelope audit lives in the side file's serving_final
+    # serving survives at least in scalar form: headline keys/sec always
+    # rides the line; the full windows audit lives in the side file's
+    # serving_final
     assert parsed["serving"]["keys_per_sec"] == serving["keys_per_sec"]
-    assert parsed["serving"]["contended"] is False
-    # r13 VERDICT item 1: the envelope-relative regime verdict rides the
-    # line in every serving-carrying tier
-    assert parsed["serving"]["regime_consistent"] is False
 
 
 def test_final_line_carries_real_64_entry_suite(bench_mod):
@@ -180,7 +156,6 @@ def test_final_line_real_r18_artifact_keeps_queries_and_serving(bench_mod):
     assert parsed["serving"]["keys_per_sec"] == (
         parsed18["serving"]["keys_per_sec"]
     )
-    assert "contended" in parsed["serving"]
 
 
 def test_slim_serving_levels(bench_mod):
@@ -188,14 +163,9 @@ def test_slim_serving_levels(bench_mod):
     s1 = bench_mod.slim_serving(serving, 1)
     assert s1["keys_per_sec"] == serving["keys_per_sec"]
     assert s1["per_key_p50_ms"] == serving["per_key_p50_ms"]
-    assert s1["contended"] is False and s1["serving_retried"] is True
-    assert s1["regime_consistent"] is False  # hoisted from envelope
-    assert "windows" not in s1 and "envelope" not in s1
+    assert "windows" not in s1
     s2 = bench_mod.slim_serving(serving, 2)
-    assert set(s2) == {"keys_per_sec", "contended", "regime_consistent"}
-    # a null envelope (failed/disabled bracket) simply omits the bit
-    noenv = dict(serving, envelope=None)
-    assert "regime_consistent" not in bench_mod.slim_serving(noenv, 1)
+    assert set(s2) == {"keys_per_sec"}
     assert bench_mod.slim_serving(None, 1) is None
 
 
@@ -341,60 +311,33 @@ def test_write_raw_passes_exhausted_races_degrade(
 # ---- r11 VERDICT item 1: unconditional k-window serving fold ---------
 
 
-def _win(wall, contended=False, ext=0.0):
-    return {"wall": wall, "contended": contended, "ext_busy_cores": ext}
+def _win(wall):
+    return {"wall": wall}
 
 
 def test_fold_draws_k_windows_unconditionally(bench_mod):
-    """The r10 gate retried only on external contention, so JVM
-    self-noise (ext 0.0, contended False) was sampled exactly once per
-    pass and the driver's 3-sample run kept landing in the 5-10k
-    envelope's trough.  The fold must draw k windows even when every
-    window is quiet."""
+    """One window per pass kept landing a 3-pass run's 3-sample min in
+    the 5-10k envelope's trough.  The fold must draw k windows every
+    pass."""
     calls = []
 
     def run_window():
         calls.append(1)
         return _win(1.0 + 0.3 * len(calls))  # quiet, monotonically slower
 
-    windows, kept, retried = bench_mod.fold_serving_windows(run_window)
+    windows, kept = bench_mod.fold_serving_windows(run_window)
     assert len(calls) == bench_mod.SERVING_WINDOWS_PER_PASS == 3
     assert len(windows) == 3
     assert kept is windows[0]  # min wall
-    assert retried is False  # quiet windows never fire the gate
 
 
 def test_fold_min_wall_wins_regardless_of_order(bench_mod):
     seq = [_win(1.4), _win(0.8), _win(1.1)]
-    windows, kept, retried = bench_mod.fold_serving_windows(
+    windows, kept = bench_mod.fold_serving_windows(
         lambda: seq.pop(0), k=3
     )
     assert kept["wall"] == 0.8
     assert [w["wall"] for w in windows] == [1.4, 0.8, 1.1]
-    assert retried is False
-
-
-def test_fold_extra_window_only_when_all_contended(bench_mod):
-    """The external-contention gate survives ON TOP of the unconditional
-    k: one extra draw iff every unconditional window was contended —
-    one quiet window among the k means the envelope was sampled and no
-    extra is spent."""
-    seq = [_win(1.4, True, 9.0), _win(1.5, True, 8.0),
-           _win(1.6, True, 9.5), _win(0.9, False, 0.2)]
-    windows, kept, retried = bench_mod.fold_serving_windows(
-        lambda: seq.pop(0), k=3
-    )
-    assert len(windows) == 4
-    assert kept["wall"] == 0.9
-    assert retried is True  # the gate's extra draw IS the retry signal
-
-    seq2 = [_win(1.4, True, 9.0), _win(1.0, False, 0.0), _win(1.6, True, 9.5)]
-    windows2, kept2, retried2 = bench_mod.fold_serving_windows(
-        lambda: seq2.pop(0), k=3
-    )
-    assert len(windows2) == 3  # a quiet window suppressed the extra
-    assert kept2["wall"] == 1.0
-    assert retried2 is False
 
 
 def test_fold_is_total_for_nonpositive_k(bench_mod):
@@ -402,51 +345,22 @@ def test_fold_is_total_for_nonpositive_k(bench_mod):
     the policy clamps to one draw instead of raising ValueError."""
     for bad_k in (0, -3):
         seq = [_win(1.2)]
-        windows, kept, retried = bench_mod.fold_serving_windows(
+        windows, kept = bench_mod.fold_serving_windows(
             lambda: seq.pop(0), k=bad_k
         )
         assert len(windows) == 1
         assert kept["wall"] == 1.2
-        assert retried is False
-
-
-def test_fold_reports_retry_against_effective_k(bench_mod):
-    """ADVICE r13 item 1: the retry verdict must come from the fold
-    itself, computed against the EFFECTIVE k it used.  Under a clamped
-    k=0 (effective 1) whose single window is contended, the gate draws
-    the extra: 2 windows > effective k 1 ⇒ retried.  The old
-    caller-side derivation (len(windows) > SERVING_WINDOWS_PER_PASS,
-    i.e. 2 > 3) would have misreported False."""
-    seq = [_win(1.5, True, 9.0), _win(1.0, False, 0.0)]
-    windows, kept, retried = bench_mod.fold_serving_windows(
-        lambda: seq.pop(0), k=0
-    )
-    assert len(windows) == 2
-    assert kept["wall"] == 1.0
-    assert retried is True
-    assert len(windows) <= bench_mod.SERVING_WINDOWS_PER_PASS  # the trap
-
-    # non-default k above the module constant: k=5, all quiet — five
-    # windows is NOT a retry even though 5 > 3
-    seq2 = [_win(1.0 + 0.1 * i) for i in range(5)]
-    windows2, _, retried2 = bench_mod.fold_serving_windows(
-        lambda: seq2.pop(0), k=5
-    )
-    assert len(windows2) == 5
-    assert retried2 is False
 
 
 # ---- ADVICE r12 items 1+3: the final line's cross-pass serving fold --
 
 
-def _pass_serving(qps, retried, contended, n_windows):
+def _pass_serving(qps, n_windows):
     """A per-pass serving block with the fields the fold touches."""
     return {
         "keys_per_sec": qps,
         "per_key_p50_ms": 0.8,
-        "contended": contended,
-        "serving_retried": retried,
-        "windows": [[round(8000.0 / qps, 3), 0.0]] * n_windows,
+        "windows": [round(8000.0 / qps, 3)] * n_windows,
     }
 
 
@@ -456,107 +370,43 @@ def test_build_final_serving_concatenates_windows_and_any_folds_retry(
     """main() ships build_final_serving's result verbatim; this pins the
     exact construction sparklessly (ADVICE r12 item 3).  The block's
     scalars come from the best pass; windows is the cross-pass
-    concatenation; serving_retried is any-pass-scoped so a >9-window
-    list can never ride the line with serving_retried=false (ADVICE r12
-    item 1 — the pass that drew the contention extra need not be the
-    best pass)."""
+    concatenation."""
     servings = [
-        _pass_serving(5000.0, retried=True, contended=False, n_windows=4),
-        _pass_serving(9000.0, retried=False, contended=False, n_windows=3),
-        _pass_serving(7000.0, retried=False, contended=False, n_windows=3),
+        _pass_serving(5000.0, n_windows=3),
+        _pass_serving(9000.0, n_windows=3),
+        _pass_serving(7000.0, n_windows=3),
     ]
     final = bench_mod.build_final_serving(servings, best_idx=1)
     # scalars: best pass's block, untouched
     assert final["keys_per_sec"] == 9000.0
-    assert final["contended"] is False
     # windows: every sample drawn this run, in pass order
     assert final["windows"] == (
         servings[0]["windows"] + servings[1]["windows"]
         + servings[2]["windows"]
     )
-    assert len(final["windows"]) == 10
-    # the internally-consistent bit: pass 0 drew the extra, so the
-    # 10-window list must carry serving_retried=true even though the
-    # best (non-retried) pass supplied the scalar block
-    assert final["serving_retried"] is True
+    assert len(final["windows"]) == 9
     # inputs are not mutated (pure fold)
-    assert servings[1]["serving_retried"] is False
     assert len(servings[1]["windows"]) == 3
 
 
 def test_build_final_serving_no_retry_anywhere(bench_mod):
     servings = [
-        _pass_serving(8000.0, retried=False, contended=False, n_windows=3),
-        _pass_serving(8500.0, retried=False, contended=True, n_windows=3),
+        _pass_serving(8000.0, n_windows=3),
+        _pass_serving(8500.0, n_windows=3),
     ]
     final = bench_mod.build_final_serving(servings, best_idx=0)
-    assert final["serving_retried"] is False
     assert len(final["windows"]) == 6
-    assert final["contended"] is False  # best-pass (kept-window) scoped
+    assert final["keys_per_sec"] == 8000.0  # best-pass scoped
 
 
-# ---- r13 VERDICT item 1: envelope-relative serving gate ----------------
-
-
-def _probe_win(wall, ext=0.0):
-    return {"wall": wall, "ext_busy_cores": ext, "contended": False,
-            "loadavg_1m": 2.0, "lats": [], "rss_delta_mib": 0.0,
-            "rss_windowed": True}
-
-
-def test_envelope_block_regime_consistent_within_tolerance(bench_mod):
-    """Official within 1.25x of the session probe's best window ⇒ the
-    draw matched the envelope the session demonstrated — low absolute
-    figures in a degraded regime stop reading as regressions."""
-    pre = [_probe_win(1.10), _probe_win(1.05)]
-    post = [_probe_win(1.30), _probe_win(1.20)]
-    probe_best = 8000 / 1.05  # 7619.0 — best window across BOTH legs
-    # official 10% below the probe best: consistent
-    env = bench_mod.build_envelope_block(pre, post, probe_best * 0.9)
-    assert env["regime_consistent"] is True
-    assert env["probe_best_keys_per_sec"] == round(probe_best, 1)
-    assert env["official_over_probe_best"] == 0.9
-    assert env["pre_floor_sec"] == 1.05
-    assert env["post_floor_sec"] == 1.2
-    assert env["n_windows"] == 4
-    # official 2x below the probe best: the session itself proved the
-    # host could serve faster — investigate as regression
-    env2 = bench_mod.build_envelope_block(pre, post, probe_best * 0.5)
-    assert env2["regime_consistent"] is False
-    # boundary: exactly at tolerance is still consistent
-    env3 = bench_mod.build_envelope_block(pre, post, probe_best / 1.25)
-    assert env3["regime_consistent"] is True
-
-
-def test_envelope_block_official_faster_than_probe_is_consistent(
-    bench_mod,
-):
-    """The official kept window folds over >=9 samples vs the bracket's
-    8 — it may legitimately beat the probe's best."""
-    env = bench_mod.build_envelope_block(
-        [_probe_win(1.2)], [_probe_win(1.3)], 8000 / 1.0
-    )
-    assert env["regime_consistent"] is True
-    assert env["official_over_probe_best"] > 1.0
-
-
-def test_envelope_block_degrades_to_none(bench_mod):
-    """No usable probe windows (probe failed, or disabled via env) ⇒
-    envelope is null on the line — an honest absent gate, never a
-    fabricated verdict."""
-    assert bench_mod.build_envelope_block([], [], 8000.0) is None
-    assert bench_mod.build_envelope_block([], [], None) is None
-    # one-sided bracket still adjudicates, with the missing leg null
-    env = bench_mod.build_envelope_block([_probe_win(1.0)], [], 7000.0)
-    assert env is not None
-    assert env["post_floor_sec"] is None
-    assert env["pre_floor_sec"] == 1.0
+# ---- legacy serving blocks --------------------------------------------
 
 
 def test_final_line_with_null_envelope_parses_and_fits(bench_mod):
-    """A failed/disabled bracket must still parse and stay inside the
-    budget; serving keeps its headline scalars (regime bit absent when
-    the bracket never adjudicated)."""
+    """Serving blocks recorded while the envelope bracket existed carry
+    an ``envelope`` key, null when the bracket was disabled; such a
+    block must still parse and stay inside the budget, with its
+    headline scalars."""
     merged, serving, provenance = _realistic_inputs()
     serving = dict(serving, envelope=None)
     line = bench_mod.build_final_line(
@@ -567,34 +417,6 @@ def test_final_line_with_null_envelope_parses_and_fits(bench_mod):
     assert parsed["serving"]["keys_per_sec"] == serving["keys_per_sec"]
     if "envelope" in parsed["serving"]:  # tier 0 (small suites)
         assert parsed["serving"]["envelope"] is None
-    else:  # slimmed tiers: the unadjudicated bit is absent, not faked
-        assert "regime_consistent" not in parsed["serving"]
-
-
-def test_compact_window_shape(bench_mod):
-    assert bench_mod.compact_window(
-        {"wall": 1.23456, "ext_busy_cores": 2.345}
-    ) == [1.235, 2.3]
-    assert bench_mod.compact_window(
-        {"wall": 1.0, "ext_busy_cores": None}
-    ) == [1.0, None]
-
-
-def test_stamped_artifact_name_probe_prefix(bench_mod, tmp_path):
-    """PROBE artifacts share the round inference and uniquification
-    with the raw-passes chain (VERDICT r13 item 2)."""
-    (tmp_path / "BENCH_r13.json").write_text("{}")
-    assert bench_mod.stamped_artifact_name(str(tmp_path), "PROBE") == (
-        "PROBE_r14.json"
-    )
-    (tmp_path / "PROBE_r14.json").write_text("{}")
-    assert bench_mod.stamped_artifact_name(str(tmp_path), "PROBE") == (
-        "PROBE_r14_2.json"
-    )
-    # the raw-passes wrapper is unchanged by the generalization
-    assert bench_mod.stamped_raw_passes_name(str(tmp_path)) == (
-        "BENCH_raw_passes_r14.json"
-    )
 
 
 def test_build_final_serving_totality_guards(bench_mod):
@@ -603,7 +425,7 @@ def test_build_final_serving_totality_guards(bench_mod):
     never a bare IndexError from deep inside the fold."""
     with pytest.raises(ValueError, match="non-empty"):
         bench_mod.build_final_serving([], best_idx=0)
-    one = [_pass_serving(8000.0, retried=False, contended=False, n_windows=3)]
+    one = [_pass_serving(8000.0, n_windows=3)]
     with pytest.raises(ValueError, match="out of range"):
         bench_mod.build_final_serving(one, best_idx=1)
     with pytest.raises(ValueError, match="out of range"):
@@ -614,145 +436,18 @@ def test_build_final_serving_totality_guards(bench_mod):
     ] == 8000.0
 
 
-# ---- ADVICE r14 + VERDICT r14 item 4 regression pins --------------------
-
-
-def test_parse_envelope_windows_guards_malformed_values(
-    bench_mod, capsys
-):
-    """ADVICE r14: a malformed $SPARK_GRAFT_ENVELOPE_WINDOWS must not
-    break sparkless imports of bench — degrade to the default with a
-    stderr warning, mirroring the gate's best-effort posture."""
-    p = bench_mod.parse_envelope_windows
-    assert p("4") == 4
-    assert p(" 4 ") == 4  # int() tolerates pure whitespace padding
-    assert p("0") == 0
-    assert p("-3") == 0  # negative clamps to bracket-disabled
-    # the shell-typo class: non-numeric degrades to the default, warns
-    assert p("4x") == 4
-    assert p("") == 4
-    assert p(None) == 4
-    assert p("seven", default=2) == 2
-    err = capsys.readouterr().err
-    assert "SPARK_GRAFT_ENVELOPE_WINDOWS" in err
-    assert err.count("WARN") == 4  # one per malformed parse above
-
-
-def test_envelope_block_discard_recorded_but_excluded(bench_mod):
-    """VERDICT r14 item 4: the warmup-discard window's wall is recorded
-    for audit but must never enter the floors or the verdict — a 3.5 s
-    fresh-JVM warmup draw would otherwise brand the whole pre-leg."""
-    pre = [_probe_win(1.10), _probe_win(1.05)]
-    post = [_probe_win(1.20)]
-    discard = _probe_win(3.52)  # the r14 fresh-JVM warmup signature
-    official = 8000 / 1.05  # exactly the probe best
-    env = bench_mod.build_envelope_block(
-        pre, post, official, discard_window=discard
-    )
-    assert env["discard_wall_sec"] == 3.52
-    assert env["pre_floor_sec"] == 1.05   # NOT 3.52
-    assert env["n_windows"] == 3          # discard not counted
-    assert env["probe_best_keys_per_sec"] == round(8000 / 1.05, 1)
-    assert env["regime_consistent"] is True
-    # a discard FASTER than every bracket window must not inflate the
-    # envelope either: excluded means excluded, both directions
-    env2 = bench_mod.build_envelope_block(
-        pre, post, 8000 / 2.0, discard_window=_probe_win(0.20)
-    )
-    assert env2["probe_best_keys_per_sec"] == round(8000 / 1.05, 1)
-    assert env2["discard_wall_sec"] == 0.2
-
-
-def test_envelope_block_discard_absent_or_failed_is_null(bench_mod):
-    """No discard drawn (probe disabled, legacy callers, or the draw
-    itself failed with wall 0) ⇒ discard_wall_sec: null; the rest of
-    the block is unchanged — positional callers keep working."""
-    pre, post = [_probe_win(1.0)], [_probe_win(1.1)]
-    env = bench_mod.build_envelope_block(pre, post, 8000.0)
-    assert env["discard_wall_sec"] is None
-    env2 = bench_mod.build_envelope_block(
-        pre, post, 8000.0, discard_window={"wall": 0.0}
-    )
-    assert env2["discard_wall_sec"] is None
-
-
-def test_envelope_fixture_cleans_work_dir_on_failure(
-    bench_mod, tmp_path, monkeypatch
-):
-    """ADVICE r14: a failed fixture build must remove its own work dir —
-    the caller only learns the path on success, so every failed bracket
-    used to leak an edb_envelope_* dir."""
-    import tempfile as _tf
-
-    made = []
-    real_mkdtemp = _tf.mkdtemp
-
-    def recording_mkdtemp(*a, **kw):
-        kw.setdefault("dir", str(tmp_path))
-        path = real_mkdtemp(*a, **kw)
-        made.append(path)
-        return path
-
-    monkeypatch.setattr(bench_mod.tempfile, "mkdtemp", recording_mkdtemp)
-
-    class _BoomRead:
-        def parquet(self, path):
-            raise RuntimeError("simulated scan failure")
-
-    class _BoomSpark:
-        read = _BoomRead()
-
-    with pytest.raises(RuntimeError, match="simulated scan failure"):
-        bench_mod.build_envelope_fixture(_BoomSpark(), sf_dir=str(tmp_path))
-    assert len(made) == 1
-    assert not os.path.exists(made[0])  # cleaned before re-raise
-
-
-def test_final_line_budget_holds_with_discard_field(bench_mod):
-    """The envelope block grew a field (discard_wall_sec); the line must
-    still fit the driver's 2,000-char capture budget."""
-    merged, serving, provenance = _realistic_inputs()
-    serving = dict(serving)
-    serving["envelope"] = bench_mod.build_envelope_block(
-        [_probe_win(1.234), _probe_win(2.345)],
-        [_probe_win(3.456), _probe_win(1.111)],
-        serving["keys_per_sec"],
-        discard_window=_probe_win(3.519),
-    )
-    line = bench_mod.build_final_line(
-        66.123, merged, serving, 0.1, 3, provenance
-    )
-    assert len(line) <= bench_mod.FINAL_LINE_MAX_CHARS
-    parsed = json.loads(line)
-    srv = parsed["serving"]
-    if "envelope" in srv:  # tier 0
-        assert srv["envelope"]["discard_wall_sec"] == 3.519
-    else:  # slimmed tier: the verdict bit survives, details in side file
-        assert srv["regime_consistent"] == (
-            serving["envelope"]["regime_consistent"]
-        )
-
-
-def test_draw_bracket_leg_salvages_partial_windows(bench_mod):
-    """ADVICE r15 (bench.py env_pre): the old list comprehension
-    discarded k-1 already-drawn windows when window k raised, unlike
-    envelope_probe's partial-artifact salvage.  draw_bracket_leg
-    appends one window at a time so the caller's list keeps every
-    completed window when the leg dies mid-draw."""
-    drawn = []
-    calls = {"n": 0}
-
-    def flaky_draw():
-        calls["n"] += 1
-        if calls["n"] == 3:
-            raise RuntimeError("host regime change mid-bracket")
-        return {"window": calls["n"]}
-
-    with pytest.raises(RuntimeError):
-        bench_mod.draw_bracket_leg(flaky_draw, 4, drawn)
-    assert drawn == [{"window": 1}, {"window": 2}]  # salvaged, not []
-
-    # the healthy path draws exactly `count` windows in order
-    ok = []
-    bench_mod.draw_bracket_leg(lambda: {"w": len(ok)}, 3, ok)
-    assert ok == [{"w": 0}, {"w": 1}, {"w": 2}]
+def test_min_merge_work_is_per_field_per_entry(bench_mod):
+    """The side file's ``work`` map merges passes the way ``queries``
+    does: each field of each entry takes its own minimum, and an entry
+    missing from a pass is merged over the passes that ran it."""
+    passes = [
+        {"a": {"stages": 3, "executor_cpu_s": 2.0},
+         "b": {"stages": 1, "executor_cpu_s": 0.5}},
+        {"a": {"stages": 2, "executor_cpu_s": 2.5}},
+        {"a": {"stages": 4, "executor_cpu_s": 1.5},
+         "b": {"stages": 1, "executor_cpu_s": 0.25}},
+    ]
+    assert bench_mod.min_merge_work(passes) == {
+        "a": {"stages": 2, "executor_cpu_s": 1.5},
+        "b": {"stages": 1, "executor_cpu_s": 0.25},
+    }

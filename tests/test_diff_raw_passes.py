@@ -103,345 +103,10 @@ def test_main_json_output_parses(tool, tmp_path, capsys):
     assert d["provenance"]["old"]["pass_count"] == 1
 
 
-# ---- r15: --dist distribution triage (the refute-before-code check) ----
-
-
-def _raw_passes_file(tmp_path, name, per_pass):
-    """A minimal stamped raw-passes artifact: per_pass is a list of
-    {entry: sec} dicts (one per pass)."""
-    merged = {
-        k: min(p[k] for p in per_pass if k in p)
-        for k in {k for p in per_pass for k in p}
-    }
-    f = tmp_path / name
-    f.write_text(json.dumps(
-        {"queries": merged, "raw_passes": per_pass, "provenance": {}}
-    ))
-    return str(f)
-
-
-def test_collect_samples_reads_every_pass_and_folded_artifacts(
-    tool, tmp_path
-):
-    a = _raw_passes_file(tmp_path, "a.json",
-                         [{"e": 1.0, "x": 9.0}, {"e": 2.0}])
-    b = _raw_passes_file(tmp_path, "b.json", [{"e": 3.0}])
-    # a folded artifact (no raw_passes) contributes its merged figure,
-    # tagged as folded (ADVICE r15: min-merged figures are each a
-    # best-of-runs and must not masquerade as raw draws)
-    folded = tmp_path / "fold.json"
-    folded.write_text(json.dumps({"queries": {"e": 0.5}}))
-    got = tool.collect_samples([a, b, str(folded)], "e")
-    assert got == {"raw": [1.0, 2.0, 3.0], "folded": [0.5]}
-    assert tool.collect_samples([a], "missing") == {"raw": [], "folded": []}
-
-
-def test_collect_samples_raw_passes_file_falls_back_to_queries(
-    tool, tmp_path
-):
-    """ADVICE r15: the old elif meant a file WITH raw_passes never fell
-    back to its queries map for an entry absent from every pass — the
-    figure was silently dropped.  Now it contributes as folded."""
-    f = tmp_path / "partial.json"
-    f.write_text(json.dumps({
-        "queries": {"e": 0.7, "other": 1.0},
-        "raw_passes": [{"other": 1.0}, {"other": 1.2}],
-    }))
-    assert tool.collect_samples([str(f)], "e") == {
-        "raw": [], "folded": [0.7]}
-    # and entries present in the passes still come through as raw
-    assert tool.collect_samples([str(f)], "other") == {
-        "raw": [1.0, 1.2], "folded": []}
-
-
-def test_distribution_triage_verdicts(tool):
-    """Overlapping ranges refute a fold-ratio regression claim; only a
-    disjoint-slower distribution is structural evidence.  The r15
-    worked example: old min best-of-21 spanning 1.48-7.32, new 12
-    draws spanning 2.62-8.67 -> overlapping, refuted."""
-    t = tool.distribution_triage(
-        [1.484, 7.324, 3.1], [2.618, 8.672, 4.4]
-    )
-    assert t["verdict"] == "overlapping"
-    assert t["old"] == {"n": 3, "n_raw": 3, "n_folded": 0,
-                        "min": 1.484, "max": 7.324, "median": 3.1}
-    assert t["new"] == {"n": 3, "n_raw": 3, "n_folded": 0,
-                        "min": 2.618, "max": 8.672, "median": 4.4}
-    assert t["median_ratio"] == round(4.4 / 3.1, 3)
-    # every new draw slower than every old draw: structural signature
-    assert tool.distribution_triage([1.0, 1.2], [1.3, 2.0])[
-        "verdict"] == "disjoint-slower"
-    assert tool.distribution_triage([1.3, 2.0], [1.0, 1.2])[
-        "verdict"] == "disjoint-faster"
-    # boundary: a shared endpoint still overlaps (no strict-inequality
-    # false alarm on equal draws; medians 1.5 vs 2.05 stay in band)
-    assert tool.distribution_triage([1.0, 2.0], [2.0, 2.1])[
-        "verdict"] == "overlapping"
-    # a shared endpoint whose medians DID cross the band escalates
-    assert tool.distribution_triage([1.0, 2.0], [2.0, 3.0])[
-        "verdict"] == "overlapping-shifted"
-    # a side with no samples never fabricates a verdict
-    assert tool.distribution_triage([], [1.0])["verdict"] == "insufficient"
-    assert tool.distribution_triage([1.0], [])["verdict"] == "insufficient"
-
-
-def test_distribution_triage_median_shift_flags_outlier_masked_drift(tool):
-    """ADVICE r15 scenario: a single slow outlier on the old side
-    forces range overlap, but the bulk of the new distribution shifted
-    clearly slower — the pure-range check would auto-refute; the
-    median secondary signal flags it for eyes instead."""
-    old = [1.0, 1.05, 1.1, 0.95, 9.0]   # outlier 9.0 stretches the range
-    new = [4.0, 4.2, 3.9, 4.1, 4.3]     # bulk ~4x slower, inside [0.95, 9.0]
-    t = tool.distribution_triage(old, new)
-    assert t["verdict"] == "overlapping-shifted"
-    assert t["median_ratio"] == round(4.1 / 1.05, 3)
-    # the mirror direction (bulk much faster) is flagged too
-    assert tool.distribution_triage(new, old)[
-        "verdict"] == "overlapping-shifted"
-    # a median shift inside the band stays a plain overlap (refuted)
-    assert tool.distribution_triage(
-        [1.0, 1.2, 9.0], [1.3, 1.4, 1.5])["verdict"] == "overlapping"
-    # and the threshold is the caller's band, not a constant
-    assert tool.distribution_triage(
-        old, new, shift_band=5.0)["verdict"] == "overlapping"
-
-
-def test_distribution_triage_folded_figures_never_dilute_raw_draws(tool):
-    """ADVICE r15: folded min-merged figures are each a best-of-runs;
-    when a side has raw draws, folded figures are excluded from its
-    distribution (they'd bias the min downward) but still reported in
-    the provenance counts.  A side with ONLY folded figures uses them
-    rather than fabricating 'insufficient'."""
-    old = {"raw": [2.0, 2.2, 2.4], "folded": [0.5]}   # 0.5 must not widen
-    new = {"raw": [3.0, 3.1], "folded": []}
-    t = tool.distribution_triage(old, new)
-    assert t["verdict"] == "disjoint-slower"          # not masked by 0.5
-    assert t["old"]["n"] == 3 and t["old"]["n_folded"] == 1
-    assert t["old"]["min"] == 2.0
-    # folded-only side still gets a verdict, with honest counts
-    t2 = tool.distribution_triage({"raw": [], "folded": [1.0, 1.1]},
-                                  {"raw": [1.05], "folded": []})
-    assert t2["verdict"] == "overlapping"
-    assert t2["old"] == {"n": 2, "n_raw": 0, "n_folded": 2,
-                         "min": 1.0, "max": 1.1, "median": 1.05}
-
-
-def test_main_dist_mode_annotates_out_of_band_rows(tool, tmp_path, capsys):
-    old = _raw_passes_file(tmp_path, "old.json",
-                           [{"hot": 1.0, "calm": 1.0}, {"hot": 6.0}])
-    new = _raw_passes_file(tmp_path, "new.json",
-                           [{"hot": 2.0, "calm": 1.05}, {"hot": 5.0}])
-    tool.main([old, new, "--band", "1.5",
-               "--dist-old", old, "--dist-new", new])
-    out = capsys.readouterr().out
-    # hot: fold 1.0 -> 2.0 = x2.0, out of band; samples overlap
-    assert "<< slower than band" in out
-    assert ("dist: old n=2 [1.0, 6.0] med 3.5"
-            "  new n=2 [2.0, 5.0] med 3.5"
-            "  med-ratio 1.0  -> overlapping") in out
-    # in-band rows carry no dist line
-    assert out.count("dist:") == 1
-
-
-def test_main_dist_requires_both_sides(tool, tmp_path, capsys):
-    old = _raw_passes_file(tmp_path, "o2.json", [{"e": 1.0}])
-    new = _raw_passes_file(tmp_path, "n2.json", [{"e": 1.0}])
-    with pytest.raises(SystemExit):
-        tool.main([old, new, "--dist-old", old])
-    assert "together" in capsys.readouterr().err
-
-
-def test_main_json_output_includes_dist(tool, tmp_path, capsys):
-    old = _raw_passes_file(tmp_path, "o3.json", [{"e": 1.0}])
-    new = _raw_passes_file(tmp_path, "n3.json", [{"e": 9.0}])
-    tool.main([old, new, "--json",
-               "--dist-old", old, "--dist-new", new])
-    d = json.loads(capsys.readouterr().out)
-    assert d["slower_than_band"][0]["dist"]["verdict"] == "disjoint-slower"
-
-
-def test_main_dist_line_notes_folded_provenance(tool, tmp_path, capsys):
-    """A dist side fed only folded min-merged figures renders its
-    provenance split on the text line (ADVICE r15: never present a
-    best-of-runs figure as a raw draw)."""
-    old = _raw_passes_file(tmp_path, "o4.json", [{"e": 1.0}])
-    new = _raw_passes_file(tmp_path, "n4.json", [{"e": 9.0}])
-    folded = tmp_path / "f4.json"
-    folded.write_text(json.dumps({"queries": {"e": 8.5}}))
-    tool.main([old, new, "--dist-old", old, "--dist-new", str(folded)])
-    out = capsys.readouterr().out
-    assert "new n=1 (0 raw, 1 folded) [8.5, 8.5]" in out
-
-
-# ---- r16: the fold-symmetry rule (VERDICT r15 item 3) ----
-
-
-def test_fold_run_count(tool):
-    """A solo fold records its constituent runs' provenance blocks in
-    ``runs``; a single stamped raw-passes artifact is one run."""
-    assert tool.fold_run_count({"runs": [{}, {}, {}]}) == 3
-    assert tool.fold_run_count({"pass_count": 3}) == 1
-    assert tool.fold_run_count({}) == 1
-    # non-list runs (corrupt/foreign provenance) counts as one run
-    assert tool.fold_run_count({"runs": "seven"}) == 1
-
-
-def _fold_file(tmp_path, name, queries, n_runs):
-    f = tmp_path / name
-    f.write_text(json.dumps({
-        "queries": queries,
-        "provenance": {"merge": f"per-entry min over {n_runs} solo runs",
-                       "runs": [{"pass_count": 3}] * n_runs},
-    }))
-    return str(f)
-
-
-def test_main_warns_on_unequal_fold_run_counts(tool, tmp_path, capsys):
-    """VERDICT r15 item 3, proven in-round: a 4-run-vs-7-run fold
-    manufactured a phantom 1.764x out-of-band entry that vanished at
-    7-vs-7.  Comparing folds over unequal run counts now warns."""
-    old = _fold_file(tmp_path, "fold4.json", {"e": 1.0}, 4)
-    new = _fold_file(tmp_path, "fold7.json", {"e": 1.1}, 7)
-    tool.main([old, new])
-    cap = capsys.readouterr()
-    assert "fold-symmetry" in cap.err
-    assert "4 run(s)" in cap.err and "7" in cap.err
-    # the structured verdict also rides the --json document
-    tool.main([old, new, "--json"])
-    d = json.loads(capsys.readouterr().out)
-    assert d["fold_symmetry"] == {"old_runs": 4, "new_runs": 7,
-                                  "old_draws": 12, "new_draws": 21,
-                                  "equal": False}
-
-
-def test_main_no_fold_warning_on_symmetric_comparison(
-    tool, tmp_path, capsys
-):
-    """Equal run counts — fold-to-fold 7v7, or stamped-to-stamped 1v1
-    (a lone raw-passes artifact is one run) — stay silent."""
-    old7 = _fold_file(tmp_path, "o7.json", {"e": 1.0}, 7)
-    new7 = _fold_file(tmp_path, "n7.json", {"e": 1.1}, 7)
-    tool.main([old7, new7])
-    assert "fold-symmetry" not in capsys.readouterr().err
-    stamped_o = _raw_passes_file(tmp_path, "so.json", [{"e": 1.0}])
-    stamped_n = _raw_passes_file(tmp_path, "sn.json", [{"e": 1.2}])
-    tool.main([stamped_o, stamped_n, "--json"])
-    cap = capsys.readouterr()
-    d = json.loads(cap.out)
-    assert d["fold_symmetry"]["equal"] is True
-    assert "fold-symmetry" not in cap.err
-
-
-# ---- r17 (ADVICE r16): draw-count symmetry, unrounded shift band,
-# ---- folded-excluded rendering ----
-
-
-def test_fold_draw_count(tool):
-    """ADVICE r16 item 1: the symmetry measure must see TOTAL draws,
-    not just run count — a solo fold sums its runs' pass_count, a
-    stamped artifact reports its own, and unknown provenance returns
-    None (never a fabricated count)."""
-    assert tool.fold_draw_count(
-        {"runs": [{"pass_count": 3}] * 7}) == 21
-    assert tool.fold_draw_count({"pass_count": 8}) == 8
-    assert tool.fold_draw_count({"pass_count": 3}) == 3
-    # unknown: no pass_count recorded, or a run block missing it
-    assert tool.fold_draw_count({}) is None
-    assert tool.fold_draw_count({"runs": [{"pass_count": 3}, {}]}) is None
-    assert tool.fold_draw_count({"runs": [{"pass_count": 3}, "x"]}) is None
-    # corrupt/foreign values never count (bools are ints in Python)
-    assert tool.fold_draw_count({"pass_count": True}) is None
-    assert tool.fold_draw_count({"pass_count": "8"}) is None
-
-
-def _stamped_with_passes(tmp_path, name, sec, pass_count):
-    f = tmp_path / name
-    f.write_text(json.dumps({
-        "queries": {"e": sec},
-        "raw_passes": [{"e": sec}] * pass_count,
-        "provenance": {"pass_count": pass_count},
-    }))
-    return str(f)
-
-
-def test_main_warns_on_stamped_unequal_pass_counts(tool, tmp_path, capsys):
-    """ADVICE r16 item 1, the exact scenario: a 3-pass clean artifact
-    vs an 8-pass official are both one run, yet their per-entry mins
-    draw unequal samples — fold_symmetry must report unequal and warn."""
-    clean = _stamped_with_passes(tmp_path, "clean3.json", 1.0, 3)
-    official = _stamped_with_passes(tmp_path, "off8.json", 1.1, 8)
-    tool.main([clean, official])
-    cap = capsys.readouterr()
-    assert "fold-symmetry" in cap.err
-    assert "3 draw(s)" in cap.err and "8" in cap.err
-    tool.main([clean, official, "--json"])
-    d = json.loads(capsys.readouterr().out)
-    assert d["fold_symmetry"] == {"old_runs": 1, "new_runs": 1,
-                                  "old_draws": 3, "new_draws": 8,
-                                  "equal": False}
-    # equal pass counts stay silent and symmetric
-    official2 = _stamped_with_passes(tmp_path, "off8b.json", 1.2, 8)
-    tool.main([official, official2, "--json"])
-    cap = capsys.readouterr()
-    assert json.loads(cap.out)["fold_symmetry"]["equal"] is True
-    assert "fold-symmetry" not in cap.err
-    # one side's draw count unknown (bare provenance): no warning —
-    # the tool never manufactures asymmetry from missing provenance
-    bare = _raw_passes_file(tmp_path, "bare.json", [{"e": 1.0}])
-    tool.main([bare, official, "--json"])
-    cap = capsys.readouterr()
-    d = json.loads(cap.out)
-    assert d["fold_symmetry"]["old_draws"] is None
-    assert d["fold_symmetry"]["equal"] is True
-    assert "fold-symmetry" not in cap.err
-
-
-def test_distribution_triage_shift_band_compares_unrounded(tool):
-    """ADVICE r16 item 2: a true median ratio just past the band
-    (1.5004, or 0.66659 on the fast side) must escalate to
-    overlapping-shifted even though it ROUNDS to the 3-decimal band
-    edge; rounding is display-only."""
-    # slow side: med-ratio 1.5004 -> rounds to 1.5, must still escalate
-    t = tool.distribution_triage(
-        [1.0, 1.0, 2.0], [1.5004, 1.5004, 1.9], shift_band=1.5)
-    assert t["verdict"] == "overlapping-shifted"
-    assert t["median_ratio"] == 1.5    # display rounding unchanged
-    # fast side: med-ratio 0.66659 < 1/1.5 but rounds to 0.667 (> band
-    # edge 0.6667 at 3 decimals) — the rounded compare missed it
-    t2 = tool.distribution_triage(
-        [2.0, 3.0, 9.0], [1.99977, 1.99977, 2.5], shift_band=1.5)
-    assert t2["verdict"] == "overlapping-shifted"
-    assert t2["median_ratio"] == 0.667
-    # exactly-at-band stays a plain overlap (band is exclusive)
-    t3 = tool.distribution_triage(
-        [1.0, 1.0, 2.0], [1.5, 1.5, 1.9], shift_band=1.5)
-    assert t3["verdict"] == "overlapping"
-
-
-def test_main_dist_line_renders_folded_excluded(tool, tmp_path, capsys):
-    """ADVICE r16 item 3: a side with raw draws plus an excluded
-    folded figure must not render '(3 raw, 1 folded)' next to n=3 —
-    that reads as a 3+1 composition that participated in the stats.
-    Say '(1 folded excluded)'; folded-only sides keep the old form."""
-    old = _raw_passes_file(tmp_path, "o5.json", [{"e": 1.0}])
-    new = _raw_passes_file(
-        tmp_path, "n5.json", [{"e": 9.0}, {"e": 9.1}, {"e": 9.2}])
-    folded = tmp_path / "f5.json"
-    folded.write_text(json.dumps({"queries": {"e": 8.5}}))
-    tool.main([old, new, "--dist-old", old,
-               "--dist-new", new, str(folded)])
-    out = capsys.readouterr().out
-    assert "new n=3 (1 folded excluded) [9.0, 9.2]" in out
-    assert "3 raw" not in out
-    # folded-only side: unchanged rendering (test above pins it too)
-    tool.main([old, new, "--dist-old", old, "--dist-new", str(folded)])
-    assert "new n=1 (0 raw, 1 folded) [8.5, 8.5]" in capsys.readouterr().out
-
-
 def test_diff_band_compares_unrounded_ratio(tool):
     """ADVICE r17: a true ratio of 1.5004 rounds to 1.500 for display,
     but the band compare must use the unrounded value — the rounded
-    form silently escaped slower_than_band (and therefore the triage)."""
+    form silently escaped slower_than_band."""
     old = {"a": 10000.0, "b": 10000.0}
     new = {"a": 15004.0, "b": 14996.0}  # ratios 1.5004 / 1.4996
     d = tool.diff(old, new, band=1.5)
@@ -454,10 +119,84 @@ def test_diff_band_compares_unrounded_ratio(tool):
     assert [r["entry"] for r in d2["faster_than_band"]] == ["a"]
 
 
-def test_fold_counts_treat_empty_runs_as_unknown(tool):
-    """ADVICE r17: an EMPTY runs list is corrupt/degenerate provenance —
-    fold_draw_count must report unknown (None, never a confident 0) and
-    fold_run_count must fall back to one-artifact-one-run, so degenerate
-    provenance can neither assert nor deny draw symmetry."""
-    assert tool.fold_draw_count({"runs": []}) is None
-    assert tool.fold_run_count({"runs": []}) == 1
+
+
+# ---- per-entry work deltas (bench.py's work rows) ----
+
+
+def _work_row(stages, tasks, cpu, shuffle, spill):
+    return {"stages": stages, "tasks": tasks, "executor_cpu_s": cpu,
+            "executor_run_s": cpu * 2, "shuffle_write_bytes": shuffle,
+            "spill_bytes": spill, "wall_s": 1.0, "driver_cpu_s": 0.1,
+            "jvm_cpu_s": cpu}
+
+
+def _work_file(tmp_path, name, work):
+    f = tmp_path / name
+    f.write_text(json.dumps({
+        "queries": {k: 1.0 for k in work},
+        "work": work,
+        "provenance": {"pass_count": 3},
+    }))
+    return str(f)
+
+
+def test_work_deltas_per_entry_in_stable_order(tool, tmp_path, capsys):
+    old = _work_file(tmp_path, "old.json", {
+        "build": _work_row(4, 40, 2.0, 1000, 0),
+        "probe": _work_row(2, 8, 0.5, 0, 0),
+        "scan": _work_row(1, 4, 0.25, 0, 0),
+        "gone": _work_row(1, 1, 0.1, 0, 0),
+    })
+    new = _work_file(tmp_path, "new.json", {
+        "build": _work_row(3, 32, 1.5, 600, 0),
+        "probe": _work_row(2, 8, 0.75, 0, 4096),
+        "scan": _work_row(1, 4, 0.25, 0, 0),
+    })
+    tool.main([old, new, "--json"])
+    d = json.loads(capsys.readouterr().out)
+    assert d["work_absent"] == []
+    # largest executor-CPU increase first; equal deltas by name
+    assert [r["entry"] for r in d["work"]] == ["probe", "scan", "build"]
+    by_name = {r["entry"]: r for r in d["work"]}
+    assert by_name["build"]["delta"] == {
+        "stages": -1, "tasks": -8, "executor_cpu_s": -0.5,
+        "shuffle_write_bytes": -400, "spill_bytes": 0,
+    }
+    assert by_name["probe"]["delta"]["spill_bytes"] == 4096
+    assert by_name["probe"]["old"]["executor_cpu_s"] == 0.5
+    assert by_name["probe"]["new"]["executor_cpu_s"] == 0.75
+    # the same rows, in the same order, in the text report
+    tool.main([old, new])
+    out = capsys.readouterr().out
+    assert "work deltas (new - old) over 3 common entries:" in out
+    lines = out.splitlines()
+    header = lines.index(next(l for l in lines if l.startswith("entry ")))
+    for field in tool.WORK_FIELDS:
+        assert field in lines[header]
+    rows = lines[header + 1:]
+    assert [r.split()[0] for r in rows] == ["probe", "scan", "build"]
+    assert rows[2].split()[1:] == ["-1", "-8", "-0.500", "-400", "+0"]
+
+
+def test_file_without_work_still_diffs_wall(tool, tmp_path, capsys):
+    """A raw-passes file written before bench.py recorded work (the
+    committed r20 artifact) still diffs wall times; the report says
+    work is absent instead of raising."""
+    here = os.path.join(os.path.dirname(__file__), "..")
+    legacy = os.path.join(here, "BENCH_raw_passes_r20.json")
+    if not os.path.exists(legacy):
+        pytest.skip("r20 raw-passes artifact not present")
+    with open(legacy) as fh:
+        names = list(json.load(fh)["queries"])
+    new = _work_file(tmp_path, "new.json",
+                     {n: _work_row(1, 1, 0.1, 0, 0) for n in names})
+    tool.main([legacy, new])
+    out = capsys.readouterr().out
+    assert f"common entries: {len(names)}" in out
+    assert "work: absent in old (no per-entry work rows; wall diff only)" in out
+    tool.main([legacy, legacy, "--json"])
+    d = json.loads(capsys.readouterr().out)
+    assert d["work"] is None
+    assert d["work_absent"] == ["old", "new"]
+    assert d["common_entries"] == len(names)
