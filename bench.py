@@ -381,13 +381,10 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict, dict]:
 
     # miss-heavy serving with/without the Bloom sidecar (bloom.py): the
     # misses are IN-RANGE (linenumber 8 never exists but sorts between
-    # real keys), so the bound index cannot exclude them (the
-    # reference's cheap B-tree miss, JavaBerkDB.java:70-82). Since the
-    # decoded-group cache (r8) absorbs first-touch miss decodes at this
-    # fixture scale on BOTH domains, the two entries are expected ~equal
-    # here — the sidecar's structural win lives in the at-budget regime
-    # and is measured in BENCH_scale.json's bloom_miss block, where the
-    # domain outgrows the cache. Fixture build untimed.
+    # real keys), so the batch bounds cannot exclude them (the
+    # reference's cheap B-tree miss, JavaBerkDB.java:70-82): the plain
+    # domain reads a batch per miss, the Bloom domain (almost) none.
+    # Fixture build untimed.
     li_kv_b = lineitem.select(
         F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"))
         .cast("binary").alias("key"),
@@ -402,8 +399,8 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict, dict]:
         f"{k.split(b'-')[0].decode()}-8".encode() for k in li_keys
     })
     # warm BOTH domains with a full untimed miss pass: the plain domain
-    # enters this entry cache-warm from the earlier hit entries, so
-    # without this the bloom entry times 32 first-touch group fills
+    # enters this entry with its local copies made by the earlier hit
+    # entries, so without this the bloom entry times its conversions
     # against steady-state lookups — an asymmetry, not a comparison
     bdom.local_multi_get(miss_keys)
     dom.local_multi_get(miss_keys)
@@ -417,7 +414,7 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict, dict]:
     # concurrent serving throughput (VERDICT r4 item 3): the reference's
     # daemon serves from 64 Thrift worker threads (common/thrift.clj:
     # 111-118); drive 8 threads of multi_get batches through ONE Domain
-    # handle — exercises the _pq_cache under concurrency. The recorded
+    # handle — exercises the local copies under concurrency. The recorded
     # value is wall seconds for 8x10 batches of 100 keys (8000 key
     # lookups); bench JSON stays one-number-per-entry, qps = 8000/value.
     # k windows, min-fold — policy and rationale live on
@@ -449,27 +446,23 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict, dict]:
         # false = clear_refs unavailable: the delta degrades to the
         # lifetime-watermark semantics and can under-report
         "peak_rss_windowed": kept["rss_windowed"],
-        # resident decoded-group cache after the run (r8: the hot-probe
-        # memory tier — serving figures above are cache-warm by design,
-        # the repeat-batch workload is what the cache exists for)
-        "rg_cache_mib": round(dom._rg_cache_nbytes / 2**20, 2),
+        # disk the handle's local Arrow copies of the shard files take
+        "local_mib": round(dom.serving_stats()["local_bytes"] / 2**20, 2),
         # audit trail for the kept-min: every window's wall, discarded
         # ones included; main() concatenates the per-pass lists so the
         # FINAL line carries all >=9 samples
         "windows": [round(w["wall"], 3) for w in windows],
     }
 
-    # the same workload with the decoded-group cache DISABLED (r8): the
-    # honest cold-path figure — at 100 TB a uniform-random probe stream
-    # misses the cache and pays exactly this path, so both numbers stay
-    # on the record (PLANS.md r8 serving section)
+    # the same workload on a second, fresh handle whose local copies the
+    # untimed probe below makes. The name dates from the removed
+    # decoded-group cache; the entry now times the warm entry's probe
+    # path on a handle that has served nothing else (one window; a
+    # contrast, not a headline)
     from elephantdb_spark.engine import Domain as _Domain
 
     cold_dom = _Domain(spark, eng.domain_root("lineitem_kv"))
-    cold_dom._rg_cache_budget = 0
-    cold_dom.local_multi_get([b"warm"])  # open handles untimed
-    # same harness as the warm entry, one window (this entry exists as
-    # the warm entry's structural contrast, not a headline)
+    cold_dom.local_multi_get(li_keys)  # make the local copies untimed
     rec.record_window(
         "local_multiget_concurrent_8t_nocache",
         serving_window(cold_dom, li_keys, rec.pid),

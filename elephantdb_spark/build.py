@@ -36,7 +36,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from elephantdb_spark.engine import serving_cache_budget
 from elephantdb_spark.registry import resolve_format, resolve_indexer, resolve_scheme
 from elephantdb_spark.sharding import with_slot_column
 from elephantdb_spark.spec import DomainSpec
@@ -54,34 +53,28 @@ def _resolve_indexer_arg(indexer: Indexer | str | None) -> Indexer | None:
 
 
 #: Default Parquet row-group byte target for domain shard files. Row groups
-#: are the probe granularity: `local_multi_get` prunes row groups via the
-#: cached (min,max) bound index, but WITHIN a row group it must decode from
-#: the group's start, so per-probe cost is O(row-group rows). Spark's
-#: writer default (128 MB) makes a small shard ONE monolithic group whose
-#: decode cost grows with the domain — the shape the r7 10x serving
-#: re-measure caught (fixed workload degraded 3.6x when the domain grew
-#: 10x). Capping the group at 16 MiB bounds per-probe work independent of
-#: shard size — the serving analogue of the reference's page-granular
-#: B-tree descent (JavaBerkDB.java:70-82) — while staying large enough
-#: that scan throughput and footer size are unaffected at 100 TB
-#: (a 1 GB shard carries 64 groups). Override per domain via
+#: are the unit of Spark scans and of bulk_join's sub-shard slices (cut at
+#: row-group key bounds), and the serving path converts a shard file to its
+#: local Arrow copy one row group at a time (engine.py
+#: ``convert_shard_file``). Spark's writer default (128 MB) makes a small
+#: shard ONE monolithic group, which leaves bulk_join nothing to slice;
+#: 16 MiB keeps footer size and scan throughput unaffected at 100 TB (a
+#: 1 GB shard carries 64 groups). Override per domain via
 #: ``persistence_opts={"parquet.block.size": ...}``.
 SERVING_ROW_GROUP_BYTES = 16 << 20
 
-#: Ceiling on a ``parquet.block.size`` override. The serving probe decodes
-#: each candidate row group whole (engine.py ``local_multi_get``), so this
-#: bounds its transient memory per probing thread. Checked once, when a new
-#: domain's spec is persisted (:func:`check_new_spec`); a domain whose
-#: spec predates the ceiling keeps its layout through updates and
-#: compaction.
+#: Ceiling on a ``parquet.block.size`` override. Converting a shard file
+#: to its local serving copy decodes one row group at a time, and
+#: bulk_join's tasks read whole groups, so this bounds their transient
+#: memory per thread. Checked once, when a new domain's spec is persisted
+#: (:func:`check_new_spec`); a domain whose spec predates the ceiling
+#: keeps its layout through updates and compaction.
 MAX_ROW_GROUP_BYTES = 32 << 20
 
 
 def check_new_spec(spec: DomainSpec) -> None:
-    """Raise ValueError when a new spec's serving options are out of
-    range: a parquet ``parquet.block.size`` above MAX_ROW_GROUP_BYTES, or
-    a ``serving_cache_bytes`` that is not an integer ≥ 0."""
-    serving_cache_budget(spec)
+    """Raise ValueError when a new parquet spec's ``parquet.block.size``
+    is above MAX_ROW_GROUP_BYTES."""
     if spec.persistence_format != "parquet":
         return
     block = int(
@@ -92,8 +85,8 @@ def check_new_spec(spec: DomainSpec) -> None:
     if block > MAX_ROW_GROUP_BYTES:
         raise ValueError(
             f"parquet.block.size={block} exceeds MAX_ROW_GROUP_BYTES="
-            f"{MAX_ROW_GROUP_BYTES}: the serving probe decodes row groups "
-            "whole"
+            f"{MAX_ROW_GROUP_BYTES}: serving copies and bulk_join decode "
+            "row groups whole"
         )
 
 

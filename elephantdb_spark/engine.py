@@ -30,10 +30,13 @@ reference's B-tree probes.
 from __future__ import annotations
 
 import bisect
+import itertools
 import os
-import sys
+import shutil
+import tempfile
 import threading
 import warnings
+import weakref
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,88 +47,91 @@ from elephantdb_spark.registry import resolve_format, resolve_scheme
 from elephantdb_spark.spec import DomainSpec
 from elephantdb_spark.store import DomainStore, shard_dirname
 
-#: Byte budget for the decoded-row-group serving cache (per Domain
-#: handle; override per domain with
-#: ``persistence_opts={"serving_cache_bytes": N}``, 0 disables). The
-#: reference's serving reads hit BerkeleyDB JE's in-memory B-tree/leaf
-#: cache on repeat probes (je.maxMemory; JavaBerkDB.java:70-82 probes a
-#: cached tree) — without an analogue every probe of a hot key re-decodes
-#: its ≤16 MiB parquet row group from disk. A decoded group is kept whole
-#: while the cache has room for it and it is at most a quarter of the
-#: budget; otherwise only the rows the probe found are kept, as a row
-#: entry under the same key (the analogue of JE caching a leaf node, not
-#: the whole tree), so one oversized or cold group cannot thrash the
-#: cache. New domains bound every group at ``build.MAX_ROW_GROUP_BYTES``,
-#: which bounds the transient decode.
-SERVING_GROUP_CACHE_BYTES = 64 << 20
-
-#: Bytes charged per row of a row entry on top of its key and value
-#: objects: the dict slot (hash, key and value pointers at the dict's
-#: load factor) plus its index entry.
-ROW_SLOT_BYTES = 64
+#: Rows per record batch of a shard file's local Arrow copy: BerkeleyDB
+#: JE's ``nodeMax``, the most entries one B-tree node of the reference's
+#: local persistence holds (JavaBerkDB.java:41-82). A probe reads only
+#: the batches whose key bounds admit one of its keys.
+LOCAL_BATCH_ROWS = 512
 
 #: ``Domain.serving_stats()`` counter names.
 SERVING_STATS = (
-    "group_hits", "row_hits", "decodes", "rows_admitted",
-    "bloom_tests", "bloom_rejects",
+    "files_converted", "batches_read", "bloom_tests", "bloom_rejects",
 )
 
-#: A row entry's "not held" marker (a held key may map to None: NULL).
-_ABSENT = object()
-
-
-def serving_cache_budget(spec: DomainSpec) -> int:
-    """The spec's ``serving_cache_bytes`` (default
-    SERVING_GROUP_CACHE_BYTES); ValueError unless it is an integer ≥ 0."""
-    raw = (spec.persistence_opts or {}).get(
-        "serving_cache_bytes", SERVING_GROUP_CACHE_BYTES
-    )
-    try:
-        if isinstance(raw, bool) or not isinstance(raw, (int, str)):
-            raise TypeError(type(raw).__name__)
-        budget = int(raw)
-    except (TypeError, ValueError):
-        raise ValueError(
-            f"serving_cache_bytes={raw!r} is not an integer byte count"
-        ) from None
-    if budget < 0:
-        raise ValueError(f"serving_cache_bytes={budget} is negative (0 disables)")
-    return budget
-
-#: Serving-cache capacity (open parquet handles / shard-dir listings).
-#: Eviction is LRU per entry — a hot handle must survive a sweep of cold
+#: Serving-cache capacity (open local-copy readers / shard-dir listings).
+#: Eviction is LRU per entry — a hot reader must survive a sweep of cold
 #: opens (VERDICT r6 item 3: wholesale clears thrashed >512-file domains).
 SERVING_CACHE_CAP = 512
 
-#: Cross-shard fanout width for the local serving probe. The
-#: reference's multiGet groups keys by host and probes every host group
-#: CONCURRENTLY (``do-pmap`` over the host map, keyval/core.clj:118-134)
-#: — a serial shard loop would make a 1000-key batch pay the sum of the
-#: per-shard latencies instead of the max. The probe body is
-#: thread-safe by construction (per-file handle locks, locked LRU
-#: caches) and its heavy work is GIL-releasing pyarrow C++, so a small
-#: shared pool parallelizes for real.
-SERVING_FANOUT_THREADS = 8
 
-#: Process-shared fanout pool for every domain (see
-#: Domain._fanout_pool). Never shut down — it is process infrastructure,
-#: like the reference's one server pool across all loaded domains.
-_FANOUT_POOL = None
-_FANOUT_POOL_LOCK = threading.Lock()
+def convert_shard_file(src: str, dst: str) -> tuple[list[bytes], list[bytes]]:
+    """Write the key-sorted parquet shard file ``src`` to ``dst`` as an
+    uncompressed Arrow IPC file of record batches of at most
+    LOCAL_BATCH_ROWS rows, in file order. Returns each batch's exact key
+    ``(mins, maxs)``, taken from its rows. Reads one row group at a time,
+    so peak memory is one decoded group, never the whole file. Writes to
+    a temporary name and renames it; on error neither name is left."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(src)
+    schema = pa.schema([pf.schema_arrow.field("key"), pf.schema_arrow.field("value")])
+    mins: list[bytes] = []
+    maxs: list[bytes] = []
+    tmp = dst + ".tmp"
+    try:
+        with pa.OSFile(tmp, "wb") as sink, pa.ipc.new_file(sink, schema) as w:
+            for g in range(pf.num_row_groups):
+                group = pf.read_row_group(g, columns=["key", "value"])
+                for batch in group.to_batches(max_chunksize=LOCAL_BATCH_ROWS):
+                    if batch.num_rows:
+                        bounds = pc.min_max(batch.column(0))
+                        mins.append(bounds["min"].as_py())
+                        maxs.append(bounds["max"].as_py())
+                        w.write_batch(batch)
+        os.replace(tmp, dst)
+    except BaseException:
+        _unlink_quiet(tmp)
+        raise
+    return mins, maxs
 
 
-def _shared_fanout_pool():
-    global _FANOUT_POOL
-    if _FANOUT_POOL is None:
-        with _FANOUT_POOL_LOCK:
-            if _FANOUT_POOL is None:
-                from concurrent.futures import ThreadPoolExecutor
+def _unlink_quiet(path: str) -> None:
+    try:
+        os.unlink(path)
+    except FileNotFoundError:
+        pass
 
-                _FANOUT_POOL = ThreadPoolExecutor(
-                    max_workers=SERVING_FANOUT_THREADS,
-                    thread_name_prefix="edb-serve",
-                )
-    return _FANOUT_POOL
+
+class _LocalCopy:
+    """One published shard file's local Arrow copy on a serving handle:
+    its path, exact per-batch key bounds and size once converted, the
+    file's Bloom sidecar, and a reader that the handle's LRU may close.
+    ``lock`` serializes the conversion and every read. The file is
+    removed when the object dies, so a probe still holding a copy the
+    handle dropped keeps reading it."""
+
+    def __init__(self, src: str):
+        self.src = src
+        self.path: str | None = None
+        self.mins: list[bytes] = []
+        self.maxs: list[bytes] = []
+        self.nbytes = 0
+        self.bloom = None
+        self.reader = None
+        self.lock = threading.Lock()
+
+    def convert(self, dst: str) -> None:
+        from elephantdb_spark.bloom import load_sidecar
+
+        self.mins, self.maxs = convert_shard_file(self.src, dst)
+        weakref.finalize(self, _unlink_quiet, dst)
+        self.nbytes = os.path.getsize(dst)
+        # optional Bloom sidecar (bloom.py): in-memory miss short-circuit;
+        # None when the domain was built without one
+        self.bloom = load_sidecar(self.src)
+        self.path = dst  # last: a set path means the copy is complete
 
 
 #: bulk_join auto-tuning (VERDICT r6 item 1): pick ``tasks_per_shard`` so
@@ -217,17 +223,16 @@ def estimate_leaf_file_rows(df: DataFrame, max_footers: int = 8) -> int | None:
 
 
 def rg_bound_index(meta, key_index: int):
-    """One footer walk per file OPEN, reused by every probe (VERDICT r6
-    item 2): ``pf.metadata.row_group(i).column(j).statistics``
-    deserializes Thrift metadata on every access, so the per-probe
-    O(num_row_groups) stats walk was the serving hot path's cost center
-    on fragmented domains. Returns ``(mins, maxs, rgs, statless)`` —
-    parallel arrays of key min/max bounds for row groups WITH stats (in
-    file order, which is key order: shard files are key-sorted) plus the
-    rare stats-less row-group indexes (probed conservatively). Parquet
+    """One footer walk over a shard file's row-group key statistics
+    (bulk_join's cut derivation, :meth:`Domain._subshard_cuts`).
+    ``pf.metadata.row_group(i).column(j).statistics`` deserializes Thrift
+    metadata on every access, so walk it once. Returns ``(mins, maxs,
+    rgs, statless)`` — parallel arrays of key min/max bounds for row
+    groups WITH stats (in file order, which is key order: shard files
+    are key-sorted) plus the rare stats-less row-group indexes. Parquet
     truncates long binary stats conservatively (min down, max up), so
-    adjacent bounds may overlap at truncation boundaries — probes must
-    treat bounds as conservative containment, not exact ranges."""
+    adjacent bounds may overlap at truncation boundaries — treat bounds
+    as conservative containment, not exact ranges."""
     mins: list[bytes] = []
     maxs: list[bytes] = []
     rgs: list[int] = []
@@ -290,6 +295,10 @@ class WrongHostError(RuntimeError):
 class Domain:
     """Read handle over one published domain (common/domain.clj:286-318)."""
 
+    # Always 0: the decoded-group cache is gone. edbbench/layers.py:164
+    # still reads this attribute on traced runs.
+    _rg_cache_nbytes = 0
+
     def __init__(self, spark: SparkSession, root: str, name: str | None = None):
         if not DomainSpec.exists(root):
             raise DomainNotFoundError(root)
@@ -307,60 +316,35 @@ class Domain:
         # fixed overhead. Bounded; hot-swap safety comes from keying on the
         # resolved version id.
         self._read_cache: dict[tuple[int, tuple[int, ...]], DataFrame] = {}
-        # open pyarrow handles for the local serving probe (shard files are
-        # immutable; see _open_shard_file). The reference serves with 64
-        # Thrift worker threads (common/thrift.clj:111-118), so the local
-        # probe must be callable concurrently: _pq_lock guards the cache
-        # dict, and each entry carries a per-file lock because a pyarrow
-        # ParquetFile handle is NOT safe for concurrent reads (two threads
-        # in read_row_group on one handle race the underlying reader).
-        # Distinct shard files still probe fully in parallel.
-        # LRU (VERDICT r6 item 3): a hot serving process over a >512-file
-        # domain — exactly the fragmented shape repeated A20 appends
-        # produce — must evict cold entries one at a time, not thrash its
-        # own hot handles with a wholesale clear.
-        self._pq_cache: "OrderedDict[str, tuple[object, threading.Lock, int, list]]" = (
-            OrderedDict()
-        )
+        # Local Arrow copies for the local serving probe, one per published
+        # shard file probed (see _local_copy), in a directory this handle
+        # owns, made on first use. The reference's daemons likewise copy
+        # their shards to local disk before serving (shard.clj:17-27).
+        # _pq_lock guards the dicts; each copy's own lock serializes its
+        # conversion and reads, so distinct files probe in parallel.
+        self._local_dir: str | None = None
+        self._local_dir_fin = None
+        self._copy_ids = itertools.count()
+        self._copies: dict[str, _LocalCopy] = {}
+        # copies with an open reader, LRU (VERDICT r6 item 3): a hot
+        # serving process over a >512-file domain — exactly the fragmented
+        # shape repeated A20 appends produce — must close cold readers one
+        # at a time, not thrash its own hot ones with a wholesale clear
+        self._readers: "OrderedDict[str, _LocalCopy]" = OrderedDict()
         # immutable shard-dir listings for published versions (the probe
         # must not pay listdir syscalls per lookup); same lock + LRU
         self._dir_cache: "OrderedDict[str, list[str]]" = OrderedDict()
         self._pq_lock = threading.Lock()
-        # decoded-row-group cache for the local serving probe: hot groups
-        # answer from in-memory Arrow arrays (a C-side hash probe) instead
-        # of re-decoding the group per call — the analogue of BDB JE's
-        # node cache the reference's serving layer sits on
-        # (JavaBerkDB.java:70-82). Byte-bounded LRU; entries are immutable
-        # (keyed by published-version file path + group index) and the
-        # whole cache drops on version change with the other caches.
-        # An entry is (karr, varr, nbytes) for a whole group, or
-        # (rows, None, nbytes) for a row entry: a dict of the rows probes
-        # found in a group the cache had no room for.
-        self._rg_cache: "OrderedDict[tuple[str, int], tuple]" = OrderedDict()
-        self._rg_cache_nbytes = 0
-        self._rg_cache_lock = threading.Lock()
-        try:
-            self._rg_cache_budget = serving_cache_budget(self.store.spec)
-        except ValueError as exc:
-            # new specs reject this (build.check_new_spec); one persisted
-            # before the check still opens, as it always did: a negative
-            # budget disables the cache, a non-integer takes the default
-            raw = self.store.spec.persistence_opts["serving_cache_bytes"]
-            try:
-                self._rg_cache_budget = max(int(raw), 0)
-            except (TypeError, ValueError):
-                self._rg_cache_budget = SERVING_GROUP_CACHE_BYTES
+        if "serving_cache_bytes" in (self.store.spec.persistence_opts or {}):
             warnings.warn(
-                f"domain {self.name}: {exc}; serving with a "
-                f"{self._rg_cache_budget}-byte cache",
+                f"domain {self.name}: persistence_opts['serving_cache_bytes'] "
+                "is ignored: the serving probe reads local Arrow copies and "
+                "keeps no decoded-group cache",
+                DeprecationWarning,
                 stacklevel=2,
             )
         self._serving_stats = dict.fromkeys(SERVING_STATS, 0)
         self._serving_stats_lock = threading.Lock()
-        # concurrent local_multi_get caller count (fanout admission gate
-        # — see local_multi_get's dispatch comment)
-        self._probe_callers = 0
-        self._fanout_count_lock = threading.Lock()
         # published-version snapshot — when it changes, caches drop (see
         # _resolve_version)
         self._seen_versions: tuple[int, ...] = ()
@@ -436,9 +420,17 @@ class Domain:
 
     def shutdown(self) -> None:
         """to-shutdown (status.clj:16): mark the handle; status reports
-        'shutdown' and callers should stop routing reads here. Later
-        probes on the handle run serially (see :meth:`_fanout_pool`)."""
+        'shutdown' and callers should stop routing reads here. Drops the
+        handle's local copies and removes their directory; a probe in
+        flight keeps reading through the files it has open."""
         self._is_shutdown = True
+        with self._pq_lock:
+            self._drop_local_copies()
+            fin, self._local_dir_fin, self._local_dir = (
+                self._local_dir_fin, None, None
+            )
+        if fin is not None:
+            fin()
 
     def shard_set(self, version: int | None = None) -> list[int]:
         """Shard ids materialized in a version (shard-set,
@@ -494,21 +486,7 @@ class Domain:
 
     # -- internals -----------------------------------------------------------
     def _resolve_version(self, version: int | None = None) -> int:
-        # every resolution observes the live published-version set; when it
-        # changes (new version published, old versions GC'd) both caches
-        # are dropped wholesale — cached DataFrames for deleted version
-        # dirs would fail, and cached parquet handles would keep deleted
-        # shard files' disk blocks allocated for the handle's lifetime
-        versions = tuple(self.store.all_versions())
-        if versions != self._seen_versions:
-            self._seen_versions = versions
-            self._read_cache.clear()
-            with self._pq_lock:
-                self._pq_cache.clear()
-                self._dir_cache.clear()
-            with self._rg_cache_lock:
-                self._rg_cache.clear()
-                self._rg_cache_nbytes = 0
+        versions = self._sync_versions()
         if version is not None:
             if int(version) not in versions:
                 raise DomainNotLoadedError(
@@ -518,6 +496,28 @@ class Domain:
         if not versions:
             raise DomainNotLoadedError(f"domain {self.name} has no published version")
         return versions[0]
+
+    def _sync_versions(self) -> tuple[int, ...]:
+        """The live published-version set. When it has changed (new
+        version published, old versions GC'd) every cache drops wholesale:
+        cached DataFrames for deleted version dirs would fail, and local
+        copies of deleted shard files would hold disk for the handle's
+        lifetime."""
+        versions = tuple(self.store.all_versions())
+        if versions != self._seen_versions:
+            self._seen_versions = versions
+            self._read_cache.clear()
+            with self._pq_lock:
+                self._drop_local_copies()
+                self._dir_cache.clear()
+        return versions
+
+    def _drop_local_copies(self) -> None:
+        """Forget every local copy; each file goes when the last probe
+        holding its copy lets go (see _LocalCopy). Call with _pq_lock
+        held."""
+        self._copies.clear()
+        self._readers.clear()
 
     def _empty_kv(self, with_shard: bool = True) -> DataFrame:
         schema = KV_SHARD_SCHEMA if with_shard else KV_SCHEMA
@@ -632,9 +632,9 @@ class Domain:
         slice j covers [cut[j-1], cut[j]) with open outer bounds.
 
         Footers are read TRANSIENTLY (``pq.read_metadata``), never
-        through the bounded ``_open_shard_file`` serving cache (ADVICE
-        r6: cut derivation over a fragmented many-file domain would
-        churn hot probe handles). Parallelism is ADAPTIVE: the first
+        through the serving path's local copies (ADVICE r6: cut
+        derivation over a fragmented many-file domain must not convert
+        or churn serving state). Parallelism is ADAPTIVE: the first
         footer read is timed, and only when it looks I/O-latency-bound
         (cold page cache / network storage — where a 64-shard fragmented
         domain's serial walk is a real plan-time stall, VERDICT r6
@@ -1096,10 +1096,11 @@ class Domain:
     def local_multi_get(
         self, keys: list[bytes], version: int | None = None
     ) -> dict[bytes, bytes | None]:
-        """Serving-layer reads without a Spark job: per key, open the ONE
-        shard file it hashes to with pyarrow, skip row groups whose key
-        min/max excludes it (files are key-sorted, so stats are tight), scan
-        only the matching row group(s).
+        """Serving-layer reads without a Spark job, on the caller thread:
+        per shard the keys hash to, probe each of its files through the
+        handle's local Arrow copy (see :meth:`_local_copy`) — Bloom, then
+        bisect over exact per-batch key bounds, then read only the
+        ≤LOCAL_BATCH_ROWS-row batches that can hold a key.
 
         This is the faithful analogue of the reference's serving read — a
         local persistence probe (JavaBerkDB.java:70-82), never a cluster
@@ -1122,300 +1123,80 @@ class Domain:
             by_shard.setdefault(self._scheme.shard_index(bytes(k), n), []).append(bytes(k))
 
         out: dict[bytes, bytes | None] = {bytes(k): None for k in keys}
-
-        def _probe_shard(shard: int, shard_keys: list[bytes]) -> dict[bytes, bytes]:
-            # Per shard file: (1) bisect to the candidate row groups,
-            # (2) the decoded-group cache, (3) one Bloom decision before a
-            # decode the cache would not keep whole, (4) a whole-group
-            # decode — the analogue of the reference's one B-tree descent
-            # per read (JavaBerkDB.java:70-82). Counters are summed here
-            # and added to the handle's once, under its lock.
-            hits: dict[bytes, bytes] = {}
-            st = dict.fromkeys(SERVING_STATS, 0)
+        # counters are summed here and added to the handle's once
+        st = dict.fromkeys(SERVING_STATS, 0)
+        for shard, shard_keys in by_shard.items():
             sdir = os.path.join(vpath, shard_dirname(shard))
             targets = sorted(set(shard_keys))
             target_digs: bytes | None = None  # blake2b blob, built once
+            # files in listing order: a later file's row wins, as in a scan
             for fname in self._shard_file_list(sdir):
-                fpath = os.path.join(sdir, fname)
-                pf, pf_lock, _key_idx, bounds, bloom, rg_sizes = (
-                    self._open_shard_file(fpath)
-                )
-                # (1) Candidate row groups per key by BISECT over the
-                # cached bound index (VERDICT r6 item 2: a per-probe
-                # `.statistics` walk deserialized Thrift metadata
-                # O(num_row_groups) times). Bounds are in key order
-                # (key-sorted files); truncated stats may overlap at
-                # boundaries, so after bisecting to the last row group
-                # whose min ≤ key, walk back while max ≥ key.
-                mins, maxs, stat_rgs, statless = bounds
-                by_rg: dict[int, list[bytes]] = {}
-                for k in targets:
+                copy = self._local_copy(os.path.join(sdir, fname), st)
+                # (1) Bloom: one vectorized test of the shard's targets
+                # against the file's sidecar. A "yes" (hit or fpp) falls
+                # through: the filter only removes work, never answers.
+                wanted = targets
+                if copy.bloom is not None:
+                    if target_digs is None:
+                        target_digs = copy.bloom.hash_keys(targets)
+                    wanted = [
+                        k for k, ok in zip(
+                            targets, copy.bloom.contains_digests(target_digs)
+                        ) if ok
+                    ]
+                    st["bloom_tests"] += len(targets)
+                    st["bloom_rejects"] += len(targets) - len(wanted)
+                # (2) Bisect each key to the last batch whose min ≤ key,
+                # then walk back while max ≥ key: a run of equal keys may
+                # span a batch boundary.
+                mins, maxs = copy.mins, copy.maxs
+                js: set[int] = set()
+                for k in wanted:
                     j = bisect.bisect_right(mins, k) - 1
                     while j >= 0 and maxs[j] >= k:
-                        by_rg.setdefault(stat_rgs[j], []).append(k)
+                        js.add(j)
                         j -= 1
-                for rg in statless:
-                    by_rg[rg] = targets  # no stats → scan the group
-                passed: set[bytes] | None = None  # file's Bloom verdict
-                for rg in sorted(by_rg):
-                    wanted = by_rg[rg]
-                    # (2) A whole group answers from in-memory Arrow
-                    # arrays (one C-side hash probe, no I/O, no decode).
-                    # A row entry answers the keys it holds, NULL values
-                    # included, and never a miss: the rest go on to (3).
-                    cached = self._rg_cache_get(fpath, rg)
-                    held = 0  # bytes of this group's row entry
-                    if cached is not None and cached[1] is None:
-                        rows, rest, held = cached[0], [], cached[2]
-                        for k in wanted:
-                            v = rows.get(k, _ABSENT)
-                            if v is _ABSENT:
-                                rest.append(k)
-                            else:
-                                hits[k] = v
-                        st["row_hits"] += len(wanted) - len(rest)
-                        if not rest:
-                            continue
-                        wanted, cached = rest, None
-                    admit_rows = False
-                    if cached is not None:
-                        st["group_hits"] += 1
-                    else:
-                        # (3) Bloom, only when the group will not be kept
-                        # whole: a kept group makes every later miss on
-                        # it one C-side hash probe, which a prefilter
-                        # would starve. The sidecar covers the whole
-                        # FILE, so one vectorized test over all targets
-                        # serves the file's remaining groups. A "yes"
-                        # (hit or fpp) falls through: the filter only
-                        # removes work, never answers.
-                        if bloom is not None and not self._rg_cache_room(
-                            rg_sizes[rg], held
-                        ):
-                            if passed is None:
-                                if target_digs is None:
-                                    target_digs = bloom.hash_keys(targets)
-                                passed = {
-                                    k for k, ok in zip(
-                                        targets,
-                                        bloom.contains_digests(target_digs),
-                                    ) if ok
-                                }
-                                st["bloom_tests"] += len(targets)
-                                st["bloom_rejects"] += len(targets) - len(passed)
-                            wanted = [k for k in wanted if k in passed]
-                            if not wanted:
-                                continue
-                        # (4) Decode the group whole: one GIL-releasing C
-                        # call. Kept whole when its decoded size has room;
-                        # otherwise only the rows found below are kept.
-                        with pf_lock:
-                            tbl = pf.read_row_groups(
-                                [rg], columns=["key", "value"]
-                            )
-                        st["decodes"] += 1
-                        tbl = tbl.combine_chunks()
-                        # the footer's size can under-count the decoded
-                        # arrays (dictionary pages): later Bloom
-                        # decisions on this group use the decoded size
-                        rg_sizes[rg] = tbl.nbytes
-                        cached = (tbl.column("key"), tbl.column("value"))
-                        if self._rg_cache_room(tbl.nbytes, held):
-                            self._rg_cache_put(fpath, rg, *cached, tbl.nbytes)
-                        else:
-                            admit_rows = self._rg_cache_budget > 0
-                    karr, varr = cached[:2]
-                    idx = pc.index_in(
-                        pa.array(wanted, type=pa.binary()), value_set=karr
-                    )
-                    vals = pc.take(varr, idx).to_pylist()
-                    found = {
-                        kk: vv
-                        for kk, ii, vv in zip(wanted, idx.to_pylist(), vals)
-                        if ii is not None
-                    }
-                    hits.update(found)
-                    if admit_rows and found:
-                        st["rows_admitted"] += self._rg_cache_put_rows(
-                            fpath, rg, found
-                        )
-            with self._serving_stats_lock:
-                for name, n in st.items():
-                    self._serving_stats[name] += n
-            return hits
-
-        # Cross-shard fanout (keyval/core.clj:118-134: the reference
-        # multiGet probes every host group concurrently via do-pmap; a
-        # serial loop costs sum-of-shard-latencies instead of the max).
-        # Shard probes are independent — each writes only its own hits
-        # dict, shared state is the locked handle/bound/bloom/group
-        # caches the 8-thread serving bench already exercises — and the
-        # decode work is GIL-releasing pyarrow C++, so a small shared
-        # pool parallelizes for real. One shard (the point-get shape)
-        # stays on the caller thread: no pool hop, no latency tax.
-        #
-        # Admission gate: fanout is a LATENCY tool for a lone caller;
-        # concurrent request threads already supply the parallelism, so
-        # fanning their batches out only adds pool handoff and GIL churn
-        # (measured at sf0.1: 8 callers × cache-warm batches ran 1.5-2.5×
-        # SLOWER fanned than serial, while a lone caller ran 1.7-2.1×
-        # FASTER fanned — both regimes, both cache states). A batch fans
-        # out only when it is the only in-flight MULTI-SHARD probe on
-        # this handle — single-shard point gets never enter the count
-        # (they add no parallelism pressure; a steady point-get trickle
-        # must not starve scatter batches of the fanout win) — otherwise
-        # it probes serially on its own thread. The caller count is a
-        # heuristic read — a race mis-picks the dispatch mode for one
-        # batch, never correctness.
-        def _serial(items) -> None:
-            for shard, shard_keys in items:
-                out.update(_probe_shard(shard, shard_keys))
-
-        if len(by_shard) <= 1:
-            _serial(by_shard.items())
-            return out
-        with self._fanout_count_lock:
-            self._probe_callers += 1
-            lone_caller = self._probe_callers == 1
-        try:
-            pool = self._fanout_pool() if lone_caller else None
-            if pool is None:  # gated, or raced a shutdown()
-                _serial(by_shard.items())
-                return out
-            futures, serial_rest = [], []
-            for shard, shard_keys in by_shard.items():
-                try:
-                    futures.append(
-                        pool.submit(_probe_shard, shard, shard_keys)
-                    )
-                except RuntimeError:
-                    # the pool refuses new work (it was shut down, e.g.
-                    # at interpreter exit): finish on the caller thread
-                    serial_rest.append((shard, shard_keys))
-            try:
-                for fut in futures:
-                    out.update(fut.result())
-            except BaseException:
-                # the pool is PROCESS-SHARED: abandoned siblings would
-                # keep occupying slots other domains' probes need, for
-                # results nobody reads — cancel whatever hasn't started,
-                # then drain the already-RUNNING probes before the
-                # exception propagates: a caller that tears down on the
-                # error (cache cleanup, shutdown, process exit) must not
-                # race in-flight _probe_shard threads still touching the
-                # handle caches. Bounded: each probe is one group decode.
-                from concurrent.futures import wait as _futures_wait
-
-                for fut in futures:
-                    fut.cancel()
-                _futures_wait(futures)
-                raise
-            _serial(serial_rest)
-        finally:
-            with self._fanout_count_lock:
-                self._probe_callers -= 1
+                if not js:
+                    continue
+                # (3) Read those batches, then one C-side hash lookup of
+                # the wanted keys over their keys (first match wins).
+                batches = self._read_batches(copy, sorted(js))
+                st["batches_read"] += len(batches)
+                karr = pa.concat_arrays([b.column(0) for b in batches])
+                varr = pa.concat_arrays([b.column(1) for b in batches])
+                idx = pc.index_in(pa.array(wanted, type=pa.binary()), value_set=karr)
+                for k, i, val in zip(
+                    wanted, idx.to_pylist(), pc.take(varr, idx).to_pylist()
+                ):
+                    if i is not None:
+                        out[k] = val
+        with self._serving_stats_lock:
+            for name, c in st.items():
+                self._serving_stats[name] += c
         return out
-
-    def _fanout_pool(self):
-        """The cross-shard probe pool: one process-level pool for every
-        domain, as the reference daemon serves every domain from one
-        server pool (THsHaServer, common/thrift.clj:111-118). External
-        request threads queue onto it instead of multiplying thread
-        counts. Returns None on a shut-down handle (callers probe
-        serially)."""
-        return None if self._is_shutdown else _shared_fanout_pool()
 
     def local_get(self, key: bytes, version: int | None = None) -> bytes | None:
         """Point probe via :meth:`local_multi_get` (A1 serving analogue)."""
         return self.local_multi_get([key], version)[bytes(key)]
 
-    def _rg_cache_get(self, path: str, rg: int):
-        """LRU lookup of one decoded row group; None on miss (and always
-        None when the cache is disabled via ``serving_cache_bytes=0``)."""
-        with self._rg_cache_lock:
-            e = self._rg_cache.get((path, rg))
-            if e is not None:
-                self._rg_cache.move_to_end((path, rg))
-            return e
-
-    def _rg_cache_room(self, nbytes: int, held: int = 0) -> bool:
-        """Whether a group of ``nbytes`` would be kept whole: at most a
-        quarter of the budget, and it fits without evicting anything
-        once its own row entry (``held`` bytes), which the whole group
-        replaces, is freed. The unlocked read is a heuristic: a stale
-        read mis-routes one group, never correctness."""
-        budget = self._rg_cache_budget
-        return (
-            budget > 0
-            and nbytes <= budget // 4
-            and self._rg_cache_nbytes - held + nbytes <= budget
-        )
-
-    def _rg_cache_put(self, path: str, rg: int, karr, varr, nbytes: int) -> None:
-        """Insert one decoded row group whole, replacing its row entry if
-        it has one, and evict LRU entries past the byte budget. Two
-        threads racing the same cold group both decode; the first whole
-        insert wins (entries are immutable — same file, same group)."""
-        with self._rg_cache_lock:
-            key = (path, rg)
-            e = self._rg_cache.get(key)
-            if e is not None and e[1] is not None:
-                self._rg_cache.move_to_end(key)
-                return
-            if e is not None:  # promote: the group answers every key now
-                del self._rg_cache[key]
-                self._rg_cache_nbytes -= e[2]
-            self._rg_cache[key] = (karr, varr, int(nbytes))
-            self._rg_cache_nbytes += int(nbytes)
-            self._rg_cache_evict()
-
-    def _rg_cache_put_rows(self, path: str, rg: int, rows: dict) -> int:
-        """Merge rows a probe found in a group the cache had no room for
-        into the group's row entry, then evict LRU entries past the byte
-        budget. Copy on write: a reader holding the old dict never sees
-        it change. Each new row is charged its key and value objects
-        plus ROW_SLOT_BYTES. Returns the number of rows added (0 when
-        the group is cached whole meanwhile)."""
-        with self._rg_cache_lock:
-            key = (path, rg)
-            e = self._rg_cache.get(key)
-            if e is not None and e[1] is not None:
-                self._rg_cache.move_to_end(key)
-                return 0
-            old, charged = (e[0], e[2]) if e is not None else ({}, 0)
-            new = {k: v for k, v in rows.items() if k not in old}
-            add = sum(
-                sys.getsizeof(k) + sys.getsizeof(v) + ROW_SLOT_BYTES
-                for k, v in new.items()
-            )
-            self._rg_cache[key] = ({**old, **new}, None, charged + add)
-            self._rg_cache.move_to_end(key)
-            self._rg_cache_nbytes += add
-            self._rg_cache_evict()
-            return len(new)
-
-    def _rg_cache_evict(self) -> None:
-        """Drop LRU entries until the cache is within its byte budget.
-        Call with _rg_cache_lock held."""
-        while self._rg_cache_nbytes > self._rg_cache_budget and self._rg_cache:
-            _, (_, _, nb) = self._rg_cache.popitem(last=False)
-            self._rg_cache_nbytes -= nb
-
     def serving_stats(self) -> dict[str, int]:
-        """Cumulative serving-probe counts for this handle:
-        ``group_hits`` (candidate groups answered by a whole cached
-        group), ``row_hits`` (keys answered by a row entry), ``decodes``
-        (row groups decoded), ``rows_admitted`` (rows added to row
-        entries), ``bloom_tests`` (keys tested against a sidecar) and
-        ``bloom_rejects`` (of those, definitive misses)."""
+        """Serving-probe counts for this handle: ``files_converted``
+        (shard files copied to local Arrow files), ``batches_read``
+        (record batches read from local copies), ``bloom_tests`` (keys
+        tested against a sidecar) and ``bloom_rejects`` (of those,
+        definitive misses), all cumulative; and ``local_bytes``, the disk
+        the handle's current local copies take."""
         with self._serving_stats_lock:
-            return dict(self._serving_stats)
+            out = dict(self._serving_stats)
+        with self._pq_lock:
+            out["local_bytes"] = sum(c.nbytes for c in self._copies.values())
+        return out
 
     def _shard_file_list(self, sdir: str) -> "list[str]":
         """Cached data-file listing for one shard dir of a PUBLISHED
         version (immutable once the token exists, so the listdir syscalls
         are pure fixed overhead per probe). Missing dir → empty list.
-        Shares _pq_lock with the handle cache; LRU eviction (a >512-file
+        Shares _pq_lock with the local copies; LRU eviction (a >512-file
         domain must not thrash its hot listings, VERDICT r6 item 3)."""
         with self._pq_lock:
             files = self._dir_cache.get(sdir)
@@ -1435,60 +1216,61 @@ class Domain:
                 self._dir_cache.move_to_end(sdir)
         return files
 
-    def _open_shard_file(self, path: str):
-        """Open (or reuse) a pyarrow ParquetFile for a shard file; returns
-        ``(handle, per_file_lock, key_column_index, rg_bound_index,
-        bloom_or_None, per_group_uncompressed_sizes)``. The
-        reference keeps its local persistences open for the lifetime of a
-        served version (common/domain.clj:184-206) — the probe must not
-        re-read the footer per lookup. Resolved ONCE at open: the key
-        column index (``schema_arrow`` rebuilds the Arrow schema from
-        Thrift metadata per access) and the row-group key-bound index
-        (:func:`rg_bound_index` — the per-probe Thrift stats walk was the
-        fragmented-domain cost center, VERDICT r6 item 2; the reference's
-        probe is a logarithmic B-tree descent, JavaBerkDB.java:70-82).
-        Shard files are immutable once published, so caching by path is
-        safe; bounded with per-entry LRU eviction so a hot handle
-        survives a sweep of cold opens."""
-        import pyarrow.parquet as pq
-
+    def _local_copy(self, src: str, st: dict) -> _LocalCopy:
+        """This handle's local Arrow copy of the published shard file
+        ``src``, converted on first use (:func:`convert_shard_file`), once
+        even under concurrent first probes; counted in
+        ``st["files_converted"]``. A conversion error propagates and the
+        next probe tries again. The reference keeps its local
+        persistences open for the lifetime of a served version
+        (common/domain.clj:184-206); copies live until the published
+        version set changes, cleanup_versions or shutdown()."""
         with self._pq_lock:
-            entry = self._pq_cache.get(path)
-            if entry is not None:
-                self._pq_cache.move_to_end(path)
-        if entry is None:
-            # footer read outside the cache lock: cold opens of DIFFERENT
-            # files must not serialize on each other. Two threads racing
-            # the same cold path both open it; one handle wins the cache,
-            # the loser serves its own request and is GC'd — harmless.
-            pf = pq.ParquetFile(path)
-            key_idx = pf.schema_arrow.get_field_index("key")
-            # optional Bloom sidecar (bloom.py): in-memory miss
-            # short-circuit; None when the domain was built without one
-            from elephantdb_spark.bloom import load_sidecar
+            copy = self._copies.get(src)
+            if copy is None:
+                copy = self._copies[src] = _LocalCopy(src)
+            elif src in self._readers:
+                self._readers.move_to_end(src)
+        if copy.path is None:
+            with copy.lock:
+                if copy.path is None:
+                    copy.convert(self._new_copy_path())
+                    st["files_converted"] += 1
+        return copy
 
-            meta = pf.metadata
-            entry = (
-                pf,
-                threading.Lock(),
-                key_idx,
-                rg_bound_index(meta, key_idx),
-                load_sidecar(path),
-                # per-group uncompressed sizes: the serving cache's
-                # pre-decode cacheability gate (same one-time footer
-                # walk); the probe replaces each with the decoded size
-                # once it has decoded the group
-                [
-                    meta.row_group(i).total_byte_size
-                    for i in range(meta.num_row_groups)
-                ],
-            )
+    def _new_copy_path(self) -> str:
+        """A fresh file name in the handle's local-copy directory, which
+        is made on first use under ``TMPDIR`` and removed by shutdown()
+        or when the handle dies."""
+        with self._pq_lock:
+            if self._local_dir is None:
+                self._local_dir = tempfile.mkdtemp(prefix="edb-serve-")
+                self._local_dir_fin = weakref.finalize(
+                    self, shutil.rmtree, self._local_dir, ignore_errors=True
+                )
+            return os.path.join(self._local_dir, f"{next(self._copy_ids)}.arrow")
+
+    def _read_batches(self, copy: _LocalCopy, js: list[int]) -> list:
+        """Record batches ``js`` of a converted copy, opening its reader
+        if the LRU closed it; open readers stay within
+        SERVING_CACHE_CAP."""
+        import pyarrow as pa
+
+        with copy.lock:
+            reader = copy.reader
+            opened = reader is None
+            if opened:
+                reader = copy.reader = pa.ipc.open_file(pa.OSFile(copy.path))
+            batches = [reader.get_batch(j) for j in js]
+        if opened:
             with self._pq_lock:
-                while len(self._pq_cache) >= SERVING_CACHE_CAP:
-                    self._pq_cache.popitem(last=False)
-                entry = self._pq_cache.setdefault(path, entry)
-                self._pq_cache.move_to_end(path)
-        return entry
+                # a copy dropped meanwhile must not re-enter the LRU
+                if self._copies.get(copy.src) is copy:
+                    self._readers[copy.src] = copy
+                    while len(self._readers) > SERVING_CACHE_CAP:
+                        # a probe reading it holds its own reference
+                        self._readers.popitem(last=False)[1].reader = None
+        return batches
 
     def count_df(self, version: int | None = None) -> DataFrame:
         """getCount as a DataFrame (A15, core.clj:212-216). Catalyst serves
@@ -1532,12 +1314,10 @@ class Domain:
 
                 for f in files:
                     if f.endswith(".parquet"):
-                        # transient footer read, NOT _open_shard_file:
+                        # transient footer read, NOT the serving path:
                         # auditing a >512-file fragmented domain (the
-                        # exact shape this API exists for) through the
-                        # bounded serving cache would wholesale-clear
-                        # hot probe handles and refill with audit-only
-                        # entries
+                        # exact shape this API exists for) must not
+                        # convert every file to a local copy
                         meta = pq.read_metadata(os.path.join(sdir, f))
                         row_groups += meta.num_row_groups
                         rows += meta.num_rows
@@ -1575,6 +1355,7 @@ class Domain:
         """Version GC (A19, VersionedStore.java:110-127).
         ``max_aside_age_s`` opt-in GCs abandoned staged-build asides."""
         self.store.cleanup(versions_to_keep, max_aside_age_s=max_aside_age_s)
+        self._sync_versions()
 
 
 class Engine:
@@ -1767,14 +1548,15 @@ class Engine:
 
     def purge_unused_domains(self, keep: list[str]) -> list[str]:
         """Delete domain dirs not in ``keep`` (A29,
-        common/database.clj:79-93). Returns purged names."""
-        import shutil
-
+        common/database.clj:79-93), shutting down their handles (which
+        removes their local copies). Returns purged names."""
         purged = []
         for name in self.list_domains():
             if name not in keep:
                 shutil.rmtree(self.domain_root(name))
-                self._domains.pop(name, None)
+                dom = self._domains.pop(name, None)
+                if dom is not None:
+                    dom.shutdown()
                 purged.append(name)
         return purged
 

@@ -193,8 +193,9 @@ def run_entries(spark, paths: dict[str, str], n: int, tag: str) -> dict[str, flo
         ).collect()
 
     # concurrent serving (r6, VERDICT r5 item 5): fixed 8x10x100-key load
-    # against the Nx domain — the probe is row-group-pruned and decodes
-    # capped row groups, so time should stay ~flat as the domain grows 10x
+    # against the Nx domain — the probe reads only the 512-row batches of
+    # each file's local copy that can hold a key, so time should stay
+    # ~flat as the domain grows 10x
     import threading as _threading
 
     li_keys = [
@@ -602,14 +603,14 @@ def run_scale_critical(spark, paths: dict[str, str], n: int, tag: str) -> dict:
 
 def run_scale_serving(spark, paths: dict[str, str], n: int, tag: str) -> dict:
     """VERDICT r6 item 2 done-criterion: re-measure the FIXED 8x10x100-key
-    concurrent serving workload as the domain grows Nx, now that
-    ``local_multi_get`` bisects a cached per-file row-group (min,max)
-    bound array instead of walking O(num_row_groups) Thrift stats per
-    probe per file. The domain fixture matches ``run_entries`` (32-shard
+    concurrent serving workload as the domain grows Nx: ``local_multi_get``
+    bisects each file's local Arrow copy over exact per-batch key bounds,
+    so per-probe work should not grow with the domain. The domain
+    fixture matches ``run_entries`` (32-shard
     lineitem KV); the workload is identical at 1x and Nx, so the ratio
     isolates per-probe cost vs domain depth. Timed min-of-3 passes per
     phase (the r7 de-noising protocol) — the first untimed pass also
-    absorbs handle-open/bound-build cost, which is once-per-file-ever."""
+    absorbs each file's conversion to its local copy, once per handle."""
     import threading as _threading
 
     timings: dict[str, float] = {}
@@ -666,7 +667,7 @@ def run_scale_serving(spark, paths: dict[str, str], n: int, tag: str) -> dict:
             raise errs[0]
         return time.perf_counter() - t0
 
-    _one_pass()  # untimed warm: file handles + bound arrays built here
+    _one_pass()  # untimed warm: local copies made here
     timings["local_multiget_concurrent_8t"] = round(
         min(_one_pass() for _ in range(3)), 3
     )
@@ -681,87 +682,13 @@ def run_scale_serving(spark, paths: dict[str, str], n: int, tag: str) -> dict:
     return timings
 
 
-def run_scale_fanout(spark) -> dict:
-    """Serving cross-shard fanout: the win must GROW with shard count
-    AT CONSTANT PER-SHARD WORK (the 100 TB shape: more shards of the
-    same size, a scattered batch touches more of them).
-
-    A multiGet batch over S shards costs the SUM of per-shard probes
-    serially but ~ceil(S/width)·max fanned out (keyval/core.clj:
-    118-134). Fixture: lineitem KV at (8 shards, 1× corpus) vs
-    (64 shards, 8× corpus) — per-shard bytes identical — with the
-    DEFAULT 16 MiB layout (per-shard work is one C-side group decode,
-    which releases the GIL; a deliberately shredded 64 KiB layout makes
-    the probe Python-overhead-bound and fanout measures ~1×, an honest
-    negative recorded in SCALE.md) and the decoded-group cache
-    DISABLED so every pass pays the decode. One caller thread,
-    1000-key scattered batch, min-of-5 warm passes per point."""
-    out: dict[str, dict] = {}
-    work = tempfile.mkdtemp(prefix="edb_scale_fanout_")
-    eng = Engine(spark, work)
-    from elephantdb_spark.engine import Domain
-
-    base = spark.read.parquet(os.path.join(BASE_SF, "lineitem.parquet"))
-    keys = [
-        f"{r.l_orderkey}-{r.l_linenumber}".encode()
-        for r in base.select("l_orderkey", "l_linenumber")
-        .limit(1000).collect()
-    ]
-    # cache disabled so EVERY pass pays the cold probe: the whole-group
-    # C decode, i.e. exactly the work a 100 TB domain's scattered batch
-    # pays per shard — and the work fanout parallelizes
-    for shards, copies in ((8, 1), (64, 8)):
-        paths = materialize(spark, copies, BASE_SF)
-        li_kv = spark.read.parquet(paths["lineitem"]).select(
-            F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"))
-            .cast("binary").alias("key"),
-            F.col("l_extendedprice").cast("string").cast("binary")
-            .alias("value"),
-        )
-        name = f"li{shards}"
-        build_domain(
-            spark, li_kv, eng.domain_root(name),
-            DomainSpec(num_shards=shards,
-                       persistence_opts={"serving_cache_bytes": 0}),
-            version=1,
-        )
-        point = {}
-        for mode in ("serial", "fanout8"):
-            dom = Domain(spark, eng.domain_root(name))
-            if mode == "serial":
-                dom._fanout_pool = lambda: None  # the serial dispatch
-            dom.local_multi_get(keys)  # untimed warm: handles + bounds
-            best = 1e9
-            for _ in range(5):
-                t0 = time.perf_counter()
-                dom.local_multi_get(keys)
-                best = min(best, time.perf_counter() - t0)
-            point[mode] = round(best, 4)
-            point[mode + "_raw"] = best
-        # ratio from the RAW floats: a fanout8 best under ~50 µs rounds
-        # to 0.0 and a ratio over rounded values would divide by zero
-        point["win"] = round(
-            point.pop("serial_raw") / max(point.pop("fanout8_raw"), 1e-9), 2
-        )
-        point["copies"] = copies
-        out[f"shards{shards}"] = point
-    shutil.rmtree(work, ignore_errors=True)
-    return out
-
-
 def run_scale_bloom_miss(spark, paths: dict[str, str], n: int, tag: str) -> dict:
     """VERDICT r7 item 2: measure the Bloom-sidecar miss win where it is
-    STRUCTURAL. An in-range miss (the key falls inside some row group's
-    (min,max) bounds) pays that group's decode on the plain path, and
-    group size grows with the domain toward the 16 MiB serving cap —
-    while a sidecar "no" stays O(1) in memory regardless of scale. So the
-    FIXED 1000-key miss workload should cost ~flat with bloom and ~Nx
-    without. Default serving layout (no block-size override): at sf0.1 a
-    32-shard lineitem slice is one small group, at Nx the same shard is
-    one Nx-bigger group — exactly the shape bloom.py's docstring argues
-    from. Misses are "orderkey-8" keys: linenumber stops at 7, so the key
-    never exists but sorts between real keys (bound index cannot exclude
-    it)."""
+    STRUCTURAL. An in-range miss (the key falls inside some batch's
+    (min,max) bounds) pays a batch read and a hash lookup on the plain
+    path, while a sidecar "no" stays O(1) in memory. Misses are
+    "orderkey-8" keys: linenumber stops at 7, so the key never exists
+    but sorts between real keys (the batch bounds cannot exclude it)."""
     timings: dict[str, float] = {}
     work = tempfile.mkdtemp(prefix=f"edb_scale_bloom_{tag}_")
     eng = Engine(spark, work)
@@ -785,7 +712,7 @@ def run_scale_bloom_miss(spark, paths: dict[str, str], n: int, tag: str) -> dict
     })[:1000]
 
     for name, dom in [("miss_plain", plain), ("miss_bloom", bloom)]:
-        got = dom.local_multi_get(miss_keys)  # untimed warm: handles+bounds
+        got = dom.local_multi_get(miss_keys)  # untimed warm: local copies
         assert all(v is None for v in got.values())
         best = None
         for _ in range(3):
@@ -894,17 +821,6 @@ def main() -> None:
                 f"x{N_COPIES}": tn.get("_max_row_groups_per_shard"),
             },
             "entries": entries,
-        }))
-        spark.stop()
-        return
-
-    if os.environ.get("EDB_SCALE_FANOUT") == "1":
-        # serving cross-shard fanout: win vs shard count at constant
-        # per-shard bytes (r8) — replication is per-point inside
-        print(json.dumps({
-            "metric": "serving_fanout_by_shards",
-            "base": BASE_SF,
-            "entries": run_scale_fanout(spark),
         }))
         spark.stop()
         return

@@ -181,27 +181,28 @@ def test_probe_hits_and_misses_match_bloomless_domain(spark, tmp_path, bloom_roo
     assert got_b[b"k7"] == b"v7" and got_b[b"missing-1"] is None
 
 
-def test_miss_short_circuits_without_io(spark, bloom_root, monkeypatch):
-    import pyarrow.parquet as pq
-
+def test_miss_short_circuits_without_io(spark, bloom_root):
     eng = Engine(spark, os.path.dirname(bloom_root))
     dom = eng.domain("bl")
-    dom.local_multi_get([b"warm"])  # open handles + load sidecars first
-    calls = []
-    # count the probe's one read path (read_row_groups, the whole-group
-    # decode) — a bloom "no" must not trigger it
-    orig_rg = pq.ParquetFile.read_row_groups
-    monkeypatch.setattr(
-        pq.ParquetFile, "read_row_groups",
-        lambda self, *a, **kw: calls.append(1) or orig_rg(self, *a, **kw),
-    )
+    dom.local_multi_get([b"warm"])  # convert files + load sidecars first
+
+    def batches_read(probe) -> int:
+        before = dom.serving_stats()["batches_read"]
+        probe()
+        return dom.serving_stats()["batches_read"] - before
+
     # 50 misses: with ~1% fpp per file, expect (almost always) zero reads
-    out = dom.local_multi_get([f"no-such-key-{i}".encode() for i in range(50)])
-    assert all(v is None for v in out.values())
-    assert len(calls) <= 2  # fpp allowance; bloomless would decode per key
-    calls.clear()
-    assert dom.local_multi_get([b"k3"]) == {b"k3": b"v3"}  # hits still read
-    assert len(calls) >= 1
+    # — a bloom "no" must not read a batch
+    def misses():
+        out = dom.local_multi_get([f"no-such-key-{i}".encode() for i in range(50)])
+        assert all(v is None for v in out.values())
+
+    assert batches_read(misses) <= 2  # fpp allowance; bloomless reads per key
+
+    def hit():
+        assert dom.local_multi_get([b"k3"]) == {b"k3": b"v3"}
+
+    assert batches_read(hit) >= 1  # hits still read
 
 
 def test_update_carries_and_rebuilds_sidecars(spark, tmp_path, bloom_root):
@@ -340,110 +341,6 @@ def test_contains_batch_identical_to_scalar_might_contain(monkeypatch):
     assert bf.contains_batch(iter(members[:5])) == [True] * 5
 
 
-def test_bloom_gates_decodes_when_cache_cannot_absorb(spark, tmp_path, monkeypatch):
-    """The at-scale regime: when the decoded-group cache cannot absorb the
-    group (disabled here; at 100 TB, at-budget), a bloom "no" must answer
-    in-range misses with ZERO reads — and hits must still read. Also pins
-    the complement: with cache room, a miss batch may decode ONCE (the
-    productive fill) and then answers from memory."""
-    import pyarrow.parquet as pq
-
-    from elephantdb_spark.engine import Domain
-
-    root = str(tmp_path / "blz")
-    build_domain(
-        spark, _kv(spark), root,
-        DomainSpec(num_shards=4, persistence_opts={
-            "bloom_fpp": 0.01, "serving_cache_bytes": 0,
-        }),
-        version=1,
-    )
-    dom = Domain(spark, root)
-    dom.local_multi_get([b"warm"])
-    calls = []
-    orig_rg = pq.ParquetFile.read_row_groups
-    monkeypatch.setattr(
-        pq.ParquetFile, "read_row_groups",
-        lambda self, *a, **kw: calls.append(1) or orig_rg(self, *a, **kw),
-    )
-    misses = [f"k{i}x".encode() for i in range(60)]  # in-range, absent
-    out = dom.local_multi_get(misses)
-    assert all(v is None for v in out.values())
-    assert len(calls) <= 2  # fpp allowance; every real decode is gated
-    calls.clear()
-    assert dom.local_multi_get([b"k7"])[b"k7"] == b"v7"  # hits still read
-    assert len(calls) >= 1
-
-    # cache-room complement: same domain shape, cache ON — repeat miss
-    # batches pay at most one productive fill per (file, group), then zero
-    root2 = str(tmp_path / "blc")
-    build_domain(
-        spark, _kv(spark, tag="c"), root2,
-        DomainSpec(num_shards=4, persistence_opts={"bloom_fpp": 0.01}),
-        version=1,
-    )
-    dom2 = Domain(spark, root2)
-    missc = [f"kc{i}x".encode() for i in range(60)]
-    calls.clear()
-    dom2.local_multi_get(missc)
-    first = len(calls)
-    assert first >= 1  # the fill happened (bloom did NOT starve the cache)
-    calls.clear()
-    out2 = dom2.local_multi_get(missc)
-    assert all(v is None for v in out2.values())
-    assert len(calls) == 0  # steady state: all from the decoded cache
-
-
-def test_bloom_gates_oversized_groups_beside_small_tail(spark, tmp_path, monkeypatch):
-    """The Bloom decision is made per candidate group, not per file: a
-    file whose small tail group fits the cache still has groups too big
-    to keep (> budget/4). In-range misses on those groups must answer
-    from the sidecar with (almost) no reads, since a decode there would
-    be used once and dropped."""
-    import pyarrow.parquet as pq
-
-    from elephantdb_spark.engine import Domain
-
-    root = str(tmp_path / "tail")
-    kv = spark.range(3000).select(
-        F.concat(F.lit("k"), F.col("id")).cast("binary").alias("key"),
-        F.concat(F.lit("v" * 64), F.col("id")).cast("binary").alias("value"),
-    )
-    build_domain(
-        spark, kv, root,
-        DomainSpec(num_shards=1, persistence_opts={
-            "bloom_fpp": 0.01, "parquet.block.size": 1 << 16,
-        }),
-        version=1,
-    )
-    (path,) = _datafiles(root, 1)
-    dom = Domain(spark, root)
-    sizes = dom._open_shard_file(path)[5]
-    dom._rg_cache_budget = 4 * min(sizes)  # only the smallest group fits
-    big = [rg for rg, sz in enumerate(sizes) if sz > min(sizes)]
-    assert len(big) >= 2
-    # k + b"\x00" sorts right after k, so it lands in k's group
-    pf = pq.ParquetFile(path)
-    misses = [
-        k + b"\x00"
-        for rg in big
-        for k in pf.read_row_group(rg, columns=["key"])
-        .column("key").to_pylist()[:-1:25]
-    ]
-    calls = []
-    orig_rg = pq.ParquetFile.read_row_groups
-    monkeypatch.setattr(
-        pq.ParquetFile, "read_row_groups",
-        lambda self, *a, **kw: calls.append(1) or orig_rg(self, *a, **kw),
-    )
-    out = dom.local_multi_get(misses)
-    assert all(v is None for v in out.values())
-    assert len(calls) <= 2  # fpp allowance
-    calls.clear()
-    assert dom.local_multi_get([b"k7"])[b"k7"] == b"v" * 64 + b"7"
-    assert len(calls) == 1  # hits still read
-
-
 def test_hash_keys_one_shot_iterator_with_fallback():
     """hash_keys must materialize one-shot iterators BEFORE hashing: a
     non-bytes item mid-stream triggers the bytes() fallback, and resuming
@@ -473,9 +370,9 @@ def test_contains_digests_rejects_malformed_blob():
 
 
 def test_file_level_prefilter_multi_file_shard(spark, tmp_path, monkeypatch):
-    """r9 (ADVICE r8): in the non-absorbing regime a multi-file shard runs
-    at most ONE file-level contains_digests per file — definitive misses
-    never reach a decode — while hits that live in DIFFERENT files of the
+    """r9 (ADVICE r8): a multi-file shard runs at most ONE file-level
+    contains_digests per file — definitive misses never read a batch —
+    while hits that live in DIFFERENT files of the
     same shard all still surface (the narrowing must be per-file, not
     shard-sticky)."""
     from elephantdb_spark.bloom import BloomFilter as BF
@@ -484,9 +381,7 @@ def test_file_level_prefilter_multi_file_shard(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "pref")
     build_domain(
         spark, _kv(spark, n=300), root,
-        DomainSpec(num_shards=2, persistence_opts={
-            "bloom_fpp": 0.001, "serving_cache_bytes": 0,
-        }),
+        DomainSpec(num_shards=2, persistence_opts={"bloom_fpp": 0.001}),
         version=1,
     )
     # fragment: two incremental updates -> up to 3 files per shard, with
@@ -517,41 +412,14 @@ def test_file_level_prefilter_multi_file_shard(spark, tmp_path, monkeypatch):
     # of consults is bounded by the number of files probed (2 shards x
     # <=3 files), never files x groups x subsets
     assert 1 <= len(calls) <= 6
-
-
-def test_fanout_failure_cancels_pending_and_releases_gate(spark, tmp_path, monkeypatch):
-    """r9 (ADVICE r8): a shard-probe failure during fanout must propagate,
-    cancel queued siblings on the shared pool, decrement the admission
-    counter, and leave the handle probing fine afterwards."""
-    from elephantdb_spark.engine import Domain
-
-    root = str(tmp_path / "ffail")
-    build_domain(
-        spark, _kv(spark, n=400), root,
-        DomainSpec(num_shards=8), version=1,
-    )
-    dom = Domain(spark, root)
-    keys = [f"k{i}".encode() for i in range(0, 400, 7)]
-    ok = dom.local_multi_get(keys)
-    assert ok[b"k7"] == b"v7"
-
-    orig_open = Domain._open_shard_file
-    def boom(self, fpath):
-        if "shard=3" in fpath:
-            raise OSError("transient")
-        return orig_open(self, fpath)
-    monkeypatch.setattr(Domain, "_open_shard_file", boom)
-    dom2 = Domain(spark, root)
-    with pytest.raises(OSError, match="transient"):
-        dom2.local_multi_get(keys)
-    assert dom2._probe_callers == 0  # gate released on the error path
-    monkeypatch.setattr(Domain, "_open_shard_file", orig_open)
-    again = dom2.local_multi_get(keys)
-    assert again == ok  # pool + handle still serviceable
+    # misses alone read (almost) no batch: 0.1% fpp allowance
+    before = dom.serving_stats()["batches_read"]
+    assert all(v is None for v in dom.local_multi_get(misses).values())
+    assert dom.serving_stats()["batches_read"] - before <= 2
 
 
 def test_prefilter_equivalence_randomized(spark, tmp_path):
-    """Property: with sidecars + cache off (the prefilter regime), every
+    """Property: with sidecars (the prefilter regime), every
     probe answers byte-identically to the same layout WITHOUT sidecars
     (the prefilter may only remove work, never answers). Seeded random
     batches mix hits, near-miss variants, and far misses across a
@@ -567,9 +435,8 @@ def test_prefilter_equivalence_randomized(spark, tmp_path):
     )
     roots = {}
     for tag, opts in (
-        ("with", {"bloom_fpp": 0.05, "serving_cache_bytes": 0,
-                  "maxRecordsPerFile": 40}),
-        ("without", {"serving_cache_bytes": 0, "maxRecordsPerFile": 40}),
+        ("with", {"bloom_fpp": 0.05, "maxRecordsPerFile": 40}),
+        ("without", {"maxRecordsPerFile": 40}),
     ):
         r = str(tmp_path / tag)
         build_domain(spark, kv, r,

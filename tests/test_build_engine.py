@@ -114,8 +114,8 @@ def test_row_group_cap_default_and_override(spark, tmp_path):
 
 
 def test_block_size_override_bounded(spark, tmp_path):
-    """The serving probe decodes each candidate row group whole, so a NEW
-    domain's parquet.block.size override above MAX_ROW_GROUP_BYTES is
+    """Serving-copy conversion and bulk_join decode row groups whole, so a
+    NEW domain's parquet.block.size override above MAX_ROW_GROUP_BYTES is
     rejected before anything is written (no spec, no version), on every
     entry point that creates a domain, while the 16 MiB default is
     accepted when given explicitly. A domain whose spec predates the

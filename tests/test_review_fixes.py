@@ -238,8 +238,8 @@ def test_update_domain_rejects_null_keys(spark, tmp_path):
 
 
 def test_domain_caches_drop_on_version_change(spark, tmp_path):
-    """Version GC must invalidate the cached parquet handles / DataFrames
-    (deleted shard files would otherwise stay open)."""
+    """Version GC must invalidate the local copies / DataFrames (copies of
+    deleted shard files would otherwise hold disk)."""
     from elephantdb_spark import DomainSpec, Engine, build_domain, update_domain
 
     eng = Engine(spark, str(tmp_path))
@@ -249,7 +249,7 @@ def test_domain_caches_drop_on_version_change(spark, tmp_path):
     build_domain(spark, kv, eng.domain_root("d"), DomainSpec(num_shards=2), version=1)
     dom = eng.domain("d")
     assert dom.local_get(b"1") == b"v"
-    assert len(dom._pq_cache) > 0
+    assert len(dom._copies) > 0
     batch = spark.createDataFrame([(b"1", b"NEW")], "key binary, value binary")
     update_domain(spark, batch, eng.domain_root("d"), version=2)
     dom.cleanup_versions(versions_to_keep=1)
@@ -288,6 +288,12 @@ def _n_persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {
+        int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()
+    }
+
+
 def _assert_rdds_drain_to(spark, base: int, timeout: float = 10.0) -> None:
     """Assert the persisted-RDD census returns to <= base.
 
@@ -317,8 +323,10 @@ def test_release_shingle_caches_frees_all(spark):
         release_shingle_caches,
     )
 
+    import time
+
     release_shingle_caches()  # drain anything a previous test left behind
-    base = _n_persistent_rdds(spark)
+    before = _persistent_rdd_ids(spark)
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog " * 3 + str(i % 5))
          for i in range(30)],
@@ -327,9 +335,17 @@ def test_release_shingle_caches_frees_all(spark):
     pairs = minhash_lsh_pairs(docs, "doc_id", "text", num_perm=8, bands=4,
                               threshold=0.5)
     pairs.count()
-    assert _n_persistent_rdds(spark) > base  # the index really was cached
+    # ids, not a count: an older RDD still draining must not mask or
+    # fake this test's own
+    new = _persistent_rdd_ids(spark) - before
+    assert new  # the index really was cached
     assert release_shingle_caches() >= 1
-    _assert_rdds_drain_to(spark, base)
+    deadline = time.monotonic() + 10.0  # unpersist is asynchronous
+    left = _persistent_rdd_ids(spark) - before
+    while left and time.monotonic() < deadline:
+        time.sleep(0.2)
+        left = _persistent_rdd_ids(spark) - before
+    assert not left, f"persisted RDDs {sorted(left)} still registered"
 
 
 def test_clean_corpus_cache_index_off_leaves_no_persisted_rdds(spark):
