@@ -18,17 +18,21 @@ Files are immutable once published, so a sidecar is built exactly once;
 `DomainStore.synchronize_versions`'s ``copytree`` carries sidecars
 forward with their shard dirs on incremental updates, and rewritten
 shards get fresh sidecars from :func:`build_bloom_sidecars` (a
-distributed Spark job — at 100 TB the one key-column pass parallelizes
-per file and repays itself on any miss-heavy serving workload).
+distributed Spark job of one task per core, each streaming its share of
+the files' key columns — at 100 TB neither the task count nor task
+memory grows with the number of files).
 
 Format (little-endian): ``b"EDBBLOOM"  m:u64  k:u32  n:u64  bits``.
 Hashing is double hashing over one blake2b-128 of the key:
 ``bit_i = (h1 + i*h2) mod m`` — deterministic across processes, no
-seed material beyond the key bytes.
+seed material beyond the key bytes. The batch paths compute all k
+positions of every key as one ``(cnt, k)`` array (:func:`_bit_positions`),
+so a serving test is one gather whatever the key count.
 """
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import struct
@@ -43,12 +47,6 @@ DEFAULT_FPP = 0.01
 
 SIDECAR_SUFFIX = ".bloom"
 
-#: _fold_digests uses uint32 position lanes when ``m`` is below this
-#: (the conditional-subtract sum stays < 2m < 2^32) and uint64 lanes
-#: above (files past ~223M keys at 1% fpp). Module-level so tests can
-#: lower it and prove both lanes produce identical filters.
-NARROW_LANES_MAX_M = 1 << 31
-
 
 def sidecar_path(data_path: str) -> str:
     """``.../<name>.parquet`` → ``.../.<name>.parquet.bloom`` (hidden)."""
@@ -62,6 +60,25 @@ def _hash_pair(key: bytes) -> tuple[int, int]:
         int.from_bytes(d[:8], "little"),
         int.from_bytes(d[8:], "little") | 1,  # odd → full-period stride
     )
+
+
+def _bit_positions(digests: bytes, m: int, k: int):
+    """All k bit positions of every 16-byte digest in ``digests``, as a
+    ``(cnt, k)`` uint64 array: ``(r1 + i*r2) % m`` with ``r1 = h1 % m``
+    and ``r2 = (h2 | 1) % m`` (odd-ified BEFORE the mod, like ``add``).
+
+    Exactness: modular arithmetic gives ``(h1 + i*h2) % m ==
+    (r1 + i*r2) % m``, and since r1, r2 < m the sum is below ``k*m`` —
+    far under 2^64 for any m a sidecar can hold — so uint64 arithmetic
+    never wraps and yields exactly the positions :meth:`BloomFilter.add`
+    and :meth:`BloomFilter.might_contain` compute with Python ints."""
+    import numpy as np
+
+    h = np.frombuffer(digests, dtype="<u8").reshape(-1, 2)
+    mm = np.uint64(m)
+    r1 = h[:, 0] % mm
+    r2 = (h[:, 1] | np.uint64(1)) % mm
+    return (r1[:, None] + np.arange(k, dtype=np.uint64) * r2[:, None]) % mm
 
 
 class BloomFilter:
@@ -104,13 +121,8 @@ class BloomFilter:
         Python work is the blake2b call itself (C-side); the double-hash
         positions and bit-sets run as ndarray ops.
 
-        Exactness (why the bytes cannot differ from ``add``): the pure
-        path computes ``(h1 + i*h2) % m`` with arbitrary-precision ints;
-        modular arithmetic gives ``(h1 + i*h2) % m ==
-        ((h1 % m) + i*(h2 % m)) % m``, and the reduced operands satisfy
-        ``r1 + i*r2 < (k+1)*m`` — with k ≈ -log2(fpp) and m ≤ ~10 bits/
-        key this never approaches 2^64, so uint64 ndarray arithmetic is
-        exact where raw ``h1 + i*h2`` would wrap."""
+        The bytes cannot differ from ``add``: both set the positions
+        :func:`_bit_positions` proves equal."""
         if not isinstance(keys, (list, tuple)):
             # materialize one-shot iterators BEFORE hashing: the fallback
             # below re-iterates, and resuming a half-consumed iterator
@@ -161,37 +173,19 @@ class BloomFilter:
         self._fold_digests(digests)
 
     def _fold_digests(self, digests: bytes) -> None:
-        """Shared vectorized tail of the batch adders: double-hash the
-        16-byte digests into bit positions and OR them in."""
+        """Shared vectorized tail of the batch adders: OR every digest's
+        k bit positions into the filter with one scatter."""
         import numpy as np
 
         cnt = len(digests) // 16
         if not cnt:
             return
-        h = np.frombuffer(digests, dtype="<u8").reshape(cnt, 2)
-        m = np.uint64(self.m)
-        pos = h[:, 0] % m  # fresh array — mutated by the recurrence below
-        r2 = (h[:, 1] | np.uint64(1)) % m  # odd-ify BEFORE mod, like add()
-        if self.m < NARROW_LANES_MAX_M:  # sum stays < 2m: narrow lanes ok
-            pos = pos.astype(np.uint32)
-            r2 = r2.astype(np.uint32)
-            m = np.uint32(self.m)
-            three, seven = np.uint32(3), np.uint32(7)
-        else:
-            three, seven = np.uint64(3), np.uint64(7)
-        bits = np.frombuffer(self.bits, dtype=np.uint8)  # shared memory
-        for i in range(self.k):
-            np.bitwise_or.at(
-                bits,
-                pos >> three,
-                np.left_shift(np.uint8(1), (pos & seven).astype(np.uint8)),
-            )
-            if i + 1 < self.k:
-                # (pos + r2) % m by conditional subtract — integer modulo
-                # has no SIMD path and dominated the loop; both operands
-                # are < m so the sum is < 2m, one subtract restores range
-                pos += r2
-                pos[pos >= m] -= m
+        pos = _bit_positions(digests, self.m, self.k).ravel()
+        np.bitwise_or.at(
+            np.frombuffer(self.bits, dtype=np.uint8),  # shared memory
+            pos >> np.uint64(3),
+            np.left_shift(np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)),
+        )
         self.n += cnt
 
     @classmethod
@@ -233,12 +227,11 @@ class BloomFilter:
 
     def contains_digests(self, digests: bytes) -> list[bool]:
         """Vectorized bulk :meth:`might_contain` over a
-        :meth:`hash_keys` blob — exactly the positions the scalar path
-        tests (same reduced double-hash recurrence as ``_fold_digests``,
-        so membership answers are identical by construction), with the
-        k bit-tests running as ndarray gathers instead of a per-key
-        Python loop (the per-key loop made a 1000-key miss batch SLOWER
-        than the decoded-group cache it was meant to beat)."""
+        :meth:`hash_keys` blob: one gather of all k bits of every key
+        (:func:`_bit_positions` — exactly the scalar path's positions,
+        so the answers are identical): the same few numpy calls whatever
+        the key count. The serving probe runs one per shard file, mostly
+        over a handful of keys, so the per-call cost is what counts."""
         import numpy as np
 
         if len(digests) % 16:
@@ -248,33 +241,14 @@ class BloomFilter:
             raise ValueError(
                 f"digest blob length {len(digests)} is not a multiple of 16"
             )
-        cnt = len(digests) // 16
-        if not cnt:
+        if not digests:
             return []
-        h = np.frombuffer(digests, dtype="<u8").reshape(cnt, 2)
-        m = np.uint64(self.m)
-        pos = h[:, 0] % m
-        r2 = (h[:, 1] | np.uint64(1)) % m
-        if self.m < NARROW_LANES_MAX_M:
-            pos = pos.astype(np.uint32)
-            r2 = r2.astype(np.uint32)
-            m = np.uint32(self.m)
-            three, seven = np.uint32(3), np.uint32(7)
-        else:
-            three, seven = np.uint64(3), np.uint64(7)
+        pos = _bit_positions(digests, self.m, self.k)
         bits = np.frombuffer(self.bits, dtype=np.uint8)
-        ok = np.ones(cnt, dtype=bool)
-        for i in range(self.k):
-            hit = bits[pos >> three] & np.left_shift(
-                np.uint8(1), (pos & seven).astype(np.uint8)
-            )
-            ok &= hit != 0
-            if i + 1 < self.k:
-                # in-place like _fold_digests: pos is already a private
-                # array (% / astype both copy), never a caller view
-                pos += r2
-                pos[pos >= m] -= m
-        return ok.tolist()
+        hit = bits[pos >> np.uint64(3)] & np.left_shift(
+            np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
+        )
+        return hit.all(axis=1).tolist()
 
     def contains_batch(self, keys) -> list[bool]:
         """Bulk membership test; element i answers for ``keys[i]``."""
@@ -325,19 +299,27 @@ def _write_sidecar_for(data_path: str, fpp: float) -> None:
         bf.add_arrow(batch.column(0))
     out = sidecar_path(data_path)
     tmp = out + ".tmp"
-    with open(tmp, "wb") as fh:
-        fh.write(bf.to_bytes())
-    os.replace(tmp, out)  # atomic: readers see whole sidecars or none
+    try:
+        with open(tmp, "wb") as fh:
+            fh.write(bf.to_bytes())
+        os.replace(tmp, out)  # atomic: readers see whole sidecars or none
+    except BaseException:  # leave no partial sidecar behind
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+        raise
 
 
 def build_bloom_sidecars(
     spark, version_path: str, fpp: float = DEFAULT_FPP
 ) -> int:
     """Build missing sidecars for every data file under ``version_path``
-    (``shard=*/**.parquet``) as ONE distributed Spark job — one task per
-    file, each reading only its file's key column. Idempotent: files
-    that already have a sidecar are skipped, so a crashed run resumes by
-    rerunning. Returns the number of sidecars built."""
+    (``shard=*/**.parquet``) as ONE distributed Spark job of
+    ``min(files, defaultParallelism)`` tasks, each writing its files in
+    turn from a streaming read of their key columns. A Python task costs
+    a fixed ~0.2 CPU-s before any work, so one per core, not one per
+    file. Idempotent: files that already have a sidecar are skipped, so
+    a crashed run resumes by rerunning. Returns the number of sidecars
+    built."""
     todo: list[str] = []
     for d in sorted(os.listdir(version_path)):
         sdir = os.path.join(version_path, d)
@@ -351,7 +333,7 @@ def build_bloom_sidecars(
     if not todo:
         return 0
     sc = spark.sparkContext
-    sc.parallelize(todo, len(todo)).foreach(
+    sc.parallelize(todo, min(len(todo), sc.defaultParallelism)).foreach(
         lambda p: _write_sidecar_for(p, fpp)
     )
     return len(todo)

@@ -186,10 +186,11 @@ def _writer_opts(spec: DomainSpec, drop: tuple = ()) -> dict[str, str]:
 def _maybe_build_blooms(spark: SparkSession, store: DomainStore, vpath: str) -> None:
     """When the spec opts in (``persistence_opts={"bloom_fpp": 0.01}``),
     build Bloom sidecars for every data file in the version that lacks
-    one (bloom.py — one distributed job, one task per file). Runs BEFORE
-    the version token is published so a served version either has its
-    full sidecar set or is not visible; copy-forward carries existing
-    sidecars inside their shard dirs, so only rewritten files pay."""
+    one (bloom.py — one distributed job, one task per core, each writing
+    its share of the files). Runs BEFORE the version token is published
+    so a served version either has its full sidecar set or is not
+    visible; copy-forward carries existing sidecars inside their shard
+    dirs, so only rewritten files pay."""
     fpp = (store.spec.persistence_opts or {}).get("bloom_fpp")
     if not fpp or resolve_format(store.spec.persistence_format) != "parquet":
         return

@@ -37,6 +37,15 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    # Python tasks (e.g. the Bloom sidecar job) import this package in
+    # Spark's workers, whose path is not the driver's sys.path. Spark
+    # merges this entry into the workers' PYTHONPATH; it does not replace it.
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    extra_conf.setdefault(
+        "spark.executorEnv.PYTHONPATH",
+        os.pathsep.join(filter(None, [pkg_parent, os.environ.get("PYTHONPATH")])),
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -74,23 +74,40 @@ def test_add_batch_byte_identical_to_add_loop():
         assert vec.to_bytes() == scalar.to_bytes()
 
 
-def test_fold_digests_wide_lanes_identical(monkeypatch):
-    """The uint64 lane branch of the vectorized fold (files past ~223M
-    keys, m ≥ NARROW_LANES_MAX_M) must match both the uint32 branch and
-    the scalar loop — covered by lowering the threshold so the same
-    small filter runs through wide lanes."""
-    import elephantdb_spark.bloom as B
+def test_bit_positions_exact_at_wide_m():
+    """The one (cnt, k) uint64 position array equals Python's big-int
+    ``(h1 + i*h2) % m`` at an m near 2^60, where r1 + i*r2 is far past
+    2^32 but below 2^64 (no bit array is allocated for it)."""
+    from elephantdb_spark.bloom import _bit_positions, _hash_pair
 
-    keys = [f"key-{i}".encode() for i in range(2000)] + [b"", b"\xff" * 40]
-    scalar = BloomFilter.sized(len(keys), 0.01)
-    for k in keys:
-        scalar.add(k)
-    narrow = BloomFilter.sized(len(keys), 0.01)
-    narrow.add_batch(keys)
-    monkeypatch.setattr(B, "NARROW_LANES_MAX_M", 1)  # force uint64 lanes
-    wide = BloomFilter.sized(len(keys), 0.01)
-    wide.add_batch(keys)
-    assert wide.to_bytes() == narrow.to_bytes() == scalar.to_bytes()
+    m, k = (1 << 60) - 93, 7
+    keys = [b"", b"\xff" * 40] + [f"key-{i}".encode() for i in range(300)]
+    pos = _bit_positions(BloomFilter.hash_keys(keys), m, k)
+    assert pos.shape == (len(keys), k) and str(pos.dtype) == "uint64"
+    for key, row in zip(keys, pos.tolist()):
+        h1, h2 = _hash_pair(key)
+        assert row == [(h1 + i * h2) % m for i in range(k)]
+    assert int(pos.max()) >= 1 << 32  # the positions really are wide
+
+
+def test_contains_digests_tiny_blobs_and_m64_clamp():
+    """The serving probe tests a handful of keys per file: blobs of 0-3
+    keys answer exactly like might_contain, including the m = 64 clamp
+    where k is large (sized(1, 0.001) has k = 44)."""
+    members = [b"a", b"", b"\x00\xff"]
+    probes = [b"a", b"b", b"", b"zz", b"\x00\xff", b"miss"]
+    for n, fpp in [(1, 0.001), (3, 0.25), (3, 0.01), (500, 0.01)]:
+        bf = BloomFilter.sized(n, fpp)
+        bf.add_batch(members[:n])
+        if n < 64:
+            assert bf.m == 64
+        for cnt in range(4):
+            for start in range(len(probes) - cnt + 1):
+                ks = probes[start:start + cnt]
+                assert bf.contains_digests(BloomFilter.hash_keys(ks)) == [
+                    bf.might_contain(x) for x in ks
+                ], (n, fpp, ks)
+    assert BloomFilter.sized(1, 0.001).k == 44
 
 
 def test_add_arrow_identical_incl_nulls_slices_large_binary():
@@ -280,6 +297,69 @@ def test_sidecar_build_idempotent(spark, bloom_root):
     assert build_bloom_sidecars(spark, vpath, 0.01) == 1  # fills the gap
 
 
+def test_sidecar_write_failure_leaves_no_tmp(spark, bloom_root, monkeypatch):
+    """A failed sidecar write propagates and removes its ``.bloom.tmp``:
+    no partial or orphan file is left in the shard dir."""
+    from elephantdb_spark.bloom import _write_sidecar_for
+
+    data = _datafiles(bloom_root, 1)[0]
+    os.remove(sidecar_path(data))
+
+    def boom(self):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(BloomFilter, "to_bytes", boom)
+    with pytest.raises(OSError, match="disk full"):
+        _write_sidecar_for(data, 0.01)
+    shard_dir = os.path.dirname(data)
+    assert not [f for f in os.listdir(shard_dir) if f.endswith(".bloom.tmp")]
+    assert not os.path.exists(sidecar_path(data))
+
+
+def test_sidecar_job_runs_one_task_per_core(spark, tmp_path):
+    """The sidecar job of a many-file build runs at most
+    defaultParallelism tasks, each writing several files, and every
+    sidecar is byte-identical to one built in-process."""
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "many")
+    spec = DomainSpec(
+        num_shards=8,
+        persistence_opts={"bloom_fpp": 0.01, "maxRecordsPerFile": 40},
+    )
+    sc = spark.sparkContext
+    group = "bloom-sidecar-tasks"
+    sc.setJobGroup(group, "sidecar task count")
+    try:
+        build_domain(spark, _kv(spark, 1200), root, spec, version=1)
+    finally:
+        sc._jsc.clearJobGroup()
+    data = _datafiles(root, 1)
+    assert len(data) >= 16
+    assert _sidecars(root, 1) == sorted(sidecar_path(p) for p in data)
+
+    # the status store is fed through the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    # the sidecar job's one stage carries bloom.py's call site
+    sidecar = [st for st in stages if st is not None and "bloom.py" in st.name]
+    assert len(sidecar) == 1, [st.name for st in stages if st is not None]
+    tasks = sidecar[0].numTasks
+    assert 1 <= tasks <= sc.defaultParallelism < len(data)
+
+    for p in data:
+        keys = pq.read_table(p, columns=["key"]).column("key").combine_chunks()
+        want = BloomFilter.sized(len(keys), 0.01)
+        want.add_arrow(keys)
+        with open(sidecar_path(p), "rb") as fh:
+            assert fh.read() == want.to_bytes(), p
+
+
 def test_add_batch_accepts_one_shot_iterators():
     """Code-review r8: add_batch must materialize one-shot iterators
     before hashing — the hash-retry fallback re-iterates, and resuming a
@@ -302,15 +382,13 @@ def test_add_batch_accepts_one_shot_iterators():
     assert a.to_bytes() == b.to_bytes()
 
 
-def test_contains_batch_identical_to_scalar_might_contain(monkeypatch):
+def test_contains_batch_identical_to_scalar_might_contain():
     """The vectorized prober must answer EXACTLY like the per-key
     might_contain loop — members always True (no false negatives),
     non-members bit-for-bit the same fpp decisions — on adversarial keys
-    (empty, dup, every byte value), in both lane widths, and hash_keys
-    blobs must be reusable across filters."""
+    (empty, dup, every byte value), and hash_keys blobs must be reusable
+    across filters."""
     import random
-
-    import elephantdb_spark.bloom as B
 
     rng = random.Random(82)
     members = (
@@ -333,10 +411,6 @@ def test_contains_batch_identical_to_scalar_might_contain(monkeypatch):
         assert bf2.contains_digests(digs) == [
             bf2.might_contain(k) for k in probes
         ]
-        # wide lanes answer identically
-        monkeypatch.setattr(B, "NARROW_LANES_MAX_M", 1)
-        assert bf.contains_batch(probes) == scalar
-        monkeypatch.undo()
     assert bf.contains_batch([]) == []
     assert bf.contains_batch(iter(members[:5])) == [True] * 5
 
