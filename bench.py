@@ -232,12 +232,12 @@ class PassRecorder:
             self.record(name, wall, job_group_stages(self.sc, group),
                         driver_cpu, jvm_cpu)
             # cache hygiene between entries (round-2 verdict: a leaked
-            # shingle-index persist taxed every subsequent entry with
+            # pin or persist taxed every subsequent entry with
             # storage-memory eviction/GC pressure). Both calls are no-ops
-            # when nothing is cached.
-            from elephantdb_spark.operators.dedup import release_shingle_caches
+            # when nothing is pinned or cached.
+            from elephantdb_spark.pinning import release_pins
 
-            release_shingle_caches()
+            release_pins()
             self.spark.catalog.clearCache()
 
 

@@ -143,7 +143,6 @@ def multi_grain_rollup(
     group_cols: list[str],
     value_col: str,
     grains: list[str] = ("1 hour", "1 day"),
-    persist_levels: bool = False,
 ) -> dict[str, DataFrame]:
     """Hypertable-style continuous-aggregate rollup at several time
     granularities (fine → coarse). Returns ``{grain: DataFrame}`` with
@@ -154,11 +153,9 @@ def multi_grain_rollup(
     count and sum are mergeable, so daily == sum of its hours by
     construction, and each coarsening shuffles only rollup rows. The
     plans are lazy: materializing each returned level independently would
-    re-execute the raw scan per level. To actually scan raw once across
-    all levels, either set ``persist_levels=True`` (persists every level
-    but the coarsest; call ``.unpersist()`` on the returned handles when
-    done) or — the production pattern — write each level out fine→coarse
-    and build the next level from the written table.
+    re-execute the raw scan per level. To scan raw once across all
+    levels, write each level out fine→coarse and build the next level
+    from the written table (the production pattern).
 
     ``grains`` must run fine → coarse with each grain an exact multiple of
     the previous (1 hour → 1 day, not 7 minutes → 1 hour) — otherwise a
@@ -186,8 +183,6 @@ def multi_grain_rollup(
         .withColumn("ws_us", F.unix_micros(F.col("__w.start")))
         .drop("__w")
     )
-    if persist_levels and len(grains) > 1:
-        fine = fine.persist()
     out[grains[0]] = fine
     prev = fine
     for grain in grains[1:]:
@@ -201,8 +196,6 @@ def multi_grain_rollup(
             .withColumn("ws_us", F.unix_micros(F.col("__w.start")))
             .drop("__w")
         )
-        if persist_levels and grain != grains[-1]:
-            prev = prev.persist()
         out[grain] = prev
     return out
 

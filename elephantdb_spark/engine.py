@@ -1043,7 +1043,9 @@ class Domain:
         version: int | None = None,
     ) -> DataFrame:
         """directMultiGet: serve only from an explicit shard set; a key owned
-        by another shard raises WrongHostError (A3, core.clj:148-155)."""
+        by another shard raises WrongHostError (A3, core.clj:148-155).
+        Otherwise this is :meth:`multi_get_df`, which reads only the
+        shards the keys hash to."""
         n = self.spec.num_shards
         owned = set(shards)
         for k in keys:
@@ -1052,17 +1054,7 @@ class Domain:
                 raise WrongHostError(
                     f"key routed to shard {s}, not in local shard set {sorted(owned)}"
                 )
-        if not keys:
-            return self.spark.createDataFrame([], KV_SCHEMA)
-        matched = (
-            self._pruned_read(sorted(owned), version)
-            .filter(self._key_in_filter(keys))
-            .drop("shard")
-        )
-        keys_df = self._keys_df(keys)
-        return keys_df.join(F.broadcast(matched), on="key", how="left").select(
-            "key", "value"
-        )
+        return self.multi_get_df(keys, version)
 
     def get(self, key: bytes, version: int | None = None) -> bytes | None:
         """Point get; miss → None (A1, core.clj:166-172; null semantics

@@ -94,6 +94,7 @@ from elephantdb_spark.operators.sampling import (
     stratified_sample,
 )
 from elephantdb_spark.parity import _table
+from elephantdb_spark.pinning import pin
 
 DUP_SHIFT = 100_000
 NEARDUP_SHIFT = 200_000
@@ -298,11 +299,8 @@ def q65_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     endgame): pointer-jumped hash-min label propagation; cluster id =
     component minimum. Oracle: recursive-CTE transitive closure."""
     corpus = _neardup_corpus(spark, sf_dir)
-    # cache_index=False: the driver runs 50 queries in one session — a
-    # persisted index with no post-action release hook would leak
     pairs = jaccard_shingle_pairs(
-        corpus, "doc_id", "text", shingle_len=3, threshold=JACCARD_THRESHOLD,
-        cache_index=False,
+        corpus, "doc_id", "text", shingle_len=3, threshold=JACCARD_THRESHOLD
     )
     return connected_components(pairs, "a", "b").orderBy("node")
 
@@ -704,8 +702,7 @@ def q74_cluster_size_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations over the CC labels."""
     corpus = _neardup_corpus(spark, sf_dir)
     pairs = jaccard_shingle_pairs(
-        corpus, "doc_id", "text", shingle_len=3, threshold=JACCARD_THRESHOLD,
-        cache_index=False,
+        corpus, "doc_id", "text", shingle_len=3, threshold=JACCARD_THRESHOLD
     )
     comps = connected_components(pairs, "a", "b")
     sizes = comps.groupBy("cluster").agg(F.count(F.lit(1)).alias("cluster_size"))
@@ -947,10 +944,8 @@ def q24_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q25_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _neardup_corpus(spark, sf_dir)
-    # cache_index=False: no release hook after the driver's collect
     pairs = jaccard_shingle_pairs(
-        corpus, "doc_id", "text", shingle_len=3, threshold=JACCARD_THRESHOLD,
-        cache_index=False,
+        corpus, "doc_id", "text", shingle_len=3, threshold=JACCARD_THRESHOLD
     )
     return pairs.select(
         "a", "b", F.round(F.col("jaccard"), 6).alias("jaccard")
@@ -1007,8 +1002,7 @@ def q29_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _neardup_corpus(spark, sf_dir)
     return minhash_lsh_pairs(
         corpus, "doc_id", "text", num_perm=32, bands=8,
-        shingle_len=3, threshold=JACCARD_THRESHOLD, cache_index=False,
-        hash_fn="md5",
+        shingle_len=3, threshold=JACCARD_THRESHOLD, hash_fn="md5",
     ).select("a", "b", F.round(F.col("jaccard"), 6).alias("jaccard")).orderBy("a", "b")
 
 
@@ -1294,9 +1288,7 @@ def q80_dedup_against_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _dedup_history_root(spark, sf_dir)
     batch = _history_batch(_table(spark, sf_dir, "documents"))
     return (
-        # cache_batch=False: the driver runs ~100 queries in one session
-        # with no release hook — a squatting persist would tax them all
-        filter_against_history(spark, batch, root, ["text"], cache_batch=False)
+        filter_against_history(spark, batch, root, ["text"])
         .select("doc_id", "is_new")
         .orderBy("doc_id")
     )
@@ -1393,7 +1385,7 @@ def q104_neardup_vs_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _neardup_history_root(spark, sf_dir)
     batch = _neardup_history_batch(_table(spark, sf_dir, "documents"))
     return (
-        # cache_sigs=False: driver session has no release hook (q80 note)
+        # cache_sigs=False: cheaper than the pin (see its docs)
         filter_against_neardup_history(
             spark, batch, root, "doc_id", "text",
             threshold=_ND_THRESHOLD, cache_sigs=False,
@@ -1550,8 +1542,8 @@ def q82_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from elephantdb_spark.operators.curation import cap_per_source
 
     docs = _skewed_sources(_table(spark, sf_dir, "documents"))
-    # materialize_input pins the scan+skew-fold projection once (lazy
-    # localCheckpoint) instead of re-executing it from each of the cap
+    # materialize_input pins the scan+skew-fold projection once instead
+    # of re-executing it from each of the cap
     # machinery's four consumer subtrees (r19; see cap_per_source docs).
     return cap_per_source(
         docs, "doc_id", "source", cap=15, salt="cap", materialize_input=True
@@ -1612,32 +1604,26 @@ def q86_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    # Materialize each corpus-sized stage once with a LAZY localCheckpoint
-    # (r18, guide §3.3/§5): DataFrame references do not share subtrees, so
-    # the multi-branch consumers downstream (gopher verdict join, dedup
-    # survivor join, cap_per_source's count/flag/fallback branches)
-    # replicated the normalize+tokenize lineage into ~48 separate corpus
-    # scans (plans/r18/q86_curation_pipeline_before.txt; 28 sort-merge
-    # joins). Checkpointing truncates the plan at each stage — the corpus
+    # Pin each corpus-sized stage once (r18, guide §3.3/§5): DataFrame
+    # references do not share subtrees, so the multi-branch consumers
+    # downstream (gopher verdict join, dedup survivor join,
+    # cap_per_source's count/flag/fallback branches) replicated the
+    # normalize+tokenize lineage into ~48 separate corpus scans
+    # (plans/r18/q86_curation_pipeline_before.txt; 28 sort-merge joins).
+    # Pinning truncates the plan at each stage — the corpus
     # is normalized and tokenized exactly once — measured 5.2 s → 3.0 s
-    # warm / 21 s → 7 s first-run at sf0.1, identical output. Lazy (not
-    # eager) so query construction stays job-free; blocks are
-    # MEMORY_AND_DISK and released by the context cleaner when the
-    # DataFrame goes out of scope — this is intra-query materialization
-    # computed during the run, not cross-run result caching.
-    norm = (
-        normalize_text(docs, "text", out_col="text_norm")
-        .drop("text")
-        .localCheckpoint(eager=False)
-    )
+    # warm / 21 s → 7 s first-run at sf0.1, identical output. This is
+    # intra-query materialization computed during the run, not cross-run
+    # result caching.
+    norm = pin(normalize_text(docs, "text", out_col="text_norm").drop("text"))
     verdicts = gopher_filter(norm, "doc_id", "text_norm")
-    kept = norm.join(
-        verdicts.filter(F.col("kept")).select("doc_id"), "doc_id"
-    ).localCheckpoint(eager=False)
+    kept = pin(
+        norm.join(verdicts.filter(F.col("kept")).select("doc_id"), "doc_id")
+    )
     keep_ids = exact_dedup(kept, ["text_norm"], "doc_id").select(
         F.col("keep_id").alias("doc_id")
     )
-    uniq = kept.join(keep_ids, "doc_id").localCheckpoint(eager=False)
+    uniq = pin(kept.join(keep_ids, "doc_id"))
     capped = cap_per_source(uniq, "doc_id", "source", cap=CURATION_CAP, salt="cur")
     out = split_corpus(capped, "doc_id", CURATION_SPLITS, salt="curspl")
     return out.select("doc_id", "source", "split").orderBy("doc_id")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from elephantdb_spark.functions.text import DEFAULT_STOPWORDS
 from elephantdb_spark.operators.sampling import _HASH_SPACE, _md5_u32
+from elephantdb_spark.pinning import pin
 
 #: Ordered (pattern, replacement) regex rewrites applied by
 #: :func:`normalize_text`. Patterns stay inside the common subset of Java
@@ -132,11 +133,10 @@ def cap_per_source(
     four separate subtrees (counts, under/over split, survivors,
     fallback re-rank), and Spark re-executes the input's whole lineage
     per consumer — a non-trivial upstream (joins, regex normalization)
-    runs 4×. ``True`` pins the input ONCE via a lazy ``localCheckpoint``
-    so every branch reads the materialized blocks (executor-local
-    MEMORY_AND_DISK, ~input-sized, non-recoverable on executor loss —
-    see PLANS.md §localCheckpoint). Leave ``False`` (default) when the
-    input is a bare scan or already checkpointed (q86 passes an
+    runs 4×. ``True`` pins the input ONCE
+    (:func:`~elephantdb_spark.pinning.pin`) so every branch reads the
+    materialized blocks (~input-sized). Leave ``False`` (default) when the
+    input is a bare scan or already pinned (q86 passes an
     already-pinned frame: a second copy would double the block storage
     for zero saved work).
     """
@@ -145,15 +145,15 @@ def cap_per_source(
     if margin <= 1.0:
         raise ValueError(f"margin must exceed 1, got {margin}")
     if materialize_input:
-        df = df.localCheckpoint(eager=False)
+        df = pin(df)
     cols = list(df.columns)
     h = _md5_u32(F.col(id_col), salt)
     counts = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("__n"))
     # One row per over-cap source — broadcast-sized by construction, and
     # referenced from two subtrees (the threshold flag join and the
-    # fallback re-count); the lazy localCheckpoint runs the full-input
-    # counts aggregation ONCE instead of once per consumer (r19).
-    over = counts.filter(F.col("__n") > cap).localCheckpoint(eager=False)
+    # fallback re-count); the pin runs the full-input counts aggregation
+    # ONCE instead of once per consumer (r19).
+    over = pin(counts.filter(F.col("__n") > cap))
 
     flagged = df.join(
         F.broadcast(over.withColumnRenamed(source_col, "__src").withColumn(
@@ -175,7 +175,7 @@ def cap_per_source(
     # Broadcast-sized (subset of ``over``) and consumed by two joins; the
     # pin keeps its surv_counts lineage (a survivors-wide aggregation)
     # from re-executing per consumer (r19).
-    fallback_srcs = (
+    fallback_srcs = pin(
         over.join(
             surv_counts.withColumnRenamed(source_col, "__src2"),
             F.col(source_col) == F.col("__src2"),
@@ -183,7 +183,6 @@ def cap_per_source(
         )
         .filter(F.coalesce(F.col("__sn"), F.lit(0)) < cap)
         .select(F.col(source_col).alias("__fsrc"))
-        .localCheckpoint(eager=False)
     )
 
     w = Window.partitionBy(source_col).orderBy(h.asc(), F.col(id_col).asc())

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from elephantdb_spark.functions.text import tokens_col
+from elephantdb_spark.pinning import pin
 
 
 #: Seed of the second digest half in :func:`digest128` (two independently
@@ -52,37 +53,6 @@ def digest128_null_safe(cols: "list[str]"):
     for c in cols:
         mix.extend([F.col(c), F.col(c).isNull()])
     return digest128(*mix)
-
-#: Shingle indexes persisted by the near-dup operators, awaiting release.
-#: Spark's LRU eviction never proactively frees these, so in a long session
-#: (a bench run, the driver's 50-query sweep) they squat on storage memory
-#: and tax every later job with eviction/GC pressure — call
-#: :func:`release_shingle_caches` after the consuming action.
-_TRACKED_CACHES: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    out = df.persist()
-    _TRACKED_CACHES.append(out)
-    return out
-
-
-def release_shingle_caches() -> int:
-    """Unpersist every shingle index the near-dup operators have persisted
-    (``cache_index=True`` paths). Deterministic cache lifecycle for long
-    sessions: call after the action that consumes the operator's output.
-    Safe to call any time — unpersisting a never-materialized DataFrame is
-    a no-op, and the result recomputes if re-used. Returns the number of
-    caches released."""
-    n = 0
-    while _TRACKED_CACHES:
-        df = _TRACKED_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
 
 
 def exact_dedup(
@@ -212,7 +182,6 @@ def jaccard_shingle_pairs(
     shingle_len: int = 3,
     threshold: float = 0.6,
     max_shingle_freq: int | None = DEFAULT_MAX_SHINGLE_FREQ,
-    cache_index: bool = True,
 ) -> DataFrame:
     """Exact near-duplicate pairs by word-shingle Jaccard similarity.
 
@@ -226,9 +195,8 @@ def jaccard_shingle_pairs(
     ``|A∩B minus hot shingles| / |A∪B|`` — a lower bound on true Jaccard
     that never counts boilerplate as similarity. Pairs whose overlap is
     pure boilerplate score 0; below the cut the metric is exact Jaccard.
-    ``cache_index`` persists the shingle index consumed by the
-    sizes/self-join branches; release it with
-    :func:`release_shingle_caches` after the consuming action.
+    The shingle index consumed by the sizes/self-join branches is pinned
+    (:func:`~elephantdb_spark.pinning.pin`).
 
     Scale shape (r18, guide §2.3): the self-join keys on a 128-bit
     shingle DIGEST (two seeded xxhash64 halves — the :func:`exact_dedup`
@@ -236,14 +204,12 @@ def jaccard_shingle_pairs(
     shingle string, so the exchange carries 16 fixed bytes per posting
     and the join/groupBy compare longs instead of strings (~1.2× faster
     at sf0.1, identical pairs; shuffle bytes shrink further with longer
-    shingles). The persisted index holds digests only — smaller cache,
+    shingles). The pinned index holds digests only — smaller blocks,
     and the string never rides an exchange.
     """
     inv = _shingle_index(df, id_col, text_col, shingle_len)
     s0, s1 = digest128(F.col("shingle"))
-    inv = inv.select("doc", s0.alias("__s0"), s1.alias("__s1"))
-    if cache_index:
-        inv = _persist_tracked(inv)
+    inv = pin(inv.select("doc", s0.alias("__s0"), s1.alias("__s1")))
     # sizes from the unfiltered index: the denominator stays |A ∪ B| even
     # when the hot-shingle cut shrinks the intersection (ADVICE r1)
     sizes = inv.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
@@ -331,7 +297,6 @@ def minhash_lsh_pairs(
     shingle_len: int = 3,
     threshold: float = 0.6,
     max_shingle_freq: int | None = DEFAULT_MAX_SHINGLE_FREQ,
-    cache_index: bool = True,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH, verified with exact
@@ -348,13 +313,11 @@ def minhash_lsh_pairs(
     ``jaccard`` is the same boilerplate-discounting lower bound as in
     :func:`jaccard_shingle_pairs`.
 
-    ``cache_index`` persists the exploded shingle index (MEMORY_AND_DISK),
-    which both the signature pass and the verification join consume —
-    without it the shingle explode runs twice (measured 1.7x slower at
-    sf0.1). Release it with :func:`release_shingle_caches` after the
-    consuming action (round-2 verdict: a leaked index squats on storage
-    memory for the rest of the session); at extreme scale write the index
-    to a table instead and pass it through.
+    The exploded shingle index, which both the signature pass and the
+    verification join consume, is pinned
+    (:func:`~elephantdb_spark.pinning.pin`) — without it the shingle
+    explode runs twice (measured 1.7x slower at sf0.1). At extreme scale
+    write the index to a table instead and pass it through.
 
     ``hash_fn='md5'`` makes every stage DuckDB-replicable (oracle mode):
     the permutation hash becomes the md5 high half and the LSH bucket key
@@ -365,9 +328,7 @@ def minhash_lsh_pairs(
     if num_perm % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_perm ({num_perm})")
     rows_per_band = num_perm // bands
-    inv = _shingle_index(df, id_col, text_col, shingle_len)
-    if cache_index:
-        inv = _persist_tracked(inv)
+    inv = pin(_shingle_index(df, id_col, text_col, shingle_len))
     # sizes from the unfiltered index (see jaccard_shingle_pairs)
     sizes = inv.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     if max_shingle_freq is not None:
@@ -549,12 +510,11 @@ def repeated_span_profile(
     )
     # Digests-only by construction (~24 B/span: doc + two hash halves),
     # and consumed by TWO subtrees (hot-gram count, per-doc tally) — the
-    # lazy localCheckpoint runs the corpus explode + per-span double
-    # xxhash64 ONCE instead of once per consumer. Measured 1.18x on the
-    # interleaved sf0.1 A/B (r19); the stored frame is ~gram_chars/stride
-    # x corpus bytes of executor MEMORY_AND_DISK blocks (see PLANS.md
-    # §localCheckpoint for the recoverability trade).
-    spans = (
+    # pin runs the corpus explode + per-span double xxhash64 ONCE instead
+    # of once per consumer. Measured 1.18x on the interleaved sf0.1 A/B
+    # (r19); the stored frame is ~gram_chars/stride x corpus bytes of
+    # executor MEMORY_AND_DISK blocks (see elephantdb_spark.pinning).
+    spans = pin(
         df.select(F.col(id_col).alias("__doc"), text.alias("__t"), F.explode(offsets).alias("off"))
         .select(
             "__doc",
@@ -564,7 +524,6 @@ def repeated_span_profile(
                 F.lit(_DIGEST_SEED),
             ).alias("__d1"),
         )
-        .localCheckpoint(eager=False)
     )
     hot = (
         spans.distinct()

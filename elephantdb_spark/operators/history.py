@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from elephantdb_spark.build import build_domain, update_domain
 from elephantdb_spark.engine import Domain
 from elephantdb_spark.operators.dedup import digest128_null_safe
+from elephantdb_spark.pinning import pin
 from elephantdb_spark.spec import DomainSpec
 
 #: Above this many batch rows the filter falls back from the broadcast
@@ -111,7 +112,6 @@ def filter_against_history(
     key_cols: list[str],
     max_broadcast_rows: int = MAX_BROADCAST_ROWS,
     version: int | None = None,
-    cache_batch: bool = True,
 ) -> DataFrame:
     """Flag each batch row against the seen-set: returns the batch columns
     plus ``is_new`` (true ⇔ the row's digest is absent from the pinned
@@ -119,20 +119,11 @@ def filter_against_history(
     collapsing them is the caller's choice (``exact_dedup`` on the
     survivors), not this filter's.
     """
-    from elephantdb_spark.operators.dedup import _persist_tracked
-
     hist = Domain(spark, root).scan(version=version).select("key")
     # ONE materialization of the keyed batch serves the size probe, the
-    # broadcast digest build, and the flagging join — without the persist
-    # a batch with real ingest lineage would be re-scanned three times.
-    # Tracked like the shingle indexes: release_shingle_caches() frees it
-    # deterministically after the consuming action. ``cache_batch=False``
-    # for one-shot contexts with no release hook (e.g. the driver's
-    # many-query session, q80) where a squatting cache would tax every
-    # later query — there the triple scan of a small batch is cheaper.
-    keyed = batch.withColumn("__k", digest_key_col(key_cols))
-    if cache_batch:
-        keyed = _persist_tracked(keyed)
+    # broadcast digest build, and the flagging join — without the pin a
+    # batch with real ingest lineage would be re-scanned three times.
+    keyed = pin(batch.withColumn("__k", digest_key_col(key_cols)))
     out_cols = [*batch.columns, F.col("__hit").isNull().alias("is_new")]
     n_batch = keyed.count()
     if n_batch <= max_broadcast_rows:

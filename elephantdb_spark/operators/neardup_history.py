@@ -87,11 +87,8 @@ from elephantdb_spark.build import (
     update_domain,
 )
 from elephantdb_spark.engine import Domain, DomainNotLoadedError
-from elephantdb_spark.operators.dedup import (
-    _persist_tracked,
-    _shingle_index,
-    _signature_hash,
-)
+from elephantdb_spark.operators.dedup import _shingle_index, _signature_hash
+from elephantdb_spark.pinning import pin
 from elephantdb_spark.spec import DomainSpec
 from elephantdb_spark.store import DomainStore
 
@@ -312,10 +309,10 @@ def append_neardup_history(
         # pin the merge read to the PRE-append snapshot explicitly: the
         # bulk_join executes lazily inside update_domain's write, by
         # which point a concurrent publish could have moved 'latest'
-        pin = bands_dom.store.most_recent_version()
+        pre_version = bands_dom.store.most_recent_version()
         new_bands = _band_kv(sigs, p["num_perm"], p["bands"], max_bucket)
         joined = bands_dom.bulk_join(
-            new_bands, "key", value_alias="__old", version=pin
+            new_bands, "key", value_alias="__old", version=pre_version
         )
         new_arr = F.split(F.decode(F.col("value"), "UTF-8"), "\n")
         old_arr = F.when(
@@ -422,13 +419,12 @@ def filter_against_neardup_history(
     Rows with fewer than ``shingle_len`` tokens have no signature and
     come back ``(false, null, null)``.
 
-    ``cache_sigs`` persists the batch signature frame consumed by both
-    the band probe and the scoring join (tracked like the shingle
-    indexes — ``dedup.release_shingle_caches()`` frees it); pass False
-    in long-lived many-query sessions with no release hook (the minhash
-    lineage then runs once per consumer — measured cheaper than a
-    per-query pin, which would defeat bulk_join's auto task sizing; see
-    the inline note).
+    ``cache_sigs`` pins the batch signature frame consumed by both the
+    band probe and the scoring join (:func:`~elephantdb_spark.pinning.
+    pin`; release after the consuming action). Pass False to let the
+    minhash lineage run once per consumer instead — measured cheaper
+    than the pin, which defeats bulk_join's auto task sizing (see the
+    inline note).
 
     ``version`` pins BOTH sub-domains (their versions move in lockstep);
     when None, ONE shared snapshot is resolved from the bands domain —
@@ -446,9 +442,8 @@ def filter_against_neardup_history(
         batch, id_col, text_col, num_perm, p["shingle_len"], p["hash_fn"]
     )
     if cache_sigs:
-        sigs = _persist_tracked(sigs)
-    # cache_sigs=False deliberately does NOT substitute a lazy
-    # localCheckpoint for the tracked persist (r19, measured): pinning
+        sigs = pin(sigs)
+    # cache_sigs=False is the cheaper setting (r19, measured): pinning
     # sigs puts the band probe on an ExistingRDD lineage, which defeats
     # the footer-sampled probe-row estimate behind bulk_join's
     # auto-tasks_per_shard (non-file plans -> m=1), and the de-par-

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from elephantdb_spark.functions.text import tokens_col
 from elephantdb_spark.operators.dedup import _shingle_index
+from elephantdb_spark.pinning import pin
 
 
 def _ngrams_from_tokens(toks: Column, n: int) -> Column:
@@ -337,7 +338,7 @@ def tfidf_topk(
 
     Assumes ``id_col`` uniquely identifies rows (N = row count). Plan:
     one shuffle to (doc, token) term frequencies — map-side combinable —
-    materialized ONCE via a lazy ``localCheckpoint`` (r18 computed the
+    pinned ONCE (:func:`~elephantdb_spark.pinning.pin`; r18 computed the
     df as a second aggregation consumer of ``tf``, which re-executed
     tf's whole lineage and re-exploded the corpus; the r18 fix — a
     count window over token — removed the duplicate lineage but put
@@ -345,19 +346,14 @@ def tfidf_topk(
     with no partial aggregation: Zipfian token frequency makes that a
     single corpus-sized task at 100 TB, the exact §2.5 skew class the
     hot-shingle guard exists for, per the r18 VERDICT/ADVICE).  The
-    checkpointed tf feeds (a) a map-side-combinable ``groupBy(token)``
-    document-frequency aggregation — vocabulary grows ~log of corpus
-    size, so its result is tiny — broadcast back when
-    ``broadcast_vocab`` (default; set False on vocabularies too large
-    to broadcast, which shuffle-joins instead), (b) a 1-row broadcast
+    pinned tf feeds (a) a map-side-combinable ``groupBy(token)``
+    document-frequency aggregation — vocabulary grows sublinearly in
+    corpus size (Heaps' law, a power law ~N^β with β ≈ 0.4–0.6), so its
+    result is small — broadcast back when ``broadcast_vocab`` (default;
+    set False on vocabularies too large to broadcast, which
+    shuffle-joins instead), (b) a 1-row broadcast
     for N, and (c) the per-doc top-k window partitioned on the doc id.
     The corpus is tokenized exactly once either way.
-
-    Note on ``localCheckpoint``: the materialized tf blocks are
-    executor-local (MEMORY_AND_DISK) and non-recoverable on executor
-    loss — the engine's established intra-query pattern
-    (``connected_components``, q38/q86); prefer reliable checkpointing
-    on preemptible clusters.
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
@@ -365,9 +361,7 @@ def tfidf_topk(
         F.col(id_col).alias("__doc"),
         F.explode(tokens_col(F.col(text_col))).alias("token"),
     ).select("__doc", F.lower(F.col("token")).alias("token"))
-    tf = toks.groupBy("__doc", "token").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
+    tf = pin(toks.groupBy("__doc", "token").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("dfreq"))
     if broadcast_vocab:
         dfreq = F.broadcast(dfreq)

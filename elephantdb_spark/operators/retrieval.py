@@ -17,9 +17,9 @@ Design (Spark-first, one corpus scan):
   scan stage (the broadcast semi-join prunes the token stream before it
   touches an exchange).
 * Document frequencies are computed over the *matched* tf frame (one
-  row per (doc, token) by construction), which is materialized ONCE via
-  a lazy ``localCheckpoint``: a map-side-combinable ``groupBy(token)``
-  over the checkpointed tf yields the per-token df (tiny — only query
+  row per (doc, token) by construction), which is pinned ONCE
+  (:func:`~elephantdb_spark.pinning.pin`): a map-side-combinable
+  ``groupBy(token)`` over the pinned tf yields the per-token df (tiny — only query
   tokens survive), broadcast back onto tf. A count window over token
   (the r18 shape) avoided the duplicate lineage too, but funneled every
   (doc, token) row of a hot query token into ONE window partition with
@@ -28,7 +28,7 @@ Design (Spark-first, one corpus scan):
   on ``tfidf_topk``; same fix here). Ranking Q probe queries never
   builds the full inverted index (contrast :func:`~elephantdb_spark.
   operators.quality.inverted_index`, the index-build path); without
-  ``corpus_stats`` the tokenized corpus frame is ALSO checkpointed, so
+  ``corpus_stats`` the tokenized corpus frame is ALSO pinned, so
   the dl-stats aggregation reads the materialized token arrays instead
   of re-scanning and re-tokenizing the corpus — the corpus is read and
   tokenized exactly ONCE either way.
@@ -74,6 +74,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from elephantdb_spark.functions.text import tokens_col
+from elephantdb_spark.pinning import pin
 
 #: Default fixed-point scale: micro-units keep six decimal digits of the
 #: score while fitting ~9e12 term-contributions in a BIGINT sum.
@@ -137,14 +138,11 @@ def bm25_topk(
 
     ``corpus_stats``: optional precomputed ``(n_docs, total_dl)`` (see
     :func:`bm25_corpus_stats`). Without it the tokenized corpus frame is
-    materialized via a lazy ``localCheckpoint`` so the dl-stats
-    aggregation reads the token arrays instead of re-scanning and
-    re-tokenizing the corpus; the checkpoint blocks are executor-local
-    (MEMORY_AND_DISK, ~corpus-sized) and non-recoverable on executor
-    loss — the engine's established intra-query pattern (q38/q86,
-    ``tfidf_topk``). A serving deployment passes precomputed stats in,
-    which both skips the checkpoint entirely (no executor storage) and
-    leaves a single streaming corpus pass.
+    pinned (:func:`~elephantdb_spark.pinning.pin`, ~corpus-sized) so the
+    dl-stats aggregation reads the token arrays instead of re-scanning
+    and re-tokenizing the corpus. A serving deployment passes
+    precomputed stats in, which both skips the pin entirely (no executor
+    storage) and leaves a single streaming corpus pass.
 
     ``two_stage``: ``None`` (default) auto-selects the top-k shape —
     single per-query window when the engine's WindowGroupLimit rewrite
@@ -176,15 +174,15 @@ def bm25_topk(
     # subexpression elimination cannot see across, so inlining the regex
     # split ran the whole-document tokenization TWICE per row — measured
     # 3.8 s → 0.6 s on the sf0.1 corpus pass alone (plans/r18). Without
-    # precomputed corpus_stats the frame is ALSO checkpointed, so the
+    # precomputed corpus_stats the frame is ALSO pinned, so the
     # stats consumer below reads the materialized arrays instead of
-    # re-running the scan + tokenization (r19; the checkpoint is skipped
+    # re-running the scan + tokenization (r19; the pin is skipped
     # when stats are supplied — the plan then has one consumer and one
     # streaming pass, no executor storage).
     toks = tokens_col(F.col(text_col))
     base = docs.select(did.alias("doc_id"), toks.alias("__toks"))
     if corpus_stats is None:
-        base = base.localCheckpoint(eager=False)
+        base = pin(base)
     dtok = base.select(
         "doc_id",
         F.size("__toks").cast("long").alias("dl"),
@@ -208,15 +206,15 @@ def bm25_topk(
     # tf per (doc, query-token): the only corpus-sized shuffle, and its
     # rows are (id, token, counts) — document text never leaves the scan.
     # tf is one row per (doc, token), so count-per-token over it IS the
-    # df. It is materialized once (lazy localCheckpoint) and the df rides
+    # df. It is pinned once and the df rides
     # a map-side-combinable groupBy(token) broadcast back onto tf: a
-    # second aggregation consumer without the checkpoint would recompute
+    # second aggregation consumer without the pin would recompute
     # tf's lineage and re-scan the corpus, and the r18 count-window form
     # put every row of a hot query token into one window partition (§2.5
     # skew; see module docs).
-    tf = matched.groupBy("doc_id", "dl", "token").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
+    tf = pin(
+        matched.groupBy("doc_id", "dl", "token").agg(F.count(F.lit(1)).alias("tf"))
+    )
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("dfc"))
     tf = tf.join(F.broadcast(dfreq), "token")
 

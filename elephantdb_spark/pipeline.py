@@ -7,9 +7,12 @@ Every stage is the already-tested operator; this module only owns the
 composition and the keep-policy (smallest id survives each duplicate
 group). Stages toggle off with ``None``/``False`` so callers pay only for
 what they use; the whole pipeline is lazy — one optimized plan. The
-near-dup detectors internally persist their shingle index (see
-operators/dedup); callers who will materialize the result several times
-should persist their own input upstream, keeping the unpersist handle.
+minhash and jaccard detectors pin their shingle index
+(:func:`elephantdb_spark.pinning.pin`): call
+:func:`elephantdb_spark.pinning.release_pins` after the action that
+consumes the pipeline's output, never before. Callers who will
+materialize the result several times should persist their own input
+upstream, keeping the unpersist handle.
 """
 
 from __future__ import annotations
@@ -41,7 +44,6 @@ def clean_corpus(
     max_hamming: int = 3,
     neardup_scope: str = "components",
     broadcast_losers: bool = True,
-    cache_index: bool = True,
 ) -> DataFrame:
     """Quality-gate, dedup, and near-dup-clean a document corpus.
 
@@ -66,9 +68,6 @@ def clean_corpus(
     anti-join (default: it is detector-bounded ≪ corpus); pass ``False``
     on a high-duplication corpus where the loser set could exceed the
     8 GB broadcast limit — the anti-join then shuffles on the id.
-    ``cache_index`` is forwarded to the minhash/jaccard detectors; when
-    left on, call ``operators.dedup.release_shingle_caches()`` after the
-    action that consumes this pipeline's output.
 
     Returns the surviving rows of ``docs`` (all original columns).
     """
@@ -89,13 +88,11 @@ def clean_corpus(
             out, id_col, text_col,
             num_perm=num_perm, bands=bands,
             shingle_len=shingle_len, threshold=neardup_threshold,
-            cache_index=cache_index,
         )
     elif neardup == "jaccard":
         pairs = jaccard_shingle_pairs(
             out, id_col, text_col,
             shingle_len=shingle_len, threshold=neardup_threshold,
-            cache_index=cache_index,
         )
     elif neardup == "simhash":
         pairs = simhash_neardup_pairs(

@@ -29,20 +29,23 @@ def plan_str(df: DataFrame, mode: str = "executed") -> str:
     return buf.getvalue()
 
 
+def _exchange_nodes(tree: str) -> int:
+    """Shuffle Exchange nodes in a plan tree's text, executed or
+    formatted: lines whose node name is exactly ``Exchange``. Line-based
+    because ``BroadcastExchange`` must not count, and an executed
+    ``ReusedExchange [...], Exchange hashpartitioning(...)`` line EMBEDS
+    the description of the node it reuses (substring matching would
+    double-count it)."""
+    return sum(
+        line.lstrip(" :+-*").startswith("Exchange ") for line in tree.splitlines()
+    )
+
+
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle Exchange nodes (broadcast exchanges excluded) —
     the quantity to minimize; every one is a full materialization of its
     input across the cluster."""
-    # count tree nodes whose name is exactly "Exchange" — line-based
-    # because "BroadcastExchange" must not count and a "ReusedExchange
-    # [...], Exchange hashpartitioning(...)" line EMBEDS the description
-    # of the node it reuses (substring matching would double-count it)
-    count = 0
-    for line in plan_str(df).splitlines():
-        node = line.lstrip(" :+-*")
-        if node.startswith("Exchange "):
-            count += 1
-    return count
+    return _exchange_nodes(plan_str(df))
 
 
 def broadcast_join_count(df: DataFrame) -> int:
@@ -85,7 +88,7 @@ def plan_summary(text: str) -> dict[str, int]:
     section does not count it twice; every other count is over the
     whole text."""
     return {
-        "exchanges": len(re.findall(r"\bExchange\b", text.split("\n\n")[0])),
+        "exchanges": _exchange_nodes(text.split("\n\n")[0]),
         "bhj": text.count("BroadcastHashJoin"),
         "smj": text.count("SortMergeJoin"),
         "shj": text.count("ShuffledHashJoin"),

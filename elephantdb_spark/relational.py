@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elephantdb_spark.parity import _table
+from elephantdb_spark.pinning import pin
 
 
 def q36_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,13 +55,13 @@ def q38_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     space and the ordering-customer key space."""
     cust = _table(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
     ordering = _table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
-    # the INTERSECT result feeds both branches; materialize it once with
-    # a lazy localCheckpoint (r18): as plain DAG references the whole
+    # the INTERSECT result feeds both branches; pin it once (r18): as
+    # plain DAG references the whole
     # customer⋈orders intersection executed twice — 5 exchanges / 5
     # scans at round open (plans/r18/baseline/q38_set_ops.txt) — and at
     # scale both set inputs are corpus-sized. Same set operators, same
     # rows, one intersection.
-    inter = cust.intersect(ordering).localCheckpoint(eager=False)
+    inter = pin(cust.intersect(ordering))
     with_orders = inter.agg(F.count(F.lit(1)).alias("n"))
     without = cust.exceptAll(inter).agg(F.count(F.lit(1)).alias("n"))
     return (

@@ -114,9 +114,9 @@ def run_entries(spark, paths: dict[str, str], n: int, tag: str) -> dict[str, flo
 
             def __exit__(self, *a):
                 timings[name] = round(time.perf_counter() - self.t0, 3)
-                from elephantdb_spark.operators.dedup import release_shingle_caches
+                from elephantdb_spark.pinning import release_pins
 
-                release_shingle_caches()
+                release_pins()
                 spark.catalog.clearCache()
 
         return _T()
@@ -542,11 +542,9 @@ def run_scale_critical(spark, paths: dict[str, str], n: int, tag: str) -> dict:
 
             def __exit__(self, *a):
                 timings[name] = round(time.perf_counter() - self.t0, 3)
-                from elephantdb_spark.operators.dedup import (
-                    release_shingle_caches,
-                )
+                from elephantdb_spark.pinning import release_pins
 
-                release_shingle_caches()
+                release_pins()
                 spark.catalog.clearCache()
 
         return _T()
@@ -736,8 +734,8 @@ def measure_lsh_recall(spark, paths: dict[str, str]) -> dict:
     from elephantdb_spark.operators.dedup import (
         jaccard_shingle_pairs,
         minhash_lsh_pairs,
-        release_shingle_caches,
     )
+    from elephantdb_spark.pinning import release_pins
 
     documents = spark.read.parquet(paths["documents"])
     corpus = _neardup_corpus(documents)
@@ -753,7 +751,7 @@ def measure_lsh_recall(spark, paths: dict[str, str]) -> dict:
             corpus, "doc_id", "text", num_perm=32, bands=8, threshold=0.6
         ).collect()
     }
-    release_shingle_caches()
+    release_pins()
     tp = len(truth & got)
     return {
         "true_pairs": len(truth),

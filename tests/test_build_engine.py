@@ -6,6 +6,7 @@ Byte-exact comparisons throughout (barr= helpers, test/common.clj:51-74)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from elephantdb_spark import (
     update_domain,
 )
 from elephantdb_spark.engine import DomainNotFoundError, DomainNotLoadedError
+from elephantdb_spark.plans import scan_locations
 from elephantdb_spark.sharding import shard_index
 from elephantdb_spark.store import shard_dirname
 
@@ -219,6 +221,11 @@ def test_direct_multi_get_wrong_host(spark, domain_root):
     other = [x for x in range(4) if x != s]
     with pytest.raises(WrongHostError):
         dom.direct_multi_get_df([b"key"], other)
+    # owning every shard still reads only the shard the key hashes to
+    df = dom.direct_multi_get_df([b"key"], list(range(4)))
+    assert bytes(df.collect()[0].value) == b"val"
+    scanned = set(re.findall(r"shard=(\d+)", " ".join(scan_locations(df))))
+    assert scanned == {str(s)}, scanned
 
 
 def test_count_and_to_map(spark, domain_root):

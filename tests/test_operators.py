@@ -444,23 +444,23 @@ def test_minhash_md5_mode_precision_and_planted_recall(spark, neardup_corpus):
     from elephantdb_spark.operators.dedup import (
         jaccard_shingle_pairs,
         minhash_lsh_pairs,
-        release_shingle_caches,
     )
+    from elephantdb_spark.pinning import release_pins
 
     exact = {
         (r.a, r.b)
         for r in jaccard_shingle_pairs(
-            neardup_corpus, "doc_id", "text", 3, 0.5, cache_index=False
+            neardup_corpus, "doc_id", "text", 3, 0.5
         ).collect()
     }
     lsh = {
         (r.a, r.b)
         for r in minhash_lsh_pairs(
             neardup_corpus, "doc_id", "text", num_perm=32, bands=8,
-            shingle_len=3, threshold=0.5, cache_index=False, hash_fn="md5",
+            shingle_len=3, threshold=0.5, hash_fn="md5",
         ).collect()
     }
-    release_shingle_caches()
+    release_pins()
     assert lsh <= exact
     assert len(lsh & exact) >= int(0.9 * len(exact))
     with pytest.raises(ValueError):

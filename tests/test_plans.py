@@ -95,3 +95,50 @@ def test_plan_summary_counting_rule():
         "pushed": 1, "scans": 4, "sorts": 1, "window": 1,
     }
 
+
+
+#: The same plan shape as the executed tree string and as a formatted
+#: explain: two shuffle Exchanges, one BroadcastExchange and one
+#: ReusedExchange (whose executed line embeds the Exchange it reuses).
+EXECUTED_REUSE_PLAN = """AdaptiveSparkPlan isFinalPlan=false
++- SortMergeJoin [k#1], [k#7], Inner
+   :- Sort [k#1 ASC NULLS FIRST], false, 0
+   :  +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=10]
+   :     +- BroadcastHashJoin [k#1], [n#3], Inner, BuildRight, false
+   :        :- FileScan parquet [k#1] Batched: true
+   :        +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, int, false]),false), [plan_id=5]
+   :           +- FileScan parquet [n#3] Batched: true
+   +- Sort [k#7 ASC NULLS FIRST], false, 0
+      +- ReusedExchange [k#7], Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=10]
+"""
+
+FORMATTED_REUSE_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (10)
++- SortMergeJoin Inner (9)
+   :- Sort (5)
+   :  +- Exchange (4)
+   :     +- BroadcastHashJoin Inner BuildRight (3)
+   :        :- Scan parquet  (1)
+   :        +- BroadcastExchange (2)
+   :           +- Scan parquet  (1b)
+   +- Sort (8)
+      +- ReusedExchange (7)
+
+
+(4) Exchange
+Arguments: hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=10]
+
+(7) ReusedExchange [Reuses operator id: 4]
+Output [1]: [k#7]
+"""
+
+
+def test_exchange_rule_skips_broadcast_and_reused_exchanges():
+    """count_exchanges (executed text) and plan_summary (formatted text)
+    share one rule: only nodes named exactly Exchange count, never a
+    BroadcastExchange, a ReusedExchange, or the reused Exchange its
+    executed line embeds, nor the formatted details section."""
+    from elephantdb_spark.plans import _exchange_nodes
+
+    assert _exchange_nodes(EXECUTED_REUSE_PLAN) == 1
+    assert plan_summary(FORMATTED_REUSE_PLAN)["exchanges"] == 1

@@ -313,56 +313,57 @@ def _assert_rdds_drain_to(spark, base: int, timeout: float = 10.0) -> None:
     assert n <= base, f"{n} persisted RDDs still registered (base {base})"
 
 
-def test_release_shingle_caches_frees_all(spark):
+def test_release_pins_frees_exactly_the_operator_pins(spark):
     """Round-2 verdict: near-dup operators persisted their shingle index
     with no unpersist path, so long sessions (bench, the driver sweep)
-    accumulated storage-memory pressure. release_shingle_caches() is the
-    deterministic lifecycle."""
-    from elephantdb_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        release_shingle_caches,
-    )
+    accumulated storage-memory pressure. release_pins() is the
+    deterministic lifecycle: it frees exactly the pins the operator made
+    and leaves every other persisted RDD alone."""
+    from elephantdb_spark import pinning
+    from elephantdb_spark.operators.dedup import minhash_lsh_pairs
 
-    import time
-
-    release_shingle_caches()  # drain anything a previous test left behind
-    before = _persistent_rdd_ids(spark)
+    pinning.release_pins()  # drain pins a previous test left behind
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog " * 3 + str(i % 5))
          for i in range(30)],
         "doc_id long, text string",
     )
+    own = spark.sparkContext.parallelize(range(10)).persist()
+    own.count()
+    before = _persistent_rdd_ids(spark)
     pairs = minhash_lsh_pairs(docs, "doc_id", "text", num_perm=8, bands=4,
                               threshold=0.5)
     pairs.count()
-    # ids, not a count: an older RDD still draining must not mask or
-    # fake this test's own
-    new = _persistent_rdd_ids(spark) - before
-    assert new  # the index really was cached
-    assert release_shingle_caches() >= 1
-    deadline = time.monotonic() + 10.0  # unpersist is asynchronous
-    left = _persistent_rdd_ids(spark) - before
-    while left and time.monotonic() < deadline:
-        time.sleep(0.2)
-        left = _persistent_rdd_ids(spark) - before
-    assert not left, f"persisted RDDs {sorted(left)} still registered"
+    # ids, not a count: an older RDD the context cleaner frees meanwhile
+    # must not mask or fake the operator's own
+    added = _persistent_rdd_ids(spark) - before
+    assert added  # the index really was pinned
+    recorded = set(pinning._PINNED[spark.sparkContext.applicationId])
+    assert recorded == added
+    assert pinning.release_pins() == len(added)
+    after = _persistent_rdd_ids(spark)
+    assert not added & after, f"pinned RDDs {sorted(added & after)} still registered"
+    assert own.id() in after  # the test's own persist is left alone
+    own.unpersist()
 
 
-def test_clean_corpus_cache_index_off_leaves_no_persisted_rdds(spark):
-    from elephantdb_spark.operators.dedup import release_shingle_caches
+def test_clean_corpus_pins_drain_after_release(spark):
+    from elephantdb_spark.pinning import release_pins
     from elephantdb_spark.pipeline import clean_corpus
 
-    release_shingle_caches()
+    release_pins()
     base = _n_persistent_rdds(spark)
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon zeta eta theta " * 5 + str(i))
          for i in range(20)],
         "doc_id long, text string",
     )
-    clean_corpus(docs, min_tokens=5, neardup="minhash", num_perm=8, bands=4,
-                 neardup_scope="pairs", cache_index=False).count()
-    # connected_components/edge persists release themselves; with
-    # cache_index=False nothing else should persist either
+    # held, so the context cleaner cannot free the pin before release
+    out = clean_corpus(docs, min_tokens=5, neardup="minhash", num_perm=8,
+                       bands=4, neardup_scope="pairs")
+    out.count()
+    assert release_pins() == 1  # the minhash shingle index
+    # nothing else in the pipeline stays persisted
     _assert_rdds_drain_to(spark, base)
 
 
@@ -398,13 +399,13 @@ def test_broadcast_toggles_match_broadcast_path(spark):
     c_b = {r.doc_id for r in
            clean_corpus(docs, min_tokens=5, neardup="minhash", num_perm=8,
                         bands=4, neardup_scope="pairs").collect()}
-    from elephantdb_spark.operators.dedup import release_shingle_caches
-    release_shingle_caches()
+    from elephantdb_spark.pinning import release_pins
+    release_pins()
     c_s = {r.doc_id for r in
            clean_corpus(docs, min_tokens=5, neardup="minhash", num_perm=8,
                         bands=4, neardup_scope="pairs",
                         broadcast_losers=False).collect()}
-    release_shingle_caches()
+    release_pins()
     assert c_b == c_s
 
 
