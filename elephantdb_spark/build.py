@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -410,13 +409,6 @@ def update_domain(
     return version
 
 
-#: Staged batches live under ``<version_dir>/_staging/batch-<i>`` — inside
-#: the unpublished version dir, so the token rule covers them: invisible to
-#: every reader, 'loading'/'updating' to status(), removed wholesale by
-#: cleanup() if abandoned.
-STAGING_DIRNAME = "_staging"
-
-
 class StagedBuild:
     """Append-to-unpublished-version staging — the Spark-first analogue of
     ``openPersistenceForAppend`` (reference:
@@ -431,19 +423,24 @@ class StagedBuild:
         sb.stage(batch1); sb.stage(batch2)       # raw parquet, no shuffle
         sb.publish()                             # merge → shard → token
 
-    Staged batches are written raw (no sharding, no sort) — the expensive
-    exchange happens exactly once at publish, over the union. Merge
-    semantics at publish: last-writer-wins where a LATER batch beats an
-    earlier one (append/put-overwrite order, JavaBerkDB.java:84-94), with
-    ``seq_col`` ordering within a batch; if the domain already has a
-    published version the result then merges into it with copy-forward,
-    exactly like :func:`update_domain`.
+    Staged batches are written raw (no sharding, no sort) to
+    ``<root>/.staging-<version>/batch-<i>`` — beside the version dir, not
+    in it — and the expensive exchange happens exactly once at publish,
+    over the union. Merge semantics at publish: last-writer-wins where a
+    LATER batch beats an earlier one (append/put-overwrite order,
+    JavaBerkDB.java:84-94), with ``seq_col`` ordering within a batch; if
+    the domain already has a published version the result then merges
+    into it with copy-forward, exactly like :func:`update_domain`.
 
-    Crash safety is the token rule (VersionedStore.java:102-108): a crash
-    before ``publish()`` leaves only an unpublished version dir — readers
-    never see it, ``status()`` reports loading/updating, and
-    ``cleanup()`` deletes it. ``resume()`` reopens such a dir to keep
-    staging after a restart.
+    Crash safety is the one commit protocol (``VersionedStore.publishing``,
+    VersionedStore.java:78-108): the reserved version dir stays empty and
+    unpublished while batches stage — readers never see it, ``status()``
+    reports loading/updating — and ``publish()`` is one
+    :func:`build_domain`/:func:`update_domain` into that version. The
+    staged batches are deleted only after the token exists, so a failed
+    or crashed publish leaves them for ``resume()`` + ``publish()``.
+    ``cleanup()`` deletes an abandoned build: its version dir and its
+    staging dir.
     """
 
     def __init__(
@@ -456,24 +453,21 @@ class StagedBuild:
         self.spark = spark
         self.store = DomainStore.create_or_open(domain_root, spec)
         if version is None:
-            version = int(time.time() * 1000)
+            version = self.store.new_version_id()
         self.version = int(version)
         self._published = False
-        vpath = self.store.create_version(self.version)
-        self._staging = os.path.join(vpath, STAGING_DIRNAME)
+        os.makedirs(self.store.create_version(self.version))
+        self._staging = self.store.staging_path(self.version)
+        shutil.rmtree(self._staging, ignore_errors=True)  # abandoned leftover
         os.makedirs(self._staging)
 
     @classmethod
     def resume(
         cls, spark: SparkSession, domain_root: str, version: int
     ) -> "StagedBuild":
-        """Reopen an unpublished staged version (e.g. after a restart).
-
-        Also recovers from a crash inside ``publish()``'s move-aside
-        window: if the version dir is gone but the
-        ``<root>/.staging-<version>`` aside exists, the staged batches
-        are moved back into a recreated version dir and staging
-        continues as if the publish had never started."""
+        """Reopen an unpublished staged version, after a restart or a
+        failed publish (whose rollback removed the reserved dir: it is
+        reserved again)."""
         self = cls.__new__(cls)
         self.spark = spark
         self.store = DomainStore.open(domain_root)
@@ -481,14 +475,10 @@ class StagedBuild:
         self._published = False
         if self.store.has_version(self.version):
             raise RuntimeError(f"version {version} is already published")
-        vpath = self.store.version_path(self.version)
-        self._staging = os.path.join(vpath, STAGING_DIRNAME)
-        aside = self.store.staging_aside_path(self.version)
-        if not os.path.isdir(self._staging) and os.path.isdir(aside):
-            os.makedirs(vpath, exist_ok=True)
-            os.rename(aside, self._staging)
+        self._staging = self.store.staging_path(self.version)
         if not os.path.isdir(self._staging):
             raise RuntimeError(f"no staged version {version} at {domain_root}")
+        os.makedirs(self.store.version_path(self.version), exist_ok=True)
         return self
 
     def _batch_dirs(self) -> list[tuple[int, str]]:
@@ -514,6 +504,7 @@ class StagedBuild:
     def abort(self) -> None:
         """Drop the unpublished version and everything staged in it."""
         self.store.fail_version(self.version)
+        shutil.rmtree(self._staging, ignore_errors=True)
         self._published = True  # handle is dead either way
 
     def publish(
@@ -531,51 +522,33 @@ class StagedBuild:
         dirs = self._batch_dirs()
         if not dirs:
             raise RuntimeError("nothing staged")
-        # Move staging aside, then clear the version dir: _write_version's
-        # errorifexists writer refuses a non-empty target, and the lazy
-        # batch reads must keep pointing at live files until the job runs.
-        vpath = self.store.version_path(self.version)
-        aside = self.store.staging_aside_path(self.version)
-        if os.path.exists(aside):
-            shutil.rmtree(aside)
-        os.rename(self._staging, aside)
-        shutil.rmtree(vpath)
-        try:
-            parts = []
-            for idx, _old in dirs:
-                parts.append(
-                    self.spark.read.parquet(os.path.join(aside, f"batch-{idx}"))
-                    .withColumn("__batch", F.lit(idx))
-                )
-            union = parts[0]
-            for p in parts[1:]:
-                union = union.unionByName(p)
-            prio = (
-                F.struct(F.col("__batch"), F.col(seq_col))
-                if seq_col
-                else F.col("__batch")
+        parts = [
+            self.spark.read.parquet(path).withColumn("__batch", F.lit(idx))
+            for idx, path in dirs
+        ]
+        union = parts[0]
+        for p in parts[1:]:
+            union = union.unionByName(p)
+        prio = (
+            F.struct(F.col("__batch"), F.col(seq_col))
+            if seq_col
+            else F.col("__batch")
+        )
+        merged = dedup_last_writer_wins(
+            union.select("key", "value", prio.alias("__prio")), "__prio"
+        )
+        if self.store.most_recent_version() is None:
+            build_domain(
+                self.spark, merged, self.store.root, self.store.spec,
+                version=self.version, indexer=indexer, dedup="none",
             )
-            merged = dedup_last_writer_wins(
-                union.select("key", "value", prio.alias("__prio")), "__prio"
+        else:
+            update_domain(
+                self.spark, merged, self.store.root,
+                version=self.version, indexer=indexer,
             )
-            prev = self.store.most_recent_version()
-            if prev is None:
-                build_domain(
-                    self.spark, merged, self.store.root, self.store.spec,
-                    version=self.version, indexer=indexer, dedup="none",
-                )
-            else:
-                update_domain(
-                    self.spark, merged, self.store.root,
-                    version=self.version, indexer=indexer,
-                )
-        except Exception:
-            # put the staged batches back so the build can be retried
-            os.makedirs(vpath, exist_ok=True)
-            os.rename(aside, self._staging)
-            raise
-        shutil.rmtree(aside)
         self._published = True
+        shutil.rmtree(self._staging)  # only now: the token exists
         return self.version
 
 
@@ -613,8 +586,7 @@ def compact_domain(
         return current
     extras = [
         name for name in os.listdir(cur_path)
-        if not name.startswith("shard=")
-        and name not in ("_SUCCESS", STAGING_DIRNAME)
+        if not name.startswith("shard=") and name != "_SUCCESS"
     ]
 
     with store.publishing(version) as (version, vpath):

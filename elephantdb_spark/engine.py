@@ -39,6 +39,7 @@ import warnings
 import weakref
 from collections import OrderedDict
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
@@ -187,11 +188,12 @@ def estimate_leaf_file_rows(df: DataFrame, max_footers: int = 8) -> int | None:
     on-disk bytes (exact, from the relation) × rows-per-byte sampled from
     ≤``max_footers`` parquet footers (exact row counts, ~KB reads, no
     job). Returns None for non-file plans (LogicalRDD, local relations)
-    or on any access failure — an estimator must degrade to "unknown",
-    never fail the query at plan time."""
-    try:
-        import pyarrow.parquet as pq
+    or when plan reflection (Py4J), a file (OSError) or a footer
+    (ValueError, which ArrowInvalid subclasses) fails — an estimator
+    degrades to "unknown" there. Any other error is a bug and propagates."""
+    import pyarrow.parquet as pq
 
+    try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
         total = 0
         sampled_rows = 0
@@ -218,7 +220,7 @@ def estimate_leaf_file_rows(df: DataFrame, max_footers: int = 8) -> int | None:
         if not sampled_bytes or not total:
             return None
         return max(1, int(total * (sampled_rows / sampled_bytes)))
-    except Exception:  # reflection/footer access is best-effort by contract
+    except (Py4JError, OSError, ValueError):
         return None
 
 
@@ -1341,12 +1343,9 @@ class Domain:
         }
 
     # -- lifecycle -----------------------------------------------------------
-    def cleanup_versions(
-        self, versions_to_keep: int = 1, max_aside_age_s: float | None = None
-    ) -> None:
-        """Version GC (A19, VersionedStore.java:110-127).
-        ``max_aside_age_s`` opt-in GCs abandoned staged-build asides."""
-        self.store.cleanup(versions_to_keep, max_aside_age_s=max_aside_age_s)
+    def cleanup_versions(self, versions_to_keep: int = 1) -> None:
+        """Version GC (A19, VersionedStore.java:110-127)."""
+        self.store.cleanup(versions_to_keep)
         self._sync_versions()
 
 

@@ -75,7 +75,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -376,7 +375,7 @@ def compact_neardup_history(
     if not any(frag for _, _, frag in subs):
         return subs[-1][1]  # bands' version: the one probes resolve
     if version is None:
-        version = int(time.time() * 1000)
+        version = max(store.new_version_id() for store, _, _ in subs)
     for store, cur, frag in subs:
         if frag:
             compact_domain(

@@ -11,7 +11,8 @@ elephantdb-core/src/jvm/elephantdb/store/DomainStore.java:16-180):
   half-written version can never be served (atomic publish);
 * every writer fills a new version inside ``publishing()``: reserve the
   dir, write, publish the token — or, on an exception, delete the partial
-  dir and record the failure (ElephantDBTap.java:166-188);
+  dir and record the failure (ElephantDBTap.java:166-188). ``publishing``
+  is the only caller of ``succeed_version``;
 * ``fail``/``delete`` remove dir + token; ``cleanup(n)`` keeps the n newest
   published versions and deletes everything else, including unpublished
   junk;
@@ -156,19 +157,28 @@ class VersionedStore:
     def fail_version(self, version: int) -> None:
         self.delete_version(version)
 
+    def new_version_id(self) -> int:
+        """The default id of a new version: epoch ms, but always above the
+        newest published version, so back-to-back writers within one
+        millisecond still publish distinct, increasing ids."""
+        newest = self.most_recent_version()
+        now = int(time.time() * 1000)
+        return now if newest is None else max(newest + 1, now)
+
     @contextmanager
     def publishing(self, version: int | None = None):
         """The one write protocol for a new version: reserve it (default
-        id: epoch ms), yield ``(version, path)`` for the caller to fill,
-        then publish its token on a clean exit. On an exception the
-        partial version is rolled back and the failure recorded
-        (ElephantDBTap.java:166-188; status → failed) before it
-        propagates."""
-        if version is None:
-            version = int(time.time() * 1000)
-        version = int(version)
-        path = self.create_version(version)
+        id: :meth:`new_version_id`), yield ``(version, path)`` for the
+        caller to fill, then publish its token on a clean exit. On an
+        exception — including one while reserving — the partial version
+        is rolled back and the failure recorded (ElephantDBTap.java:166-188;
+        status → failed) before it propagates."""
+        version = self.new_version_id() if version is None else int(version)
+        # outside the try: the rollback would delete the published version
+        if self.has_version(version):
+            raise RuntimeError(f"Version {version} already exists")
         try:
+            path = self.create_version(version)
             yield version, path
             self.succeed_version(version)
         except Exception as exc:
@@ -176,16 +186,13 @@ class VersionedStore:
             self.record_failure(version, repr(exc))
             raise
 
-    def staging_aside_path(self, version: int) -> str:
-        """Where StagedBuild.publish parks staged batches while it clears
-        and rebuilds the version dir. A crash in that window leaves this
-        dir as the only copy of the staged data — StagedBuild.resume()
-        recovers it; cleanup() GCs it only once its version is published
-        (an unpublished aside is still resumable and survives cleanup).
-        delete_version deliberately does
-        NOT touch it: the build-failure rollback inside publish() runs
-        fail_version while the aside still holds the staged batches that
-        publish's except-path is about to restore."""
+    def staging_path(self, version: int) -> str:
+        """Where StagedBuild stages the raw batches of unpublished
+        ``version``: a non-integer sibling of the version dir, so
+        ``publishing`` can rebuild the dir while the batches stay put.
+        It lives exactly as long as the unpublished version: ``cleanup``
+        deletes it, ``delete_version`` does not (a failed publish keeps
+        the batches for a retry)."""
         return os.path.join(self.root, f".staging-{int(version)}")
 
     def delete_version(self, version: int) -> None:
@@ -196,75 +203,36 @@ class VersionedStore:
         if os.path.exists(token):
             os.remove(token)
 
-    def cleanup(
-        self, versions_to_keep: int = -1, max_aside_age_s: float | None = None
-    ) -> None:
+    def cleanup(self, versions_to_keep: int = -1) -> None:
         """Keep the N newest published versions; delete every other
-        version-like entry, including unpublished dirs
-        (VersionedStore.java:110-127). No-op on a never-created root.
-
-        ``max_aside_age_s``: opt-in GC for UNPUBLISHED staging asides. By
-        default they are kept forever (they may be the only copy of an
-        abandoned StagedBuild's batches — resumable via
-        StagedBuild.resume()); with an age set, asides whose newest file
-        mtime is older than the threshold are deemed crash leftovers and
-        removed."""
+        version-like entry, including unpublished dirs and every
+        ``.staging-*`` dir (VersionedStore.java:110-127). No-op on a
+        never-created root."""
         if not os.path.isdir(self.root):
             return
         versions = self.all_versions()
         if versions_to_keep >= 0:
             versions = versions[: min(len(versions), versions_to_keep)]
         keepers = set(versions)
-        # snapshot the published set BEFORE deleting anything: the loop
-        # below removes version tokens, and a live re-read per aside
-        # would (listdir-order-dependently) see a just-deleted version as
-        # unpublished and keep its crash-leftover aside forever
-        published = set(self.all_versions())
-        for name in os.listdir(self.root):
+        # every dir before any token (delete_version's order): a GC cut
+        # short leaves at worst a dangling token of an old version, never
+        # an unpublished dir that status() would report as in flight
+        names = sorted(
+            os.listdir(self.root),
+            key=lambda n: n.endswith(FINISHED_VERSION_SUFFIX),
+        )
+        for name in names:
             full = os.path.join(self.root, name)
+            if name.startswith(".staging-") or name.endswith(".compact-tmp"):
+                # StagedBuild batches share the lifetime of their
+                # unpublished version, which this pass deletes too; the
+                # self-heal scratch (build._self_heal_fragmentation) is a
+                # copy of an unpublished version's shards
+                shutil.rmtree(full, ignore_errors=True)
+                continue
             stem = name
             if name.endswith(FINISHED_VERSION_SUFFIX):
                 stem = name[: -len(FINISHED_VERSION_SUFFIX)]
-            elif name.endswith(".compact-tmp"):
-                # in-publish self-heal scratch (build._self_heal_fragmentation):
-                # normally removed by its try/finally; surviving one means a
-                # hard kill mid-heal. Its version dir is unpublished (the heal
-                # runs pre-token), the data is a COPY of that version's
-                # shards, and a retry uses a new version id/path — never the
-                # only copy of anything, always safe to GC.
-                shutil.rmtree(full, ignore_errors=True)
-                continue
-            elif name.startswith(".staging-"):
-                # a mid-publish staging aside (StagedBuild): if its version
-                # is published the aside is a crash leftover from after the
-                # token write — safe to GC. If UNPUBLISHED, the aside may be
-                # the ONLY copy of staged data from a crash inside publish's
-                # clear-and-rebuild window; StagedBuild.resume() recovers it,
-                # so routine cleanup must leave it alone (ADVICE r3).
-                try:
-                    aside_v = int(name[len(".staging-"):])
-                except ValueError:
-                    aside_v = None
-                if aside_v is None or aside_v in published:
-                    shutil.rmtree(full)
-                elif max_aside_age_s is not None:
-                    # opt-in age gate: an abandoned staged build's aside
-                    # should not survive forever. Age = newest mtime under
-                    # the aside (a resumed-then-abandoned build keeps
-                    # touching files; only a genuinely cold aside GCs).
-                    newest = os.path.getmtime(full)
-                    for dirpath, _dirs, files in os.walk(full):
-                        for f in files:
-                            try:
-                                newest = max(
-                                    newest,
-                                    os.path.getmtime(os.path.join(dirpath, f)),
-                                )
-                            except OSError:
-                                pass
-                    if time.time() - newest > max_aside_age_s:
-                        shutil.rmtree(full)
-                continue
             try:
                 v = int(stem)
             except ValueError:

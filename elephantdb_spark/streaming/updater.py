@@ -17,9 +17,9 @@ Two pieces:
   the reference's atomic swap (common/domain.clj:208-228).
 
 * :func:`sync_domain` — the literal remote→local version pull: copy the
-  newest published version's shard tree, write the token LAST (publish
-  order preserved), optionally rate-limited (A26), then GC old local
-  versions (keep 1 — common/domain.clj:126-133).
+  newest published version's shard tree inside ``publishing`` (token
+  LAST, a failed copy rolled back), optionally rate-limited (A26), then
+  GC old local versions (keep 1 — common/domain.clj:126-133).
 """
 
 from __future__ import annotations
@@ -65,9 +65,7 @@ def stream_build(
         if version_fn is not None:
             return version_fn(batch_id)
         # strictly increasing even for sub-millisecond micro-batches
-        store = DomainStore.create_or_open(domain_root, spec)
-        latest = store.most_recent_version() or 0
-        return max(latest + 1, int(time.time() * 1000))
+        return DomainStore.create_or_open(domain_root, spec).new_version_id()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -139,9 +137,10 @@ def sync_domain(
     """Pull the newest published remote version into the local store if it
     is newer than the local one (needs-update? — common/domain.clj:109-117).
 
-    Copy data first, token last (publish-order preserved: a crashed sync
-    leaves an invisible partial version, exactly like the reference's
-    failVersion path). Returns the synced version or None if up to date.
+    The copy runs inside ``VersionedStore.publishing``: data first,
+    token last, and a failed copy rolls the partial version back and
+    records the failure (the reference's failVersion path). Returns the
+    synced version or None if up to date.
     """
     remote = VersionedStore(remote_root)
     remote_version = remote.most_recent_version()
@@ -161,11 +160,8 @@ def sync_domain(
     local_version = local.most_recent_version()
     if local_version is not None and local_version >= remote_version:
         return None
-    dst = local.version_path(remote_version)
-    if os.path.exists(dst):
-        shutil.rmtree(dst)
-    _copy_rate_limited(remote.version_path(remote_version), dst, rate_limit_kbps)
-    local.succeed_version(remote_version)  # token LAST = atomic publish
+    with local.publishing(remote_version) as (_, dst):
+        _copy_rate_limited(remote.version_path(remote_version), dst, rate_limit_kbps)
     local.cleanup(versions_to_keep)
     return remote_version
 

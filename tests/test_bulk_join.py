@@ -390,6 +390,8 @@ def test_auto_tasks_partial_parallelism(monkeypatch):
                 defaultParallelism = 32  # full lift would be m=4
 
     fake = _FakeSelf()
+    # no probe frame at all: the footer floor is stubbed out too
+    monkeypatch.setattr(eng, "estimate_leaf_file_rows", lambda df: None)
     sel = lambda rows: (
         monkeypatch.setattr(eng, "estimate_plan_rows", lambda df: rows)
         or Domain._auto_tasks_per_shard(fake, None)
@@ -451,6 +453,32 @@ def test_auto_tasks_filtered_probe_floor(spark, tmp_path, monkeypatch):
     mixed_floor = eng.estimate_leaf_file_rows(mixed)
     assert mixed_floor is not None and mixed_floor >= n_rows * 0.8
     assert eng.Domain._auto_tasks_per_shard(_FakeSelf(), mixed) > 1
+
+
+def test_leaf_row_estimate_degrades_only_on_access_failures(
+    spark, tmp_path, monkeypatch
+):
+    """The footer floor decides bulk_join's tasks_per_shard: a file it
+    cannot read makes it "unknown" (None), but an unexpected error
+    propagates instead of silently choosing m=1."""
+    import pyarrow.parquet as pq
+
+    import elephantdb_spark.engine as eng
+
+    base = str(tmp_path / "est")
+    spark.range(100).write.parquet(base)
+    probe = spark.read.parquet(base)
+
+    def raising(exc):
+        def read_metadata(*_a, **_kw):
+            raise exc
+        return read_metadata
+
+    monkeypatch.setattr(pq, "read_metadata", raising(OSError("gone")))
+    assert eng.estimate_leaf_file_rows(probe) is None
+    monkeypatch.setattr(pq, "read_metadata", raising(RuntimeError("bug")))
+    with pytest.raises(RuntimeError, match="bug"):
+        eng.estimate_leaf_file_rows(probe)
 
 
 def test_bulk_join_default_is_auto_and_correct(spark, dom_rg):

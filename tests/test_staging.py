@@ -1,8 +1,11 @@
 """Append-to-unpublished-version staging (StagedBuild) — the
 openPersistenceForAppend analogue (Coordinator.java:12-23): batches
-accumulate invisibly under the reserved version dir; publish() is the
-atomic commit; a crash before publish leaves nothing visible and
-cleanup() removes the junk (VersionedStore.java:102-108 semantics)."""
+accumulate invisibly in ``<root>/.staging-<v>`` beside the reserved,
+unpublished version dir; publish() is one build/update through
+``publishing`` (the atomic commit); a crash before the token leaves
+nothing visible, and cleanup() removes the version dir and its staging
+dir (VersionedStore.java:102-108 semantics). Crash points inside
+publish() are covered by tests/test_publish_protocol.py."""
 
 from __future__ import annotations
 
@@ -79,9 +82,11 @@ def test_nothing_visible_before_publish_and_cleanup_removes_junk(spark, tmp_path
     assert DomainStore.open(root).all_versions() == []
 
     # simulated crash: the handle is simply dropped; cleanup removes the
-    # unpublished dir wholesale, staged batches included
-    DomainStore.open(root).cleanup(versions_to_keep=1)
-    assert not os.path.exists(DomainStore.open(root).version_path(5))
+    # unpublished dir and its staged batches
+    store = DomainStore.open(root)
+    store.cleanup(versions_to_keep=1)
+    assert not os.path.exists(store.version_path(5))
+    assert not os.path.exists(store.staging_path(5))
 
 
 def test_staging_into_existing_domain_merges_like_update(spark, tmp_path):
@@ -146,57 +151,31 @@ def test_abort_and_empty_publish_guardrails(spark, tmp_path):
         sb.publish()  # nothing staged
     sb.stage(_kv(spark, [(1, "a")]))
     sb.abort()
-    assert not os.path.exists(DomainStore.open(root).version_path(1))
+    store = DomainStore.open(root)
+    assert not os.path.exists(store.version_path(1))
+    assert not os.path.exists(store.staging_path(1))
     with pytest.raises(RuntimeError):
         sb.stage(_kv(spark, [(2, "b")]))
 
 
-def test_resume_recovers_mid_publish_crash_window(spark, tmp_path):
-    """ADVICE r2: a crash after publish() moves staging aside (and rmtree's
-    the version dir) used to strand the staged data where neither resume()
-    nor cleanup() could see it. resume() now moves the aside back."""
-    import shutil
-
-    root = str(tmp_path / "d")
-    sb = StagedBuild(spark, root, DomainSpec(num_shards=4), version=1)
-    sb.stage(_kv(spark, [(1, "a"), (2, "b")]))
-
-    # simulate the crash window: staging moved aside, version dir cleared
-    store = DomainStore.open(root)
-    aside = store.staging_aside_path(1)
-    vpath = store.version_path(1)
-    os.rename(os.path.join(vpath, "_staging"), aside)
-    shutil.rmtree(vpath)
-
-    recovered = StagedBuild.resume(spark, root, 1)
-    recovered.stage(_kv(spark, [(3, "c")]))
-    assert recovered.publish() == 1
-    dom = Domain(spark, root)
-    assert dom.get(b"1") == b"a" and dom.get(b"3") == b"c"
-    assert not os.path.exists(aside)
-
-
 def test_cleanup_gcs_orphaned_staging_aside(spark, tmp_path):
+    """A staging dir lives exactly as long as its unpublished version:
+    cleanup deletes every ``.staging-*`` entry — the leftover of a
+    published version and an abandoned unpublished build alike."""
     root = str(tmp_path / "d")
     build_domain(spark, _kv(spark, [(1, "a")]), root,
                  DomainSpec(num_shards=4), version=1)
     store = DomainStore.open(root)
-    # orphan aside for a published version (crash after token, before rm)
-    aside = store.staging_aside_path(1)
-    os.makedirs(aside)
-    # aside for a version that never published: the only copy of a
-    # still-resumable staged build — cleanup must NOT destroy it (ADVICE r3)
-    aside9 = store.staging_aside_path(9)
-    os.makedirs(aside9)
+    # leftover for a published version (crash after token, before rm)
+    os.makedirs(store.staging_path(1))
+    # an abandoned staged build: reserved version 9, one staged batch
+    sb = StagedBuild(spark, root, version=9)
+    sb.stage(_kv(spark, [(2, "b")]))
     store.cleanup(versions_to_keep=1)
-    assert not os.path.exists(aside)
-    assert os.path.exists(aside9)
+    assert not os.path.exists(store.staging_path(1))
+    assert not os.path.exists(store.staging_path(9))
+    assert store.unpublished_versions() == []
     assert Domain(spark, root).get(b"1") == b"a"  # kept version untouched
-    # once version 9 publishes (then gets cleaned), its aside is GC-able
-    os.makedirs(store.version_path(9), exist_ok=True)
-    store.succeed_version(9)
-    store.cleanup(versions_to_keep=1)
-    assert not os.path.exists(aside9)
 
 
 def test_failed_update_keeps_domain_serving_in_catalog(spark, tmp_path):

@@ -43,6 +43,12 @@ def test_create_existing_version_fails(tmp_path):
     vs.succeed_version(5)
     with pytest.raises(RuntimeError):
         vs.create_version(5)
+    # publishing refuses it before its rollback could delete version 5
+    with pytest.raises(RuntimeError):
+        with vs.publishing(5):
+            pass
+    assert vs.all_versions() == [5] and os.path.isdir(vs.version_path(5))
+    assert vs.last_failure() is None
 
 
 def test_create_clears_incomplete_leftover(tmp_path):
@@ -129,10 +135,8 @@ def test_cleanup_on_never_created_root_is_noop(tmp_path):
 
 
 def test_cleanup_gcs_aside_of_version_deleted_in_same_pass(tmp_path):
-    """Review finding (r4, pass 3): the published-set check ran live per
-    aside while the same loop deleted version tokens — listdir order
-    could leave a published version's crash-leftover aside un-GC-able
-    forever. The snapshot makes it deterministic."""
+    """Review finding (r4, pass 3): the staging dir of a version the
+    same cleanup pass deletes must go too, whatever the listdir order."""
     import os
 
     from elephantdb_spark.store import VersionedStore
@@ -141,72 +145,13 @@ def test_cleanup_gcs_aside_of_version_deleted_in_same_pass(tmp_path):
     for v in (5, 6):
         vs.create_version(v)
         vs.succeed_version(v)
-    aside = vs.staging_aside_path(5)
+    aside = vs.staging_path(5)
     os.makedirs(aside)
     with open(os.path.join(aside, "batch-0"), "w") as fh:
         fh.write("staged")
     vs.cleanup(versions_to_keep=1)
     assert vs.all_versions() == [6]
     assert not os.path.exists(aside), "published-version aside must GC"
-
-
-def test_cleanup_age_gates_unpublished_asides(tmp_path):
-    """VERDICT r4 item 7: unpublished asides survive routine cleanup (they
-    may be the only copy of an abandoned StagedBuild), but with the opt-in
-    max_aside_age_s a genuinely cold aside finally GCs."""
-    import os
-    import time
-
-    from elephantdb_spark.store import VersionedStore
-
-    vs = VersionedStore(str(tmp_path / "dom"))
-    vs.create_version(1)
-    vs.succeed_version(1)
-    aside = vs.staging_aside_path(99)  # version 99 never published
-    os.makedirs(aside)
-    batch = os.path.join(aside, "batch-0")
-    with open(batch, "w") as fh:
-        fh.write("staged")
-
-    # default: kept forever
-    vs.cleanup()
-    assert os.path.exists(aside)
-    # fresh aside with an age gate: still kept
-    vs.cleanup(max_aside_age_s=3600)
-    assert os.path.exists(aside)
-    # age every file AND the dir beyond the gate: GCs
-    old = time.time() - 7200
-    os.utime(aside, (old, old))
-    os.utime(batch, (old, old))
-    vs.cleanup(max_aside_age_s=3600)
-    assert not os.path.exists(aside)
-    # published version untouched throughout
-    assert vs.all_versions() == [1]
-
-
-def test_cleanup_age_gate_spares_recently_touched_aside(tmp_path):
-    """A resumed-then-abandoned build keeps touching files inside the
-    aside; one fresh file must keep the whole aside alive."""
-    import os
-    import time
-
-    from elephantdb_spark.store import VersionedStore
-
-    vs = VersionedStore(str(tmp_path / "dom"))
-    aside = vs.staging_aside_path(7)
-    os.makedirs(os.path.join(aside, "batch-0"))
-    old_f = os.path.join(aside, "batch-0", "part-0.parquet")
-    with open(old_f, "w") as fh:
-        fh.write("x")
-    old = time.time() - 7200
-    os.utime(aside, (old, old))
-    os.utime(os.path.join(aside, "batch-0"), (old, old))
-    os.utime(old_f, (old, old))
-    fresh = os.path.join(aside, "batch-1.marker")
-    with open(fresh, "w") as fh:
-        fh.write("y")  # mtime = now
-    vs.cleanup(max_aside_age_s=3600)
-    assert os.path.exists(aside), "one fresh file keeps the aside alive"
 
 
 def test_yaml_spec_written_and_round_trips(tmp_path):
@@ -306,3 +251,18 @@ def test_publishing_default_version_is_epoch_ms(tmp_path):
     assert lo <= v <= int(time.time() * 1000)
     assert vs.all_versions() == [v]
 
+
+def test_default_version_ids_stay_distinct_within_one_millisecond(
+    tmp_path, monkeypatch
+):
+    """Two default-id writers in the same millisecond: the second id is
+    the newest published + 1, not a collision with it."""
+    vs = VersionedStore(str(tmp_path))
+    monkeypatch.setattr(time, "time", lambda: 1_700_000_000.0)
+    ids = []
+    for _ in range(2):
+        with vs.publishing() as (v, path):
+            os.makedirs(path)
+        ids.append(v)
+    assert ids == [1_700_000_000_000, 1_700_000_000_001]
+    assert vs.all_versions() == ids[::-1]
