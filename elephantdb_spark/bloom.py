@@ -27,7 +27,9 @@ Hashing is double hashing over one blake2b-128 of the key:
 ``bit_i = (h1 + i*h2) mod m`` — deterministic across processes, no
 seed material beyond the key bytes. The batch paths compute all k
 positions of every key as one ``(cnt, k)`` array (:func:`_bit_positions`),
-so a serving test is one gather whatever the key count.
+so a test is one gather whatever the key count. A serving handle keeps
+its files' filters in one :class:`BloomBank`, so one gather tests every
+(key, file) pair of a call.
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ import contextlib
 import math
 import os
 import struct
+import threading
 from hashlib import blake2b
 
 _MAGIC = b"EDBBLOOM"
@@ -62,10 +65,17 @@ def _hash_pair(key: bytes) -> tuple[int, int]:
     )
 
 
-def _bit_positions(digests: bytes, m: int, k: int):
-    """All k bit positions of every 16-byte digest in ``digests``, as a
-    ``(cnt, k)`` uint64 array: ``(r1 + i*r2) % m`` with ``r1 = h1 % m``
-    and ``r2 = (h2 | 1) % m`` (odd-ified BEFORE the mod, like ``add``).
+def _bit_positions(digests, m, k):
+    """All bit positions of every 16-byte digest in ``digests`` (a
+    :meth:`BloomFilter.hash_keys` blob, or a C-contiguous ``(cnt, 2)``
+    uint64 array of the same digests), as a ``(cnt, max k)`` uint64
+    array: ``(r1 + i*r2) % m`` with ``r1 = h1 % m`` and
+    ``r2 = (h2 | 1) % m`` (odd-ified BEFORE the mod, like ``add``).
+
+    ``m`` and ``k`` are one filter's scalars, or per-row arrays when the
+    rows test different filters (a :class:`BloomBank`). A row's columns
+    past its own ``k`` repeat its first position, so testing or setting
+    them changes nothing.
 
     Exactness: modular arithmetic gives ``(h1 + i*h2) % m ==
     (r1 + i*r2) % m``, and since r1, r2 < m the sum is below ``k*m`` —
@@ -75,10 +85,30 @@ def _bit_positions(digests: bytes, m: int, k: int):
     import numpy as np
 
     h = np.frombuffer(digests, dtype="<u8").reshape(-1, 2)
-    mm = np.uint64(m)
+    mm = np.asarray(m, dtype=np.uint64)
+    kk = np.asarray(k)
     r1 = h[:, 0] % mm
     r2 = (h[:, 1] | np.uint64(1)) % mm
-    return (r1[:, None] + np.arange(k, dtype=np.uint64) * r2[:, None]) % mm
+    i = np.arange(kk.max(), dtype=np.uint64)
+    pos = (r1[:, None] + i * r2[:, None]) % mm[..., None]
+    if kk.ndim:
+        pos = np.where(i < kk.astype(np.uint64)[:, None], pos, pos[:, :1])
+    return pos
+
+
+def _all_bits_set(bits, digests, m, k, offset=0):
+    """One gather: for each digest row, whether all its bit positions
+    (:func:`_bit_positions`) are set in the filter whose bits start at
+    byte ``offset`` of the uint8 array ``bits``. ``offset``, ``m`` and
+    ``k`` are scalars or per-row arrays. A bool array, one per row."""
+    import numpy as np
+
+    pos = _bit_positions(digests, m, k)
+    byte = (pos >> np.uint64(3)) + np.asarray(offset, dtype=np.uint64).reshape(-1, 1)
+    hit = bits[byte] & np.left_shift(
+        np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
+    )
+    return hit.all(axis=1)
 
 
 class BloomFilter:
@@ -206,10 +236,11 @@ class BloomFilter:
 
     @staticmethod
     def hash_keys(keys) -> bytes:
-        """Digest blob for :meth:`contains_digests` — hash once, test
-        against MANY filters (the serving probe checks the same key set
-        against every file's sidecar in a shard; blake2b is the only
-        per-key cost and it must not repeat per file)."""
+        """Digest blob for :meth:`contains_digests` and
+        :meth:`BloomBank.contains` — hash once, test against MANY filters
+        (the serving probe tests a call's keys against every file's
+        sidecar; blake2b is the only per-key cost and it must not repeat
+        per file)."""
         if not isinstance(keys, (list, tuple)):
             # materialize one-shot iterators BEFORE hashing: the fallback
             # below re-iterates, and resuming a half-consumed iterator
@@ -227,11 +258,9 @@ class BloomFilter:
 
     def contains_digests(self, digests: bytes) -> list[bool]:
         """Vectorized bulk :meth:`might_contain` over a
-        :meth:`hash_keys` blob: one gather of all k bits of every key
-        (:func:`_bit_positions` — exactly the scalar path's positions,
-        so the answers are identical): the same few numpy calls whatever
-        the key count. The serving probe runs one per shard file, mostly
-        over a handful of keys, so the per-call cost is what counts."""
+        :meth:`hash_keys` blob: the one-filter case of the bank's gather
+        (:func:`_all_bits_set` over :func:`_bit_positions` — exactly the
+        scalar path's positions, so the answers are identical)."""
         import numpy as np
 
         if len(digests) % 16:
@@ -243,12 +272,8 @@ class BloomFilter:
             )
         if not digests:
             return []
-        pos = _bit_positions(digests, self.m, self.k)
         bits = np.frombuffer(self.bits, dtype=np.uint8)
-        hit = bits[pos >> np.uint64(3)] & np.left_shift(
-            np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
-        )
-        return hit.all(axis=1).tolist()
+        return _all_bits_set(bits, digests, self.m, self.k).tolist()
 
     def contains_batch(self, keys) -> list[bool]:
         """Bulk membership test; element i answers for ``keys[i]``."""
@@ -270,6 +295,47 @@ class BloomFilter:
         if len(bits) != (m + 7) // 8:
             raise ValueError("bloom sidecar size mismatch")
         return cls(m, k, n, bits)
+
+
+class BloomBank:
+    """Many filters' bits in one append-only uint8 array, so that one
+    gather (:meth:`contains`) tests any mix of (key, filter) pairs — the
+    serving probe tests every (key, shard file) pair of a call at once
+    instead of running one :meth:`BloomFilter.contains_digests` per file.
+
+    :meth:`add` appends under a lock and grows by doubling into a fresh
+    array, so an array a reader already holds still covers every offset
+    handed out before it was taken; a filter's bits never move within
+    an array and are never overwritten."""
+
+    def __init__(self):
+        import numpy as np
+
+        self.bits = np.zeros(0, dtype=np.uint8)
+        self._used = 0
+        self._lock = threading.Lock()
+
+    def add(self, bf: BloomFilter) -> int:
+        """Append ``bf``'s bits; returns their byte offset in the bank."""
+        import numpy as np
+
+        raw = np.frombuffer(bf.bits, dtype=np.uint8)
+        with self._lock:
+            off, end = self._used, self._used + len(raw)
+            if end > len(self.bits):
+                grown = np.empty(max(end, 2 * len(self.bits)), dtype=np.uint8)
+                grown[:off] = self.bits[:off]
+                self.bits = grown
+            self.bits[off:end] = raw
+            self._used = end
+        return off
+
+    def contains(self, digests, offsets, m, k):
+        """Row i: might the filter added at ``offsets[i]`` (with
+        ``m[i]`` bits and ``k[i]`` hashes) contain digest row i of
+        ``digests`` (a ``(cnt, 2)`` uint64 array or a
+        :meth:`BloomFilter.hash_keys` blob)? One gather; a bool array."""
+        return _all_bits_set(self.bits, digests, m, k, offsets)
 
 
 def load_sidecar(data_path: str) -> BloomFilter | None:

@@ -44,19 +44,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
+from elephantdb_spark.bloom import BloomBank, BloomFilter, load_sidecar
 from elephantdb_spark.registry import resolve_format, resolve_scheme
 from elephantdb_spark.spec import DomainSpec
 from elephantdb_spark.store import DomainStore, shard_dirname
 
 #: Rows per record batch of a shard file's local Arrow copy: BerkeleyDB
-#: JE's ``nodeMax``, the most entries one B-tree node of the reference's
-#: local persistence holds (JavaBerkDB.java:41-82). A probe reads only
-#: the batches whose key bounds admit one of its keys.
-LOCAL_BATCH_ROWS = 512
+#: JE's default ``je.nodeMaxEntries`` (128), the most entries one B-tree
+#: node of the reference's local persistence holds (JavaBerkDB.java:41-82).
+#: A probe reads only the batches whose key bounds admit one of its keys.
+LOCAL_BATCH_ROWS = 128
 
 #: ``Domain.serving_stats()`` counter names.
 SERVING_STATS = (
-    "files_converted", "batches_read", "bloom_tests", "bloom_rejects",
+    "files_converted", "batches_read", "bytes_read", "bloom_tests",
+    "bloom_rejects",
 )
 
 #: Serving-cache capacity (open local-copy readers / shard-dir listings).
@@ -65,11 +67,14 @@ SERVING_STATS = (
 SERVING_CACHE_CAP = 512
 
 
-def convert_shard_file(src: str, dst: str) -> tuple[list[bytes], list[bytes]]:
+def convert_shard_file(
+    src: str, dst: str
+) -> tuple[list[bytes], list[bytes], list[int]]:
     """Write the key-sorted parquet shard file ``src`` to ``dst`` as an
     uncompressed Arrow IPC file of record batches of at most
     LOCAL_BATCH_ROWS rows, in file order. Returns each batch's exact key
-    ``(mins, maxs)``, taken from its rows. Reads one row group at a time,
+    bounds and size, ``(mins, maxs, nbytes)``, taken from its rows (a
+    batch read back has the same ``nbytes``). Reads one row group at a time,
     so peak memory is one decoded group, never the whole file. Writes to
     a temporary name and renames it; on error neither name is left."""
     import pyarrow as pa
@@ -77,25 +82,34 @@ def convert_shard_file(src: str, dst: str) -> tuple[list[bytes], list[bytes]]:
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(src)
-    schema = pa.schema([pf.schema_arrow.field("key"), pf.schema_arrow.field("value")])
+    # nullable fields and no metadata: copies of files that different
+    # jobs wrote share one schema, so a probe reads them as one table
+    schema = pa.schema(
+        [(name, pf.schema_arrow.field(name).type) for name in ("key", "value")]
+    )
     mins: list[bytes] = []
     maxs: list[bytes] = []
+    sizes: list[int] = []
     tmp = dst + ".tmp"
     try:
         with pa.OSFile(tmp, "wb") as sink, pa.ipc.new_file(sink, schema) as w:
             for g in range(pf.num_row_groups):
-                group = pf.read_row_group(g, columns=["key", "value"])
+                group = pa.Table.from_arrays(
+                    pf.read_row_group(g, columns=["key", "value"]).columns,
+                    schema=schema,
+                )
                 for batch in group.to_batches(max_chunksize=LOCAL_BATCH_ROWS):
                     if batch.num_rows:
                         bounds = pc.min_max(batch.column(0))
                         mins.append(bounds["min"].as_py())
                         maxs.append(bounds["max"].as_py())
+                        sizes.append(batch.nbytes)
                         w.write_batch(batch)
         os.replace(tmp, dst)
     except BaseException:
         _unlink_quiet(tmp)
         raise
-    return mins, maxs
+    return mins, maxs, sizes
 
 
 def _unlink_quiet(path: str) -> None:
@@ -107,31 +121,34 @@ def _unlink_quiet(path: str) -> None:
 
 class _LocalCopy:
     """One published shard file's local Arrow copy on a serving handle:
-    its path, exact per-batch key bounds and size once converted, the
-    file's Bloom sidecar, and a reader that the handle's LRU may close.
-    ``lock`` serializes the conversion and every read. The file is
-    removed when the object dies, so a probe still holding a copy the
-    handle dropped keeps reading it."""
+    its path, exact per-batch key bounds and sizes and its file size once
+    converted, where the file's Bloom sidecar sits in the handle's bank,
+    and a reader that the handle's LRU may close. ``lock`` serializes the
+    conversion and every read. The file is removed when the object dies,
+    so a probe still holding a copy the handle dropped keeps reading it."""
 
-    def __init__(self, src: str):
+    def __init__(self, src: str, bank):
         self.src = src
         self.path: str | None = None
         self.mins: list[bytes] = []
         self.maxs: list[bytes] = []
+        self.sizes: list[int] = []
         self.nbytes = 0
+        self._bank = bank
+        #: ``(bank, offset, m, k)`` of the sidecar's bits, or None
         self.bloom = None
         self.reader = None
         self.lock = threading.Lock()
 
     def convert(self, dst: str) -> None:
-        from elephantdb_spark.bloom import load_sidecar
-
-        self.mins, self.maxs = convert_shard_file(self.src, dst)
+        self.mins, self.maxs, self.sizes = convert_shard_file(self.src, dst)
         weakref.finalize(self, _unlink_quiet, dst)
         self.nbytes = os.path.getsize(dst)
         # optional Bloom sidecar (bloom.py): in-memory miss short-circuit;
-        # None when the domain was built without one
-        self.bloom = load_sidecar(self.src)
+        # absent when the domain was built without one
+        bf = load_sidecar(self.src)
+        if bf is not None:
+            self.bloom = (self._bank, self._bank.add(bf), bf.m, bf.k)
         self.path = dst  # last: a set path means the copy is complete
 
 
@@ -328,6 +345,9 @@ class Domain:
         self._local_dir_fin = None
         self._copy_ids = itertools.count()
         self._copies: dict[str, _LocalCopy] = {}
+        # the copies' Bloom sidecars, in one bank so a call tests every
+        # (key, file) pair with one gather; replaced with the copies
+        self._bloom_bank = BloomBank()
         # copies with an open reader, LRU (VERDICT r6 item 3): a hot
         # serving process over a >512-file domain — exactly the fragmented
         # shape repeated A20 appends produce — must close cold readers one
@@ -520,6 +540,7 @@ class Domain:
         held."""
         self._copies.clear()
         self._readers.clear()
+        self._bloom_bank = BloomBank()
 
     def _empty_kv(self, with_shard: bool = True) -> DataFrame:
         schema = KV_SHARD_SCHEMA if with_shard else KV_SCHEMA
@@ -1090,11 +1111,20 @@ class Domain:
     def local_multi_get(
         self, keys: list[bytes], version: int | None = None
     ) -> dict[bytes, bytes | None]:
-        """Serving-layer reads without a Spark job, on the caller thread:
-        per shard the keys hash to, probe each of its files through the
-        handle's local Arrow copy (see :meth:`_local_copy`) — Bloom, then
-        bisect over exact per-batch key bounds, then read only the
-        ≤LOCAL_BATCH_ROWS-row batches that can hold a key.
+        """Serving-layer reads without a Spark job, on the caller thread,
+        through the handle's local Arrow copies (see :meth:`_local_copy`)
+        of the files of the shards the keys hash to. Each step runs once
+        per call, not once per file:
+
+        1. Bloom: the call's distinct keys are hashed once, and every
+           (key, file) pair is tested with one gather against the
+           handle's bank of sidecars (:class:`~elephantdb_spark.bloom.BloomBank`);
+        2. bisect: each surviving pair selects the ≤LOCAL_BATCH_ROWS-row
+           batches whose exact key bounds admit the key;
+        3. lookup: the selected batches are read, each shard's files
+           newest first, as one table, and one ``pc.is_in`` over its key
+           column finds the rows; a key takes the value of its first
+           row, so a later file wins and, within a file, the first row.
 
         This is the faithful analogue of the reference's serving read — a
         local persistence probe (JavaBerkDB.java:70-82), never a cluster
@@ -1106,64 +1136,99 @@ class Domain:
             return self.multi_get(keys, version)
         # lazy: pyarrow is only required by the local probe path, not by
         # importing the package
+        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
         v = self._resolve_version(version)
         vpath = self.store.version_path(v)
         n = self.spec.num_shards
-        by_shard: dict[int, list[bytes]] = {}
-        for k in keys:
-            by_shard.setdefault(self._scheme.shard_index(bytes(k), n), []).append(bytes(k))
-
         out: dict[bytes, bytes | None] = {bytes(k): None for k in keys}
+        uniq = list(out)
+        shard_of = {k: self._scheme.shard_index(k, n) for k in uniq}
+        by_shard: dict[int, list[int]] = {}
+        for i, k in enumerate(uniq):
+            by_shard.setdefault(shard_of[k], []).append(i)
         # counters are summed here and added to the handle's once
         st = dict.fromkeys(SERVING_STATS, 0)
-        for shard, shard_keys in by_shard.items():
+        # every (key, file) pair; a shard's files newest first, since a
+        # later file's row wins, as in a scan
+        files: list[tuple[int, _LocalCopy]] = []
+        pair_key: list[int] = []
+        pair_file: list[int] = []
+        for shard, idx in by_shard.items():
             sdir = os.path.join(vpath, shard_dirname(shard))
-            targets = sorted(set(shard_keys))
-            target_digs: bytes | None = None  # blake2b blob, built once
-            # files in listing order: a later file's row wins, as in a scan
-            for fname in self._shard_file_list(sdir):
-                copy = self._local_copy(os.path.join(sdir, fname), st)
-                # (1) Bloom: one vectorized test of the shard's targets
-                # against the file's sidecar. A "yes" (hit or fpp) falls
-                # through: the filter only removes work, never answers.
-                wanted = targets
-                if copy.bloom is not None:
-                    if target_digs is None:
-                        target_digs = copy.bloom.hash_keys(targets)
-                    wanted = [
-                        k for k, ok in zip(
-                            targets, copy.bloom.contains_digests(target_digs)
-                        ) if ok
-                    ]
-                    st["bloom_tests"] += len(targets)
-                    st["bloom_rejects"] += len(targets) - len(wanted)
-                # (2) Bisect each key to the last batch whose min ≤ key,
-                # then walk back while max ≥ key: a run of equal keys may
-                # span a batch boundary.
-                mins, maxs = copy.mins, copy.maxs
-                js: set[int] = set()
-                for k in wanted:
-                    j = bisect.bisect_right(mins, k) - 1
-                    while j >= 0 and maxs[j] >= k:
-                        js.add(j)
-                        j -= 1
-                if not js:
-                    continue
-                # (3) Read those batches, then one C-side hash lookup of
-                # the wanted keys over their keys (first match wins).
-                batches = self._read_batches(copy, sorted(js))
-                st["batches_read"] += len(batches)
-                karr = pa.concat_arrays([b.column(0) for b in batches])
-                varr = pa.concat_arrays([b.column(1) for b in batches])
-                idx = pc.index_in(pa.array(wanted, type=pa.binary()), value_set=karr)
-                for k, i, val in zip(
-                    wanted, idx.to_pylist(), pc.take(varr, idx).to_pylist()
-                ):
-                    if i is not None:
-                        out[k] = val
+            for fname in reversed(self._shard_file_list(sdir)):
+                pair_key += idx
+                pair_file += [len(files)] * len(idx)
+                files.append((shard, self._local_copy(os.path.join(sdir, fname), st)))
+        # (1) Bloom: one gather per bank (one, unless the version changed
+        # during the call). A "yes" (hit or fpp) falls through: the
+        # filter only removes work, never answers.
+        maybe = np.ones(len(pair_key), dtype=bool)
+        blooms = [copy.bloom for _, copy in files]
+        banks = {b[0] for b in blooms if b is not None}
+        if banks:
+            digests = np.frombuffer(
+                BloomFilter.hash_keys(uniq), dtype="<u8"
+            ).reshape(-1, 2)
+            pair_key_a = np.array(pair_key, dtype=np.intp)
+            pair_file_a = np.array(pair_file, dtype=np.intp)
+            # (offset, m, k) per file; files without a sidecar get a
+            # placeholder, and their pairs are never tested
+            meta = np.array(
+                [b[1:] if b is not None else (0, 1, 1) for b in blooms],
+                dtype=np.uint64,
+            )
+            for bank in banks:
+                in_bank = np.array([b is not None and b[0] is bank for b in blooms])
+                rows = np.flatnonzero(in_bank[pair_file_a])
+                f = pair_file_a[rows]
+                ok = bank.contains(
+                    digests[pair_key_a[rows]], meta[f, 0], meta[f, 1], meta[f, 2]
+                )
+                maybe[rows] = ok
+                st["bloom_tests"] += len(rows)
+                st["bloom_rejects"] += len(rows) - int(np.count_nonzero(ok))
+        # (2) Bisect each surviving pair's key to the last batch whose
+        # min ≤ key, then walk back while max ≥ key: a run of equal keys
+        # may span a batch boundary.
+        wanted: dict[int, set[int]] = {}
+        for r in np.flatnonzero(maybe).tolist():
+            copy = files[pair_file[r]][1]
+            k = uniq[pair_key[r]]
+            j = bisect.bisect_right(copy.mins, k) - 1
+            while j >= 0 and copy.maxs[j] >= k:
+                wanted.setdefault(pair_file[r], set()).add(j)
+                j -= 1
+        # (3) Read the selected batches in file order, then one C-side
+        # membership test of their keys against the call's keys.
+        batches: list = []
+        batch_shard: list[int] = []
+        for fi in sorted(wanted):
+            shard, copy = files[fi]
+            js = sorted(wanted[fi])
+            batches += self._read_batches(copy, js)
+            batch_shard += [shard] * len(js)
+            st["bytes_read"] += sum(copy.sizes[j] for j in js)
+        st["batches_read"] += len(batches)
+        if batches:
+            tbl = pa.Table.from_batches(batches)
+            read_keys = tbl.column(0)
+            hit = pc.is_in(read_keys, value_set=pa.array(uniq, type=read_keys.type))
+            at = np.flatnonzero(hit.to_numpy())
+            rows = tbl.take(at)
+            owner = np.searchsorted(
+                np.cumsum([b.num_rows for b in batches]), at, side="right"
+            )
+            found: set[bytes] = set()
+            for k, val, b in zip(
+                rows.column(0).to_pylist(), rows.column(1).to_pylist(), owner.tolist()
+            ):
+                # a key's first row in its own shard's files
+                if k not in found and batch_shard[b] == shard_of[k]:
+                    found.add(k)
+                    out[k] = val
         with self._serving_stats_lock:
             for name, c in st.items():
                 self._serving_stats[name] += c
@@ -1176,10 +1241,11 @@ class Domain:
     def serving_stats(self) -> dict[str, int]:
         """Serving-probe counts for this handle: ``files_converted``
         (shard files copied to local Arrow files), ``batches_read``
-        (record batches read from local copies), ``bloom_tests`` (keys
-        tested against a sidecar) and ``bloom_rejects`` (of those,
-        definitive misses), all cumulative; and ``local_bytes``, the disk
-        the handle's current local copies take."""
+        (record batches read from local copies), ``bytes_read`` (their
+        summed ``nbytes``), ``bloom_tests`` ((key, file) pairs tested
+        against a sidecar) and ``bloom_rejects`` (of those, definitive
+        misses), all cumulative; and ``local_bytes``, the disk the
+        handle's current local copies take."""
         with self._serving_stats_lock:
             out = dict(self._serving_stats)
         with self._pq_lock:
@@ -1222,7 +1288,7 @@ class Domain:
         with self._pq_lock:
             copy = self._copies.get(src)
             if copy is None:
-                copy = self._copies[src] = _LocalCopy(src)
+                copy = self._copies[src] = _LocalCopy(src, self._bloom_bank)
             elif src in self._readers:
                 self._readers.move_to_end(src)
         if copy.path is None:

@@ -139,8 +139,9 @@ def sync_domain(
 
     The copy runs inside ``VersionedStore.publishing``: data first,
     token last, and a failed copy rolls the partial version back and
-    records the failure (the reference's failVersion path). Returns the
-    synced version or None if up to date.
+    records the failure (the reference's failVersion path). Every call
+    ends with the local GC (``versions_to_keep``). Returns the synced
+    version or None if up to date.
     """
     remote = VersionedStore(remote_root)
     remote_version = remote.most_recent_version()
@@ -158,12 +159,17 @@ def sync_domain(
             remote_spec.write(local_root)
     local = VersionedStore(local_root)
     local_version = local.most_recent_version()
-    if local_version is not None and local_version >= remote_version:
-        return None
-    with local.publishing(remote_version) as (_, dst):
-        _copy_rate_limited(remote.version_path(remote_version), dst, rate_limit_kbps)
+    synced = None
+    if local_version is None or local_version < remote_version:
+        with local.publishing(remote_version) as (_, dst):
+            _copy_rate_limited(
+                remote.version_path(remote_version), dst, rate_limit_kbps
+            )
+        synced = remote_version
+    # also when already up to date: a GC that failed after an earlier
+    # sync is retried here, not only when a newer version arrives
     local.cleanup(versions_to_keep)
-    return remote_version
+    return synced
 
 
 class Updater:

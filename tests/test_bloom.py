@@ -110,6 +110,55 @@ def test_contains_digests_tiny_blobs_and_m64_clamp():
     assert BloomFilter.sized(1, 0.001).k == 44
 
 
+def test_bank_gather_matches_each_filters_might_contain():
+    """One BloomBank gather over (key, filter) pairs of filters with
+    different m and k — the m = 64 / k = 44 clamp among them — answers
+    exactly like each filter's might_contain, and a bank array taken
+    before later adds still answers for the filters it held."""
+    import random
+
+    import numpy as np
+
+    from elephantdb_spark.bloom import BloomBank, _all_bits_set
+
+    rng = random.Random(5)
+    bank = BloomBank()
+    filters = []
+    for n, fpp in [(1, 0.001), (3, 0.25), (40, 0.05), (2000, 0.01), (700, 0.001)]:
+        members = [bytes(rng.randrange(256) for _ in range(rng.randrange(12)))
+                   for _ in range(n)]
+        bf = BloomFilter.sized(n, fpp)
+        bf.add_batch(members)
+        filters.append((bf, bank.add(bf), members))
+        if len(filters) == 2:
+            early, early_filters = bank.bits, list(filters)
+    assert (filters[0][0].m, filters[0][0].k) == (64, 44)
+    assert len({(bf.m, bf.k) for bf, _, _ in filters}) == len(filters)
+    probes = [m for _, _, ms in filters for m in ms[:20]] + [
+        bytes(rng.randrange(256) for _ in range(rng.randrange(12)))
+        for _ in range(300)
+    ]
+    digests = np.frombuffer(BloomFilter.hash_keys(probes), "<u8").reshape(-1, 2)
+
+    def check(test, fs):
+        key = np.array([i for i in range(len(probes)) for _ in fs])
+        fil = np.array([f for _ in probes for f in range(len(fs))])
+        meta = np.array([(fs[f][1], fs[f][0].m, fs[f][0].k) for f in fil],
+                        dtype=np.uint64)
+        got = test(digests[key], *meta.T)
+        assert got.tolist() == [
+            fs[f][0].might_contain(probes[k]) for k, f in zip(key, fil)
+        ]
+        return got
+
+    def snapshot(d, off, m, k):
+        return _all_bits_set(early, d, m, k, off)
+
+    now = check(bank.contains, filters)
+    assert 0 < now.sum() < len(now)
+    assert check(snapshot, early_filters).any()
+
+
 def test_add_arrow_identical_incl_nulls_slices_large_binary():
     """The zero-copy Arrow path must match the scalar loop too — with
     nulls (skipped, like the old builder), SLICED arrays (non-zero
@@ -444,12 +493,12 @@ def test_contains_digests_rejects_malformed_blob():
 
 
 def test_file_level_prefilter_multi_file_shard(spark, tmp_path, monkeypatch):
-    """r9 (ADVICE r8): a multi-file shard runs at most ONE file-level
-    contains_digests per file — definitive misses never read a batch —
-    while hits that live in DIFFERENT files of the
+    """r9 (ADVICE r8): a call over multi-file shards consults the Bloom
+    bank exactly ONCE, over every (key, file) pair — definitive misses
+    never read a batch — while hits that live in DIFFERENT files of the
     same shard all still surface (the narrowing must be per-file, not
     shard-sticky)."""
-    from elephantdb_spark.bloom import BloomFilter as BF
+    from elephantdb_spark.bloom import BloomBank
     from elephantdb_spark.engine import Domain
 
     root = str(tmp_path / "pref")
@@ -467,10 +516,10 @@ def test_file_level_prefilter_multi_file_shard(spark, tmp_path, monkeypatch):
     dom.local_multi_get([b"warm"])
 
     calls = []
-    orig = BF.contains_digests
+    orig = BloomBank.contains
     monkeypatch.setattr(
-        BF, "contains_digests",
-        lambda self, d: calls.append(len(d) // 16) or orig(self, d),
+        BloomBank, "contains",
+        lambda self, d, *a: calls.append(len(d)) or orig(self, d, *a),
     )
     # mixed batch: hits from each generation + in-range misses
     hits = [b"k5", b"kb5", b"kc5", b"k250", b"kb150"]
@@ -482,10 +531,8 @@ def test_file_level_prefilter_multi_file_shard(spark, tmp_path, monkeypatch):
     assert out[b"k250"] == b"v250"
     assert out[b"kb150"] == b"vb150"
     assert all(out[m] is None for m in misses)
-    # prefiltered files must not re-consult bloom per group: the number
-    # of consults is bounded by the number of files probed (2 shards x
-    # <=3 files), never files x groups x subsets
-    assert 1 <= len(calls) <= 6
+    # one consult per call, never one per file or per group
+    assert len(calls) == 1
     # misses alone read (almost) no batch: 0.1% fpp allowance
     before = dom.serving_stats()["batches_read"]
     assert all(v is None for v in dom.local_multi_get(misses).values())

@@ -325,8 +325,10 @@ def test_convert_shard_file_batches_bounds_and_content(tmp_path, monkeypatch):
     """The local-copy converter, without Spark: a multi-group parquet file
     with NULL values becomes ≤LOCAL_BATCH_ROWS-row batches whose exact key
     bounds are ordered and whose rows equal the source's, read one row
-    group at a time (never the whole file); an empty file becomes a
-    batchless copy; a failed conversion leaves no file behind."""
+    group at a time (never the whole file), with each batch's read-back
+    ``nbytes`` and one schema whatever the writer's nullability and
+    metadata; an empty file becomes a batchless copy; a failed conversion
+    leaves no file behind."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -336,9 +338,13 @@ def test_convert_shard_file_batches_bounds_and_content(tmp_path, monkeypatch):
     keys = [f"k{i:05d}".encode() for i in range(n)]
     vals = [None if i % 11 == 0 else b"v" * (i % 40) for i in range(n)]
     src = str(tmp_path / "multi.parquet")
+    written = pa.schema(
+        [pa.field("key", pa.binary(), nullable=False), ("value", pa.binary())],
+        metadata={"writer": "spark"},
+    )
     pq.write_table(
         pa.table({"key": pa.array(keys, pa.binary()),
-                  "value": pa.array(vals, pa.binary())}),
+                  "value": pa.array(vals, pa.binary())}, schema=written),
         src, row_group_size=700,
     )
     n_groups = pq.ParquetFile(src).num_row_groups
@@ -358,12 +364,15 @@ def test_convert_shard_file_batches_bounds_and_content(tmp_path, monkeypatch):
     for name in ("read", "read_row_groups", "iter_batches"):
         monkeypatch.setattr(pq.ParquetFile, name, whole_file)
     dst = str(tmp_path / "multi.arrow")
-    mins, maxs = convert_shard_file(src, dst)
+    mins, maxs, sizes = convert_shard_file(src, dst)
     assert groups_read == list(range(n_groups))
 
     reader = pa.ipc.open_file(pa.OSFile(dst))
+    assert reader.schema == pa.schema([("key", pa.binary()), ("value", pa.binary())])
+    assert not reader.schema.metadata
     batches = [reader.get_batch(j) for j in range(reader.num_record_batches)]
     assert len(batches) == len(mins) == len(maxs)
+    assert sizes == [b.nbytes for b in batches]  # what bytes_read counts
     assert all(0 < b.num_rows <= LOCAL_BATCH_ROWS for b in batches)
     for b, lo, hi in zip(batches, mins, maxs):
         col = b.column(0).to_pylist()
@@ -381,7 +390,7 @@ def test_convert_shard_file_batches_bounds_and_content(tmp_path, monkeypatch):
         empty,
     )
     edst = str(tmp_path / "empty.arrow")
-    assert convert_shard_file(empty, edst) == ([], [])
+    assert convert_shard_file(empty, edst) == ([], [], [])
     assert pa.ipc.open_file(pa.OSFile(edst)).num_record_batches == 0
 
     monkeypatch.setattr(
@@ -646,3 +655,178 @@ def test_serving_counters_exact_under_8_threads(spark, tmp_path):
     assert dom.serving_stats() == expect
     assert expect["bloom_tests"] > expect["bloom_rejects"] > 0
     assert expect["batches_read"] > 0
+
+
+RUN_KEY = b"q01000~run"  # sorts inside the q-key range
+
+
+@pytest.fixture(scope="module")
+def fragmented(spark, tmp_path_factory):
+    """A domain of several files per shard after a build and two updates:
+    NULL values, and one key written 600 times (``dedup="none"``, one
+    value), so its run fills whole files and crosses 128-row batch
+    boundaries inside them."""
+    from elephantdb_spark import update_domain
+    from elephantdb_spark.engine import Domain
+
+    root = str(tmp_path_factory.mktemp("frag") / "d")
+    pairs = [
+        (f"q{i:05d}".encode(), None if i % 11 == 0 else f"v{i}".encode())
+        for i in range(2000)
+    ] + [(RUN_KEY, b"run-value")] * 600
+    build_domain(
+        spark,
+        spark.createDataFrame(pairs, "key binary, value binary"),
+        root,
+        DomainSpec(num_shards=4, persistence_opts={
+            "maxRecordsPerFile": 250, "bloom_fpp": 0.01,
+        }),
+        version=1,
+        dedup="none",
+    )
+    for version, step in ((2, 7), (3, 13)):
+        update_domain(
+            spark,
+            spark.createDataFrame(
+                [(f"q{i:05d}".encode(), f"u{version}-{i}".encode())
+                 for i in range(0, 2000, step)]
+                + [(f"n{version}-{i}".encode(), None) for i in range(50)],
+                "key binary, value binary",
+            ),
+            root,
+            version=version,
+        )
+    return Domain(spark, root)
+
+
+def test_one_pass_probe_equals_to_map(fragmented):
+    """Every answer of the one-pass probe equals the scan's: across files
+    of several generations per shard, NULL values, a key present in
+    several files and a run of one key across batch boundaries, with
+    in-range and out-of-range misses and duplicate keys in one call."""
+    import random
+
+    dom = fragmented
+    truth = dom.to_map()
+    assert dom.layout_report()["max_files_per_shard"] > 1
+    assert truth[RUN_KEY] == b"run-value"
+    assert any(v is None for v in truth.values())
+    misses = [k + b"x" for k in list(truth)[::50]] + [b"", b"a", b"zzz"]
+    got = dom.local_multi_get(list(truth) + misses)
+    assert got == {**truth, **dict.fromkeys(misses)}
+    # the run: in several files, and across a batch boundary in one
+    copies = [c for c in dom._copies.values() if RUN_KEY in c.mins + c.maxs]
+    assert len(copies) > 1
+    assert any(
+        hi == lo == RUN_KEY
+        for c in copies for hi, lo in zip(c.maxs, c.mins[1:])
+    )
+    rng = random.Random(11)
+    keys = list(truth) + misses
+    for _ in range(30):
+        ks = [rng.choice(keys) for _ in range(rng.randrange(1, 120))]
+        assert dom.local_multi_get(ks) == {k: truth.get(k) for k in ks}
+
+
+def test_one_pass_probe_one_gather_one_is_in(fragmented, monkeypatch):
+    """A call over many shards and files consults the Bloom bank once
+    and runs one ``pc.is_in``, whatever the number of files."""
+    import pyarrow.compute as pc
+
+    from elephantdb_spark.bloom import BloomBank
+    from elephantdb_spark.sharding import shard_index
+
+    dom = fragmented
+    keys = [f"q{i:05d}".encode() for i in range(0, 2000, 9)] + [b"q00003x"]
+    dom.local_multi_get(keys)  # convert first
+    shards = {shard_index(k, 4) for k in keys}
+    files = sum(
+        len(dom._shard_file_list(os.path.join(
+            dom.store.version_path(dom.current_version()), f"shard={s}")))
+        for s in shards
+    )
+    assert len(shards) == 4 and files > len(shards)
+    seen = {"contains": 0, "is_in": 0}
+    real_contains, real_is_in = BloomBank.contains, pc.is_in
+
+    def contains(self, *a):
+        seen["contains"] += 1
+        return real_contains(self, *a)
+
+    def is_in(*a, **kw):
+        seen["is_in"] += 1
+        return real_is_in(*a, **kw)
+
+    monkeypatch.setattr(BloomBank, "contains", contains)
+    monkeypatch.setattr(pc, "is_in", is_in)
+    before = dom.serving_stats()
+    truth = dom.to_map()
+    assert dom.local_multi_get(keys) == {k: truth.get(k) for k in keys}
+    after = dom.serving_stats()
+    assert seen == {"contains": 1, "is_in": 1}
+    assert after["bloom_tests"] - before["bloom_tests"] >= files
+    assert after["batches_read"] > before["batches_read"]
+    assert after["bytes_read"] > before["bytes_read"]
+
+
+def test_one_pass_probe_later_file_then_first_row_wins(spark, tmp_path):
+    """Within one call a shard's later file overrides an earlier one and,
+    within a file, the first row of a key wins, also when its run
+    crosses a batch boundary — the order the per-file loop had. The
+    later file here has no Bloom sidecar while the earlier one has, so
+    one call mixes tested and untested pairs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from elephantdb_spark.engine import Domain
+    from elephantdb_spark.sharding import shard_index
+
+    root = str(tmp_path / "order")
+    pairs = [(f"o{i:03d}".encode(), f"old{i}".encode()) for i in range(200)]
+    build_domain(
+        spark,
+        spark.createDataFrame(pairs, "key binary, value binary"),
+        root,
+        DomainSpec(num_shards=2, persistence_opts={"bloom_fpp": 0.01}),
+        version=1,
+    )
+    over, dup = b"o007", b"o007~dup"
+    sdir = os.path.join(root, "1", f"shard={shard_index(over, 2)}")
+    assert shard_index(dup, 2) == shard_index(over, 2)
+    earlier = sorted(f for f in os.listdir(sdir) if f.endswith(".parquet"))
+    later = "part-99999-later.parquet"
+    assert later > earlier[-1]
+    # the run of dup crosses the 128-row batch boundary: its first row
+    # sits in batch 0, the bisect lands in batch 1
+    pq.write_table(
+        pa.table({"key": [over] + [dup] * 200,
+                  "value": [b"new", b"first"] + [b"rest"] * 199}),
+        os.path.join(sdir, later),
+    )
+    dom = Domain(spark, root)
+    keys = [over, dup, b"o008", b"o199", b"o100x"]
+    assert dom.local_multi_get(keys) == {
+        over: b"new", dup: b"first", b"o008": b"old8", b"o199": b"old199",
+        b"o100x": None,
+    }
+    copies = {os.path.basename(c.src): c for c in dom._copies.values()}
+    assert copies[later].bloom is None
+    assert all(copies[f].bloom is not None for f in earlier)
+
+
+def test_one_pass_probe_answers_from_the_routed_shard_only(spark, tmp_path, monkeypatch):
+    """A key is looked up only in the files of the shard its scheme routes
+    it to, as the per-file loop did, so its answer does not depend on the
+    other keys of the call: its row in another shard's batch, read there
+    for a key routed to that shard, is no answer. (A fixed-assignment
+    domain routes this way once its map changes.)"""
+    from elephantdb_spark.testing import FixedAssignmentScheme, build_presharded_domain
+
+    dom = build_presharded_domain(
+        spark, str(tmp_path / "routed"), {0: [(b"a", b"va"), (b"b", b"vb")]},
+        num_shards=2,
+    )
+    monkeypatch.setattr(FixedAssignmentScheme, "_assignments", {b"a": 0, b"b": 1})
+    assert dom.local_multi_get([b"b"]) == {b"b": None}
+    assert dom.local_multi_get([b"a", b"b"]) == {b"a": b"va", b"b": None}
+    assert dom.serving_stats()["batches_read"] == 1

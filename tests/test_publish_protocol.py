@@ -264,3 +264,29 @@ def test_sync_domain_survives_every_crash_point(spark, tmp_path, sync_roots):
     # the copy, the token, then the GC of version 1 (after the token)
     assert "copytree" in points and points[-1] == "rmtree", points
     assert points.index("succeed_version") < len(points) - 1, points
+
+
+def test_sync_domain_retries_a_failed_gc_when_up_to_date(spark, tmp_path, sync_roots):
+    """A GC that fails after a sync is retried by the next sync, even
+    though the local store already holds the remote's newest version."""
+    remote, synced = sync_roots
+    root = str(tmp_path / "gc")
+    shutil.copytree(synced, root)
+    old = os.path.join(root, "1")
+    real = shutil.rmtree
+
+    def fail_once(path, *a, **kw):
+        if os.path.abspath(path) == old and not failed:
+            failed.append(path)
+            raise _Crash("rmtree of version 1")
+        return real(path, *a, **kw)
+
+    failed: list[str] = []
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(shutil, "rmtree", fail_once)
+        with pytest.raises(_Crash):
+            sync_domain(remote, root)
+        assert failed and DomainStore.open(root).has_version(2)
+        assert sync_domain(remote, root) is None  # up to date
+    assert DomainStore.open(root).all_versions() == [2]
+    assert sorted(n for n in os.listdir(root) if n[0].isdigit()) == ["2", "2.version"]
