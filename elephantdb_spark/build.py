@@ -32,7 +32,7 @@ import os
 import shutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from elephantdb_spark.registry import resolve_format, resolve_indexer, resolve_scheme
@@ -231,12 +231,6 @@ def build_domain(
     return version
 
 
-#: Batches below this row count merge via broadcast anti-join (zero shuffle
-#: of the old data); above it, the shuffle-based window merge. ~1M keys of
-#: ~60 B ≈ the 64 MB broadcast threshold in session.py.
-BROADCAST_MERGE_MAX_ROWS = 1_000_000
-
-
 def _fragmented_shards(version_path: str, cap: int) -> list[int]:
     """Shard ids under ``version_path`` holding more than ``cap`` data
     files (hidden ``_``/``.`` entries such as Bloom sidecars excluded).
@@ -350,10 +344,13 @@ def update_domain(
     wins. Only shards containing batch keys are recomputed; every other
     shard directory is file-copied from the previous version.
 
-    Scale path: the typical update batch is tiny next to the domain, so the
-    merge is a *broadcast anti-join* — the old data is read once and never
-    shuffled for the merge (its only shuffle is the write-path placement).
-    Batches above BROADCAST_MERGE_MAX_ROWS fall back to the shuffle merge.
+    Scale path: the merge is an anti-join of the old data against the
+    batch's keys. The batch is cached and counted first, so the planner
+    sees its measured size: a typical batch, tiny next to the domain,
+    plans as a *broadcast* anti-join — the old data is read once and
+    never shuffled for the merge (its only shuffle is the write-path
+    placement) — and a batch above ``autoBroadcastJoinThreshold`` as a
+    sort-merge one, with the same answer.
     """
     store = DomainStore.open(domain_root)
     n = store.spec.num_shards
@@ -368,11 +365,12 @@ def update_domain(
             new_data = indexer(new_data).select("key", "value")
         new_data = new_data.withColumn("shard", _guarded_shard_expr(scheme, n)).cache()
         try:
-            # one job yields both the batch size and the touched-shard
-            # list (≤ n rows to the driver) and materializes the cache
-            per_shard = new_data.groupBy("shard").count().collect()
-            n_batch = sum(r["count"] for r in per_shard)
-            touched = sorted(r["shard"] for r in per_shard)
+            # one job yields the touched-shard list (≤ n rows to the
+            # driver) and materializes the cache, whose measured size
+            # the planner's broadcast choice below reads
+            touched = sorted(
+                r["shard"] for r in new_data.groupBy("shard").count().collect()
+            )
             prev_path = store.version_path(prev)
             old = (
                 spark.read.option("basePath", prev_path)
@@ -382,22 +380,8 @@ def update_domain(
                 .select("key", "value", F.col("shard").cast("int").alias("shard"))
             )
             # New batch wins per key (Q11: COALESCE(new, old)).
-            if n_batch <= BROADCAST_MERGE_MAX_ROWS:
-                survivors = old.join(
-                    F.broadcast(new_data.select("key")), "key", "left_anti"
-                )
-                merged = survivors.unionByName(new_data).select("key", "value")
-            else:
-                merged = (
-                    old.withColumn("__src", F.lit(0))
-                    .unionByName(new_data.withColumn("__src", F.lit(1)))
-                )
-                w = Window.partitionBy("key").orderBy(F.col("__src").desc())
-                merged = (
-                    merged.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .select("key", "value")
-                )
+            survivors = old.join(new_data.select("key"), "key", "left_anti")
+            merged = survivors.unionByName(new_data).select("key", "value")
             _write_version(spark, merged, store, vpath)
         finally:
             new_data.unpersist()

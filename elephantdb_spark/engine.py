@@ -61,9 +61,9 @@ SERVING_STATS = (
     "bloom_rejects",
 )
 
-#: Serving-cache capacity (open local-copy readers / shard-dir listings).
-#: Eviction is LRU per entry — a hot reader must survive a sweep of cold
-#: opens (VERDICT r6 item 3: wholesale clears thrashed >512-file domains).
+#: Open local-copy readers a handle keeps, LRU per reader — a hot reader
+#: must survive a sweep of cold opens (VERDICT r6 item 3: wholesale
+#: clears thrashed >512-file domains). This bounds file descriptors.
 SERVING_CACHE_CAP = 512
 
 
@@ -122,25 +122,25 @@ def _unlink_quiet(path: str) -> None:
 class _LocalCopy:
     """One published shard file's local Arrow copy on a serving handle:
     its path, exact per-batch key bounds and sizes and its file size once
-    converted, where the file's Bloom sidecar sits in the handle's bank,
-    and a reader that the handle's LRU may close. ``lock`` serializes the
-    conversion and every read. The file is removed when the object dies,
-    so a probe still holding a copy the handle dropped keeps reading it."""
+    converted, where the file's Bloom sidecar sits in its snapshot's bank,
+    and a reader that the snapshot's LRU may close. ``lock`` serializes
+    the conversion and every read. The file is removed when the object
+    dies, so a probe still holding a copy of a replaced snapshot keeps
+    reading it."""
 
-    def __init__(self, src: str, bank):
+    def __init__(self, src: str):
         self.src = src
         self.path: str | None = None
         self.mins: list[bytes] = []
         self.maxs: list[bytes] = []
         self.sizes: list[int] = []
         self.nbytes = 0
-        self._bank = bank
-        #: ``(bank, offset, m, k)`` of the sidecar's bits, or None
+        #: ``(offset, m, k)`` of the sidecar's bits in the bank, or None
         self.bloom = None
         self.reader = None
         self.lock = threading.Lock()
 
-    def convert(self, dst: str) -> None:
+    def convert(self, dst: str, bank: BloomBank) -> None:
         self.mins, self.maxs, self.sizes = convert_shard_file(self.src, dst)
         weakref.finalize(self, _unlink_quiet, dst)
         self.nbytes = os.path.getsize(dst)
@@ -148,8 +148,31 @@ class _LocalCopy:
         # absent when the domain was built without one
         bf = load_sidecar(self.src)
         if bf is not None:
-            self.bloom = (self._bank, self._bank.add(bf), bf.m, bf.k)
+            self.bloom = (bank.add(bf), bf.m, bf.k)
         self.path = dst  # last: a set path means the copy is complete
+
+
+class _Served:
+    """Everything a handle keeps for one published-version set: the
+    version tuple, the local copies (:class:`_LocalCopy`, by source
+    file), the shard-dir listings, the pruned-read frames, the copies'
+    Bloom bank and the LRU of copies with an open reader. A hot swap
+    replaces the whole object (:meth:`Domain._serving`), as the
+    reference swaps one ``{shards, version}`` value
+    (common/domain.clj:208-228). A call reads it once, so it sees one
+    version set and one bank; a replaced snapshot goes as a whole when
+    the last call holding it returns. ``lock`` guards ``copies`` and
+    ``readers``; the listings and frames are filled without it, since
+    a racing fill computes the same value."""
+
+    def __init__(self, versions: tuple[int, ...] = ()):
+        self.versions = versions
+        self.copies: dict[str, _LocalCopy] = {}
+        self.listings: dict[str, list[str]] = {}
+        self.frames: dict[tuple[int, tuple[int, ...]], DataFrame] = {}
+        self.bank = BloomBank()
+        self.readers: "OrderedDict[str, _LocalCopy]" = OrderedDict()
+        self.lock = threading.Lock()
 
 
 #: bulk_join auto-tuning (VERDICT r6 item 1): pick ``tasks_per_shard`` so
@@ -328,35 +351,16 @@ class Domain:
         # pluggable hooks resolved once per handle (DomainSpec.java:46-62)
         self._scheme = resolve_scheme(self.store.spec.shard_scheme)
         self._fmt = resolve_format(self.store.spec.persistence_format)
-        # Published version dirs are immutable, so the resolved scan
-        # DataFrame (file listing + schema) for a (version, shard-set) can
-        # be reused across point reads — the serving pattern is many gets
-        # against one version, and re-listing the shard dir per get is pure
-        # fixed overhead. Bounded; hot-swap safety comes from keying on the
-        # resolved version id.
-        self._read_cache: dict[tuple[int, tuple[int, ...]], DataFrame] = {}
-        # Local Arrow copies for the local serving probe, one per published
-        # shard file probed (see _local_copy), in a directory this handle
-        # owns, made on first use. The reference's daemons likewise copy
+        # The serving snapshot of the published-version set last seen
+        # (see _Served and _serving), replaced whole under _lock. Local
+        # copies live in a directory this handle owns, made on first use
+        # (see _new_copy_path); the reference's daemons likewise copy
         # their shards to local disk before serving (shard.clj:17-27).
-        # _pq_lock guards the dicts; each copy's own lock serializes its
-        # conversion and reads, so distinct files probe in parallel.
+        self._served = _Served()
+        self._lock = threading.Lock()
         self._local_dir: str | None = None
         self._local_dir_fin = None
         self._copy_ids = itertools.count()
-        self._copies: dict[str, _LocalCopy] = {}
-        # the copies' Bloom sidecars, in one bank so a call tests every
-        # (key, file) pair with one gather; replaced with the copies
-        self._bloom_bank = BloomBank()
-        # copies with an open reader, LRU (VERDICT r6 item 3): a hot
-        # serving process over a >512-file domain — exactly the fragmented
-        # shape repeated A20 appends produce — must close cold readers one
-        # at a time, not thrash its own hot ones with a wholesale clear
-        self._readers: "OrderedDict[str, _LocalCopy]" = OrderedDict()
-        # immutable shard-dir listings for published versions (the probe
-        # must not pay listdir syscalls per lookup); same lock + LRU
-        self._dir_cache: "OrderedDict[str, list[str]]" = OrderedDict()
-        self._pq_lock = threading.Lock()
         if "serving_cache_bytes" in (self.store.spec.persistence_opts or {}):
             warnings.warn(
                 f"domain {self.name}: persistence_opts['serving_cache_bytes'] "
@@ -367,9 +371,6 @@ class Domain:
             )
         self._serving_stats = dict.fromkeys(SERVING_STATS, 0)
         self._serving_stats_lock = threading.Lock()
-        # published-version snapshot — when it changes, caches drop (see
-        # _resolve_version)
-        self._seen_versions: tuple[int, ...] = ()
         # status machine: shutdown is per-handle process state
         self._is_shutdown = False
 
@@ -442,12 +443,13 @@ class Domain:
 
     def shutdown(self) -> None:
         """to-shutdown (status.clj:16): mark the handle; status reports
-        'shutdown' and callers should stop routing reads here. Drops the
-        handle's local copies and removes their directory; a probe in
-        flight keeps reading through the files it has open."""
+        'shutdown' and callers should stop routing reads here. Replaces
+        the serving snapshot with an empty one and removes the local
+        copies' directory; a probe in flight keeps reading through the
+        files it has open."""
         self._is_shutdown = True
-        with self._pq_lock:
-            self._drop_local_copies()
+        with self._lock:
+            self._served = _Served()
             fin, self._local_dir_fin, self._local_dir = (
                 self._local_dir_fin, None, None
             )
@@ -507,8 +509,12 @@ class Domain:
         return meta
 
     # -- internals -----------------------------------------------------------
-    def _resolve_version(self, version: int | None = None) -> int:
-        versions = self._sync_versions()
+    def _resolve_version(
+        self, version: int | None = None, served: _Served | None = None
+    ) -> int:
+        """The version a read serves: ``version`` if published, else the
+        newest — in ``served``'s version set, or the current snapshot's."""
+        versions = (served or self._serving()).versions
         if version is not None:
             if int(version) not in versions:
                 raise DomainNotLoadedError(
@@ -519,28 +525,21 @@ class Domain:
             raise DomainNotLoadedError(f"domain {self.name} has no published version")
         return versions[0]
 
-    def _sync_versions(self) -> tuple[int, ...]:
-        """The live published-version set. When it has changed (new
-        version published, old versions GC'd) every cache drops wholesale:
-        cached DataFrames for deleted version dirs would fail, and local
-        copies of deleted shard files would hold disk for the handle's
-        lifetime."""
+    def _serving(self) -> _Served:
+        """The serving snapshot of the live published-version set (one
+        ``all_versions`` listing, so readers resolve the version at
+        query start). When the set has changed (new version published,
+        old versions GC'd) the handle's snapshot is replaced whole:
+        frames over deleted version dirs would fail, and local copies of
+        deleted shard files would hold disk for the handle's lifetime."""
         versions = tuple(self.store.all_versions())
-        if versions != self._seen_versions:
-            self._seen_versions = versions
-            self._read_cache.clear()
-            with self._pq_lock:
-                self._drop_local_copies()
-                self._dir_cache.clear()
-        return versions
-
-    def _drop_local_copies(self) -> None:
-        """Forget every local copy; each file goes when the last probe
-        holding its copy lets go (see _LocalCopy). Call with _pq_lock
-        held."""
-        self._copies.clear()
-        self._readers.clear()
-        self._bloom_bank = BloomBank()
+        served = self._served
+        if served.versions != versions:
+            with self._lock:
+                served = self._served
+                if served.versions != versions:
+                    served = self._served = _Served(versions)
+        return served
 
     def _empty_kv(self, with_shard: bool = True) -> DataFrame:
         schema = KV_SHARD_SCHEMA if with_shard else KV_SCHEMA
@@ -550,9 +549,13 @@ class Domain:
         """Read only the given shard directories of a version — the Spark
         analogue of key→shard→single-B-tree-probe routing
         (common/domain.clj:243-259)."""
-        v = self._resolve_version(version)
+        # a published version dir is immutable, so the resolved frame
+        # (file listing + schema) serves every read of its shard set
+        # until the snapshot is replaced
+        served = self._serving()
+        v = self._resolve_version(version, served)
         cache_key = (v, tuple(sorted(set(shards))))
-        cached = self._read_cache.get(cache_key)
+        cached = served.frames.get(cache_key)
         if cached is not None:
             return cached
         vpath = self.store.version_path(v)
@@ -571,9 +574,9 @@ class Domain:
             .load(paths)
             .select("key", "value", F.col("shard").cast("int").alias("shard"))
         )
-        if len(self._read_cache) >= 256:
-            self._read_cache.clear()
-        self._read_cache[cache_key] = df
+        if len(served.frames) >= 256:
+            served.frames.clear()
+        served.frames[cache_key] = df
         return df
 
     def _keys_df(self, keys: list[bytes]) -> DataFrame:
@@ -584,13 +587,13 @@ class Domain:
 
     @staticmethod
     def _key_in_filter(keys: list[bytes]):
-        """key-membership predicate. Large key sets go through one SQL
-        `IN (X'..', ...)` expression — a single Py4J call — instead of
-        `Column.isin`, which converts every literal in its own JVM round
-        trip (~1 ms each, so ~1 s of pure driver overhead at 1000 keys).
-        Both compile to the same InSet + pushed Parquet filter."""
-        if len(keys) <= 32:
-            return F.col("key").isin([bytes(k) for k in keys])
+        """key-membership predicate: one SQL `IN (X'..', ...)` expression
+        — a single Py4J call, where `Column.isin` converts every literal
+        in its own JVM round trip (~1 ms each, so ~1 s of pure driver
+        overhead at 1000 keys). It compiles to the same In/InSet and
+        pushed Parquet filter as `isin`. No keys match nothing."""
+        if not keys:
+            return F.lit(False)
         return F.expr(
             "key IN (" + ",".join("X'%s'" % bytes(k).hex() for k in keys) + ")"
         )
@@ -671,10 +674,11 @@ class Domain:
 
         n = self.spec.num_shards
         m = tasks_per_shard
+        served = self._serving()
         jobs: list[tuple[int, str]] = []
         for p in range(n):
             sdir = os.path.join(vpath, shard_dirname(p))
-            for fname in self._shard_file_list(sdir):
+            for fname in self._shard_file_list(sdir, served):
                 jobs.append((p, os.path.join(sdir, fname)))
 
         def footer_entries(job: tuple[int, str]):
@@ -1112,13 +1116,15 @@ class Domain:
         self, keys: list[bytes], version: int | None = None
     ) -> dict[bytes, bytes | None]:
         """Serving-layer reads without a Spark job, on the caller thread,
-        through the handle's local Arrow copies (see :meth:`_local_copy`)
-        of the files of the shards the keys hash to. Each step runs once
-        per call, not once per file:
+        through the local Arrow copies (see :meth:`_local_copy`) of the
+        files of the shards the keys hash to. The call reads the handle's
+        serving snapshot (:class:`_Served`) once, so it sees one version
+        set even across a hot swap. Each step runs once per call, not
+        once per file:
 
         1. Bloom: the call's distinct keys are hashed once, and every
            (key, file) pair is tested with one gather against the
-           handle's bank of sidecars (:class:`~elephantdb_spark.bloom.BloomBank`);
+           snapshot's bank of sidecars (:class:`~elephantdb_spark.bloom.BloomBank`);
         2. bisect: each surviving pair selects the ≤LOCAL_BATCH_ROWS-row
            batches whose exact key bounds admit the key;
         3. lookup: the selected batches are read, each shard's files
@@ -1140,8 +1146,8 @@ class Domain:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        v = self._resolve_version(version)
-        vpath = self.store.version_path(v)
+        served = self._serving()
+        vpath = self.store.version_path(self._resolve_version(version, served))
         n = self.spec.num_shards
         out: dict[bytes, bytes | None] = {bytes(k): None for k in keys}
         uniq = list(out)
@@ -1158,38 +1164,35 @@ class Domain:
         pair_file: list[int] = []
         for shard, idx in by_shard.items():
             sdir = os.path.join(vpath, shard_dirname(shard))
-            for fname in reversed(self._shard_file_list(sdir)):
+            for fname in reversed(self._shard_file_list(sdir, served)):
                 pair_key += idx
                 pair_file += [len(files)] * len(idx)
-                files.append((shard, self._local_copy(os.path.join(sdir, fname), st)))
-        # (1) Bloom: one gather per bank (one, unless the version changed
-        # during the call). A "yes" (hit or fpp) falls through: the
-        # filter only removes work, never answers.
+                files.append(
+                    (shard, self._local_copy(os.path.join(sdir, fname), st, served))
+                )
+        # (1) Bloom: one gather over every pair whose file has a sidecar,
+        # all in the snapshot's one bank. A "yes" (hit or fpp) falls
+        # through: the filter only removes work, never answers.
         maybe = np.ones(len(pair_key), dtype=bool)
         blooms = [copy.bloom for _, copy in files]
-        banks = {b[0] for b in blooms if b is not None}
-        if banks:
+        has_bloom = np.array([b is not None for b in blooms], dtype=bool)
+        if has_bloom.any():
             digests = np.frombuffer(
                 BloomFilter.hash_keys(uniq), dtype="<u8"
             ).reshape(-1, 2)
-            pair_key_a = np.array(pair_key, dtype=np.intp)
-            pair_file_a = np.array(pair_file, dtype=np.intp)
             # (offset, m, k) per file; files without a sidecar get a
             # placeholder, and their pairs are never tested
-            meta = np.array(
-                [b[1:] if b is not None else (0, 1, 1) for b in blooms],
-                dtype=np.uint64,
+            meta = np.array([b or (0, 1, 1) for b in blooms], dtype=np.uint64)
+            pair_file_a = np.array(pair_file, dtype=np.intp)
+            rows = np.flatnonzero(has_bloom[pair_file_a])
+            f = pair_file_a[rows]
+            ok = served.bank.contains(
+                digests[np.array(pair_key, dtype=np.intp)[rows]],
+                meta[f, 0], meta[f, 1], meta[f, 2],
             )
-            for bank in banks:
-                in_bank = np.array([b is not None and b[0] is bank for b in blooms])
-                rows = np.flatnonzero(in_bank[pair_file_a])
-                f = pair_file_a[rows]
-                ok = bank.contains(
-                    digests[pair_key_a[rows]], meta[f, 0], meta[f, 1], meta[f, 2]
-                )
-                maybe[rows] = ok
-                st["bloom_tests"] += len(rows)
-                st["bloom_rejects"] += len(rows) - int(np.count_nonzero(ok))
+            maybe[rows] = ok
+            st["bloom_tests"] += len(rows)
+            st["bloom_rejects"] += len(rows) - int(np.count_nonzero(ok))
         # (2) Bisect each surviving pair's key to the last batch whose
         # min ≤ key, then walk back while max ≥ key: a run of equal keys
         # may span a batch boundary.
@@ -1208,7 +1211,7 @@ class Domain:
         for fi in sorted(wanted):
             shard, copy = files[fi]
             js = sorted(wanted[fi])
-            batches += self._read_batches(copy, js)
+            batches += self._read_batches(copy, js, served)
             batch_shard += [shard] * len(js)
             st["bytes_read"] += sum(copy.sizes[j] for j in js)
         st["batches_read"] += len(batches)
@@ -1248,20 +1251,17 @@ class Domain:
         handle's current local copies take."""
         with self._serving_stats_lock:
             out = dict(self._serving_stats)
-        with self._pq_lock:
-            out["local_bytes"] = sum(c.nbytes for c in self._copies.values())
+        served = self._served
+        with served.lock:
+            out["local_bytes"] = sum(c.nbytes for c in served.copies.values())
         return out
 
-    def _shard_file_list(self, sdir: str) -> "list[str]":
-        """Cached data-file listing for one shard dir of a PUBLISHED
-        version (immutable once the token exists, so the listdir syscalls
-        are pure fixed overhead per probe). Missing dir → empty list.
-        Shares _pq_lock with the local copies; LRU eviction (a >512-file
-        domain must not thrash its hot listings, VERDICT r6 item 3)."""
-        with self._pq_lock:
-            files = self._dir_cache.get(sdir)
-            if files is not None:
-                self._dir_cache.move_to_end(sdir)
+    def _shard_file_list(self, sdir: str, served: _Served) -> "list[str]":
+        """Data-file listing of one shard dir of a PUBLISHED version,
+        listed once per snapshot (immutable once the token exists, so a
+        listdir per probe would be pure fixed overhead). Missing dir →
+        empty list."""
+        files = served.listings.get(sdir)
         if files is None:
             if os.path.isdir(sdir):
                 files = sorted(
@@ -1269,32 +1269,28 @@ class Domain:
                 )
             else:
                 files = []
-            with self._pq_lock:
-                while len(self._dir_cache) >= SERVING_CACHE_CAP:
-                    self._dir_cache.popitem(last=False)
-                files = self._dir_cache.setdefault(sdir, files)
-                self._dir_cache.move_to_end(sdir)
+            files = served.listings.setdefault(sdir, files)
         return files
 
-    def _local_copy(self, src: str, st: dict) -> _LocalCopy:
-        """This handle's local Arrow copy of the published shard file
+    def _local_copy(self, src: str, st: dict, served: _Served) -> _LocalCopy:
+        """``served``'s local Arrow copy of the published shard file
         ``src``, converted on first use (:func:`convert_shard_file`), once
         even under concurrent first probes; counted in
         ``st["files_converted"]``. A conversion error propagates and the
         next probe tries again. The reference keeps its local
         persistences open for the lifetime of a served version
-        (common/domain.clj:184-206); copies live until the published
-        version set changes, cleanup_versions or shutdown()."""
-        with self._pq_lock:
-            copy = self._copies.get(src)
+        (common/domain.clj:184-206); copies live as long as their
+        snapshot."""
+        with served.lock:
+            copy = served.copies.get(src)
             if copy is None:
-                copy = self._copies[src] = _LocalCopy(src, self._bloom_bank)
-            elif src in self._readers:
-                self._readers.move_to_end(src)
+                copy = served.copies[src] = _LocalCopy(src)
+            elif src in served.readers:
+                served.readers.move_to_end(src)
         if copy.path is None:
             with copy.lock:
                 if copy.path is None:
-                    copy.convert(self._new_copy_path())
+                    copy.convert(self._new_copy_path(), served.bank)
                     st["files_converted"] += 1
         return copy
 
@@ -1302,7 +1298,7 @@ class Domain:
         """A fresh file name in the handle's local-copy directory, which
         is made on first use under ``TMPDIR`` and removed by shutdown()
         or when the handle dies."""
-        with self._pq_lock:
+        with self._lock:
             if self._local_dir is None:
                 self._local_dir = tempfile.mkdtemp(prefix="edb-serve-")
                 self._local_dir_fin = weakref.finalize(
@@ -1310,9 +1306,9 @@ class Domain:
                 )
             return os.path.join(self._local_dir, f"{next(self._copy_ids)}.arrow")
 
-    def _read_batches(self, copy: _LocalCopy, js: list[int]) -> list:
+    def _read_batches(self, copy: _LocalCopy, js: list[int], served: _Served) -> list:
         """Record batches ``js`` of a converted copy, opening its reader
-        if the LRU closed it; open readers stay within
+        if the LRU closed it; ``served``'s open readers stay within
         SERVING_CACHE_CAP."""
         import pyarrow as pa
 
@@ -1323,13 +1319,11 @@ class Domain:
                 reader = copy.reader = pa.ipc.open_file(pa.OSFile(copy.path))
             batches = [reader.get_batch(j) for j in js]
         if opened:
-            with self._pq_lock:
-                # a copy dropped meanwhile must not re-enter the LRU
-                if self._copies.get(copy.src) is copy:
-                    self._readers[copy.src] = copy
-                    while len(self._readers) > SERVING_CACHE_CAP:
-                        # a probe reading it holds its own reference
-                        self._readers.popitem(last=False)[1].reader = None
+            with served.lock:
+                served.readers[copy.src] = copy
+                while len(served.readers) > SERVING_CACHE_CAP:
+                    # a probe reading it holds its own reference
+                    served.readers.popitem(last=False)[1].reader = None
         return batches
 
     def count_df(self, version: int | None = None) -> DataFrame:
@@ -1412,7 +1406,7 @@ class Domain:
     def cleanup_versions(self, versions_to_keep: int = 1) -> None:
         """Version GC (A19, VersionedStore.java:110-127)."""
         self.store.cleanup(versions_to_keep)
-        self._sync_versions()
+        self._serving()
 
 
 class Engine:

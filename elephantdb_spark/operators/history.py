@@ -45,8 +45,8 @@ from elephantdb_spark.pinning import pin
 from elephantdb_spark.spec import DomainSpec
 
 #: Above this many batch rows the filter falls back from the broadcast
-#: semi-join to a digest-key shuffle join (mirrors
-#: build.BROADCAST_MERGE_MAX_ROWS).
+#: semi-join to a digest-key shuffle join (~1M digest keys ≈ the 64 MB
+#: broadcast threshold in session.py).
 MAX_BROADCAST_ROWS = 1_000_000
 
 

@@ -26,13 +26,14 @@ Run AFTER bench.py (idle machine) — ratios are wall-clock sensitive.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import sys
 import tempfile
 import time
-from functools import reduce
+from functools import partial, reduce
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -102,24 +103,27 @@ def _neardup_corpus(documents):
     )
 
 
+@contextlib.contextmanager
+def _timed(spark, timings: dict[str, float], name: str):
+    """Time the block into ``timings[name]``, then release the pins and
+    cached frames it left, so the next entry starts clean."""
+    from elephantdb_spark.pinning import release_pins
+
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        timings[name] = round(time.perf_counter() - t0, 3)
+        release_pins()
+        spark.catalog.clearCache()
+
+
 def run_entries(spark, paths: dict[str, str], n: int, tag: str) -> dict[str, float]:
     timings: dict[str, float] = {}
     work = tempfile.mkdtemp(prefix=f"edb_scale_work_{tag}_")
     eng = Engine(spark, work)
 
-    def timed(name):
-        class _T:
-            def __enter__(self):
-                self.t0 = time.perf_counter()
-
-            def __exit__(self, *a):
-                timings[name] = round(time.perf_counter() - self.t0, 3)
-                from elephantdb_spark.pinning import release_pins
-
-                release_pins()
-                spark.catalog.clearCache()
-
-        return _T()
+    timed = partial(_timed, spark, timings)
 
     lineitem = spark.read.parquet(paths["lineitem"])
     documents = spark.read.parquet(paths["documents"])
@@ -535,19 +539,7 @@ def run_scale_critical(spark, paths: dict[str, str], n: int, tag: str) -> dict:
     work = tempfile.mkdtemp(prefix=f"edb_scale_crit_{tag}_")
     eng = Engine(spark, work)
 
-    def timed(name):
-        class _T:
-            def __enter__(self):
-                self.t0 = time.perf_counter()
-
-            def __exit__(self, *a):
-                timings[name] = round(time.perf_counter() - self.t0, 3)
-                from elephantdb_spark.pinning import release_pins
-
-                release_pins()
-                spark.catalog.clearCache()
-
-        return _T()
+    timed = partial(_timed, spark, timings)
 
     lineitem = spark.read.parquet(paths["lineitem"])
     documents = spark.read.parquet(paths["documents"])

@@ -159,11 +159,12 @@ def test_bank_gather_matches_each_filters_might_contain():
     assert check(snapshot, early_filters).any()
 
 
-def test_add_arrow_identical_incl_nulls_slices_large_binary():
-    """The zero-copy Arrow path must match the scalar loop too — with
-    nulls (skipped, like the old builder), SLICED arrays (non-zero
-    ``col.offset`` shifts the offsets-buffer read window), large_binary
-    offsets, and the non-binary fallback."""
+def test_add_batch_arrow_identical_incl_nulls_slices_large_binary():
+    """add_batch over a pyarrow array (hash_keys' zero-copy path) must
+    match the scalar loop too — with nulls (skipped, like the old
+    builder), SLICED arrays (non-zero ``col.offset`` shifts the
+    offsets-buffer read window), large_binary offsets, and the
+    non-binary fallback."""
     import pyarrow as pa
 
     keys = [f"key-{i}".encode() for i in range(500)]
@@ -180,8 +181,9 @@ def test_add_arrow_identical_incl_nulls_slices_large_binary():
         for k in pykeys:
             scalar.add(k)
         vec = BloomFilter.sized(len(pykeys), 0.01)
-        vec.add_arrow(arr)
+        vec.add_batch(arr)
         assert vec.to_bytes() == scalar.to_bytes(), arr.type
+        assert BloomFilter.hash_keys(arr) == BloomFilter.hash_keys(pykeys)
 
 
 def test_empty_build():
@@ -404,7 +406,7 @@ def test_sidecar_job_runs_one_task_per_core(spark, tmp_path):
     for p in data:
         keys = pq.read_table(p, columns=["key"]).column("key").combine_chunks()
         want = BloomFilter.sized(len(keys), 0.01)
-        want.add_arrow(keys)
+        want.add_batch(keys)
         with open(sidecar_path(p), "rb") as fh:
             assert fh.read() == want.to_bytes(), p
 
@@ -431,7 +433,7 @@ def test_add_batch_accepts_one_shot_iterators():
     assert a.to_bytes() == b.to_bytes()
 
 
-def test_contains_batch_identical_to_scalar_might_contain():
+def test_contains_digests_identical_to_scalar_might_contain():
     """The vectorized prober must answer EXACTLY like the per-key
     might_contain loop — members always True (no false negatives),
     non-members bit-for-bit the same fpp decisions — on adversarial keys
@@ -452,7 +454,7 @@ def test_contains_batch_identical_to_scalar_might_contain():
     for fpp in (0.01, 0.25):
         bf = BloomFilter.build(members, fpp)
         scalar = [bf.might_contain(k) for k in probes]
-        assert bf.contains_batch(probes) == scalar
+        assert bf.contains_digests(BloomFilter.hash_keys(probes)) == scalar
         # one hash blob, tested against a second (differently-sized)
         # filter — the per-shard reuse shape in the serving probe
         bf2 = BloomFilter.build(members[:700], fpp)
@@ -460,8 +462,10 @@ def test_contains_batch_identical_to_scalar_might_contain():
         assert bf2.contains_digests(digs) == [
             bf2.might_contain(k) for k in probes
         ]
-    assert bf.contains_batch([]) == []
-    assert bf.contains_batch(iter(members[:5])) == [True] * 5
+    assert bf.contains_digests(BloomFilter.hash_keys([])) == []
+    assert bf.contains_digests(
+        BloomFilter.hash_keys(iter(members[:5]))
+    ) == [True] * 5
 
 
 def test_hash_keys_one_shot_iterator_with_fallback():

@@ -277,6 +277,54 @@ def test_incremental_update_merges_and_copies_forward(spark, tmp_path):
     assert dom.to_map(version=1)[b"3"] == b"old"
 
 
+def test_update_merge_plans_from_measured_batch_size(spark, tmp_path, monkeypatch):
+    """update_domain has one merge path: an unhinted anti-join of the old
+    data against the cached, counted batch's keys. By default the planner
+    broadcasts the batch from its measured size; with broadcasting off
+    (``autoBroadcastJoinThreshold=-1``) it plans a sort-merge join, and
+    both publish the same domain."""
+    import elephantdb_spark.build as build
+    from elephantdb_spark import Domain
+
+    def kv(lo, hi, tag):
+        return spark.range(lo, hi).select(
+            F.col("id").cast("string").cast("binary").alias("key"),
+            F.lit(tag).cast("binary").alias("value"),
+        )
+
+    plans = []
+    real = build._write_version
+
+    def capture(spark_, df, store, vpath):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(spark_, df, store, vpath)
+
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(conf)
+    results = []
+    for threshold in (default, "-1"):
+        root = str(tmp_path / f"merge{threshold}")
+        build_domain(spark, kv(0, 3000, "old"), root, SPEC4, version=1)
+        plans.clear()
+        monkeypatch.setattr(build, "_write_version", capture)
+        spark.conf.set(conf, threshold)
+        try:
+            update_domain(spark, kv(2000, 7000, "new"), root, version=2)
+        finally:
+            spark.conf.set(conf, default)
+            monkeypatch.setattr(build, "_write_version", real)
+        assert len(plans) == 1
+        results.append((Domain(spark, root).to_map(), plans[0]))
+    (want, broadcast_plan), (got, sort_merge_plan) = results
+    assert want == {
+        str(i).encode(): (b"old" if i < 2000 else b"new") for i in range(7000)
+    }
+    assert got == want
+    assert "BroadcastHashJoin" in broadcast_plan and "LeftAnti" in broadcast_plan
+    assert "SortMergeJoin" in sort_merge_plan and "LeftAnti" in sort_merge_plan
+    assert "BroadcastHashJoin" not in sort_merge_plan
+
+
 def test_reshard_preserves_content(spark, tmp_path):
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")

@@ -131,10 +131,10 @@ def test_concurrent_local_multi_get_threads(dom):
 
 
 def test_serving_caches_lru_keep_hot_entry(dom, monkeypatch):
-    """VERDICT r6 item 3: the open-reader and listing caches evict LRU per
-    entry, not wholesale — a hot entry re-touched between cold inserts must
-    survive a sweep larger than the capacity (the old clear() dropped it
-    the moment the 512th cold file arrived), and capacity holds."""
+    """VERDICT r6 item 3: the open-reader LRU evicts per entry, not
+    wholesale — a hot reader re-touched between cold opens must survive a
+    sweep larger than the capacity (the old clear() dropped it the moment
+    the 512th cold file arrived), and capacity holds."""
     import glob
     import os
 
@@ -148,10 +148,11 @@ def test_serving_caches_lru_keep_hot_entry(dom, monkeypatch):
     monkeypatch.setattr(eng, "SERVING_CACHE_CAP", 3)
     st = dict.fromkeys(eng.SERVING_STATS, 0)
     dom = eng.Domain(dom.spark, dom.root)  # no reader open yet
+    served = dom._serving()
 
     def touch(path):
-        copy = dom._local_copy(path, st)
-        dom._read_batches(copy, [0])
+        copy = dom._local_copy(path, st, served)
+        dom._read_batches(copy, [0], served)
         return copy
 
     hot_copy = touch(hot)
@@ -160,19 +161,10 @@ def test_serving_caches_lru_keep_hot_entry(dom, monkeypatch):
         assert touch(hot) is hot_copy  # re-touch: hot
         touch(cold)
     assert hot_copy.reader is hot_reader  # never closed
-    assert len(dom._readers) <= 3
-    assert hot in dom._readers
-    open_readers = [c for c in dom._copies.values() if c.reader is not None]
+    assert len(served.readers) <= 3
+    assert hot in served.readers
+    open_readers = [c for c in served.copies.values() if c.reader is not None]
     assert len(open_readers) <= 3  # evicted readers were closed
-    # listings: same policy
-    dirs = sorted({os.path.dirname(f) for f in files})
-    hot_dir = dirs[0]
-    hot_files = dom._shard_file_list(hot_dir)
-    for cold_dir in dirs[1:6]:
-        assert dom._shard_file_list(hot_dir) is hot_files
-        dom._shard_file_list(cold_dir)
-    assert dom._shard_file_list(hot_dir) is hot_files
-    assert len(dom._dir_cache) <= 3
 
 
 def test_rg_bound_index_matches_stats_walk(spark, tmp_path):
@@ -459,7 +451,7 @@ def _local_files(dom) -> set[str]:
 
 def _copy_files(dom) -> set[str]:
     return {
-        os.path.basename(c.path) for c in dom._copies.values() if c.path
+        os.path.basename(c.path) for c in dom._served.copies.values() if c.path
     }
 
 
@@ -625,7 +617,8 @@ def test_serving_counters_exact_under_8_threads(spark, tmp_path):
         assert serial.local_multi_get(ks) == {k: truth.get(k) for k in ks}
     expect = serial.serving_stats()
     n_files = sum(
-        len(serial._shard_file_list(os.path.join(root, "1", f"shard={s}")))
+        len(serial._shard_file_list(
+            os.path.join(root, "1", f"shard={s}"), serial._serving()))
         for s in range(8)
     )
     assert expect["files_converted"] == n_files
@@ -715,7 +708,7 @@ def test_one_pass_probe_equals_to_map(fragmented):
     got = dom.local_multi_get(list(truth) + misses)
     assert got == {**truth, **dict.fromkeys(misses)}
     # the run: in several files, and across a batch boundary in one
-    copies = [c for c in dom._copies.values() if RUN_KEY in c.mins + c.maxs]
+    copies = [c for c in dom._served.copies.values() if RUN_KEY in c.mins + c.maxs]
     assert len(copies) > 1
     assert any(
         hi == lo == RUN_KEY
@@ -742,7 +735,8 @@ def test_one_pass_probe_one_gather_one_is_in(fragmented, monkeypatch):
     shards = {shard_index(k, 4) for k in keys}
     files = sum(
         len(dom._shard_file_list(os.path.join(
-            dom.store.version_path(dom.current_version()), f"shard={s}")))
+            dom.store.version_path(dom.current_version()), f"shard={s}"),
+            dom._serving()))
         for s in shards
     )
     assert len(shards) == 4 and files > len(shards)
@@ -809,7 +803,7 @@ def test_one_pass_probe_later_file_then_first_row_wins(spark, tmp_path):
         over: b"new", dup: b"first", b"o008": b"old8", b"o199": b"old199",
         b"o100x": None,
     }
-    copies = {os.path.basename(c.src): c for c in dom._copies.values()}
+    copies = {os.path.basename(c.src): c for c in dom._served.copies.values()}
     assert copies[later].bloom is None
     assert all(copies[f].bloom is not None for f in earlier)
 
@@ -830,3 +824,115 @@ def test_one_pass_probe_answers_from_the_routed_shard_only(spark, tmp_path, monk
     assert dom.local_multi_get([b"b"]) == {b"b": None}
     assert dom.local_multi_get([b"a", b"b"]) == {b"a": b"va", b"b": None}
     assert dom.serving_stats()["batches_read"] == 1
+
+
+def test_call_spanning_a_swap_runs_on_one_snapshot(spark, tmp_path, monkeypatch):
+    """A call reads the handle's serving snapshot once: when its first
+    conversion publishes version 2 and runs a nested call, the outer call
+    still tests its pairs with one Bloom gather against one bank, answers
+    from version 1, and none of its copies lands in the new snapshot."""
+    import elephantdb_spark.engine as eng
+    from elephantdb_spark import update_domain
+    from elephantdb_spark.bloom import BloomBank
+
+    root = str(tmp_path / "span")
+    build_domain(
+        spark,
+        spark.createDataFrame(PAIRS, "key binary, value binary"),
+        root,
+        DomainSpec(num_shards=4, persistence_opts={"bloom_fpp": 0.01}),
+        version=1,
+    )
+    dom = eng.Domain(spark, root)
+    truth = dict(PAIRS)
+    keys = [k for k, _ in PAIRS[::7]] + [b"absent"]
+    updated = {k: b"NEW" for k in keys[:20]}
+    state = {"outer": None, "nested": False}
+    outer_banks = []
+    real_convert, real_contains = eng.convert_shard_file, BloomBank.contains
+
+    def contains(self, *a):
+        if not state["nested"]:
+            outer_banks.append(self)
+        return real_contains(self, *a)
+
+    def convert(src, dst):
+        if state["outer"] is None:
+            state["outer"] = dom._served
+            update_domain(
+                spark,
+                spark.createDataFrame(list(updated.items()), "key binary, value binary"),
+                root,
+                version=2,
+            )
+            state["nested"] = True
+            try:
+                assert dom.local_multi_get(keys) == {
+                    k: updated.get(k, truth.get(k)) for k in keys
+                }
+            finally:
+                state["nested"] = False
+        return real_convert(src, dst)
+
+    monkeypatch.setattr(eng, "convert_shard_file", convert)
+    monkeypatch.setattr(BloomBank, "contains", contains)
+    assert dom.local_multi_get(keys) == {k: truth.get(k) for k in keys}
+    outer, now = state["outer"], dom._served
+    assert outer.versions == (1,) and now.versions == (2, 1)
+    assert len(outer_banks) == 1 and outer_banks[0] is outer.bank
+    v1 = dom.store.version_path(1) + os.sep
+    assert len(outer.copies) > 1
+    assert all(c.src.startswith(v1) for c in outer.copies.values())
+    assert not {id(c) for c in outer.copies.values()} & {
+        id(c) for c in now.copies.values()
+    }
+
+
+def test_shard_dir_listed_once_per_version_set(spark, tmp_path, monkeypatch):
+    """A snapshot lists each shard dir once, whatever the number of
+    calls; after a swap the new snapshot lists the dirs it reads once
+    more, a pinned older version's included."""
+    from collections import Counter
+
+    from elephantdb_spark import update_domain
+    from elephantdb_spark.engine import Domain
+
+    root = str(tmp_path / "listing")
+    build_domain(
+        spark,
+        spark.createDataFrame(PAIRS, "key binary, value binary"),
+        root,
+        DomainSpec(num_shards=4),
+        version=1,
+    )
+    dom = Domain(spark, root)
+    keys = [k for k, _ in PAIRS[::5]]
+    listed: Counter = Counter()
+    real = os.listdir
+
+    def listdir(path="."):
+        if os.path.basename(str(path)).startswith("shard="):
+            listed[str(path)] += 1
+        return real(path)
+
+    monkeypatch.setattr(os, "listdir", listdir)
+
+    def shard_dirs(v):
+        return {
+            os.path.join(dom.store.version_path(v), f"shard={s}") for s in range(4)
+        }
+
+    for _ in range(3):
+        dom.local_multi_get(keys)
+    assert listed == Counter(dict.fromkeys(shard_dirs(1), 1))
+    update_domain(
+        spark,
+        spark.createDataFrame([(PAIRS[0][0], b"NEW")], "key binary, value binary"),
+        root,
+        version=2,
+    )
+    listed.clear()
+    for _ in range(3):
+        assert dom.local_multi_get(keys)[PAIRS[0][0]] == b"NEW"
+        dom.local_multi_get(keys, version=1)
+    assert listed == Counter(dict.fromkeys(shard_dirs(1) | shard_dirs(2), 1))

@@ -249,7 +249,7 @@ def test_domain_caches_drop_on_version_change(spark, tmp_path):
     build_domain(spark, kv, eng.domain_root("d"), DomainSpec(num_shards=2), version=1)
     dom = eng.domain("d")
     assert dom.local_get(b"1") == b"v"
-    assert len(dom._copies) > 0
+    assert len(dom._served.copies) > 0
     batch = spark.createDataFrame([(b"1", b"NEW")], "key binary, value binary")
     update_domain(spark, batch, eng.domain_root("d"), version=2)
     dom.cleanup_versions(versions_to_keep=1)
