@@ -538,8 +538,9 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict, dict]:
 
     # incremental update WITH the opt-in self-heal (r8): same 5k batch
     # against a fragmented domain whose spec carries compact_after_files,
-    # so the timed window includes the in-publish merge of every shard
-    # past the threshold — the cost a self-healing A20 append pays
+    # so the update's one merge job also rewrites every shard past the
+    # threshold (no second merge job) — the cost a self-healing A20
+    # append pays
     build_domain(  # untimed fixture: ~5 small files per shard
         spark, li_kv, eng.domain_root("lineitem_kv_heal"),
         DomainSpec(num_shards=NUM_SHARDS,

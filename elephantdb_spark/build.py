@@ -245,87 +245,45 @@ def _fragmented_shards(version_path: str, cap: int) -> list[int]:
     return sorted(out)
 
 
-def _compact_shards_to(
+def _rewrite_shards(
     spark: SparkSession,
     store: DomainStore,
     src_path: str,
-    fragmented: list[int],
+    shards: list[int],
     dst_path: str,
+    opts: dict[str, str],
+    batch: DataFrame | None = None,
 ) -> None:
-    """Read the ``fragmented`` shards of ``src_path`` and write each as
-    ONE key-sorted data file under ``dst_path`` (``shard=<i>`` dirs) —
-    the merge core shared by :func:`compact_domain` (new-version rewrite)
-    and the in-publish self-heal of :func:`update_domain`. One job, one
-    exchange over the fragmented shards only; the serving row-group cap
-    is a layout property of the domain and survives, while split knobs
-    like ``maxRecordsPerFile`` are exactly what compaction undoes and are
-    deliberately NOT re-applied."""
+    """The one shard-rewrite path, shared by :func:`compact_domain`,
+    :func:`update_domain` and ``ann_index.update_ivf_index``: read the
+    ``shards`` of ``src_path`` (partition-pruned), let ``batch`` win per
+    row of the domain's sort column when one is given, and write the
+    result under ``dst_path`` (``shard=<i>`` dirs) with writer ``opts``.
+
+    Schema-agnostic: KV domains carry (key, value), index domains
+    (vec_id, embedding), sorted by ``key`` or the spec's ``id_col``.
+    ``batch`` holds the same data columns plus an int ``shard`` column.
+    The anti-join carries no hint: callers pass a cached, counted batch,
+    so the planner broadcasts it from its measured size."""
     fmt = resolve_format(store.spec.persistence_format)
     base = (
         spark.read.option("basePath", src_path)
         .format(fmt)
         .load(src_path)
-        .filter(F.col("shard").isin(fragmented))  # partition-pruned
+        .filter(F.col("shard").isin(shards))  # partition-pruned
     )
-    # schema-agnostic: KV domains carry (key, value), index domains
-    # (vec_id, embedding) — compaction must preserve whatever the
-    # domain stores, sorted by its own ordering column
     data_cols = [c for c in base.columns if c != "shard"]
     sort_col = (
         "key"
         if "key" in data_cols
         else store.spec.persistence_opts.get("id_col", data_cols[0])
     )
-    sub = base.select(*data_cols, F.col("shard").cast("int").alias("shard"))
-    # layout properties (codec, dictionary, row-group cap, ...) must
-    # SURVIVE compaction — only the file-split knob compaction exists to
-    # undo is dropped
-    _write_shards(
-        spark, sub, store.spec, sort_col, dst_path,
-        _writer_opts(store.spec, drop=("maxRecordsPerFile",)),
-    )
-
-
-def _self_heal_fragmentation(
-    spark: SparkSession, store: DomainStore, vpath: str
-) -> list[int]:
-    """Opt-in auto-compaction inside the publish window (VERDICT r7
-    item 5): with ``persistence_opts={"compact_after_files": N}``,
-    repeated A20 appends self-heal — after copy-forward assembles the
-    new UNPUBLISHED version, any shard dir holding more than N data
-    files is rewritten to one merged key-sorted file before the token
-    publishes. In-window (not a follow-up version) on purpose: callers
-    own the version-id namespace, and an auto-created follow-up id
-    (timestamp or +1) could shadow or collide with their next planned
-    version; here the update's own id simply publishes defragmented.
-    Crash-safe: the temp dir is a non-integer sibling (invisible to
-    version listing), a crashed run leaves the version unpublished and
-    the next attempt clears the leftover. Returns the healed shard ids.
-
-    Reference anchor: the version-chain rewrite the reference performs on
-    its own store (DomainStore.java:156-180, cascalog/keyval.clj:55-64).
-    """
-    cfg = (store.spec.persistence_opts or {}).get("compact_after_files")
-    if not cfg:
-        return []
-    fragmented = _fragmented_shards(vpath, int(cfg))
-    if not fragmented:
-        return []
-    tmp = vpath.rstrip("/") + ".compact-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)  # crashed predecessor's leavings
-    try:
-        _compact_shards_to(spark, store, vpath, fragmented, tmp)
-        for s in fragmented:
-            sdir = os.path.join(vpath, f"shard={s}")
-            shutil.rmtree(sdir)  # stale sidecars go with the dir
-            os.replace(os.path.join(tmp, f"shard={s}"), sdir)
-    finally:
-        # a failed merge job must not orphan a GB-scale temp copy: the
-        # version id is usually a timestamp, so "the retry clears it" is
-        # false (a retry uses a NEW id/path) — clear it here, and
-        # DomainStore.cleanup() sweeps the hard-kill case
-        shutil.rmtree(tmp, ignore_errors=True)
-    return fragmented
+    rows = base.select(*data_cols, F.col("shard").cast("int").alias("shard"))
+    if batch is not None:
+        rows = rows.join(batch.select(sort_col), sort_col, "left_anti").unionByName(
+            batch.select(*data_cols, "shard")
+        )
+    _write_shards(spark, rows, store.spec, sort_col, dst_path, opts)
 
 
 def update_domain(
@@ -351,6 +309,16 @@ def update_domain(
     never shuffled for the merge (its only shuffle is the write-path
     placement) — and a batch above ``autoBroadcastJoinThreshold`` as a
     sort-merge one, with the same answer.
+
+    Opt-in self-heal (``persistence_opts={"compact_after_files": N}``):
+    every shard of the previous version holding more than N data files
+    joins the touched set, and the one merge job writes each rewritten
+    shard as ONE file (no ``maxRecordsPerFile`` split), so repeated
+    updates never accumulate fragments. A touched shard becomes one file
+    even when its split would have stayed within N; shards at or under N
+    that the batch does not touch are still copied forward. The update's
+    own version id publishes the healed layout (callers own the
+    version-id namespace, so no follow-up version is made).
     """
     store = DomainStore.open(domain_root)
     n = store.spec.num_shards
@@ -372,23 +340,17 @@ def update_domain(
                 r["shard"] for r in new_data.groupBy("shard").count().collect()
             )
             prev_path = store.version_path(prev)
-            old = (
-                spark.read.option("basePath", prev_path)
-                .format(resolve_format(store.spec.persistence_format))
-                .load(prev_path)
-                .filter(F.col("shard").isin(touched))  # partition-pruned scan
-                .select("key", "value", F.col("shard").cast("int").alias("shard"))
-            )
+            cap = (store.spec.persistence_opts or {}).get("compact_after_files")
+            if cap:
+                touched = sorted({*touched, *_fragmented_shards(prev_path, int(cap))})
+            opts = _writer_opts(store.spec, drop=("maxRecordsPerFile",) if cap else ())
             # New batch wins per key (Q11: COALESCE(new, old)).
-            survivors = old.join(new_data.select("key"), "key", "left_anti")
-            merged = survivors.unionByName(new_data).select("key", "value")
-            _write_version(spark, merged, store, vpath)
+            _rewrite_shards(
+                spark, store, prev_path, touched, vpath, opts, batch=new_data
+            )
         finally:
             new_data.unpersist()
         store.synchronize_versions(prev, version)
-        # opt-in self-heal BEFORE sidecars/publish: merged shards then
-        # get fresh blooms in the same pass (r7 verdict item 5)
-        _self_heal_fragmentation(spark, store, vpath)
         _maybe_build_blooms(spark, store, vpath)  # rewritten shards only
     return version
 
@@ -574,7 +536,12 @@ def compact_domain(
     ]
 
     with store.publishing(version) as (version, vpath):
-        _compact_shards_to(spark, store, cur_path, fragmented, vpath)
+        # layout properties (codec, row-group cap, ...) survive; only the
+        # file-split knob compaction exists to undo is dropped
+        _rewrite_shards(
+            spark, store, cur_path, fragmented, vpath,
+            _writer_opts(store.spec, drop=("maxRecordsPerFile",)),
+        )
         for name in extras:
             src = os.path.join(cur_path, name)
             dst = os.path.join(vpath, name)

@@ -42,7 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from elephantdb_spark.build import _write_shards
+from elephantdb_spark.build import _rewrite_shards, _write_shards
 from elephantdb_spark.operators.ann import (
     _probe_cells_udf,
     add_ivf_cell,
@@ -154,8 +154,9 @@ def update_ivf_index(
     price of exact LWW without an id→cell sidecar (a re-ingested vector
     can have MOVED cells, and its old cell must rewrite to evict the
     stale copy). The merge itself stays batch-shaped: old data is
-    partition-pruned to the touched cells and never shuffles (broadcast
-    anti-join on batch ids), and the write re-uses the exact 1:1
+    partition-pruned to the touched cells and anti-joined on the cached
+    batch's ids (``build._rewrite_shards``, which the planner broadcasts
+    from the measured batch size), and the write re-uses the exact 1:1
     cell→partition placement, emitting files only for touched cells.
     """
     store = DomainStore.open(root)
@@ -208,16 +209,10 @@ def update_ivf_index(
                 .collect()
             }
             touched = sorted(new_cells | old_cells)
-            old = vectors.filter(F.col("shard").isin(touched)).select(
-                id_col, vec_col, "shard"
+            _rewrite_shards(
+                spark, store, store.version_path(prev), touched, vpath, {},
+                batch=assigned,
             )
-            survivors = old.join(
-                F.broadcast(assigned.select(id_col)), id_col, "left_anti"
-            )
-            merged = survivors.unionByName(
-                assigned.select(id_col, vec_col, "shard")
-            )
-            _write_shards(spark, merged, spec, id_col, vpath, {})
             # a touched cell that ended up EMPTY (its only vectors moved
             # elsewhere) gets no shard dir from the write — materialize
             # an empty one so synchronize_versions does not copy the old

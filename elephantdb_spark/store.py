@@ -205,8 +205,9 @@ class VersionedStore:
 
     def cleanup(self, versions_to_keep: int = -1) -> None:
         """Keep the N newest published versions; delete every other
-        version-like entry, including unpublished dirs and every
-        ``.staging-*`` dir (VersionedStore.java:110-127). No-op on a
+        version-like entry, including unpublished dirs, every
+        ``.staging-*`` dir and any ``.compact-tmp`` scratch an older
+        writer crashed in (VersionedStore.java:110-127). No-op on a
         never-created root."""
         if not os.path.isdir(self.root):
             return
@@ -225,9 +226,10 @@ class VersionedStore:
             full = os.path.join(self.root, name)
             if name.startswith(".staging-") or name.endswith(".compact-tmp"):
                 # StagedBuild batches share the lifetime of their
-                # unpublished version, which this pass deletes too; the
-                # self-heal scratch (build._self_heal_fragmentation) is a
-                # copy of an unpublished version's shards
+                # unpublished version, which this pass deletes too. No
+                # writer makes a ``.compact-tmp`` dir any more: the sweep
+                # only cleans roots where an older writer's in-publish
+                # self-heal crashed and left its scratch copy
                 shutil.rmtree(full, ignore_errors=True)
                 continue
             stem = name

@@ -293,11 +293,11 @@ def test_update_merge_plans_from_measured_batch_size(spark, tmp_path, monkeypatc
         )
 
     plans = []
-    real = build._write_version
+    real = build._write_shards
 
-    def capture(spark_, df, store, vpath):
+    def capture(spark_, df, spec, sort_col, path, opts):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return real(spark_, df, store, vpath)
+        return real(spark_, df, spec, sort_col, path, opts)
 
     conf = "spark.sql.autoBroadcastJoinThreshold"
     default = spark.conf.get(conf)
@@ -306,13 +306,13 @@ def test_update_merge_plans_from_measured_batch_size(spark, tmp_path, monkeypatc
         root = str(tmp_path / f"merge{threshold}")
         build_domain(spark, kv(0, 3000, "old"), root, SPEC4, version=1)
         plans.clear()
-        monkeypatch.setattr(build, "_write_version", capture)
+        monkeypatch.setattr(build, "_write_shards", capture)
         spark.conf.set(conf, threshold)
         try:
             update_domain(spark, kv(2000, 7000, "new"), root, version=2)
         finally:
             spark.conf.set(conf, default)
-            monkeypatch.setattr(build, "_write_version", real)
+            monkeypatch.setattr(build, "_write_shards", real)
         assert len(plans) == 1
         results.append((Domain(spark, root).to_map(), plans[0]))
     (want, broadcast_plan), (got, sort_merge_plan) = results

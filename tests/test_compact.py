@@ -312,6 +312,69 @@ def test_update_self_heals_fragmentation(spark, tmp_path):
     assert eng.maintain("heal") is None
 
 
+def _keys_by_shard(n: int, num_shards: int) -> dict[int, list[int]]:
+    """Integer keys 0, 1, ... grouped by the shard their string form
+    hashes to, until every shard has at least ``n``."""
+    from elephantdb_spark.sharding import shard_index
+
+    out: dict[int, list[int]] = {s: [] for s in range(num_shards)}
+    i = 0
+    while min(len(v) for v in out.values()) < n:
+        out[shard_index(str(i).encode(), num_shards)].append(i)
+        i += 1
+    return out
+
+
+def test_healing_update_is_one_write_job(spark, tmp_path, monkeypatch):
+    """A healing update rewrites its touched shards and every shard over
+    compact_after_files in ONE write job: the untouched over-cap shard
+    becomes one file, and an untouched shard at the cap is copied
+    forward with its data-file names intact."""
+    import elephantdb_spark.build as B
+
+    by_shard = _keys_by_shard(12, 4)
+    hot, big, small = 0, 1, 2  # touched, untouched over cap, untouched at cap
+    keys = by_shard[hot][:12] + by_shard[big][:12] + by_shard[small][:3]
+    root = str(tmp_path / "one_job")
+    spec = DomainSpec(num_shards=4, persistence_opts={
+        "maxRecordsPerFile": 5, "compact_after_files": 1,
+    })
+    build_domain(spark, _kv(spark, [(k, f"v{k}") for k in keys]), root, spec,
+                 version=1)
+    store = DomainStore.open(root)
+    v1 = store.version_path(1)
+    before = _files_per_shard(v1)
+    assert before[hot] == 3 and before[big] == 3 and before[small] == 1, before
+
+    def names(vpath, s):
+        return sorted(
+            f for f in os.listdir(os.path.join(vpath, f"shard={s}"))
+            if not f.startswith(("_", "."))
+        )
+
+    small_names = names(v1, small)
+    calls = []
+    real = B._write_shards
+
+    def counting(*a, **kw):
+        calls.append(a[4])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(B, "_write_shards", counting)
+    upd = by_shard[hot][0]
+    update_domain(spark, _kv(spark, [(upd, "NEW")]), root, version=2)
+    monkeypatch.undo()
+    assert len(calls) == 1, calls  # no second (self-heal) write job
+
+    v2 = store.version_path(2)
+    after = _files_per_shard(v2)
+    assert after[hot] == 1 and after[big] == 1, after
+    assert names(v2, small) == small_names  # copied forward, not rewritten
+    want = {str(k).encode(): f"v{k}".encode() for k in keys}
+    want[str(upd).encode()] = b"NEW"
+    assert Domain(spark, root).to_map(version=2) == want
+
+
 def test_update_no_heal_without_opt_in(spark, tmp_path):
     """Without compact_after_files the old behavior is untouched — the
     update copy-forwards the fragmented layout as-is."""
@@ -354,9 +417,10 @@ def test_maintain_sweep_compacts_then_noops(spark, tmp_path):
 def test_self_heal_preserves_layout_opts_and_cleans_tmp(spark, tmp_path, monkeypatch):
     """Code-review r8 follow-ups: (a) the in-publish merge re-applies
     LAYOUT persistence_opts (codec etc.), dropping only split knobs and
-    our own non-writer knobs; (b) a failed merge job does not orphan the
-    .compact-tmp scratch copy; (c) DomainStore.cleanup GCs a hard-kill
-    leftover."""
+    our own non-writer knobs; (b) a failed merge job leaves the new
+    version unpublished, the previous one serving and status() failed;
+    (c) DomainStore.cleanup GCs a ``.compact-tmp`` leftover of an older
+    writer's hard-killed self-heal."""
     import glob
 
     import pyarrow.parquet as pq
@@ -381,16 +445,21 @@ def test_self_heal_preserves_layout_opts_and_cleans_tmp(spark, tmp_path, monkeyp
         assert meta.row_group(0).column(0).compression == "ZSTD", f
     assert not glob.glob(os.path.join(root, "*.compact-tmp"))
 
-    # (b) merge failure → tmp cleared, version unpublished, v2 still serves
+    # (b) merge failure → v3 unpublished, v2 still serves, status failed
     def _boom(*a, **kw):
         raise RuntimeError("merge job failed")
 
-    monkeypatch.setattr(B, "_compact_shards_to", _boom)
+    monkeypatch.setattr(B, "_write_shards", _boom)
     with pytest.raises(RuntimeError, match="merge job failed"):
         update_domain(spark, _kv(spark, [(5, "X")]), root, version=3)
     assert not glob.glob(os.path.join(root, "*.compact-tmp"))
     assert store.most_recent_version() == 2
+    assert not store.has_version(3)
     monkeypatch.undo()
+    dom = Domain(spark, root)
+    assert dom.status() == "failed"
+    assert dom.local_multi_get([b"3", b"5"]) == {b"3": b"NEW", b"5": b"v5"}
+    dom.shutdown()
 
     # (c) a hard-kill leftover (finally never ran) is swept by cleanup
     orphan = os.path.join(root, "999.compact-tmp")

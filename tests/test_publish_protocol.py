@@ -6,16 +6,17 @@ version or writes a token, bar StagedBuild's up-front reservation.
 
 By crash points: the k-th ``os.rename``, ``os.replace``, ``os.makedirs``,
 ``shutil.rmtree``, ``shutil.copytree`` or ``succeed_version`` call inside
-``StagedBuild.publish`` (build and update branch) and ``sync_domain``
-raises, for every k. After each crash, reads return exactly the old
-version or the whole new one, ``status()`` is failed or ready, a resumed
-publish (or a repeated sync) publishes, and ``cleanup`` leaves no
-staging dir and no unpublished version.
+``StagedBuild.publish`` (build, update and healing-update branch) and
+``sync_domain`` raises, for every k. After each crash, reads return
+exactly the old version or the whole new one, ``status()`` is failed or
+ready, a resumed publish (or a repeated sync) publishes, and ``cleanup``
+leaves no staging or ``.compact-tmp`` dir and no unpublished version.
 """
 
 from __future__ import annotations
 
 import ast
+import glob
 import os
 import pathlib
 import shutil
@@ -42,8 +43,8 @@ def _sources() -> dict[str, str]:
 
 
 def _method_calls(attrs: set[str]) -> set[tuple[str, str, str]]:
-    """(module, enclosing def/class path, method) of every ``x.<attr>(...)``
-    call in the package."""
+    """(module, enclosing def/class path, name) of every ``x.<attr>(...)``
+    or bare ``<attr>(...)`` call in the package."""
     found = set()
 
     def walk(module, node, scope):
@@ -51,12 +52,11 @@ def _method_calls(attrs: set[str]) -> set[tuple[str, str, str]]:
             inner = scope
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 inner = scope + (child.name,)
-            elif (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr in attrs
-            ):
-                found.add((module, ".".join(scope), child.func.attr))
+            elif isinstance(child, ast.Call):
+                func = child.func
+                name = getattr(func, "attr", None) or getattr(func, "id", None)
+                if name in attrs:
+                    found.add((module, ".".join(scope), name))
             walk(module, child, inner)
 
     for module, src in _sources().items():
@@ -69,6 +69,16 @@ def test_only_publishing_reserves_and_publishes_versions():
         ("store.py", "VersionedStore.publishing", "create_version"),
         ("store.py", "VersionedStore.publishing", "succeed_version"),
         ("build.py", "StagedBuild.__init__", "create_version"),
+    }
+
+
+def test_only_the_build_paths_and_rewrite_shards_write_shards():
+    """Every merge of old shards with a batch goes through
+    ``build._rewrite_shards``, so no writer keeps a private merge."""
+    assert _method_calls({"_write_shards"}) == {
+        ("build.py", "_write_version", "_write_shards"),
+        ("build.py", "_rewrite_shards", "_write_shards"),
+        ("operators/ann_index.py", "build_ivf_index", "_write_shards"),
     }
 
 
@@ -89,7 +99,41 @@ HOT = b"k0"
 MATE = next(k for k in OLD if k != HOT and shard_index(k, 2) == shard_index(HOT, 2))
 BATCHES = [[(HOT, b"x1"), (MATE, b"y")], [(HOT, b"x2")]]  # later batch wins
 STAGED = {HOT: b"x2", MATE: b"y"}
-KEYS = sorted(OLD) + [b"absent"]
+
+# a healing update: 2 rows a file under a cap of 1 file a shard
+HEAL_SPEC = DomainSpec(num_shards=3, persistence_opts={
+    "maxRecordsPerFile": 2, "compact_after_files": 1, "bloom_fpp": 0.01,
+})
+
+
+def _heal_case():
+    """A fragmented version 1 for HEAL_SPEC (HOT's shard and ``big``
+    2 files each, over the cap; ``small`` 1 file, at it), and staged
+    batches that touch HOT's shard only."""
+    n = HEAL_SPEC.num_shards
+    by_shard: dict[int, list[bytes]] = {s: [] for s in range(n)}
+    for i in range(200):
+        k = f"h{i}".encode()
+        by_shard[shard_index(k, n)].append(k)
+    hot = shard_index(HOT, n)
+    big, small = (s for s in range(n) if s != hot)
+    old = {
+        k: b"o" + k
+        for k in by_shard[hot][:3] + by_shard[big][:4] + by_shard[small][:2]
+    }
+    mate = by_shard[hot][0]
+    batches = [[(HOT, b"x1"), (mate, b"y")], [(HOT, b"x2")]]
+    return old, batches, {HOT: b"x2", mate: b"y"}, {hot: 2, big: 2, small: 1}
+
+
+HEAL_OLD, HEAL_BATCHES, HEAL_STAGED, HEAL_V1_FILES = _heal_case()
+#: branch → (spec, version 1 or None, staged batches, published version 2)
+CASES = {
+    "build": (SPEC, None, BATCHES, STAGED),
+    "update": (SPEC, OLD, BATCHES, {**OLD, **STAGED}),
+    "heal": (HEAL_SPEC, HEAL_OLD, HEAL_BATCHES, {**HEAL_OLD, **HEAL_STAGED}),
+}
+KEYS = sorted({*OLD, *HEAL_OLD}) + [b"absent"]
 
 
 class _Crash(Exception):
@@ -154,7 +198,10 @@ def _assert_clean_after_cleanup(root):
     store = DomainStore.open(root)
     store.cleanup()
     assert store.unpublished_versions() == []
-    assert [n for n in os.listdir(root) if n.startswith(".staging-")] == []
+    assert [
+        n for n in os.listdir(root)
+        if n.startswith(".staging-") or n.endswith(".compact-tmp")
+    ] == []
 
 
 def _crash_every_point(prepare, check):
@@ -182,26 +229,47 @@ def _crash_every_point(prepare, check):
 @pytest.fixture(scope="module")
 def staged_roots(spark, tmp_path_factory):
     """One staged-but-unpublished domain per publish branch: ``build``
-    (nothing published yet) and ``update`` (version 1 = OLD published)."""
+    (nothing published yet), ``update`` (version 1 = OLD published) and
+    ``heal`` (version 1 = HEAL_OLD, fragmented)."""
     base = tmp_path_factory.mktemp("staged")
     roots = {}
-    for branch in ("build", "update"):
+    for branch, (spec, old, batches, _) in CASES.items():
         root = str(base / branch)
-        if branch == "update":
-            build_domain(spark, _kv(spark, OLD.items()), root, SPEC, version=1)
-        sb = StagedBuild(spark, root, SPEC, version=2)
-        for batch in BATCHES:
+        if old is not None:
+            build_domain(spark, _kv(spark, old.items()), root, spec, version=1)
+        sb = StagedBuild(spark, root, spec, version=2)
+        for batch in batches:
             sb.stage(_kv(spark, batch))
         roots[branch] = root
+    dom = Domain(spark, roots["heal"])
+    shards = dom.layout_report(1)["shards"]
+    dom.shutdown()
+    assert {s: shards[s]["files"] for s in HEAL_V1_FILES} == HEAL_V1_FILES
     return roots
 
 
-@pytest.mark.parametrize("branch", ["build", "update"])
+def _assert_healed(spark, root):
+    """Version 2 holds at most compact_after_files (1) data files a
+    shard, each with exactly one Bloom sidecar."""
+    dom = Domain(spark, root)
+    try:
+        assert dom.layout_report(2)["max_files_per_shard"] <= 1
+    finally:
+        dom.shutdown()
+    vpath = DomainStore.open(root).version_path(2)
+    for sdir in glob.glob(os.path.join(vpath, "shard=*")):
+        names = os.listdir(sdir)
+        data = {f for f in names if not f.startswith(("_", "."))}
+        sides = {f for f in names if f.endswith(".bloom")}
+        assert sides == {"." + f + ".bloom" for f in data}, sdir
+
+
+@pytest.mark.parametrize("branch", list(CASES))
 def test_staged_publish_survives_every_crash_point(
     spark, tmp_path, staged_roots, branch
 ):
-    old = {None: None} if branch == "build" else {1: OLD}
-    new = STAGED if branch == "build" else {**OLD, **STAGED}
+    _, v1, _, new = CASES[branch]
+    old = {None: None} if v1 is None else {1: v1}
 
     def prepare(k):
         root = str(tmp_path / f"k{k}")
@@ -223,11 +291,13 @@ def test_staged_publish_survives_every_crash_point(
                 assert StagedBuild.resume(spark, root, 2).publish() == 2
             assert Domain(spark, root).status() == "ready"
         assert _assert_reads(spark, root, {2: new}) == 2
+        if branch == "heal":
+            _assert_healed(spark, root)
         _assert_clean_after_cleanup(root)
 
     points = _crash_every_point(prepare, check)
     assert points.count("succeed_version") == 1, points
-    assert ("copytree" in points) == (branch == "update"), points  # copy-forward
+    assert ("copytree" in points) == (branch != "build"), points  # copy-forward
 
 
 @pytest.fixture(scope="module")
