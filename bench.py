@@ -617,7 +617,7 @@ def run_pass(spark, pass_idx: int) -> tuple[dict, dict, dict]:
     with timed("neardup_history_probe"):
         filter_against_neardup_history(
             spark, _neardup_history_batch(documents), nd_root,
-            "doc_id", "text", cache_sigs=False,
+            "doc_id", "text",
         ).count()
 
     # lockstep compaction of a fragmented history (r7): untimed fixture

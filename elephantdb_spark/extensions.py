@@ -245,8 +245,11 @@ def q57_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q58_contamination_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination check: corpus docs sharing a 3-gram with
-    the benchmark slice (doc_id % 41 == 0), benchmark n-grams broadcast
-    so the corpus never shuffles."""
+    the benchmark slice (doc_id % 41 == 0). The planner broadcasts the
+    benchmark n-grams while their size estimate fits the broadcast
+    threshold, so the corpus does not shuffle. The estimate follows the
+    estimate of the whole documents table (a filter does not shrink it),
+    not the slice; it fits at sf0.1."""
     docs = _table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0)
     corpus = docs.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
@@ -1385,10 +1388,8 @@ def q104_neardup_vs_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _neardup_history_root(spark, sf_dir)
     batch = _neardup_history_batch(_table(spark, sf_dir, "documents"))
     return (
-        # cache_sigs=False: cheaper than the pin (see its docs)
         filter_against_neardup_history(
-            spark, batch, root, "doc_id", "text",
-            threshold=_ND_THRESHOLD, cache_sigs=False,
+            spark, batch, root, "doc_id", "text", threshold=_ND_THRESHOLD
         )
         .select(
             "doc_id",

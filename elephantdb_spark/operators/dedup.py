@@ -390,7 +390,6 @@ def strip_duplicate_lines(
     id_col: str,
     text_col: str,
     max_line_docs: int = 2,
-    broadcast_hot: bool = True,
 ) -> DataFrame:
     """Corpus-level boilerplate-line removal (the C4/RefinedWeb cleaning
     step): delete every line whose trimmed form appears in more than
@@ -405,9 +404,10 @@ def strip_duplicate_lines(
     Scale shape: the line-frequency count and the hot-line anti-join key
     on a 128-bit digest of the trimmed line (two seeded xxhash64 halves,
     same rule as :func:`exact_dedup`) so the shuffle carries 16-byte
-    keys, never line text; the hot set is heavy-hitter-sized and
-    broadcasts (``broadcast_hot=False`` falls back to a shuffled
-    anti-join for pathological thresholds). Reassembly aggregates only a
+    keys, never line text; the planner picks broadcast or shuffle for
+    the hot-set anti-join from its size estimate (the session's
+    ``autoBroadcastJoinThreshold`` plus AQE), so a pathological
+    threshold shuffles instead of broadcasting. Reassembly aggregates only a
     document's OWN lines — state is bounded by document size. Internal
     hashing never leaks into the output, so the operator stays
     SQL-oracle-able end to end.
@@ -435,8 +435,6 @@ def strip_duplicate_lines(
         .filter(F.col("__docs") > max_line_docs)
         .select("__d0", "__d1")
     )
-    if broadcast_hot:
-        hot = F.broadcast(hot)
     # blank lines bypass the anti-join (they are never counted, so they
     # can never be hot — and must survive even if their digest collides)
     kept = lines.filter(~F.col("__blank")).join(
@@ -473,7 +471,6 @@ def repeated_span_profile(
     gram_chars: int = 40,
     stride: int = 20,
     max_gram_docs: int = 1,
-    broadcast_hot: bool = True,
 ) -> DataFrame:
     """Cross-document repeated-substring detection — the strided char-gram
     approximation of suffix-array ExactSubstr dedup (Lee et al. 2022,
@@ -494,8 +491,8 @@ def repeated_span_profile(
     Scale shape: spans shuffle as 16-byte digests (the
     :func:`exact_dedup` two-halves rule) — gram text never rides an
     exchange; the hot-gram set is bounded by actual cross-document
-    duplication and broadcasts back (``broadcast_hot=False`` falls back
-    to a shuffled join); the per-document tally aggregates only the
+    duplication, and the planner broadcasts it back or shuffle-joins it
+    by its size estimate; the per-document tally aggregates only the
     document's own spans. One digest-count shuffle + one tally shuffle.
     """
     if gram_chars < 1 or stride < 1:
@@ -532,8 +529,6 @@ def repeated_span_profile(
         .filter(F.col("__docs") > max_gram_docs)
         .select("__d0", "__d1", F.lit(True).alias("__hot"))
     )
-    if broadcast_hot:
-        hot = F.broadcast(hot)
     flagged = spans.join(hot, ["__d0", "__d1"], "left")
     n_spans = F.count(F.lit(1))
     n_hot = F.sum(F.col("__hot").isNotNull().cast("long"))

@@ -21,9 +21,9 @@ Why this scales where the one-shot operator can't:
   filter is TWO BROADCAST joins (semi: history ⋉ batch-digests to find
   hits — the only frame ever collected is batch-sized; then left: batch
   ⋈ hits to flag rows). The history is scanned once and NEVER shuffled.
-  Batches above ``max_broadcast_rows`` fall back to a key shuffle where
-  only 32-byte digests ride the exchange — the same threshold pattern as
-  ``build.update_domain``.
+  Batches above ``MAX_BROADCAST_ROWS`` fall back to a key shuffle where
+  only 32-byte digests ride the exchange. The batch's exact row count
+  is the size estimate behind that broadcast.
 * Appending accepted digests goes through ``update_domain``: shards the
   batch doesn't touch are file-copied forward (A20), so growing the
   seen-set costs O(batch), not O(history).
@@ -110,7 +110,6 @@ def filter_against_history(
     batch: DataFrame,
     root: str,
     key_cols: list[str],
-    max_broadcast_rows: int = MAX_BROADCAST_ROWS,
     version: int | None = None,
 ) -> DataFrame:
     """Flag each batch row against the seen-set: returns the batch columns
@@ -126,7 +125,7 @@ def filter_against_history(
     keyed = pin(batch.withColumn("__k", digest_key_col(key_cols)))
     out_cols = [*batch.columns, F.col("__hit").isNull().alias("is_new")]
     n_batch = keyed.count()
-    if n_batch <= max_broadcast_rows:
+    if n_batch <= MAX_BROADCAST_ROWS:
         # hits = history ⋉ batch digests: history scanned once, never
         # shuffled; the result is bounded by the batch's distinct count
         hits = hist.join(

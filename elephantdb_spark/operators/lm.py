@@ -7,8 +7,9 @@ log-probability, filter the tail. Extends the engine per the build brief
 
 Scale shape: the MODEL is bounded by observed n-gram diversity (~vocab^n
 but Zipf-truncated, « corpus — and `min_count` truncates it further), so
-it broadcasts into the scoring join; the corpus is scanned once and never
-shuffles during scoring. Training is one explode + one
+the planner broadcasts it into the scoring join while its size estimate
+fits the session's broadcast threshold; the corpus is then scanned once
+and never shuffles during scoring. Training is one explode + one
 map-side-combinable count aggregation; the per-prefix totals ride a
 window over the (model-sized, not corpus-sized) count table.
 
@@ -89,16 +90,20 @@ def lm_log2_likelihood(
     text_col: str,
     n: int = 2,
     oov_log2: float = -20.0,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Score documents under a trained n-gram LM: returns (``id_col``,
     ``n_ngrams``, ``avg_log2_prob``) — the average log2 conditional
     probability of the doc's n-grams, OOV n-grams at ``oov_log2``. Docs
     with fewer than ``n`` tokens are scored NULL (no n-grams).
 
-    The model broadcasts by default (n-gram tables are Zipf-bounded);
-    pass ``broadcast_model=False`` to shuffle-join on the prefix for
-    models that outgrow the broadcast limit.
+    The planner picks the join from the model's size estimate: a
+    pruned n-gram table under the session's
+    ``autoBroadcastJoinThreshold`` broadcasts, a larger one
+    shuffle-joins on (prefix, next_token). A model built in the same
+    plan (:func:`train_ngram_lm`'s frame) is estimated at about its
+    training corpus's size, however small the pruned table; score with
+    a model read back from storage to have its real size behind the
+    choice.
     """
     exploded = df.select(
         F.col(id_col),
@@ -107,8 +112,6 @@ def lm_log2_likelihood(
         id_col, F.col("p.prefix").alias("prefix"), F.col("p.next").alias("next_token")
     )
     model = lm.select("prefix", "next_token", F.log2("prob").alias("__lp"))
-    if broadcast_model:
-        model = F.broadcast(model)
     scored = exploded.join(model, ["prefix", "next_token"], "left").select(
         id_col,
         F.col("prefix").isNotNull().alias("__has"),

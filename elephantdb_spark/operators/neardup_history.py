@@ -87,7 +87,6 @@ from elephantdb_spark.build import (
 )
 from elephantdb_spark.engine import Domain, DomainNotLoadedError
 from elephantdb_spark.operators.dedup import _shingle_index, _signature_hash
-from elephantdb_spark.pinning import pin
 from elephantdb_spark.spec import DomainSpec
 from elephantdb_spark.store import DomainStore
 
@@ -397,7 +396,7 @@ def filter_against_neardup_history(
     threshold: float = 0.7,
     version: int | None = None,
     tasks_per_shard: int | None = None,
-    cache_sigs: bool = True,
+    cache_sigs: bool = False,
 ) -> DataFrame:
     """Flag each batch row against the signature history: returns the
     batch columns plus
@@ -418,12 +417,11 @@ def filter_against_neardup_history(
     Rows with fewer than ``shingle_len`` tokens have no signature and
     come back ``(false, null, null)``.
 
-    ``cache_sigs`` pins the batch signature frame consumed by both the
-    band probe and the scoring join (:func:`~elephantdb_spark.pinning.
-    pin`; release after the consuming action). Pass False to let the
-    minhash lineage run once per consumer instead — measured cheaper
-    than the pin, which defeats bulk_join's auto task sizing (see the
-    inline note).
+    ``cache_sigs`` is accepted and ignored: the batch signature frame is
+    never pinned, and the minhash lineage runs once per consumer (the
+    band probe and the scoring join) — measured cheaper than a pin,
+    which defeats bulk_join's auto task sizing (see the inline note).
+    The parameter goes once no caller passes it.
 
     ``version`` pins BOTH sub-domains (their versions move in lockstep);
     when None, ONE shared snapshot is resolved from the bands domain —
@@ -440,9 +438,7 @@ def filter_against_neardup_history(
     sigs = minhash_signatures(
         batch, id_col, text_col, num_perm, p["shingle_len"], p["hash_fn"]
     )
-    if cache_sigs:
-        sigs = pin(sigs)
-    # cache_sigs=False is the cheaper setting (r19, measured): pinning
+    # sigs is not pinned (r19, measured cheaper): pinning
     # sigs puts the band probe on an ExistingRDD lineage, which defeats
     # the footer-sampled probe-row estimate behind bulk_join's
     # auto-tasks_per_shard (non-file plans -> m=1), and the de-par-

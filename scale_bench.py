@@ -265,7 +265,7 @@ def run_entries(spark, paths: dict[str, str], n: int, tag: str) -> dict[str, flo
     with timed("neardup_history_probe"):
         filter_against_neardup_history(
             spark, _neardup_history_batch(documents), nd_root,
-            "doc_id", "text", cache_sigs=False,
+            "doc_id", "text",
         ).agg(F.sum(F.col("is_neardup").cast("long"))).collect()
 
     from elephantdb_spark.analytics import load_events, sessionize, ts_from_nanos
@@ -583,7 +583,7 @@ def run_scale_critical(spark, paths: dict[str, str], n: int, tag: str) -> dict:
     with timed("neardup_history_probe"):
         filter_against_neardup_history(
             spark, _neardup_history_batch(documents), nd_root,
-            "doc_id", "text", cache_sigs=False,
+            "doc_id", "text",
         ).agg(F.sum(F.col("is_neardup").cast("long"))).collect()
 
     shutil.rmtree(work, ignore_errors=True)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from elephantdb_spark.operators import history
 from elephantdb_spark.operators.history import (
     append_dedup_history,
     build_dedup_history,
@@ -49,10 +50,10 @@ def test_flags_match_python_replay(spark, hist_root):
     assert got[401] is True  # 'None' string is not NULL
 
 
-def test_broadcast_and_shuffle_paths_agree(spark, hist_root):
-    assert _flags(spark, hist_root) == _flags(
-        spark, hist_root, max_broadcast_rows=0
-    )
+def test_broadcast_and_shuffle_paths_agree(spark, hist_root, monkeypatch):
+    broadcast = _flags(spark, hist_root)
+    monkeypatch.setattr(history, "MAX_BROADCAST_ROWS", 0)
+    assert _flags(spark, hist_root) == broadcast
 
 
 def test_append_then_refilter_and_version_pin(spark, hist_root):

@@ -124,7 +124,7 @@ def test_lm_log2_likelihood_matches_python(spark, lm_corpus):
     probe = spark.createDataFrame([(99, "zebra quux")], "doc_id long, text string")
     r = lm_log2_likelihood(probe, lm, "doc_id", "text", oov_log2=-20.0).collect()[0]
     assert (r.n_ngrams, r.avg_log2_prob) == (1, -20.0)
-    # model side broadcasts by default
+    # the planner broadcasts the small model side
     plan = (
         lm_log2_likelihood(lm_corpus, lm, "doc_id", "text")
         ._jdf.queryExecution()

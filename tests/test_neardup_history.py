@@ -101,7 +101,7 @@ def _probe(spark, root, **kw):
     batch = spark.createDataFrame(BATCH, "doc_id int, text string")
     out = filter_against_neardup_history(
         spark, batch, root, "doc_id", "text",
-        threshold=THRESHOLD, cache_sigs=False, **kw,
+        threshold=THRESHOLD, **kw,
     )
     return {
         r.doc_id: (r.is_neardup, r.match_id, r.est_jaccard) for r in out.collect()
@@ -135,7 +135,7 @@ def test_append_then_refilter_and_version_pin(spark, nd_root):
     batch = spark.createDataFrame(BATCH, "doc_id int, text string")
     accepted = filter_against_neardup_history(
         spark, batch, nd_root, "doc_id", "text",
-        threshold=THRESHOLD, cache_sigs=False,
+        threshold=THRESHOLD,
     ).filter(~F.col("is_neardup")).select("doc_id", "text")
     v2 = append_neardup_history(spark, accepted, nd_root, "doc_id", "text")
     assert v2 > 1
@@ -199,7 +199,7 @@ def _adv_probe(spark, root, **kw):
     batch = spark.createDataFrame([(100, _ADV_P)], "doc_id int, text string")
     return filter_against_neardup_history(
         spark, batch, root, "doc_id", "text",
-        threshold=THRESHOLD, cache_sigs=False, **kw,
+        threshold=THRESHOLD, **kw,
     ).collect()[0]
 
 

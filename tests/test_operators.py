@@ -506,14 +506,6 @@ def test_strip_duplicate_lines(spark):
                                        max_line_docs=5).collect()
     }
     assert set(untouched.values()) == {0}
-    # shuffled anti-join fallback matches the broadcast default
-    got_s = {
-        r.doc_id: (r.text, r.n_lines_removed)
-        for r in strip_duplicate_lines(docs, "doc_id", "text",
-                                       max_line_docs=2,
-                                       broadcast_hot=False).collect()
-    }
-    assert got_s == got
     with pytest.raises(ValueError):
         strip_duplicate_lines(docs, "doc_id", "text", max_line_docs=0)
 

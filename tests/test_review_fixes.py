@@ -368,11 +368,10 @@ def test_clean_corpus_pins_drain_after_release(spark):
 
 
 def test_broadcast_toggles_match_broadcast_path(spark):
-    """broadcast_drop/broadcast_hits/broadcast_losers=False (ADVICE r2:
-    escape hatch for drop-sets past the 8 GB broadcast limit) must return
-    identical rows to the broadcast default."""
+    """broadcast_drop/broadcast_losers=False (ADVICE r2: escape hatch for
+    drop-sets past the 8 GB broadcast limit) must return identical rows
+    to the broadcast default."""
     from elephantdb_spark.operators.components import dedup_by_components
-    from elephantdb_spark.operators.quality import decontaminate
     from elephantdb_spark.pipeline import clean_corpus
 
     docs = spark.createDataFrame(
@@ -387,14 +386,6 @@ def test_broadcast_toggles_match_broadcast_path(spark):
     kept_s = {r.doc_id for r in
               dedup_by_components(docs, pairs, "doc_id", broadcast_drop=False).collect()}
     assert kept_b == kept_s and {4, 8, 5, 6}.isdisjoint(kept_s)
-
-    bench = docs.filter(F.col("doc_id") % 7 == 0)
-    corp = docs.filter(F.col("doc_id") % 7 != 0)
-    d_b = {r.doc_id for r in decontaminate(corp, bench, "doc_id", "text", 3).collect()}
-    d_s = {r.doc_id for r in
-           decontaminate(corp, bench, "doc_id", "text", 3,
-                         broadcast_hits=False).collect()}
-    assert d_b == d_s
 
     c_b = {r.doc_id for r in
            clean_corpus(docs, min_tokens=5, neardup="minhash", num_perm=8,
