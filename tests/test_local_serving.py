@@ -583,15 +583,20 @@ def test_serving_cache_bytes_deprecated(spark, tmp_path):
     assert sum("serving_cache_bytes" in str(w.message) for w in caught) == 1
 
 
-def test_serving_counters_exact_under_8_threads(spark, tmp_path):
+def test_serving_counters_exact_under_8_threads(spark, tmp_path, monkeypatch):
     """Eight threads with a short switch interval run the same calls a
     single thread runs on another handle: every answer is exact, every
     file converts exactly once, and every counter sums to the serial
-    figure (a lost update under the stats lock would break the totals)."""
+    figure (a lost update under the stats lock would break the totals).
+    Which keys the row cache answers depends on call order, so the
+    counters are compared whole with the cache sized to nothing; with
+    it, each handle's ``row_hits`` plus the keys it routed to a shard
+    is every distinct key asked."""
     import random
     import sys
     import threading
 
+    import elephantdb_spark.engine as eng
     from elephantdb_spark.engine import Domain
 
     root = str(tmp_path / "count")
@@ -612,42 +617,66 @@ def test_serving_counters_exact_under_8_threads(spark, tmp_path):
         + [f"key{rng.randrange(500):04d}x".encode() for _ in range(10)]
         for _ in range(n_threads * per_thread)
     ]
-    serial = Domain(spark, root)
-    for ks in calls:
-        assert serial.local_multi_get(ks) == {k: truth.get(k) for k in ks}
-    expect = serial.serving_stats()
-    n_files = sum(
-        len(serial._shard_file_list(
-            os.path.join(root, "1", f"shard={s}"), serial._serving()))
-        for s in range(8)
-    )
-    assert expect["files_converted"] == n_files
+    keys_asked = sum(len(set(ks)) for ks in calls)
 
-    dom = Domain(spark, root)
-    errors: list[BaseException] = []
+    def counted_handle() -> tuple[Domain, list]:
+        # a handle and the keys it routes to a shard, i.e. probes
+        dom = Domain(spark, root)
+        routed: list[bytes] = []
+        route = dom._scheme.shard_index
+        dom._scheme.shard_index = lambda k, n: routed.append(k) or route(k, n)
+        return dom, routed
 
-    def worker(t):
+    def run_threaded(dom) -> None:
+        errors: list[BaseException] = []
+
+        def worker(t):
+            try:
+                for ks in calls[t::n_threads]:
+                    assert dom.local_multi_get(ks) == {k: truth.get(k) for k in ks}
+            except BaseException as e:  # noqa: BLE001 - collected for the main thread
+                errors.append(e)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
         try:
-            for ks in calls[t::n_threads]:
-                assert dom.local_multi_get(ks) == {k: truth.get(k) for k in ks}
-        except BaseException as e:  # noqa: BLE001 - collected for the main thread
-            errors.append(e)
+            threads = [
+                threading.Thread(target=worker, args=(t,)) for t in range(n_threads)
+            ]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(th.is_alive() for th in threads)
+        assert not errors, errors[:3]
 
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=worker, args=(t,)) for t in range(n_threads)]
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join(timeout=120)
-    finally:
-        sys.setswitchinterval(old)
-    assert not any(th.is_alive() for th in threads)
-    assert not errors, errors[:3]
-    assert dom.serving_stats() == expect
-    assert expect["bloom_tests"] > expect["bloom_rejects"] > 0
-    assert expect["batches_read"] > 0
+    for budget in (0, eng.ROW_CACHE_BYTES):
+        monkeypatch.setattr(eng, "ROW_CACHE_BYTES", budget)
+        serial, serial_routed = counted_handle()
+        for ks in calls:
+            assert serial.local_multi_get(ks) == {k: truth.get(k) for k in ks}
+        expect = serial.serving_stats()
+        n_files = sum(
+            len(serial._shard_file_list(
+                os.path.join(root, "1", f"shard={s}"), serial._serving()))
+            for s in range(8)
+        )
+        assert expect["files_converted"] == n_files
+        assert expect["row_hits"] + len(serial_routed) == keys_asked
+
+        dom, routed = counted_handle()
+        run_threaded(dom)
+        got = dom.serving_stats()
+        assert got["row_hits"] + len(routed) == keys_asked
+        if budget == 0:
+            assert got == expect and expect["row_hits"] == 0
+            assert expect["bloom_tests"] > expect["bloom_rejects"] > 0
+            assert expect["batches_read"] > 0
+        else:
+            assert got["files_converted"] == expect["files_converted"]
+            assert expect["row_hits"] > 0 and got["row_hits"] > 0
 
 
 RUN_KEY = b"q01000~run"  # sorts inside the q-key range
@@ -727,11 +756,13 @@ def test_one_pass_probe_one_gather_one_is_in(fragmented, monkeypatch):
     import pyarrow.compute as pc
 
     from elephantdb_spark.bloom import BloomBank
+    from elephantdb_spark.engine import Domain
     from elephantdb_spark.sharding import shard_index
 
-    dom = fragmented
+    dom = Domain(fragmented.spark, fragmented.root)
     keys = [f"q{i:05d}".encode() for i in range(0, 2000, 9)] + [b"q00003x"]
-    dom.local_multi_get(keys)  # convert first
+    # convert first, with other keys, so that no key of the call is cached
+    dom.local_multi_get([f"q{i:05d}".encode() for i in range(1, 2000, 9)])
     shards = {shard_index(k, 4) for k in keys}
     files = sum(
         len(dom._shard_file_list(os.path.join(
@@ -758,6 +789,7 @@ def test_one_pass_probe_one_gather_one_is_in(fragmented, monkeypatch):
     assert dom.local_multi_get(keys) == {k: truth.get(k) for k in keys}
     after = dom.serving_stats()
     assert seen == {"contains": 1, "is_in": 1}
+    assert after["row_hits"] == before["row_hits"]
     assert after["bloom_tests"] - before["bloom_tests"] >= files
     assert after["batches_read"] > before["batches_read"]
     assert after["bytes_read"] > before["bytes_read"]
@@ -936,3 +968,127 @@ def test_shard_dir_listed_once_per_version_set(spark, tmp_path, monkeypatch):
         assert dom.local_multi_get(keys)[PAIRS[0][0]] == b"NEW"
         dom.local_multi_get(keys, version=1)
     assert listed == Counter(dict.fromkeys(shard_dirs(1) | shard_dirs(2), 1))
+
+
+def _stats_delta(dom, call) -> dict[str, int]:
+    before = dom.serving_stats()
+    call()
+    after = dom.serving_stats()
+    return {name: after[name] - before[name] for name in after}
+
+
+def test_row_cache_answers_a_repeated_key_without_a_batch(fragmented):
+    """A key's second call answers from the snapshot's row cache: no
+    batch read, one row hit. A NULL-valued row is cached too, and
+    answers None from the cache."""
+    from elephantdb_spark.engine import Domain
+
+    dom = Domain(fragmented.spark, fragmented.root)
+    truth = fragmented.to_map()
+    null_key = next(k for k, v in truth.items() if v is None)
+    hit_key = next(k for k, v in truth.items() if v is not None)
+    for key in (hit_key, null_key):
+        first = _stats_delta(dom, lambda: dom.local_get(key))
+        assert first["batches_read"] >= 1 and first["row_hits"] == 0
+        assert dom.local_get(key) == truth[key]  # the second call
+    again = _stats_delta(
+        dom, lambda: dom.local_multi_get([hit_key, null_key, hit_key])
+    )
+    assert again["batches_read"] == again["bloom_tests"] == 0
+    assert again["row_hits"] == 2
+    assert dom.local_multi_get([null_key]) == {null_key: None}
+    # a miss is not cached: it is probed on every call
+    miss = _stats_delta(dom, lambda: dom.local_multi_get([b"q00003x"] * 2))
+    assert miss["row_hits"] == 0
+    assert _stats_delta(dom, lambda: dom.local_get(b"q00003x"))["row_hits"] == 0
+    assert dom.serving_stats()["row_bytes"] > 0
+
+
+def test_row_cache_goes_with_its_snapshot(spark, tmp_path):
+    """A hot swap replaces the snapshot, and its row cache with it: a
+    cached key answers the new version's value. A read of the older
+    version by ``version=`` answers that version, and neither reads nor
+    fills the cache."""
+    from elephantdb_spark import update_domain
+    from elephantdb_spark.engine import Domain
+
+    root = str(tmp_path / "rowswap")
+    build_domain(
+        spark,
+        spark.createDataFrame(PAIRS, "key binary, value binary"),
+        root,
+        DomainSpec(num_shards=4),
+        version=1,
+    )
+    dom = Domain(spark, root)
+    key, other = PAIRS[3][0], PAIRS[4][0]
+    assert dom.local_multi_get([key, other]) == {key: b"val3", other: b"val4"}
+    assert _stats_delta(dom, lambda: dom.local_get(key))["row_hits"] == 1
+    update_domain(
+        spark,
+        spark.createDataFrame([(key, b"NEW3")], "key binary, value binary"),
+        root,
+        version=2,
+    )
+    swapped = _stats_delta(dom, lambda: dom.local_get(key))
+    assert dom.local_get(key) == b"NEW3"
+    assert swapped["row_hits"] == 0 and swapped["batches_read"] >= 1
+    assert dom._served.versions == (2, 1)
+    for _ in range(2):
+        old = _stats_delta(
+            dom, lambda: dom.local_multi_get([key, other], version=1)
+        )
+        assert old["row_hits"] == 0 and old["batches_read"] >= 1
+    assert dom.local_multi_get([key, other], version=1) == {
+        key: b"val3", other: b"val4",
+    }
+    assert set(dom._served.rows) == {key}
+    assert dom.local_multi_get([key, other], version=2) == {
+        key: b"NEW3", other: b"val4",
+    }
+    assert set(dom._served.rows) == {key, other}
+
+
+def test_row_cache_is_a_byte_bounded_lru(fragmented, monkeypatch):
+    """A sweep of many distinct keys keeps the row cache within its
+    budget, evicting the least recently used rows, and a key re-read
+    throughout the sweep survives it. An entry is charged at least the
+    bytes its key, value and ``OrderedDict`` slot take."""
+    import tracemalloc
+    from collections import OrderedDict
+
+    import elephantdb_spark.engine as eng
+
+    truth = fragmented.to_map()
+    hot, *cold = [k for k in truth if k.startswith(b"q")]
+    budget = 40 * eng._row_size(hot, truth[hot])
+    monkeypatch.setattr(eng, "ROW_CACHE_BYTES", budget)
+    dom = eng.Domain(fragmented.spark, fragmented.root)
+    dom.local_get(hot)
+    hot_hits = 0
+    for i in range(0, 600, 10):
+        ks = cold[i:i + 10]
+        assert dom.local_multi_get(ks) == {k: truth[k] for k in ks}
+        hit = _stats_delta(dom, lambda: dom.local_get(hot))
+        hot_hits += hit["row_hits"]
+        assert hit["batches_read"] == 0
+        served = dom._served
+        assert 0 < dom.serving_stats()["row_bytes"] <= budget
+        assert served.row_bytes == sum(
+            eng._row_size(k, v) for k, v in served.rows.items()
+        )
+    assert hot_hits == 60
+    assert hot in served.rows and cold[0] not in served.rows
+    assert len(served.rows) < 60
+    # the charge covers what an entry really takes
+    rows = [(k, truth[k]) for k in cold[:3000]]
+    tracemalloc.start()
+    try:
+        cache = OrderedDict()
+        for k, v in rows:  # fresh copies, so that tracemalloc sees them
+            cache[bytes(bytearray(k))] = v and bytes(bytearray(v))
+        traced = tracemalloc.get_traced_memory()[0]
+    finally:
+        tracemalloc.stop()
+    charged = sum(eng._row_size(k, v) for k, v in cache.items())
+    assert traced <= charged <= 1.5 * traced
